@@ -1,9 +1,15 @@
 package graft.streaming
 
+import java.util.concurrent.{CompletionException, Executors}
+
+import scala.util.{Failure, Try}
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.storage.StorageLevel
 
 import graft.TableSpec
 import graft.cdc.{Debezium, Materializer}
@@ -12,7 +18,9 @@ import graft.cdc.{Debezium, Materializer}
   * version per table (pre- or post-merge). `apply` keeps the plain
   * `pre("orders")` full-snapshot form; `rows` is the bucket-pruned
   * touched-keys lookup incremental views use so per-batch reads track
-  * the batch, not the state size. */
+  * the batch, not the state size. `pin` names what a read sees — the
+  * table's store and version — so a result computed over one pinned
+  * state can be recognised when a later batch pins the same state. */
 final class StateAccess(
     states: Map[String, ParquetKeyedTable],
     schema: String => StructType,
@@ -21,6 +29,8 @@ final class StateAccess(
     states(table).snapshotAt(versions(table), schema(table))
   def rows(table: String, keys: DataFrame): DataFrame =
     states(table).rowsForKeysAt(versions(table), schema(table), keys)
+  def pin(table: String): (ParquetKeyedTable, Option[Int]) =
+    (states(table), versions(table))
 }
 
 /** Batch-scoped context a view's maintenance runs under.
@@ -29,14 +39,30 @@ final class StateAccess(
   *    views with their own state stores thread it into those stores'
   *    merges so a REDELIVERED batch (crash between per-store commits)
   *    replays idempotently ([[ParquetKeyedTable.merge]]).
+  *  - `changedTables`: the source tables this batch carries changes for,
+  *    from the pipeline's one stats pass — a view skips a batch that
+  *    touches none of its tables without probing the changelogs.
+  *  - `replay`: some source store already committed `batchId`, so this
+  *    is a redelivery; views recompute rather than reuse results carried
+  *    from earlier batches.
   *  - `defer`: registers cleanup (typically `unpersist()` of a frame the
   *    returned upserts/deletes still reference) to run AFTER the sink has
   *    consumed the view's output — releasing batch-scoped caches without
-  *    forcing the sink to recompute their lineage. */
-final class BatchCtx(val batchId: Option[Long]) {
+  *    forcing the sink to recompute their lineage. Runs whether or not
+  *    the batch succeeded.
+  *  - `onCommit`: registers an action to run once EVERY sink write of the
+  *    batch has returned, before the deferred cleanups; skipped when the
+  *    batch fails. Views may call both from concurrent threads. */
+final class BatchCtx(
+    val batchId: Option[Long],
+    val changedTables: Set[String],
+    val replay: Boolean) {
+  private val commits = scala.collection.mutable.Buffer.empty[() => Unit]
   private val cleanups = scala.collection.mutable.Buffer.empty[() => Unit]
-  def defer(f: => Unit): Unit = cleanups += (() => f)
-  private[streaming] def close(): Unit = cleanups.foreach(_())
+  def defer(f: => Unit): Unit = synchronized { cleanups += (() => f) }
+  def onCommit(f: => Unit): Unit = synchronized { commits += (() => f) }
+  private[streaming] def commit(): Unit = synchronized(commits.toSeq).foreach(_())
+  private[streaming] def close(): Unit = synchronized(cleanups.toSeq).foreach(_())
 }
 
 /** A continuously-maintained view: given the pre-batch state, post-batch
@@ -64,11 +90,30 @@ final case class ViewDef(
   * drives, per batch:
   *
   *   1. decode (`from_json`) + normalize to (key, op, before, after,
-  *      ts_ms, seq) per source table,
-  *   2. compact within the batch and MERGE into that table's materialized
-  *      state ([[ParquetKeyedTable]]) — the *dynamic table*,
-  *   3. re-derive each registered view for the AFFECTED KEYS ONLY and
+  *      ts_ms, seq) per source table, from the input batch persisted
+  *      once;
+  *   2. one stats pass over the decoded changelogs: which tables the
+  *      batch touches and which state buckets
+  *      ([[ParquetKeyedTable.bucketOf]]) their keys land in — the only
+  *      per-table facts the merges and the views' skip checks need, so
+  *      neither probes the changelogs again;
+  *   3. compact within the batch and MERGE into each touched table's
+  *      materialized state ([[ParquetKeyedTable]]) — the *dynamic table*
+  *      — the tables' merges running concurrently;
+  *   4. re-derive each registered view for the AFFECTED KEYS ONLY and
   *      upsert/delete into the keyed sink.
+  *
+  * Step 4 runs like the reference's INSERT INTO jobs, each its own Flink
+  * job beside the others (README.md:342-345): the views run concurrently,
+  * grouped by sink index. Within one index the views keep their declared
+  * order — each view's maintenance, upserts and deletes finish before
+  * the next view of that index starts — so every document sees the same
+  * sequence of operations as a sequential run (a delete by one view
+  * followed by an upsert of the same id by the next lands the same way).
+  * Worker threads carry the stream's Spark local properties (job group,
+  * batch id) through `SQLExecution.withThreadLocalCaptured`, and every
+  * task is awaited before [[processBatch]] returns or rethrows the first
+  * failure.
   *
   * Affected-key recomputation is the semantically-safe mapping of Flink's
   * retraction streams onto micro-batches (SURVEY §7.2 step 4): an update
@@ -109,19 +154,6 @@ final class CdcPipeline(
   def stateRows(table: String, keys: DataFrame): DataFrame =
     states(table).rowsForKeys(stateSchema(table), keys)
 
-  private def emptyChangelog(table: String): DataFrame = {
-    val spec = byName(table)
-    spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      StructType(Seq(
-        StructField("key", StringType),
-        StructField("op", StringType),
-        StructField("before", spec.schema),
-        StructField("after", spec.schema),
-        StructField("ts_ms", org.apache.spark.sql.types.LongType),
-        StructField("seq", org.apache.spark.sql.types.LongType))))
-  }
-
   /** Process one micro-batch (also callable directly for deterministic
     * tests — foreachBatch calls exactly this, with its batchId).
     *
@@ -140,14 +172,16 @@ final class CdcPipeline(
     //    for 'debezium-mongo' sources); cached with lineage KEPT
     //    (persist, not localCheckpoint): each frame is read for the state
     //    merge AND by every view, and on a cluster a lost executor must
-    //    recompute the decode from the batch, not fail the query
+    //    recompute the decode from the batch, not fail the query. The
+    //    input is cached too, so the per-table filters scan it once.
+    val input = batch.persist(StorageLevel.MEMORY_AND_DISK)
     val changelogs: Map[String, DataFrame] = sources.map { spec =>
       // a spec declared with a catalog-qualified Flink name keeps the
       // original as `qualified-name` metadata (Engine.createTable);
       // envelopes may label the table either way — Debezium topics are
       // typically db-qualified — so route on both
       val labels = spec.name +: spec.options.get("qualified-name").toSeq
-      val raw = batch.filter(col("table").isin(labels: _*))
+      val raw = input.filter(col("table").isin(labels: _*))
       val normalized =
         if (spec.options.get("format").contains("debezium-mongo"))
           Debezium.normalizeMongo(raw.withColumn("env",
@@ -157,50 +191,68 @@ final class CdcPipeline(
           Debezium.normalize(raw.withColumn("env",
             Debezium.decode(col("value"),
               Debezium.mysqlEnvelope(spec.schema))), spec.primaryKey)
-      spec.name -> normalized.persist(
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      spec.name -> normalized.persist(StorageLevel.MEMORY_AND_DISK)
     }.toMap
 
-    // 2. pre-merge snapshots stay valid (immutable version dirs) while the
-    //    merge commits the next version — pinned by VERSION, so pruned
-    //    lookups made after the merge still read pre-merge state; on a
-    //    batch REPLAY, versionBefore un-pins any table that already
-    //    committed this batch back to its pre-batch version
-    val pre = new StateAccess(states, stateSchema,
-      sources.map { s =>
-        s.name -> (batchId match {
-          case Some(id) => states(s.name).versionBefore(id)
-          case None     => states(s.name).version
-        })
-      }.toMap)
+    try {
+      // 2. one pass over every changelog (it also fills their caches):
+      //    the touched tables and each one's state buckets; a table
+      //    absent here is untouched
+      val touched: Map[String, Set[Int]] = changelogs.toSeq
+        .map { case (table, changelog) =>
+          changelog.select(lit(table), states(table).bucketOf(col("key")))
+        }
+        .reduceOption(_ union _).toSeq
+        .flatMap(_.distinct().collect().toSeq)
+        .groupMap(_.getString(0))(_.getInt(1))
+        .map { case (table, buckets) => table -> buckets.toSet }
 
-    // skip untouched tables entirely: a merge is a full state rewrite
-    // (write amplification) and every view would still re-derive from the
-    // unchanged snapshot — checkpointed frames make isEmpty a cheap check
-    changelogs.foreach { case (table, changelog) =>
-      if (!changelog.isEmpty) {
-        val compacted = Materializer.compact(changelog)
+      // pre-merge snapshots stay valid (immutable version dirs) while the
+      // merge commits the next version — pinned by VERSION, so pruned
+      // lookups made after the merge still read pre-merge state; on a
+      // batch REPLAY, versionBefore un-pins any table that already
+      // committed this batch back to its pre-batch version
+      val pre = new StateAccess(states, stateSchema,
+        sources.map { s =>
+          s.name -> (batchId match {
+            case Some(id) => states(s.name).versionBefore(id)
+            case None     => states(s.name).version
+          })
+        }.toMap)
+      val replay = batchId.exists(id => states.values.exists(_.lastBatchId.contains(id)))
+
+      // 3. merge only touched tables, concurrently: a merge is a state
+      //    rewrite (write amplification), and the stores commit
+      //    independently (each idempotent by batchId)
+      CdcPipeline.concurrently(spark, touched.toSeq.map { case (table, buckets) => () =>
+        val compacted = Materializer.compact(changelogs(table))
         val upserts = compacted.filter(col("op") =!= "d")
           .select(col("key") +: byName(table).schema.fieldNames.map(f =>
             col(s"after.$f").as(f)): _*)
         val deletes = compacted.filter(col("op") === "d").select("key")
-        states(table).merge(upserts, deletes, batchId)
-      }
-    }
+        states(table).merge(upserts, deletes, batchId, Some(buckets))
+      })
 
-    val post = new StateAccess(states, stateSchema,
-      sources.map(s => s.name -> states(s.name).version).toMap)
+      val post = new StateAccess(states, stateSchema,
+        sources.map(s => s.name -> states(s.name).version).toMap)
 
-    // 3. maintain each view over affected keys
-    val ctx = new BatchCtx(batchId)
-    try views.foreach { view =>
-      val (upserts, deletes) = view.maintain(pre, post, changelogs, ctx)
-      sink.upsert(view.sinkIndex, upserts)
-      sink.delete(view.sinkIndex, deletes)
+      // 4. maintain each view over affected keys: indexes concurrently,
+      //    the views of one index in declared order
+      val ctx = new BatchCtx(batchId, touched.keySet, replay)
+      try {
+        val indexes = views.map(_.sinkIndex).distinct
+        CdcPipeline.concurrently(spark, indexes.map { index => () =>
+          views.filter(_.sinkIndex == index).foreach { view =>
+            val (upserts, deletes) = view.maintain(pre, post, changelogs, ctx)
+            sink.upsert(index, upserts)
+            sink.delete(index, deletes)
+          }
+        })
+        ctx.commit()
+      } finally ctx.close() // batch-scoped caches, once every sink write consumed them
     } finally {
-      // batch-scoped caches released once every sink write consumed them
-      ctx.close()
       changelogs.values.foreach(_.unpersist())
+      input.unpersist()
     }
   }
 
@@ -212,4 +264,26 @@ final class CdcPipeline(
       .option("checkpointLocation", checkpointDir)
       .foreachBatch((b: DataFrame, id: Long) => processBatch(b, Some(id)))
       .start()
+}
+
+object CdcPipeline {
+  /** Runs `tasks` on worker threads that carry the calling thread's
+    * active session and Spark local properties, waits for EVERY task, then
+    * rethrows the first failure in task order. A single task runs on the
+    * calling thread. */
+  private def concurrently(spark: SparkSession, tasks: Seq[() => Unit]): Unit =
+    if (tasks.size <= 1) tasks.foreach(_())
+    else {
+      val pool = Executors.newFixedThreadPool(tasks.size)
+      try {
+        val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+        tasks.map(t => SQLExecution.withThreadLocalCaptured(session, pool)(t()))
+          .map(f => Try(f.join())) // join: uninterruptible, awaits all
+          .collectFirst { case Failure(e) => e }
+          .foreach {
+            case e: CompletionException if e.getCause != null => throw e.getCause
+            case e => throw e
+          }
+      } finally pool.shutdown()
+    }
 }

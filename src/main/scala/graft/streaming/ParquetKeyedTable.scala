@@ -1,12 +1,13 @@
 package graft.streaming
 
+import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path, Paths, StandardOpenOption}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** A keyed, versioned, parquet-backed upsert table — the engine's
   * materialized-state store and the scale path for the reference's
@@ -22,7 +23,7 @@ import org.apache.spark.sql.types.StructType
   *
   * 100 TB posture: this is the log-structured pattern of a table format
   * (Delta/Iceberg). With `numBuckets > 0`, versions are written
-  * hash-distributed on a stable bucket of `key` (`pmod(hash(key), n)`
+  * hash-distributed on a stable bucket of `key` ([[ParquetKeyedTable.bucketOf]]
   * directory partitions) and a MERGE is *bucket-pruned*: only the bucket
   * directories containing this batch's keys are read (partition-pruned
   * scan), anti-joined and rewritten; every untouched bucket is carried
@@ -52,6 +53,14 @@ import org.apache.spark.sql.types.StructType
   * rewritten whole each touch, so fragmentation cannot accumulate the
   * way append-log formats fragment; the Delta/Iceberg analog of this
   * policy is OPTIMIZE-on-write plus VACUUM retained=1.
+  *
+  * Schema posture: every commit records the version's schema
+  * (`v<N>/_schema.json`, the union of the previous version's schema and
+  * the columns this commit wrote), and reads hand it to the parquet
+  * reader. Hard-linked buckets written before an upsert widened the
+  * schema read the new columns as nulls without merging part-file
+  * footers — footer merging (`mergeSchema`) costs a Spark job on every
+  * read, which the CDC pipeline's per-batch reads cannot afford.
   */
 final class ParquetKeyedTable(
     spark: SparkSession,
@@ -108,8 +117,7 @@ final class ParquetKeyedTable(
   def snapshotAt(v: Option[Int], schema: StructType): DataFrame =
     v match {
       case Some(ver) if hasData(dir.resolve(s"v$ver")) =>
-        spark.read.option("mergeSchema", "true").parquet(dir.resolve(s"v$ver").toString)
-          .drop("bucket") // partition column of bucketed layouts
+        read(ver).drop("bucket") // partition column of bucketed layouts
       case _ => // no version yet, or a version whose state emptied out
         spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
     }
@@ -123,11 +131,10 @@ final class ParquetKeyedTable(
     val wanted = keys.select(keyCol).distinct()
     v match {
       case Some(ver) if hasData(dir.resolve(s"v$ver")) =>
-        val base = spark.read.option("mergeSchema", "true").parquet(dir.resolve(s"v$ver").toString)
+        val base = read(ver)
         val pruned =
           if (numBuckets > 0) {
-            val buckets = wanted
-              .select(pmod(hash(col(keyCol)), lit(numBuckets)).cast("int").as("b"))
+            val buckets = wanted.select(bucketOf(col(keyCol)))
               .distinct().collect().map(_.getInt(0)).toSeq
             if (buckets.isEmpty)
               return spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
@@ -142,6 +149,32 @@ final class ParquetKeyedTable(
   /** [[rowsForKeysAt]] at the current version. */
   def rowsForKeys(schema: StructType, keys: DataFrame): DataFrame =
     rowsForKeysAt(currentVersion, schema, keys)
+
+  /** The parquet files of version `v`, read with its recorded schema. */
+  private def read(v: Int): DataFrame =
+    spark.read.schema(schemaAt(v)).parquet(dir.resolve(s"v$v").toString)
+
+  private def schemaFile(v: Int): Path = dir.resolve(s"v$v").resolve("_schema.json")
+
+  /** The schema version `v` recorded at commit; a version committed
+    * before versions recorded one falls back to merging its footers. */
+  private def schemaAt(v: Int): StructType =
+    if (Files.exists(schemaFile(v)))
+      DataType.fromJson(new String(Files.readAllBytes(schemaFile(v)), UTF_8))
+        .asInstanceOf[StructType]
+    else if (hasData(dir.resolve(s"v$v")))
+      spark.read.option("mergeSchema", "true")
+        .parquet(dir.resolve(s"v$v").toString).drop("bucket").schema
+    else new StructType()
+
+  /** `prev` widened by the columns of `next` it lacks — the column order
+    * `unionByName(allowMissingColumns = true)` gives a merged frame. */
+  private def widen(prev: StructType, next: StructType): StructType =
+    StructType(prev.fields ++ next.fields.filterNot(f => prev.fieldNames.contains(f.name)))
+
+  /** This store's bucket of `key` — one bucket (0) when unbucketed. */
+  def bucketOf(key: Column): Column =
+    if (numBuckets > 0) ParquetKeyedTable.bucketOf(key, numBuckets) else lit(0)
 
   /** True when the version directory holds at least one parquet file —
     * a fully-deleted state writes a version with no part files, which
@@ -159,10 +192,7 @@ final class ParquetKeyedTable(
     val snap = currentVersion match {
       case Some(v) if numBuckets > 0 && hasData(dir.resolve(s"v$v")) =>
         // partition pruning: only the key's bucket directory is scanned
-        spark.read.option("mergeSchema", "true").parquet(dir.resolve(s"v$v").toString)
-          .filter(col("bucket") ===
-            pmod(hash(lit(key)), lit(numBuckets)).cast("int"))
-          .drop("bucket")
+        read(v).filter(col("bucket") === bucketOf(lit(key))).drop("bucket")
       case _ => snapshot(schema)
     }
     snap.filter(col(keyCol) === key)
@@ -178,14 +208,18 @@ final class ParquetKeyedTable(
     * the merge is a no-op instead of double-applying — the per-store half
     * of the exactly-once contract Flink's checkpoint barrier gives the
     * reference (README.md:347). Contract: at most one batchId-carrying
-    * merge per store per batch. */
+    * merge per store per batch.
+    *
+    * `buckets`, when the caller already knows them, are the buckets
+    * ([[bucketOf]]) of every key in `upserts` and `deletes`; a bucketed
+    * merge then skips collecting them. */
   def merge(upserts: DataFrame, deletes: DataFrame,
-      batchId: Option[Long] = None): Unit = {
+      batchId: Option[Long] = None, buckets: Option[Set[Int]] = None): Unit = {
     if (batchId.isDefined && batchId == lastBatchId) return // replayed batch
     val touched = upserts.select(keyCol).union(deletes.select(keyCol)).distinct()
     currentVersion match {
       case Some(v) if numBuckets > 0 =>
-        commitPruned(v, touched, Some(upserts), batchId)
+        commitPruned(v, touched, Some(upserts), batchId, buckets)
       case _ =>
         val next = snapshot(upserts.schema)
           .join(touched, Seq(keyCol), "left_anti")
@@ -203,7 +237,7 @@ final class ParquetKeyedTable(
     currentVersion.foreach { v =>
       if (batchId.isDefined && batchId == lastBatchId) return
       val touched = keys.select(keyCol).distinct()
-      if (numBuckets > 0) commitPruned(v, touched, None, batchId)
+      if (numBuckets > 0) commitPruned(v, touched, None, batchId, None)
       else {
         val cur = snapshot(keys.schema /* ignored: version exists */)
         commitFull(cur.join(touched, Seq(keyCol), "left_anti"), batchId)
@@ -213,14 +247,15 @@ final class ParquetKeyedTable(
   /** Bucket-pruned commit: rewrite only the bucket directories holding
     * `touched` keys; hard-link every other bucket of `v$prevV` forward.
     * The touched-bucket set is metadata (at most `numBuckets` ints), so
-    * the one driver-side collect here is bounded and cheap — the data
-    * plane (scan, anti-join, union, write) stays fully distributed. */
+    * the one driver-side collect here, made unless the caller passed
+    * `known` buckets, is bounded and cheap — the data plane (scan,
+    * anti-join, union, write) stays fully distributed. */
   private def commitPruned(prevV: Int, touched: DataFrame,
-      upserts: Option[DataFrame], batchId: Option[Long]): Unit = {
-    val touchedKeys = touched.persist()
-    val buckets: Set[Int] = touchedKeys
-      .select(pmod(hash(col(keyCol)), lit(numBuckets)).cast("int").as("b"))
-      .distinct().collect().map(_.getInt(0)).toSet
+      upserts: Option[DataFrame], batchId: Option[Long],
+      known: Option[Set[Int]]): Unit = {
+    val touchedKeys = if (known.isDefined) touched else touched.persist()
+    val buckets: Set[Int] = known.getOrElse(touchedKeys.select(bucketOf(col(keyCol)))
+      .distinct().collect().map(_.getInt(0)).toSet)
     try {
       if (buckets.isEmpty) return // empty batch: nothing to change
 
@@ -241,7 +276,7 @@ final class ParquetKeyedTable(
       val toRead = buckets intersect prevBuckets
       val kept =
         if (toRead.isEmpty) None
-        else Some(spark.read.option("mergeSchema", "true").parquet(prevDir.toString)
+        else Some(read(prevV)
           .filter(col("bucket").isin(toRead.toSeq: _*))
           .drop("bucket")
           .join(touchedKeys, Seq(keyCol), "left_anti"))
@@ -251,15 +286,21 @@ final class ParquetKeyedTable(
         case (k, u)             => u.orElse(k)
       }
       merged.foreach { m =>
-        m.withColumn("bucket",
-            pmod(hash(col(keyCol)), lit(numBuckets)).cast("int"))
+        m.withColumn("bucket", bucketOf(col(keyCol)))
           .repartition(buckets.size, col("bucket"))
           .write.partitionBy("bucket")
           .mode("append") // nextDir already holds the linked buckets
           .parquet(nextDir.toString)
       }
+      val prevSchema = schemaAt(prevV)
+      recordSchema(nextV, merged.fold(prevSchema)(m => widen(prevSchema, m.schema)))
       flipPointer(nextV, batchId)
-    } finally touchedKeys.unpersist()
+    } finally if (known.isEmpty) touchedKeys.unpersist()
+  }
+
+  private def recordSchema(v: Int, schema: StructType): Unit = {
+    Files.createDirectories(dir.resolve(s"v$v"))
+    Files.write(schemaFile(v), schema.json.getBytes(UTF_8))
   }
 
   private def bucketDirs(versionDir: Path): Set[Int] = {
@@ -286,12 +327,12 @@ final class ParquetKeyedTable(
     val v = currentVersion.getOrElse(-1) + 1
     val writer =
       if (numBuckets > 0)
-        next.withColumn("bucket",
-          pmod(hash(col(keyCol)), lit(numBuckets)).cast("int"))
+        next.withColumn("bucket", bucketOf(col(keyCol)))
           .repartition(numBuckets, col("bucket"))
           .write.partitionBy("bucket")
       else next.write
     writer.mode("overwrite").parquet(dir.resolve(s"v$v").toString)
+    recordSchema(v, next.schema)
     flipPointer(v, batchId)
   }
 
@@ -320,4 +361,12 @@ final class ParquetKeyedTable(
       }
     }
   }
+}
+
+object ParquetKeyedTable {
+  /** The bucket a key lands in: `pmod(hash(key), numBuckets)`. The one
+    * spelling of the layout, so a caller computing touched buckets ahead
+    * of [[ParquetKeyedTable.merge]] agrees with the store. */
+  def bucketOf(key: Column, numBuckets: Int): Column =
+    pmod(hash(key), lit(numBuckets)).cast("int")
 }

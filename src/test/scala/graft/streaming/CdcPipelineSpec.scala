@@ -437,15 +437,18 @@ class CdcPipelineSpec extends SparkSuite {
     val sink = new InMemoryUpsertSink
     val stateDir = tmpDir("cdc-crash")
     val viewA = IncrementalAgg.orderStats(spark, stateDir)
-    var crash = false
+    val viewB = IncrementalAgg.userOrderStats(spark, stateDir)
+    @volatile var crash = false
+    // the pipeline runs sink indexes concurrently and the views of one
+    // index in declared order: the tripwire shares view B's index, so a
+    // crash there stops view B while view A's index completes
     val tripwire = ViewDef("tripwire", (pre, post, batch, ctx) => {
       if (crash) throw new RuntimeException("injected crash")
       (spark.emptyDataFrame.withColumn("id",
         org.apache.spark.sql.functions.lit("")).limit(0),
         spark.emptyDataFrame.withColumn("id",
           org.apache.spark.sql.functions.lit("")).limit(0))
-    })
-    val viewB = IncrementalAgg.userOrderStats(spark, stateDir)
+    }, index = viewB.sinkIndex)
     val pipeline = new CdcPipeline(spark, sources, stateDir, sink,
       Seq(viewA, tripwire, viewB))
 

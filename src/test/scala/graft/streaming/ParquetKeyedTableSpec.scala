@@ -188,4 +188,67 @@ class ParquetKeyedTableSpec extends SparkSuite {
     assert(emptyBytes < 64 * 1024,
       s"emptied store still holds $emptyBytes bytes")
   }
+
+  test("a widening upsert null-fills untouched hard-linked buckets; " +
+      "reads merge no parquet footers") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val t = new ParquetKeyedTable(spark, tmpDir("widen"), numBuckets = 8)
+    t.merge((0 until 64).map(i => (s"k$i", i)).toDF("key", "v"),
+      Seq.empty[String].toDF("key"))
+    // one key gains a column: only its bucket is rewritten, the other
+    // buckets are hard links to files without `w`
+    t.merge(Seq(("k0", 0, "wide")).toDF("key", "v", "w"),
+      Seq.empty[String].toDF("key"))
+
+    // jobs submitted while the read is built, in this thread's job group;
+    // a marker job afterwards proves the listener has seen them all
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    val snap = try {
+      sc.setJobGroup("widen-read", "build the snapshot frame")
+      val df = t.snapshot(schema)
+      sc.setJobGroup("widen-marker", "marker")
+      spark.range(1).count()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!groups.contains("widen-marker") && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      assert(groups.contains("widen-marker"))
+      df
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    assert(!groups.contains("widen-read"),
+      "building a read must not launch a footer-merge job")
+
+    assert(snap.columns.toSeq == Seq("key", "v", "w"))
+    val rows = snap.as[(String, Int, Option[String])].collect()
+    assert(rows.length == 64)
+    assert(rows.filter(_._3.isDefined).toSeq == Seq(("k0", 0, Some("wide"))))
+    // a pruned lookup in an untouched bucket sees the column as null too
+    def bucket(k: String): Int = spark.range(1)
+      .select(ParquetKeyedTable.bucketOf(org.apache.spark.sql.functions.lit(k), 8))
+      .head.getInt(0)
+    val other = (1 until 64).map(i => s"k$i").find(bucket(_) != bucket("k0")).get
+    assert(t.lookup(schema, other).as[(String, Int, Option[String])]
+      .collect().toSeq == Seq((other, other.drop(1).toInt, None)))
+
+    // the shared-index sink relies on this: two views write different
+    // fields of one document set, and every document reads back whole
+    val sink = new ParquetUpsertSink(spark, tmpDir("widen-sink"), numBuckets = 8)
+    sink.upsert("shared", (0 until 32).map(i => (s"d$i", i)).toDF("id", "a"))
+    sink.upsert("shared", Seq(("d0", "x")).toDF("id", "b"))
+    val docs = sink.docs("shared", StructType(Nil))
+      .select("id", "a", "b").as[(String, Option[Int], Option[String])]
+      .collect().map(r => r._1 -> (r._2, r._3)).toMap
+    assert(docs.size == 32)
+    assert(docs("d0") == ((Some(0), Some("x"))))
+    assert(docs("d31") == ((Some(31), None)))
+  }
 }

@@ -162,4 +162,142 @@ class SqlInsertSpec extends SparkSuite {
     engine.sql("INSERT INTO nation_copy SELECT * FROM nation")
     assert(spark.sql("SELECT count(*) FROM nation_copy").head().getLong(0) == 2 * n)
   }
+
+  test("statements sharing an index apply in declared order within a batch") {
+    val engine = new Engine(spark)
+    def sinkTable(name: String, col: StructField, index: String): Unit =
+      engine.catalog.register(TableSpec(name,
+        StructType(Seq(StructField("id", StringType), col)),
+        primaryKey = Seq("id"),
+        options = Map("connector" -> "elasticsearch-7", "index" -> index)))
+    sinkTable("young", StructField("name", StringType), "people")
+    sinkTable("old", StructField("age", IntegerType), "people")
+    sinkTable("names", StructField("name", StringType), "names")
+    val session = new CdcSqlSession(spark, sources).attachTo(engine)
+    engine.sql("INSERT INTO young SELECT id, name FROM users WHERE age < 50")
+    engine.sql("INSERT INTO old SELECT id, age FROM users WHERE age >= 50")
+    // another index, maintained concurrently with `people`
+    engine.sql("INSERT INTO names SELECT id, name FROM users")
+
+    val sink = new InMemoryUpsertSink
+    val pipeline = session.pipeline(tmpDir("sqlins-order"), sink)
+    pipeline.processBatch(Seq(
+      rec("users", userEnv("c", "u1", "n-u1", 30)),
+      rec("users", userEnv("c", "u2", "n-u2", 70))).toDF("table", "value", "seq"),
+      Some(0L))
+    assert(sink.docs("people") == Map(
+      "u1" -> Map("name" -> "n-u1"), "u2" -> Map("age" -> 70)))
+
+    // u1 crosses 50: `young` deletes it, then `old` upserts it; u2 crosses
+    // back: `young` upserts it into the stored document, then `old`
+    // deletes the whole document. Declared order decides both.
+    pipeline.processBatch(Seq(
+      rec("users", userEnv("u", "u1", "n-u1", 60)),
+      rec("users", userEnv("u", "u2", "n-u2", 40))).toDF("table", "value", "seq"),
+      Some(1L))
+    assert(sink.docs("people") == Map("u1" -> Map("age" -> 60)))
+    assert(sink.docs("names").keySet == Set("u1", "u2"))
+  }
+
+  private val orderViewSelect =
+    """SELECT orders.id id, orders.amount amount, users.name name
+      |FROM orders JOIN users ON orders.user_id = users.id""".stripMargin
+  private val dayStatsSelect =
+    """SELECT date_format(ctime, 'yyyy-MM-dd') cday, SUM(amount) amount,
+      |       COUNT(*) cnt
+      |FROM orders WHERE status <> 'closed'
+      |GROUP BY date_format(ctime, 'yyyy-MM-dd')""".stripMargin
+
+  /** A session with a join statement and an aggregate statement, each on
+    * its own index. */
+  private def joinAndAggSession(): CdcSqlSession = {
+    val session = new CdcSqlSession(spark, sources,
+      sinkKeys = Map("day_stats" -> Seq("cday")))
+    session.insertInto(s"INSERT INTO order_names $orderViewSelect")
+    session.insertInto(s"INSERT INTO day_stats $dayStatsSelect")
+    session
+  }
+
+  /** Every index equals its statement run as a batch query over the
+    * pipeline's final state. */
+  private def assertSinkEqualsRecompute(pipeline: CdcPipeline,
+      sink: InMemoryUpsertSink): Unit = {
+    Seq("orders", "users").foreach(t =>
+      pipeline.state(t).drop("key").createOrReplaceTempView(t))
+    Seq("order_names" -> (orderViewSelect, "id"),
+        "day_stats" -> (dayStatsSelect, "cday")).foreach {
+      case (index, (select, key)) =>
+        val expected = spark.sql(select).collect().map { r =>
+          r.getAs[Any](key).toString ->
+            r.schema.fieldNames.filter(_ != key).map(f => f -> r.getAs[Any](f)).toMap
+        }.toMap
+        assert(sink.docs(index).map { case (id, doc) => id -> (doc - key) } ==
+          expected, s"index $index")
+    }
+  }
+
+  private def batch0 = Seq(
+    rec("users", userEnv("c", "u1", "Alice", 30)),
+    rec("users", userEnv("c", "u2", "Bob", 40)),
+    rec("orders", orderEnv("c", "a1", "u1", 10.0, "created", "2021-10-01")),
+    rec("orders", orderEnv("c", "a2", "u2", 20.0, "created", "2021-10-01")),
+    rec("orders", orderEnv("c", "a3", "u1", 5.0, "created", "2021-10-02")))
+    .toDF("table", "value", "seq")
+  private def batch1 = Seq(
+    rec("orders", orderEnv("d", "a2", "u2", 20.0, "created", "2021-10-01")),
+    rec("orders", orderEnv("u", "a3", "u1", 5.0, "closed", "2021-10-02",
+      before = Some("created"))))
+    .toDF("table", "value", "seq")
+  private def batch2 = Seq(
+    rec("orders", orderEnv("c", "a4", "u2", 7.0, "created", "2021-10-02")),
+    rec("users", userEnv("d", "u1", "Alice", 30)))
+    .toDF("table", "value", "seq")
+
+  test("a batch processed twice with the same batchId leaves the sink identical") {
+    val sink = new InMemoryUpsertSink
+    val pipeline = joinAndAggSession().pipeline(tmpDir("sqlins-replay"), sink)
+    pipeline.processBatch(batch0, Some(0L))
+    val b1 = batch1
+    pipeline.processBatch(b1, Some(1L))
+    val docs = Seq("order_names", "day_stats").map(sink.docs)
+    assert(!sink.docs("order_names").contains("a2"))
+    assert(!sink.docs("day_stats").contains("2021-10-02"))
+
+    pipeline.processBatch(b1, Some(1L))
+    assert(Seq("order_names", "day_stats").map(sink.docs) == docs)
+    assertSinkEqualsRecompute(pipeline, sink)
+  }
+
+  test("a batch whose sink throws does not advance the carried result") {
+    val inner = new InMemoryUpsertSink
+    @volatile var failDeletesOf: Option[String] = None
+    val sink = new UpsertSink {
+      override def upsert(index: String, df: org.apache.spark.sql.DataFrame): Unit =
+        inner.upsert(index, df)
+      override def delete(index: String, df: org.apache.spark.sql.DataFrame): Unit = {
+        if (failDeletesOf.contains(index)) throw new RuntimeException("sink down")
+        inner.delete(index, df)
+      }
+    }
+    val pipeline = joinAndAggSession().pipeline(tmpDir("sqlins-sinkfail"), sink)
+    pipeline.processBatch(batch0, Some(0L))
+    assertSinkEqualsRecompute(pipeline, inner)
+
+    // batch 1's merges commit and its upserts land, then the order
+    // index's deletes fail: a2's retraction is lost for now
+    val b1 = batch1
+    failDeletesOf = Some("order_names")
+    intercept[RuntimeException](pipeline.processBatch(b1, Some(1L)))
+    assert(inner.docs("order_names").contains("a2"))
+
+    // redelivery retracts it from the pre-batch state, and later batches
+    // keep matching a batch recompute
+    failDeletesOf = None
+    pipeline.processBatch(b1, Some(1L))
+    assert(!inner.docs("order_names").contains("a2"))
+    assertSinkEqualsRecompute(pipeline, inner)
+    pipeline.processBatch(batch2, Some(2L))
+    assertSinkEqualsRecompute(pipeline, inner)
+    assert(inner.docs("order_names").keySet == Set("a4"))
+  }
 }
