@@ -70,10 +70,11 @@ object Relational {
 
     /** Q4 (SURVEY §2.2): the reference's flagship `order_view` — two-sided
       * inner equi-join + dotted-alias projection (reference:
-      * flink-ddl.sql:179-190). On a changelog this is maintained
-      * incrementally (graft.streaming.ReferenceViews.orderView over
-      * CdcPipeline, exercised end-to-end in CdcPipelineSpec); the
-      * batch form over compacted tables is the shuffle/sort-merge join below.
+      * flink-ddl.sql:179-190). On a changelog the reference's INSERT INTO
+      * statement itself is maintained per micro-batch
+      * (graft.streaming.SqlInsert.viewDef over CdcPipeline, exercised
+      * end-to-end in CdcPipelineSpec and SqlInsertSpec); the batch form
+      * over compacted tables is the shuffle/sort-merge join below.
       * At 100 TB both sides are large → shuffle join on the key; AQE picks
       * broadcast automatically when one side's runtime size is small. */
     QueryDef("q04_order_view",

@@ -83,6 +83,25 @@ final case class ViewDef(
   def sinkIndex: String = Option(index).getOrElse(name)
 }
 
+object ViewDef {
+
+  /** A stateless per-row view: `report` maps the post-batch rows of
+    * `table`'s touched keys (with their `key` column) to documents keyed
+    * by `id`, and a touched key that yields no document (deleted, or
+    * dropped by `report`) is retracted. O(|batch|) narrow work plus one
+    * bucket-pruned state read; replay-idempotent, since the report is
+    * deterministic in post-state and the sink upsert is keyed. */
+  def perRow(name: String, table: String)(
+      report: DataFrame => DataFrame): ViewDef =
+    ViewDef(name, (_, post, batch, _) => {
+      val affected = batch(table).select("key").distinct()
+      val upserts = report(post.rows(table, affected))
+      val deletes = affected.select(col("key").as("id"))
+        .join(upserts.select("id"), Seq("id"), "left_anti")
+      (upserts, deletes)
+    })
+}
+
 /** The continuous-ETL runner — Spark-first re-expression of the
   * reference's Flink streaming topology (SURVEY §3 entry points 1-2):
   * one micro-batched stream of Debezium envelopes (multiple "topics"

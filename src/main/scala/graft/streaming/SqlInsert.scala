@@ -50,12 +50,12 @@ import graft.{Engine, TableSpec}
   * Scale note, stated honestly: per-batch cost is O(query-over-state),
   * not O(batch) — this is the semantic fallback that makes any statement
   * runnable, not the scale path. The carried result removes the
-  * pre-batch half of that cost, not its order. The reference views all
-  * have O(batch) incremental forms in this library ([[ReferenceViews]],
-  * [[IncrementalAgg]], [[StreamingDedup]]); a production deployment runs
-  * those for hot statements and the generic form for the long tail,
-  * trading per-batch cost for generality exactly like periodically-
-  * refreshed materialized views in a warehouse.
+  * pre-batch half of that cost, not its order. The O(batch) forms in
+  * this library are hand-written per view ([[IncrementalAgg]]'s
+  * retractive aggregates, [[StreamingDedup]]); a production deployment
+  * runs those for hot statements and the generic form for the long
+  * tail, trading per-batch cost for generality exactly like
+  * periodically-refreshed materialized views in a warehouse.
   */
 object SqlInsert {
 

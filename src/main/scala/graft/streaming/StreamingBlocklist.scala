@@ -9,23 +9,14 @@ import graft.operators.Curation
   * live document's token counts, matched blocklist terms, and the
   * density keep verdict. Like [[StreamingC4]]/[[StreamingGopher]], the
   * stateless end of the family: [[Curation.blocklistReport]] is pure
-  * row-local array arithmetic (no explode, no shuffle), so per batch
-  * the view re-derives exactly the touched keys from post-state — the
-  * SAME columns batch q139 emits, one code path pinned once — and
-  * retracts deleted keys. O(|batch|) narrow work plus one bucket-pruned
-  * state read; replay-idempotent for free. */
+  * row-local array arithmetic (no explode, no shuffle), so the view is
+  * a [[ViewDef.perRow]] over the SAME columns batch q139 emits — one
+  * code path, pinned once. */
 object StreamingBlocklist {
 
   /** Sink documents: (id = doc key, n_tokens, n_blocked, matched_terms,
     * keep). */
   def blocklistView(name: String = "blocklist_gate",
       table: String = "documents"): ViewDef =
-    ViewDef(name, (pre, post, batch, ctx) => {
-      val affected = batch(table).select("key").distinct()
-      val live = post.rows(table, affected)
-      val upserts = Curation.blocklistReport(live, col("key").as("id"))
-      val deletes = affected.select(col("key").as("id"))
-        .join(upserts.select("id"), Seq("id"), "left_anti")
-      (upserts, deletes)
-    })
+    ViewDef.perRow(name, table)(Curation.blocklistReport(_, col("key").as("id")))
 }

@@ -9,23 +9,15 @@ import graft.operators.Curation
   * live document's line counts, page verdict, and cleaned text. Like
   * [[StreamingGopher]]/[[StreamingPii]], the stateless end of the
   * family: [[Curation.c4Report]] is pure per-row column arithmetic, so
-  * per batch the view re-derives exactly the touched keys from
-  * post-state (the SAME columns batch q128 emits — one code path,
-  * pinned once) and retracts deleted keys. O(|batch|) narrow work plus
-  * one bucket-pruned state read; replay-idempotent for free. */
+  * the view is a [[ViewDef.perRow]] over the SAME columns batch q128
+  * emits — one code path, pinned once. */
 object StreamingC4 {
 
   /** Sink documents: (id = doc key, n_lines, n_kept, page_keep,
     * cleaned). `docIdNum` drives the plant schedule — doc keys must be
     * numeric strings (the batch fixture's doc_id). */
   def c4View(name: String = "c4_gate", table: String = "documents"): ViewDef =
-    ViewDef(name, (pre, post, batch, ctx) => {
-      val affected = batch(table).select("key").distinct()
-      val live = post.rows(table, affected)
-      val upserts = Curation.c4Report(live,
-        col("key").as("id"), col("key").cast("long"))
-      val deletes = affected.select(col("key").as("id"))
-        .join(upserts.select("id"), Seq("id"), "left_anti")
-      (upserts, deletes)
-    })
+    ViewDef.perRow(name, table) { live =>
+      Curation.c4Report(live, col("key").as("id"), col("key").cast("long"))
+    }
 }

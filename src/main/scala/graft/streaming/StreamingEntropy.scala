@@ -9,11 +9,9 @@ import graft.operators.TextAnalysis
   * each live document's code-point entropy and key-mash verdict. Like
   * [[StreamingBlocklist]]/[[StreamingC4]], the stateless end of the
   * family: [[TextAnalysis.charEntropyReport]] depends on nothing but
-  * the document's own text, so per batch the view re-derives exactly
-  * the touched keys from post-state (the SAME aggregation batch q138
-  * runs — one code path, pinned once) and retracts deleted keys.
-  * O(|batch| × doc length) work plus one bucket-pruned state read;
-  * replay-idempotent for free. */
+  * the document's own text, so the view is a [[ViewDef.perRow]] over
+  * the SAME aggregation batch q138 runs — one code path, pinned once.
+  * O(|batch| × doc length) work. */
 object StreamingEntropy {
 
   /** Sink documents: (id = doc key, n_cp, n_distinct, entropy_bits,
@@ -21,14 +19,8 @@ object StreamingEntropy {
     * whose oracle's range(0) is empty) — they delete from the sink. */
   def entropyView(name: String = "entropy_gate",
       table: String = "documents"): ViewDef =
-    ViewDef(name, (pre, post, batch, ctx) => {
-      val affected = batch(table).select("key").distinct()
-      val live = post.rows(table, affected)
-      val upserts = TextAnalysis.charEntropyReport(
-          live.select(col("key"), col("text")), "key")
+    ViewDef.perRow(name, table) { live =>
+      TextAnalysis.charEntropyReport(live.select(col("key"), col("text")), "key")
         .withColumnRenamed("key", "id")
-      val deletes = affected.select(col("key").as("id"))
-        .join(upserts.select("id"), Seq("id"), "left_anti")
-      (upserts, deletes)
-    })
+    }
 }

@@ -8,24 +8,17 @@ import graft.operators.TextAnalysis
   * streaming form of batch q107: the sink holds, at every instant, each
   * live document's rule measurements, per-rule flags, and keep verdict.
   * Like [[StreamingPii]], this is the stateless end of the streaming
-  * family: the rules are pure per-row column arithmetic, so per batch it
-  * re-derives exactly the touched keys from post-state (the SAME
-  * [[TextAnalysis.gopherRules]] columns the batch query emits — one code
-  * path, pinned once) and retracts deleted keys. O(|batch|) narrow work
-  * plus one bucket-pruned state read; replay-idempotent for free. */
+  * family: the rules are pure per-row column arithmetic, so the view is
+  * a [[ViewDef.perRow]] over the SAME [[TextAnalysis.gopherRules]]
+  * columns the batch query emits — one code path, pinned once. */
 object StreamingGopher {
 
   /** Sink documents: (id = doc key, n_tokens, mean_word_len,
     * n_alpha_words, n_symbols, n_stopwords, r_*, keep). */
   def gopherView(name: String = "gopher_gate", table: String = "documents",
       textCol: String = "text"): ViewDef =
-    ViewDef(name, (pre, post, batch, ctx) => {
-      val affected = batch(table).select("key").distinct()
-      val live = post.rows(table, affected)
-        .select(col("key"), col(textCol).as("text"))
-      val upserts = TextAnalysis.gopherRules(live, col("key").as("id"))
-      val deletes = affected.select(col("key").as("id"))
-        .join(upserts.select("id"), Seq("id"), "left_anti")
-      (upserts, deletes)
-    })
+    ViewDef.perRow(name, table) { live =>
+      TextAnalysis.gopherRules(live.select(col("key"), col(textCol).as("text")),
+        col("key").as("id"))
+    }
 }

@@ -9,25 +9,17 @@ import graft.operators.TextAnalysis
   * each live document's replacement-char / control-char counts and the
   * 1% drop verdict. Like [[StreamingEntropy]]/[[StreamingBlocklist]],
   * the stateless end of the family: [[TextAnalysis.mojibakeReport]] is
-  * pure row-local string arithmetic, so per batch the view re-derives
-  * exactly the touched keys from post-state (the SAME columns batch
-  * q148 emits — one code path, pinned once; the view gates the text
-  * that actually arrives, with no doc_id plant) and retracts deleted
-  * keys. O(|batch|) narrow work plus one bucket-pruned state read;
-  * replay-idempotent for free. */
+  * pure row-local string arithmetic, so the view is a
+  * [[ViewDef.perRow]] over the SAME columns batch q148 emits — one code
+  * path, pinned once; the view gates the text that actually arrives,
+  * with no doc_id plant. */
 object StreamingMojibake {
 
   /** Sink documents: (id = doc key, n_cp, n_repl, n_ctrl, keep). */
   def mojibakeView(name: String = "mojibake_gate",
       table: String = "documents"): ViewDef =
-    ViewDef(name, (pre, post, batch, ctx) => {
-      val affected = batch(table).select("key").distinct()
-      val live = post.rows(table, affected)
-      val upserts = TextAnalysis.mojibakeReport(
-          live.select(col("key"), col("text")), "key")
+    ViewDef.perRow(name, table) { live =>
+      TextAnalysis.mojibakeReport(live.select(col("key"), col("text")), "key")
         .withColumnRenamed("key", "id")
-      val deletes = affected.select(col("key").as("id"))
-        .join(upserts.select("id"), Seq("id"), "left_anti")
-      (upserts, deletes)
-    })
+    }
 }

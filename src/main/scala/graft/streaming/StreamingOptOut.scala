@@ -15,25 +15,18 @@ import graft.operators.Provenance
   * embedding-decon view's benchmark side. Stateless like
   * [[StreamingBlocklist]]: [[Provenance.registeredDomain]] +
   * [[Provenance.optedOut]] are pure row-local functions of the doc id
-  * (one code path with batch), so per batch the view re-derives exactly
-  * the touched keys from post-state and retracts deleted keys —
-  * O(|batch|) narrow work, replay-idempotent for free. Non-numeric ids
-  * parse to a null domain and report opted_out = false, same as batch's
-  * bare-suffix rule. */
+  * (one code path with batch), so the view is a [[ViewDef.perRow]].
+  * Non-numeric ids parse to a null domain and report opted_out = false,
+  * same as batch's bare-suffix rule. */
 object StreamingOptOut {
 
   /** Sink documents: (id = doc key, registered_domain, opted_out). */
   def optOutView(name: String = "optout_gate",
       table: String = "documents"): ViewDef =
-    ViewDef(name, (pre, post, batch, ctx) => {
-      val affected = batch(table).select("key").distinct()
-      val live = post.rows(table, affected)
-      val upserts = live.select(col("key").as("id"),
+    ViewDef.perRow(name, table) { live =>
+      live.select(col("key").as("id"),
           Provenance.registeredDomain(col("key").cast("long"))
             .as("registered_domain"))
         .withColumn("opted_out", Provenance.optedOut(col("registered_domain")))
-      val deletes = affected.select(col("key").as("id"))
-        .join(upserts.select("id"), Seq("id"), "left_anti")
-      (upserts, deletes)
-    })
+    }
 }

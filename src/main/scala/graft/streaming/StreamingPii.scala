@@ -9,28 +9,19 @@ import graft.operators.Curation
   * document's per-class PII counts and the md5 signature of its masked
   * text. The scrub is a pure per-row map, so this is the STATELESS end
   * of the streaming family (no view-owned state tables, unlike the
-  * dedup/BM25 ladders): per batch it re-derives exactly the touched
-  * keys from post-state and retracts keys whose document was deleted.
+  * dedup/BM25 ladders): a [[ViewDef.perRow]] that re-derives exactly
+  * the touched keys from post-state and retracts keys whose document
+  * was deleted.
   *
-  * 100 TB posture: per-batch work is O(|batch|) narrow column
-  * arithmetic plus one bucket-pruned state read for the touched keys —
-  * nothing corpus-sized, nothing driver-sized, no shuffle beyond the
-  * key-pruned read. Replay-idempotent for free: the map is
-  * deterministic in post-state, and the sink upsert is keyed. */
+  * 100 TB posture: nothing corpus-sized, nothing driver-sized, no
+  * shuffle beyond the key-pruned read. */
 object StreamingPii {
 
   /** Sink documents: (id = doc key, n_emails, n_phones, n_ips,
     * clean_sig). */
   def piiView(name: String = "pii_scrub", table: String = "documents",
       textCol: String = "text"): ViewDef =
-    ViewDef(name, (pre, post, batch, ctx) => {
-      val affected = batch(table).select("key").distinct()
-      val live = post.rows(table, affected)
-        .select(col("key"), col(textCol).as("text"))
-      val upserts = live.select(
-        (col("key").as("id") +: Curation.piiColumns(col("text"))): _*)
-      val deletes = affected.select(col("key").as("id"))
-        .join(upserts.select("id"), Seq("id"), "left_anti")
-      (upserts, deletes)
-    })
+    ViewDef.perRow(name, table) { live =>
+      live.select((col("key").as("id") +: Curation.piiColumns(col(textCol))): _*)
+    }
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
 import graft.{SparkSuite, TableSpec}
-import graft.streaming.{CdcPipeline, InMemoryUpsertSink, ReferenceViews}
+import graft.streaming.{CdcPipeline, InMemoryUpsertSink, ReferenceSql}
 
 /** The multi-partition KEYED replay mode (r12 VERDICT #1): Kafka's
   * murmur2 key placement, per-partition offset VECTORS, interleaved
@@ -241,7 +241,7 @@ class KeyedReplaySpec extends SparkSuite {
     // — run A: uninterrupted through the keyed source —
     val sinkA = new InMemoryUpsertSink
     val pipeA = new CdcPipeline(spark, sources, tmpDir("keyed-stateA"),
-      sinkA, Seq(ReferenceViews.orderView, ReferenceViews.userOrderStats))
+      sinkA, ReferenceSql.views(spark, "order_view", "user_order_stats_view"))
     val qA = pipeA.start(replayStream(dir, Long.MaxValue),
       tmpDir("keyed-ckptA"))
     qA.processAllAvailable()
@@ -255,7 +255,7 @@ class KeyedReplaySpec extends SparkSuite {
     val ckptB = tmpDir("keyed-ckptB")
     val sinkB = new InMemoryUpsertSink
     val pipeB = new CdcPipeline(spark, sources, tmpDir("keyed-stateB"),
-      sinkB, Seq(ReferenceViews.orderView, ReferenceViews.userOrderStats))
+      sinkB, ReferenceSql.views(spark, "order_view", "user_order_stats_view"))
     val q1 = pipeB.start(replayStream(dir, 2), ckptB)
     val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
     while (q1.recentProgress.length < 1 && System.nanoTime() < deadline)

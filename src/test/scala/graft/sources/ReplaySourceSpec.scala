@@ -7,7 +7,7 @@ import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
 import graft.{SparkSuite, TableSpec}
-import graft.streaming.{CdcPipeline, InMemoryUpsertSink, ReferenceViews}
+import graft.streaming.{CdcPipeline, InMemoryUpsertSink, ReferenceSql}
 
 /** The DSv2 replay source end to end (r11 VERDICT #1): offset-exact
   * batch planning over the reference's captured console dumps, admission
@@ -192,7 +192,7 @@ class ReplaySourceSpec extends SparkSuite {
     // — run A: uninterrupted, one batch, fresh everything —
     val sinkA = new InMemoryUpsertSink
     val pipeA = new CdcPipeline(spark, sources, tmpDir("replay-stateA"),
-      sinkA, Seq(ReferenceViews.orderView, ReferenceViews.userOrderStats))
+      sinkA, ReferenceSql.views(spark, "order_view", "user_order_stats_view"))
     val qA = pipeA.start(replayStream(dir, Long.MaxValue),
       tmpDir("replay-ckptA"))
     qA.processAllAvailable()
@@ -208,7 +208,7 @@ class ReplaySourceSpec extends SparkSuite {
     val stateB = tmpDir("replay-stateB")
     val sinkB = new InMemoryUpsertSink
     val pipeB = new CdcPipeline(spark, sources, stateB, sinkB,
-      Seq(ReferenceViews.orderView, ReferenceViews.userOrderStats))
+      ReferenceSql.views(spark, "order_view", "user_order_stats_view"))
 
     val q1 = pipeB.start(replayStream(dir, 2), ckptB)
     // let at least one micro-batch commit, then kill before the drain

@@ -78,7 +78,7 @@ class CdcPipelineSpec extends SparkSuite {
   test("order_view join + user_order_stats retraction, end to end") {
     val sink = new InMemoryUpsertSink
     val pipeline = new CdcPipeline(spark, sources, tmpDir("cdc-state"), sink,
-      Seq(ReferenceViews.orderView, ReferenceViews.userOrderStats))
+      ReferenceSql.views(spark, "order_view", "user_order_stats_view"))
 
     implicit val sq = spark.sqlContext
     val stream = MemoryStream[(String, String, Long)]
@@ -146,7 +146,7 @@ class CdcPipelineSpec extends SparkSuite {
   test("product_stats: fact-to-fact join agg retracts when the order closes") {
     val sink = new InMemoryUpsertSink
     val pipeline = new CdcPipeline(spark, sources, tmpDir("cdc-state3"), sink,
-      Seq(ReferenceViews.productStats))
+      ReferenceSql.views(spark, "product_stats_view"))
 
     implicit val sq = spark.sqlContext
     val stream = MemoryStream[(String, String, Long)]
@@ -226,7 +226,7 @@ class CdcPipelineSpec extends SparkSuite {
   test("shared index: passthrough and totals views merge into one document") {
     val sink = new InMemoryUpsertSink
     val pipeline = new CdcPipeline(spark, sources, tmpDir("cdc-state5"), sink,
-      Seq(ReferenceViews.userView, ReferenceViews.userTotals))
+      ReferenceSql.views(spark, "user_view", "user_totals"))
 
     implicit val sq = spark.sqlContext
     val stream = MemoryStream[(String, String, Long)]
@@ -252,7 +252,7 @@ class CdcPipelineSpec extends SparkSuite {
   test("parquet upsert sink: distributed keyed MERGE end to end") {
     val sink = new ParquetUpsertSink(spark, tmpDir("psink"))
     val pipeline = new CdcPipeline(spark, sources, tmpDir("cdc-state6"), sink,
-      Seq(ReferenceViews.orderView))
+      ReferenceSql.views(spark, "order_view"))
 
     implicit val sq = spark.sqlContext
     val stream = MemoryStream[(String, String, Long)]
@@ -318,7 +318,7 @@ class CdcPipelineSpec extends SparkSuite {
   test("order_view_items: COLLECT/LISTAGG docs merge into the shared order index") {
     val sink = new InMemoryUpsertSink
     val pipeline = new CdcPipeline(spark, sources, tmpDir("cdc-state8"), sink,
-      Seq(ReferenceViews.orderView, ReferenceViews.orderItemsView))
+      ReferenceSql.views(spark, "order_view", "order_view_items"))
 
     implicit val sq = spark.sqlContext
     val stream = MemoryStream[(String, String, Long)]
@@ -364,7 +364,7 @@ class CdcPipelineSpec extends SparkSuite {
   test("order_stats (day-keyed) and product_view complete the sink list") {
     val sink = new InMemoryUpsertSink
     val pipeline = new CdcPipeline(spark, sources, tmpDir("cdc-state9"), sink,
-      Seq(ReferenceViews.orderStats, ReferenceViews.productView))
+      ReferenceSql.views(spark, "order_stats_view", "product_view"))
 
     implicit val sq = spark.sqlContext
     val stream = MemoryStream[(String, String, Long)]
@@ -406,7 +406,7 @@ class CdcPipelineSpec extends SparkSuite {
   test("batch reprocessing is idempotent (micro-batch redelivery after failure)") {
     val sink = new InMemoryUpsertSink
     val pipeline = new CdcPipeline(spark, sources, tmpDir("cdc-state7"), sink,
-      Seq(ReferenceViews.orderView, ReferenceViews.userOrderStats))
+      ReferenceSql.views(spark, "order_view", "user_order_stats_view"))
     val batch = Seq(
       rec("users", userEnv("c", "u5", "Erin", 33)),
       rec("orders", orderEnv("c", "oz", "u5", 77.0, "created", "2021-07-01")))
@@ -498,7 +498,7 @@ class CdcPipelineSpec extends SparkSuite {
   test("same-batch create+update collapses to the latest image (compaction)") {
     val sink = new InMemoryUpsertSink
     val pipeline = new CdcPipeline(spark, sources, tmpDir("cdc-state2"), sink,
-      Seq(ReferenceViews.orderView))
+      ReferenceSql.views(spark, "order_view"))
 
     implicit val sq = spark.sqlContext
     val stream = MemoryStream[(String, String, Long)]

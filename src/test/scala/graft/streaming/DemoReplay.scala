@@ -33,7 +33,7 @@ object DemoReplay {
       Seq(TableSpec("orders", ordersSchema, primaryKey = Seq("id")),
         TableSpec("users", usersSchema, primaryKey = Seq("id"))),
       stateDir, sink,
-      Seq(ReferenceViews.orderView, ReferenceViews.userOrderStats))
+      ReferenceSql.views(spark, "order_view", "user_order_stats_view"))
 
     val user =
       """{"before":null,"after":{"id":"1","name":"Walter","age":44,

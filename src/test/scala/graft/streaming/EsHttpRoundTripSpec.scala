@@ -101,7 +101,7 @@ class EsHttpRoundTripSpec extends SparkSuite with BeforeAndAfterEach {
       Seq(TableSpec("orders", ordersSchema, primaryKey = Seq("id")),
         TableSpec("users", usersSchema, primaryKey = Seq("id"))),
       tmpDir("es-http-state"), sink(),
-      Seq(ReferenceViews.orderView))
+      ReferenceSql.views(spark, "order_view"))
 
     def ts(s: String) = s""""${s}T00:00:00Z""""
     pipeline.processBatch(Seq(

@@ -86,13 +86,14 @@ class PipelinePropertySpec extends SparkSuite {
           TableSpec("users", usersSchema, primaryKey = Seq("id")),
           TableSpec("order_items", itemsSchema, primaryKey = Seq("id"))),
         tmpDir(s"prop-state-$trial"), sink,
-        Seq(ReferenceViews.orderView, ReferenceViews.userOrderStats,
-          ReferenceViews.productStats,
+        ReferenceSql.views(spark, "order_view", "user_order_stats_view",
+          "product_stats_view") :+
           // own index here: in the shared index a doc delete from either
           // view removes the other's fields too (real ES semantics,
           // covered deterministically in CdcPipelineSpec) — random
           // sequences would make the clobbering order part of the truth
-          ReferenceViews.orderItemsView.copy(index = null)))
+          ReferenceSql.view(spark, "order_view_items",
+            index = "order_view_items"))
 
       val records = evs.zipWithIndex.map { case (e, i) =>
         envelope(e, i.toLong)

@@ -116,6 +116,25 @@ class SqlInsertSpec extends SparkSuite {
     assert(sink.docs("user_view").isEmpty)
   }
 
+  test("a user-only batch re-emits every joined order with the new user.name") {
+    val session = new CdcSqlSession(spark, sources)
+    session.insertInto(orderViewStmt)
+    val sink = new InMemoryUpsertSink
+    val pipeline = session.pipeline(tmpDir("sqlins-rename"), sink)
+    pipeline.processBatch(Seq(
+      rec("users", userEnv("c", "u1", "Alice", 30)),
+      rec("users", userEnv("c", "u2", "Bob", 40)),
+      rec("orders", orderEnv("c", "o1", "u1", 100.0, "created", "2021-01-30")),
+      rec("orders", orderEnv("c", "o2", "u1", 50.0, "created", "2021-01-31")),
+      rec("orders", orderEnv("c", "o3", "u2", 70.0, "created", "2021-01-31")))
+      .toDF("table", "value", "seq"))
+    // the batch carries no order change, only the rename
+    pipeline.processBatch(Seq(rec("users", userEnv("u", "u1", "Alicia", 30)))
+      .toDF("table", "value", "seq"))
+    assert(sink.docs("order_view").map { case (id, d) => id -> d("user.name") } ==
+      Map("o1" -> "Alicia", "o2" -> "Alicia", "o3" -> "Bob"))
+  }
+
   test("aggregate statement retracts groups that empty out") {
     val session = new CdcSqlSession(spark, sources,
       sinkKeys = Map("order_stats_view" -> Seq("cday")))
