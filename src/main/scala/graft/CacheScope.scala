@@ -82,7 +82,8 @@ object CacheScope {
   }
 
   /** [[persist]] each frame on the CALLER's scope, then materialize them
-    * CONCURRENTLY (one blocking count per frame from a small pool) — for
+    * CONCURRENTLY (one blocking count per frame, [[Concurrently]]: every
+    * count is awaited, then the first failure rethrown as is) — for
     * INDEPENDENT shared frames whose eager materializations would
     * otherwise serialize into back-to-back barriers (guide §2.6 "overlap
     * independent jobs": as one count's stage dwindles to stragglers the
@@ -93,15 +94,8 @@ object CacheScope {
     * like the broadcast-thread duplication [[eager]] exists to prevent. */
   def eagerAll(dfs: DataFrame*): Seq[DataFrame] = {
     val ps = dfs.map(persist)
-    if (ps.size <= 1) ps.foreach(_.count())
-    else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(ps.size)
-      try {
-        ps.map(df => pool.submit(new java.util.concurrent.Callable[Long] {
-          override def call(): Long = df.count()
-        })).foreach(_.get())
-      } finally pool.shutdown()
-    }
+    ps.headOption.foreach(h =>
+      Concurrently(h.sparkSession, ps.map(df => () => { df.count(); () })))
     ps
   }
 

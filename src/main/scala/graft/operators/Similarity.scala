@@ -148,10 +148,12 @@ object Similarity {
     * (pos, contrib) exchange. The pass now runs through ONE reusable
     * compiled mapPartitions over the cached vectors with BIT-IDENTICAL
     * arithmetic: the dot is DotProduct's left-to-right primitive loop;
-    * round(d·x, 12) → decimal(38,12) is the shortest-decimal
-    * `BigDecimal.valueOf → setScale(12, HALF_UP)` path Spark's
-    * Round-on-double + Cast take; the exact decimal partials merge
-    * order-free; and the per-dimension tail replays
+    * round(d·x, 12) → decimal(38,12) replays Spark's two steps as
+    * [[graft.operators.TextAnalysis.logregGradient]] does:
+    * Round-on-double (`BigDecimal.valueOf → setScale(12, HALF_UP)`,
+    * back to a double) then Cast (`valueOf → setScale(12, HALF_UP)`
+    * again); the exact decimal partials merge order-free; and the
+    * per-dimension tail replays
     * `round(sum.cast(double), 6).cast(decimal(18,6))` exactly
     * (valueOf/setScale twice). XtxPassSpec proves value equality
     * against the former plan on random vectors across chained rounds.
@@ -177,8 +179,9 @@ object Similarity {
           while (i < 64) { d += arr.getDouble(i) * wv(i); i += 1 }
           i = 0
           while (i < 64) {
-            acc(i) = acc(i).add(
-              B.valueOf(d * arr.getDouble(i)).setScale(12, RM.HALF_UP))
+            val c = B.valueOf(d * arr.getDouble(i))
+              .setScale(12, RM.HALF_UP).doubleValue()
+            acc(i) = acc(i).add(B.valueOf(c).setScale(12, RM.HALF_UP))
             i += 1
           }
         }

@@ -1,17 +1,12 @@
 package graft.streaming
 
-import java.util.concurrent.{CompletionException, Executors}
-
-import scala.util.{Failure, Try}
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
-import graft.TableSpec
+import graft.{Concurrently, TableSpec}
 import graft.cdc.{Debezium, Materializer}
 
 /** Read access to the pipeline's materialized state, pinned to one
@@ -38,7 +33,11 @@ final class StateAccess(
   *  - `batchId`: the foreachBatch id, when the batch came from a stream —
   *    views with their own state stores thread it into those stores'
   *    merges so a REDELIVERED batch (crash between per-store commits)
-  *    replays idempotently ([[ParquetKeyedTable.merge]]).
+  *    replays idempotently ([[ParquetKeyedTable.merge]]), and pin every
+  *    pre-batch read of those stores at
+  *    `store.versionBefore(ctx.batchId)` — the replay pin
+  *    ([[ParquetKeyedTable.versionBefore]]), so a redelivered batch
+  *    reads the same pre-state and recomputes the same deltas.
   *  - `changedTables`: the source tables this batch carries changes for,
   *    from the pipeline's one stats pass — a view skips a batch that
   *    touches none of its tables without probing the changelogs.
@@ -50,6 +49,10 @@ final class StateAccess(
   *    consumed the view's output — releasing batch-scoped caches without
   *    forcing the sink to recompute their lineage. Runs whether or not
   *    the batch succeeded.
+  *  - `cache`: the batch-scoped cache — persists a frame at
+  *    MEMORY_AND_DISK (lineage kept: a lost executor recomputes) and
+  *    `defer`s its unpersist, so a view's intermediate frames live
+  *    exactly until the sink has consumed the batch.
   *  - `onCommit`: registers an action to run once EVERY sink write of the
   *    batch has returned, before the deferred cleanups; skipped when the
   *    batch fails. Views may call both from concurrent threads. */
@@ -60,6 +63,11 @@ final class BatchCtx(
   private val commits = scala.collection.mutable.Buffer.empty[() => Unit]
   private val cleanups = scala.collection.mutable.Buffer.empty[() => Unit]
   def defer(f: => Unit): Unit = synchronized { cleanups += (() => f) }
+  def cache(df: DataFrame): DataFrame = {
+    df.persist(StorageLevel.MEMORY_AND_DISK)
+    defer(df.unpersist())
+    df
+  }
   def onCommit(f: => Unit): Unit = synchronized { commits += (() => f) }
   private[streaming] def commit(): Unit = synchronized(commits.toSeq).foreach(_())
   private[streaming] def close(): Unit = synchronized(cleanups.toSeq).foreach(_())
@@ -148,14 +156,12 @@ final class CdcPipeline(
     sources: Seq[TableSpec],
     stateDir: String,
     sink: UpsertSink,
-    views: Seq[ViewDef],
-    stateBuckets: Int = 32) {
+    views: Seq[ViewDef]) {
 
   private val byName = sources.map(s => s.name -> s).toMap
   private val states: Map[String, ParquetKeyedTable] =
     sources.map(s => s.name ->
-      new ParquetKeyedTable(spark, s"$stateDir/${s.name}",
-        numBuckets = stateBuckets)).toMap
+      new ParquetKeyedTable(spark, s"$stateDir/${s.name}")).toMap
 
   /** Materialized-state schema: leading key + the row columns. */
   private def stateSchema(table: String): StructType =
@@ -232,18 +238,13 @@ final class CdcPipeline(
       // batch REPLAY, versionBefore un-pins any table that already
       // committed this batch back to its pre-batch version
       val pre = new StateAccess(states, stateSchema,
-        sources.map { s =>
-          s.name -> (batchId match {
-            case Some(id) => states(s.name).versionBefore(id)
-            case None     => states(s.name).version
-          })
-        }.toMap)
+        sources.map(s => s.name -> states(s.name).versionBefore(batchId)).toMap)
       val replay = batchId.exists(id => states.values.exists(_.lastBatchId.contains(id)))
 
       // 3. merge only touched tables, concurrently: a merge is a state
       //    rewrite (write amplification), and the stores commit
       //    independently (each idempotent by batchId)
-      CdcPipeline.concurrently(spark, touched.toSeq.map { case (table, buckets) => () =>
+      Concurrently(spark, touched.toSeq.map { case (table, buckets) => () =>
         val compacted = Materializer.compact(changelogs(table))
         val upserts = compacted.filter(col("op") =!= "d")
           .select(col("key") +: byName(table).schema.fieldNames.map(f =>
@@ -260,7 +261,7 @@ final class CdcPipeline(
       val ctx = new BatchCtx(batchId, touched.keySet, replay)
       try {
         val indexes = views.map(_.sinkIndex).distinct
-        CdcPipeline.concurrently(spark, indexes.map { index => () =>
+        Concurrently(spark, indexes.map { index => () =>
           views.filter(_.sinkIndex == index).foreach { view =>
             val (upserts, deletes) = view.maintain(pre, post, changelogs, ctx)
             sink.upsert(index, upserts)
@@ -283,26 +284,4 @@ final class CdcPipeline(
       .option("checkpointLocation", checkpointDir)
       .foreachBatch((b: DataFrame, id: Long) => processBatch(b, Some(id)))
       .start()
-}
-
-object CdcPipeline {
-  /** Runs `tasks` on worker threads that carry the calling thread's
-    * active session and Spark local properties, waits for EVERY task, then
-    * rethrows the first failure in task order. A single task runs on the
-    * calling thread. */
-  private def concurrently(spark: SparkSession, tasks: Seq[() => Unit]): Unit =
-    if (tasks.size <= 1) tasks.foreach(_())
-    else {
-      val pool = Executors.newFixedThreadPool(tasks.size)
-      try {
-        val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-        tasks.map(t => SQLExecution.withThreadLocalCaptured(session, pool)(t()))
-          .map(f => Try(f.join())) // join: uninterruptible, awaits all
-          .collectFirst { case Failure(e) => e }
-          .foreach {
-            case e: CompletionException if e.getCause != null => throw e.getCause
-            case e => throw e
-          }
-      } finally pool.shutdown()
-    }
 }

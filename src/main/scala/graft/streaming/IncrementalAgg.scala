@@ -74,26 +74,19 @@ object IncrementalAgg {
   private[streaming] def applyDeltas(
       aggTable: ParquetKeyedTable, gNames: Seq[String],
       deltas: DataFrame, ctx: BatchCtx): (DataFrame, DataFrame) = {
-    val summed = deltas
+    val summed = ctx.cache(deltas
       .groupBy(("key" +: gNames).map(col): _*)
-      .agg(sum("d_amt").as("d_amt"), sum("d_cnt").as("d_cnt"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    ctx.defer(summed.unpersist())
+      .agg(sum("d_amt").as("d_amt"), sum("d_cnt").as("d_cnt")))
     val schema = aggSchema(gNames)
-    val preV = ctx.batchId match {
-      case Some(id) => aggTable.versionBefore(id)
-      case None     => aggTable.version
-    }
+    val preV = aggTable.versionBefore(ctx.batchId)
     val old = aggTable.rowsForKeysAt(preV, schema, summed.select("key"))
       .select(col("key") +: gNames.map(n => col(n).as(s"o_$n")) :+
         col("amt").as("o_amt") :+ col("cnt").as("o_cnt"): _*)
-    val merged = summed.join(old, Seq("key"), "full_outer")
+    val merged = ctx.cache(summed.join(old, Seq("key"), "full_outer")
       .select(col("key") +:
         gNames.map(n => coalesce(col(n), col(s"o_$n")).as(n)) :+
         (coalesce(col("o_amt"), lit(0.0)) + coalesce(col("d_amt"), lit(0.0))).as("amt") :+
-        (coalesce(col("o_cnt"), lit(0L)) + coalesce(col("d_cnt"), lit(0L))).as("cnt"): _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    ctx.defer(merged.unpersist()) // released after the sink consumes
+        (coalesce(col("o_cnt"), lit(0L)) + coalesce(col("d_cnt"), lit(0L))).as("cnt"): _*))
     val liveGroups = merged.filter(col("cnt") > 0)
     val deadGroups = merged.filter(col("cnt") <= 0).select("key")
     aggTable.merge(
@@ -109,9 +102,9 @@ object IncrementalAgg {
   def view(
       spark: SparkSession, stateDir: String, name: String, table: String,
       spec: GroupSpec, toDoc: DataFrame => DataFrame,
-      index: String = null, buckets: Int = 32): ViewDef = {
+      index: String = null): ViewDef = {
     val aggTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-agg", "key", buckets)
+      new ParquetKeyedTable(spark, s"$stateDir/$name-agg")
     val gNames = spec.groupCols.map(_._1)
     ViewDef(name, (pre, post, batch, ctx) => {
       val touched = batch(table).select("key").distinct()
@@ -205,20 +198,12 @@ object IncrementalAgg {
           lit(sign.toLong).as("d_cnt"))
     ViewDef("product_stats_view", (pre, post, batch, ctx) => {
       val isLive = col("status") =!= "closed"
-      val mem = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-      val preIdxV = ctx.batchId match {
-        case Some(id) => idxTable.versionBefore(id)
-        case None     => idxTable.version
-      }
+      val preIdxV = idxTable.versionBefore(ctx.batchId)
 
       // (1) item-side deltas, joined against POST order liveness
-      val touchedItems = batch("order_items").select("key").distinct()
-        .persist(mem)
-      ctx.defer(touchedItems.unpersist())
-      val preI = pre.rows("order_items", touchedItems).persist(mem)
-      ctx.defer(preI.unpersist())
-      val postI = post.rows("order_items", touchedItems).persist(mem)
-      ctx.defer(postI.unpersist())
+      val touchedItems = ctx.cache(batch("order_items").select("key").distinct())
+      val preI = ctx.cache(pre.rows("order_items", touchedItems))
+      val postI = ctx.cache(post.rows("order_items", touchedItems))
 
       // maintain the item-by-order projection from this batch's item
       // transitions: touched items leave their PRE order's row, live

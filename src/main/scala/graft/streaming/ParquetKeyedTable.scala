@@ -22,9 +22,11 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * version).
   *
   * 100 TB posture: this is the log-structured pattern of a table format
-  * (Delta/Iceberg). With `numBuckets > 0`, versions are written
-  * hash-distributed on a stable bucket of `key` ([[ParquetKeyedTable.bucketOf]]
-  * directory partitions) and a MERGE is *bucket-pruned*: only the bucket
+  * (Delta/Iceberg). Versions are always written hash-distributed on a
+  * stable bucket of `key` ([[ParquetKeyedTable.bucketOf]] directory
+  * partitions, `numBuckets` of them — one layout for every store, so a
+  * view and a reader reopening its store agree on the bucket of every
+  * key) and a MERGE is *bucket-pruned*: only the bucket
   * directories containing this batch's keys are read (partition-pruned
   * scan), anti-joined and rewritten; every untouched bucket is carried
   * forward into the new version as a hard link — a metadata-only
@@ -66,7 +68,8 @@ final class ParquetKeyedTable(
     spark: SparkSession,
     path: String,
     keyCol: String = "key",
-    numBuckets: Int = 0) {
+    numBuckets: Int = 32) {
+  require(numBuckets > 0, s"numBuckets must be positive, got $numBuckets")
 
   private val dir = Paths.get(path)
   private val pointer = dir.resolve("_CURRENT")
@@ -102,6 +105,11 @@ final class ParquetKeyedTable(
     case other => other.map(_._1)
   }
 
+  /** The replay pin every pre-batch read takes: [[versionBefore]] the
+    * micro-batch `batchId`, or the current version outside a stream. */
+  def versionBefore(batchId: Option[Long]): Option[Int] =
+    batchId.fold(version)(versionBefore)
+
   def exists: Boolean = currentVersion.isDefined
 
   /** The current committed version — capture it to pin a consistent view
@@ -123,24 +131,20 @@ final class ParquetKeyedTable(
     }
 
   /** Rows whose key appears in `keys` (single-column frame of `keyCol`),
-    * at a pinned version. When bucketed, the scan is pruned to the
-    * buckets the requested keys hash into — per-batch lookup cost tracks
-    * the BATCH's key set, not the state size. The bucket-set collect is
+    * at a pinned version. The scan is pruned to the buckets the
+    * requested keys hash into — per-batch lookup cost tracks the
+    * BATCH's key set, not the state size. The bucket-set collect is
     * metadata (≤ numBuckets ints). */
   def rowsForKeysAt(v: Option[Int], schema: StructType, keys: DataFrame): DataFrame = {
     val wanted = keys.select(keyCol).distinct()
     v match {
       case Some(ver) if hasData(dir.resolve(s"v$ver")) =>
-        val base = read(ver)
-        val pruned =
-          if (numBuckets > 0) {
-            val buckets = wanted.select(bucketOf(col(keyCol)))
-              .distinct().collect().map(_.getInt(0)).toSeq
-            if (buckets.isEmpty)
-              return spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-            base.filter(col("bucket").isin(buckets: _*))
-          } else base
-        pruned.drop("bucket").join(wanted, Seq(keyCol), "left_semi")
+        val buckets = wanted.select(bucketOf(col(keyCol)))
+          .distinct().collect().map(_.getInt(0)).toSeq
+        if (buckets.isEmpty)
+          return spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+        read(ver).filter(col("bucket").isin(buckets: _*))
+          .drop("bucket").join(wanted, Seq(keyCol), "left_semi")
       case _ =>
         spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
     }
@@ -172,9 +176,8 @@ final class ParquetKeyedTable(
   private def widen(prev: StructType, next: StructType): StructType =
     StructType(prev.fields ++ next.fields.filterNot(f => prev.fieldNames.contains(f.name)))
 
-  /** This store's bucket of `key` — one bucket (0) when unbucketed. */
-  def bucketOf(key: Column): Column =
-    if (numBuckets > 0) ParquetKeyedTable.bucketOf(key, numBuckets) else lit(0)
+  /** This store's bucket of `key`. */
+  def bucketOf(key: Column): Column = ParquetKeyedTable.bucketOf(key, numBuckets)
 
   /** True when the version directory holds at least one parquet file —
     * a fully-deleted state writes a version with no part files, which
@@ -186,11 +189,11 @@ final class ParquetKeyedTable(
     finally s.close()
   }
 
-  /** Rows for one key, pruned to its bucket directory when bucketed —
-    * the point-lookup path (doc-by-id reads of an upsert sink). */
+  /** Rows for one key, pruned to its bucket directory — the point-lookup
+    * path (doc-by-id reads of an upsert sink). */
   def lookup(schema: StructType, key: String): DataFrame = {
     val snap = currentVersion match {
-      case Some(v) if numBuckets > 0 && hasData(dir.resolve(s"v$v")) =>
+      case Some(v) if hasData(dir.resolve(s"v$v")) =>
         // partition pruning: only the key's bucket directory is scanned
         read(v).filter(col("bucket") === bucketOf(lit(key))).drop("bucket")
       case _ => snapshot(schema)
@@ -211,23 +214,16 @@ final class ParquetKeyedTable(
     * merge per store per batch.
     *
     * `buckets`, when the caller already knows them, are the buckets
-    * ([[bucketOf]]) of every key in `upserts` and `deletes`; a bucketed
-    * merge then skips collecting them. */
+    * ([[bucketOf]]) of every key in `upserts` and `deletes`; the merge
+    * then skips collecting them. */
   def merge(upserts: DataFrame, deletes: DataFrame,
       batchId: Option[Long] = None, buckets: Option[Set[Int]] = None): Unit = {
     if (batchId.isDefined && batchId == lastBatchId) return // replayed batch
-    val touched = upserts.select(keyCol).union(deletes.select(keyCol)).distinct()
     currentVersion match {
-      case Some(v) if numBuckets > 0 =>
+      case Some(v) =>
+        val touched = upserts.select(keyCol).union(deletes.select(keyCol)).distinct()
         commitPruned(v, touched, Some(upserts), batchId, buckets)
-      case _ =>
-        val next = snapshot(upserts.schema)
-          .join(touched, Seq(keyCol), "left_anti")
-          // allowMissingColumns: an upsert batch may widen the schema
-          // (shared-index sinks merge documents from several views);
-          // missing columns null-fill on either side
-          .unionByName(upserts, allowMissingColumns = true)
-        commitFull(next, batchId)
+      case None => commitFull(upserts, batchId) // first commit: nothing to replace
     }
   }
 
@@ -236,12 +232,7 @@ final class ParquetKeyedTable(
   def delete(keys: DataFrame, batchId: Option[Long] = None): Unit =
     currentVersion.foreach { v =>
       if (batchId.isDefined && batchId == lastBatchId) return
-      val touched = keys.select(keyCol).distinct()
-      if (numBuckets > 0) commitPruned(v, touched, None, batchId, None)
-      else {
-        val cur = snapshot(keys.schema /* ignored: version exists */)
-        commitFull(cur.join(touched, Seq(keyCol), "left_anti"), batchId)
-      }
+      commitPruned(v, keys.select(keyCol).distinct(), None, batchId, None)
     }
 
   /** Bucket-pruned commit: rewrite only the bucket directories holding
@@ -281,6 +272,9 @@ final class ParquetKeyedTable(
           .drop("bucket")
           .join(touchedKeys, Seq(keyCol), "left_anti"))
       val merged = (kept, upserts) match {
+        // allowMissingColumns: an upsert batch may widen the schema
+        // (shared-index sinks merge documents from several views);
+        // missing columns null-fill on either side
         case (Some(k), Some(u)) =>
           Some(k.unionByName(u, allowMissingColumns = true))
         case (k, u)             => u.orElse(k)
@@ -325,13 +319,10 @@ final class ParquetKeyedTable(
 
   private def commitFull(next: DataFrame, batchId: Option[Long]): Unit = {
     val v = currentVersion.getOrElse(-1) + 1
-    val writer =
-      if (numBuckets > 0)
-        next.withColumn("bucket", bucketOf(col(keyCol)))
-          .repartition(numBuckets, col("bucket"))
-          .write.partitionBy("bucket")
-      else next.write
-    writer.mode("overwrite").parquet(dir.resolve(s"v$v").toString)
+    next.withColumn("bucket", bucketOf(col(keyCol)))
+      .repartition(numBuckets, col("bucket"))
+      .write.partitionBy("bucket")
+      .mode("overwrite").parquet(dir.resolve(s"v$v").toString)
     recordSchema(v, next.schema)
     flipPointer(v, batchId)
   }

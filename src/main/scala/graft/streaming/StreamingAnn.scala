@@ -56,30 +56,22 @@ object StreamingAnn {
   def indexView(
       spark: SparkSession, stateDir: String,
       name: String = "ann_index", table: String = "embeddings",
-      vecCol: String = "embedding", seed: Int = 7,
-      buckets: Int = 32): ViewDef = {
+      vecCol: String = "embedding", seed: Int = 7): ViewDef = {
     val planes = Similarity.hyperplanes(seed)
     val bucketTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-buckets", "key", buckets)
+      new ParquetKeyedTable(spark, s"$stateDir/$name-buckets")
     ViewDef(name, (pre, post, batch, ctx) => {
-      val mem = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-      val preBktV = ctx.batchId match {
-        case Some(id) => bucketTable.versionBefore(id)
-        case None     => bucketTable.version
-      }
-      val touched = batch(table).select("key").distinct().persist(mem)
-      ctx.defer(touched.unpersist())
+      val preBktV = bucketTable.versionBefore(ctx.batchId)
+      val touched = ctx.cache(batch(table).select("key").distinct())
 
       // buckets the batch vectors leave (pre-state image) and enter
       // (post-state image; a deleted key has no post row → leaves only)
       val oldKeys = pre.rows(table, touched)
         .select(col("key").as("vec_key"),
           explode(bandKeys(col(vecCol), planes)).as("bkey"))
-      val newKeys = post.rows(table, touched)
+      val newKeys = ctx.cache(post.rows(table, touched)
         .select(col("key").as("vec_key"),
-          explode(bandKeys(col(vecCol), planes)).as("bkey"))
-        .persist(mem)
-      ctx.defer(newKeys.unpersist())
+          explode(bandKeys(col(vecCol), planes)).as("bkey")))
 
       val affected = oldKeys.select("bkey").union(newKeys.select("bkey"))
         .distinct().withColumnRenamed("bkey", "key")
@@ -91,11 +83,9 @@ object StreamingAnn {
         "left_anti")
       val postMembers = kept
         .unionByName(newKeys.select(col("bkey"), col("vec_key")))
-      val bucketRows = postMembers.groupBy("bkey")
+      val bucketRows = ctx.cache(postMembers.groupBy("bkey")
         .agg(collect_list("vec_key").as("members"))
-        .select(col("bkey").as("key"), col("members"))
-        .persist(mem)
-      ctx.defer(bucketRows.unpersist())
+        .select(col("bkey").as("key"), col("members")))
       val emptied = affected
         .join(bucketRows.select("key"), Seq("key"), "left_anti")
       bucketTable.merge(bucketRows, emptied, ctx.batchId)
@@ -116,10 +106,10 @@ object StreamingAnn {
       spark: SparkSession, stateDir: String, probes: DataFrame,
       fetchVectors: DataFrame => DataFrame, k: Int,
       name: String = "ann_index", vecCol: String = "embedding",
-      seed: Int = 7, buckets: Int = 32): DataFrame = {
+      seed: Int = 7): DataFrame = {
     val planes = Similarity.hyperplanes(seed)
     val bucketTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-buckets", "key", buckets)
+      new ParquetKeyedTable(spark, s"$stateDir/$name-buckets")
     val probeKeys = probes.select(col("query_id"), col("qv"),
       explode(bandKeys(col("qv"), planes)).as("key"))
     val members = bucketTable

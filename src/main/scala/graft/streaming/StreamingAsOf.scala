@@ -51,36 +51,26 @@ object StreamingAsOf {
       name: String = "purchase_attribution", table: String = "events",
       keyCol: String = "user_id", tsCol: String = "ts",
       typeCol: String = "event_type", leftType: String = "purchase",
-      rightType: String = "click", buckets: Int = 32): ViewDef = {
+      rightType: String = "click"): ViewDef = {
     val byKey =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-by-key", "key", buckets)
+      new ParquetKeyedTable(spark, s"$stateDir/$name-by-key")
 
     ViewDef(name, (pre, post, batch, ctx) => {
-      val mem = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-      val preIdxV = ctx.batchId match {
-        case Some(id) => byKey.versionBefore(id)
-        case None     => byKey.version
-      }
+      val preIdxV = byKey.versionBefore(ctx.batchId)
 
-      val touched = batch(table).select("key").distinct().persist(mem)
-      ctx.defer(touched.unpersist())
-      val preRows = pre.rows(table, touched)
-        .select(col("key"), col(keyCol), col(tsCol), col(typeCol))
-        .persist(mem)
-      ctx.defer(preRows.unpersist())
-      val postRows = post.rows(table, touched)
-        .select(col("key"), col(keyCol), col(tsCol), col(typeCol))
-        .persist(mem)
-      ctx.defer(postRows.unpersist())
+      val touched = ctx.cache(batch(table).select("key").distinct())
+      val preRows = ctx.cache(pre.rows(table, touched)
+        .select(col("key"), col(keyCol), col(tsCol), col(typeCol)))
+      val postRows = ctx.cache(post.rows(table, touched)
+        .select(col("key"), col(keyCol), col(tsCol), col(typeCol)))
 
       // 1. read-modify-write the per-key projection for touched keys:
       // resident events of those keys minus the touched event ids, plus
       // the touched events' post images
-      val touchedKeys = preRows.select(col(keyCol))
+      val touchedKeys = ctx.cache(preRows.select(col(keyCol))
         .union(postRows.select(col(keyCol)))
         .distinct().filter(col(keyCol).isNotNull)
-        .select(col(keyCol).cast("string").as("key")).persist(mem)
-      ctx.defer(touchedKeys.unpersist())
+        .select(col(keyCol).cast("string").as("key")))
 
       val resident = byKey.rowsForKeysAt(preIdxV, idxSchema, touchedKeys)
         .select(col("key"), explode(col("events")).as("e"))
@@ -91,8 +81,7 @@ object StreamingAsOf {
         .select(col(keyCol).cast("string").as("key"),
           col("key").as("id"), col(tsCol).cast("long").as("ts"),
           col(typeCol).as("typ"))
-      val allEvents = resident.unionByName(fresh).persist(mem)
-      ctx.defer(allEvents.unpersist())
+      val allEvents = ctx.cache(resident.unionByName(fresh))
 
       val idxRows = allEvents.groupBy("key")
         .agg(collect_list(struct(col("id"), col("ts"), col("typ")))

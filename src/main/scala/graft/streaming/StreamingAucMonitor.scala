@@ -57,19 +57,14 @@ object StreamingAucMonitor {
   def aucView(
       spark: SparkSession, stateDir: String, weights: Map[Long, Double],
       name: String = "auc_monitor", table: String = "documents",
-      textCol: String = "text", buckets: Int = 32): ViewDef = {
+      textCol: String = "text"): ViewDef = {
     val cntTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-cnt", "key", buckets)
+      new ParquetKeyedTable(spark, s"$stateDir/$name-cnt")
 
     ViewDef(name, (pre, post, batch, ctx) => {
       import spark.implicits._
-      val mem = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-      val preV = ctx.batchId match {
-        case Some(id) => cntTable.versionBefore(id)
-        case None     => cntTable.version
-      }
-      val touched = batch(table).select("key").distinct().persist(mem)
-      ctx.defer(touched.unpersist())
+      val preV = cntTable.versionBefore(ctx.batchId)
+      val touched = ctx.cache(batch(table).select("key").distinct())
 
       def cells(rows: DataFrame): DataFrame = rows.select(
         scoreExpr(col(textCol), weights).as("score"),
@@ -105,9 +100,8 @@ object StreamingAucMonitor {
       val dist = cntTable.snapshot(cntSchema).select("score", "cnt", "pos")
       // r14: same range-partitioned prefix sum as batch q112 — no
       // partition-less window over the (scale-unbounded) score table
-      val s2 = TextAnalysis.aucS2(dist, df => {
-        val f = df.persist(mem); ctx.defer(f.unpersist()); f
-      }).select(coalesce(col("s2"), lit(0L)).as("s2"))
+      val s2 = TextAnalysis.aucS2(dist, ctx.cache)
+        .select(coalesce(col("s2"), lit(0L)).as("s2"))
       val tot = dist.agg(
         coalesce(sum("pos"), lit(0L)).cast("long").as("p"),
         (coalesce(sum("cnt"), lit(0L)) - coalesce(sum("pos"), lit(0L)))

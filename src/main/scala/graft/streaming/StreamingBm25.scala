@@ -68,19 +68,16 @@ object StreamingBm25 {
       spark: SparkSession, stateDir: String,
       vocab: Seq[String] = Seq("data", "vector", "window"),
       name: String = "bm25_index", table: String = "documents",
-      textCol: String = "text", nShards: Int = 4,
-      buckets: Int = 32): ViewDef = {
+      textCol: String = "text", nShards: Int = 4): ViewDef = {
     val postTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-postings", "key", buckets)
+      new ParquetKeyedTable(spark, s"$stateDir/$name-postings")
     val dlTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-dl", "key", buckets)
+      new ParquetKeyedTable(spark, s"$stateDir/$name-dl")
     val statsTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-stats", "key", buckets)
+      new ParquetKeyedTable(spark, s"$stateDir/$name-stats")
 
     ViewDef(name, (pre, post, batch, ctx) => {
-      val mem = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-      val touched = batch(table).select("key").distinct().persist(mem)
-      ctx.defer(touched.unpersist())
+      val touched = ctx.cache(batch(table).select("key").distinct())
       // a batch that touches no documents must not commit anything —
       // without this, the unconditional stats upsert below would write a
       // new (identical) version per batch on a multi-source pipeline
@@ -101,32 +98,22 @@ object StreamingBm25 {
       vocab: Seq[String], table: String, textCol: String, nShards: Int,
       pre: StateAccess, post: StateAccess, touched: DataFrame,
       ctx: BatchCtx): (DataFrame, DataFrame) = {
-      val mem = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-      def pin(t: ParquetKeyedTable): Option[Int] = ctx.batchId match {
-        case Some(id) => t.versionBefore(id)
-        case None     => t.version
-      }
-      val prePostV = pin(postTable)
-      val preDlV = pin(dlTable)
-      val preStatsV = pin(statsTable)
+      val prePostV = postTable.versionBefore(ctx.batchId)
+      val preDlV = dlTable.versionBefore(ctx.batchId)
+      val preStatsV = statsTable.versionBefore(ctx.batchId)
 
       // 1. tokenize only B's live post images
-      val docs = post.rows(table, touched)
+      val docs = ctx.cache(post.rows(table, touched)
         .select(col("key").as("doc"),
-          split(trim(col(textCol)), "\\s+").as("toks"))
-        .persist(mem)
-      ctx.defer(docs.unpersist())
-      val newDl = docs.select(col("doc"), size(col("toks")).cast("long").as("dl"))
-        .persist(mem)
-      ctx.defer(newDl.unpersist())
+          split(trim(col(textCol)), "\\s+").as("toks")))
+      val newDl = ctx.cache(
+        docs.select(col("doc"), size(col("toks")).cast("long").as("dl")))
       val vocabDf = broadcast(
         spark.createDataFrame(vocab.map(Tuple1(_))).toDF("term"))
-      val newTf = docs
+      val newTf = ctx.cache(docs
         .select(col("doc"), explode(col("toks")).as("term"))
         .join(vocabDf, "term")
-        .groupBy("doc", "term").agg(count(lit(1)).as("tf"))
-        .persist(mem)
-      ctx.defer(newTf.unpersist())
+        .groupBy("doc", "term").agg(count(lit(1)).as("tf")))
 
       // 2. affected posting rows: every vocab term × the shards B's docs
       // hash to — covers old AND new contributions of every touched doc
@@ -144,11 +131,9 @@ object StreamingBm25 {
       val added = newTf.select(
         concat_ws("|", col("term"), shardOf(col("doc"), nShards)).as("key"),
         col("doc"), col("tf"))
-      val postRows = kept.select("key", "doc", "tf").unionByName(added)
+      val postRows = ctx.cache(kept.select("key", "doc", "tf").unionByName(added)
         .groupBy("key")
-        .agg(collect_list(struct(col("doc"), col("tf"))).as("postings"))
-        .persist(mem)
-      ctx.defer(postRows.unpersist())
+        .agg(collect_list(struct(col("doc"), col("tf"))).as("postings")))
       val emptied = affected
         .join(postRows.select("key"), Seq("key"), "left_anti")
       postTable.merge(postRows, emptied, ctx.batchId)
@@ -203,9 +188,9 @@ object StreamingBm25 {
   def backfill(
       spark: SparkSession, stateDir: String, term: String, docs: DataFrame,
       name: String = "bm25_index", textCol: String = "text",
-      nShards: Int = 4, buckets: Int = 32): Unit = {
+      nShards: Int = 4): Unit = {
     val postTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-postings", "key", buckets)
+      new ParquetKeyedTable(spark, s"$stateDir/$name-postings")
     val tf = docs
       .select(col("key").as("doc"),
         explode(split(trim(col(textCol)), "\\s+")).as("t"))
@@ -231,14 +216,13 @@ object StreamingBm25 {
   def search(
       spark: SparkSession, stateDir: String,
       terms: Seq[String] = Seq("data", "vector", "window"),
-      name: String = "bm25_index", nShards: Int = 4,
-      buckets: Int = 32): DataFrame = {
+      name: String = "bm25_index", nShards: Int = 4): DataFrame = {
     val postTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-postings", "key", buckets)
+      new ParquetKeyedTable(spark, s"$stateDir/$name-postings")
     val dlTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-dl", "key", buckets)
+      new ParquetKeyedTable(spark, s"$stateDir/$name-dl")
     val statsTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-stats", "key", buckets)
+      new ParquetKeyedTable(spark, s"$stateDir/$name-stats")
 
     val keys = spark.createDataFrame(
       for (t <- terms; s <- 0 until nShards) yield (s"$t|$s", t))
@@ -282,14 +266,13 @@ object StreamingBm25 {
   def searchMany(
       spark: SparkSession, stateDir: String,
       queries: Seq[(Long, Seq[String])],
-      name: String = "bm25_index", nShards: Int = 4,
-      buckets: Int = 32): DataFrame = {
+      name: String = "bm25_index", nShards: Int = 4): DataFrame = {
     val postTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-postings", "key", buckets)
+      new ParquetKeyedTable(spark, s"$stateDir/$name-postings")
     val dlTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-dl", "key", buckets)
+      new ParquetKeyedTable(spark, s"$stateDir/$name-dl")
     val statsTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-stats", "key", buckets)
+      new ParquetKeyedTable(spark, s"$stateDir/$name-stats")
 
     val allTerms = queries.flatMap(_._2).distinct
     val keys = spark.createDataFrame(

@@ -68,23 +68,17 @@ object StreamingBoilerplate {
       spark: SparkSession, stateDir: String,
       name: String = "boilerplate", table: String = "documents",
       textCol: String = "text", sourceCol: String = "source",
-      threshold: Double = 0.9, buckets: Int = 32): ViewDef = {
+      threshold: Double = 0.9): ViewDef = {
     val postings =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-postings", "key", buckets)
+      new ParquetKeyedTable(spark, s"$stateDir/$name-postings")
     val ndTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-ndocs", "key", buckets)
+      new ParquetKeyedTable(spark, s"$stateDir/$name-ndocs")
 
     ViewDef(name, (pre, post, batch, ctx) => {
-      val mem = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-      def pin(t: ParquetKeyedTable): Option[Int] = ctx.batchId match {
-        case Some(id) => t.versionBefore(id)
-        case None     => t.version
-      }
-      val prePV = pin(postings)
-      val preNV = pin(ndTable)
+      val prePV = postings.versionBefore(ctx.batchId)
+      val preNV = ndTable.versionBefore(ctx.batchId)
 
-      val touched = batch(table).select("key").distinct().persist(mem)
-      ctx.defer(touched.unpersist())
+      val touched = ctx.cache(batch(table).select("key").distinct())
 
       // distinct (source|token, doc) membership of the touched docs,
       // before and after
@@ -93,10 +87,8 @@ object StreamingBoilerplate {
           explode(array_distinct(tokens(col(textCol)))).as("tok"))
         .select(col("doc"), col("src"),
           stKey(col("src"), col("tok")).as("st"))
-      val preM = membership(pre.rows(table, touched)).persist(mem)
-      ctx.defer(preM.unpersist())
-      val postM = membership(post.rows(table, touched)).persist(mem)
-      ctx.defer(postM.unpersist())
+      val preM = ctx.cache(membership(pre.rows(table, touched)))
+      val postM = ctx.cache(membership(post.rows(table, touched)))
 
       // ndocs ± per source (an update may move a doc between sources)
       val preSrc = pre.rows(table, touched)
@@ -109,17 +101,14 @@ object StreamingBoilerplate {
         .select(col("src"),
           (coalesce(col("post_n"), lit(0L)) - coalesce(col("pre_n"), lit(0L)))
             .as("delta"))
-      val affectedSources = ndDeltas.select("src").distinct().persist(mem)
-      ctx.defer(affectedSources.unpersist())
+      val affectedSources = ctx.cache(ndDeltas.select("src").distinct())
       val ndOld = ndTable.rowsForKeysAt(preNV, ndSchema,
         affectedSources.select(col("src").as("key")))
         .select(col("key").as("src"), col("cnt").as("old_nd"))
-      val ndNew = ndDeltas
+      val ndNew = ctx.cache(ndDeltas
         .join(ndOld, Seq("src"), "left")
         .select(col("src"), coalesce(col("old_nd"), lit(0L)).as("old_nd"),
-          (coalesce(col("old_nd"), lit(0L)) + col("delta")).as("new_nd"))
-        .persist(mem)
-      ctx.defer(ndNew.unpersist())
+          (coalesce(col("old_nd"), lit(0L)) + col("delta")).as("new_nd")))
       ndTable.merge(
         ndNew.filter(col("new_nd") > 0)
           .select(col("src").as("key"), col("new_nd").as("cnt")),
@@ -169,19 +158,16 @@ object StreamingBoilerplate {
       val flipHolders = postings
         .rowsForKeys(postSchema, flips.withColumnRenamed("st", "key"))
         .select(explode(col("members")).as("key"))
-      val affectedDocs = touched.union(flipHolders).distinct().persist(mem)
-      ctx.defer(affectedDocs.unpersist())
+      val affectedDocs = ctx.cache(touched.union(flipHolders).distinct())
 
       // per-doc counts against the CURRENT vocabulary: token instances
       // from post text, membership from the post df/ndocs state (pruned
       // by the docs' own token keys)
-      val docToks = post.rows(table, affectedDocs)
+      val docToks = ctx.cache(post.rows(table, affectedDocs)
         .select(col("key"), col(sourceCol).as("src"),
           explode(tokens(col(textCol))).as("tok"))
         .select(col("key"), col("src"), col("tok"),
-          stKey(col("src"), col("tok")).as("st"))
-        .persist(mem)
-      ctx.defer(docToks.unpersist())
+          stKey(col("src"), col("tok")).as("st")))
       val liveDf = postings.rowsForKeys(postSchema,
         docToks.select(col("st").as("key")).distinct())
         .select(col("key").as("st"),
@@ -190,7 +176,7 @@ object StreamingBoilerplate {
         docToks.select(col("src")).distinct()
           .select(col("src").as("key")))
         .select(col("key").as("src"), col("cnt").as("nd"))
-      val upserts = docToks
+      val upserts = ctx.cache(docToks
         .join(liveDf, Seq("st"), "left")
         .join(broadcast(liveNd), Seq("src"), "left")
         .withColumn("boiler",
@@ -201,9 +187,7 @@ object StreamingBoilerplate {
           count(when(col("boiler"), 1)).as("n_boiler"),
           round(lit(1.0) -
             count(when(col("boiler"), 1)).cast("double") / count(lit(1)), 6)
-            .as("content_ratio"))
-        .persist(mem)
-      ctx.defer(upserts.unpersist())
+            .as("content_ratio")))
       val deletes = affectedDocs.select(col("key").as("id"))
         .join(upserts.select("id"), Seq("id"), "left_anti")
       (upserts, deletes)

@@ -50,10 +50,7 @@ object StreamingCardinality {
         .select(group.as("key"), explode(tokens).as("tok"))
         .groupBy("key")
         .agg(hll_sketch_agg(col("tok")).as("d_sketch"))
-      val preV = ctx.batchId match {
-        case Some(id) => state.versionBefore(id)
-        case None     => state.version
-      }
+      val preV = state.versionBefore(ctx.batchId)
       val old = state.rowsForKeysAt(preV, stateSchema,
         partials.select("key"))
         .withColumnRenamed("sketch", "o_sketch")

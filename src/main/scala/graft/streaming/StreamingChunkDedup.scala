@@ -54,31 +54,23 @@ object StreamingChunkDedup {
   def sharedChunkView(
       spark: SparkSession, stateDir: String,
       name: String = "chunk_dedup", table: String = "documents",
-      textCol: String = "text", buckets: Int = 32,
+      textCol: String = "text",
       chunker: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
         Curation.chunkHashes): ViewDef = {
     val docTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-docs", "key", buckets)
+      new ParquetKeyedTable(spark, s"$stateDir/$name-docs")
     val chunkTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-chunks", "key", buckets)
+      new ParquetKeyedTable(spark, s"$stateDir/$name-chunks")
 
     ViewDef(name, (pre, post, batch, ctx) => {
-      val mem = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-      def pin(t: ParquetKeyedTable): Option[Int] = ctx.batchId match {
-        case Some(id) => t.versionBefore(id)
-        case None     => t.version
-      }
-      val preDocV = pin(docTable)
-      val preChunkV = pin(chunkTable)
+      val preDocV = docTable.versionBefore(ctx.batchId)
+      val preChunkV = chunkTable.versionBefore(ctx.batchId)
 
-      val touched = batch(table).select("key").distinct().persist(mem)
-      ctx.defer(touched.unpersist())
+      val touched = ctx.cache(batch(table).select("key").distinct())
 
       // 1. chunk ONLY the batch docs, through the batch query's path
-      val newLists = post.rows(table, touched)
-        .select(col("key"), chunker(col(textCol)).as("hashes"))
-        .persist(mem)
-      ctx.defer(newLists.unpersist())
+      val newLists = ctx.cache(post.rows(table, touched)
+        .select(col("key"), chunker(col(textCol)).as("hashes")))
       val newContribs = newLists
         .select(col("key").as("d"), explode(col("hashes")).as("h"))
         .groupBy("d", "h").agg(count(lit(1)).cast("int").as("c"))
@@ -93,27 +85,22 @@ object StreamingChunkDedup {
         Seq("key"), "left_anti"), ctx.batchId)
 
       // 3. rebuild the affected fingerprints' carrier sets
-      val affected = oldHashes
+      val affected = ctx.cache(oldHashes
         .union(newContribs.select(col("h"))).distinct()
-        .withColumnRenamed("h", "key").persist(mem)
-      ctx.defer(affected.unpersist())
+        .withColumnRenamed("h", "key"))
       val keptEntries = chunkTable
         .rowsForKeysAt(preChunkV, chunkSchema, affected)
         .select(col("key").as("h"), explode(col("docs")).as("e"))
         .select(col("h"), col("e.d").as("d"), col("e.c").as("c"))
         .join(touched.withColumnRenamed("key", "d"), Seq("d"), "left_anti")
-      val postEntries = keptEntries.unionByName(
-        newContribs.select(col("h"), col("d"), col("c")))
-        .persist(mem)
-      ctx.defer(postEntries.unpersist())
+      val postEntries = ctx.cache(keptEntries.unionByName(
+        newContribs.select(col("h"), col("d"), col("c"))))
 
-      val rebuilt = postEntries.groupBy("h")
+      val rebuilt = ctx.cache(postEntries.groupBy("h")
         .agg(collect_list(struct(col("d"), col("c"))).as("docs"),
           countDistinct("d").as("n_docs"),
           sum("c").cast("long").as("n_occ"),
-          min(col("d").cast("long")).as("first_doc"))
-        .persist(mem)
-      ctx.defer(rebuilt.unpersist())
+          min(col("d").cast("long")).as("first_doc")))
       chunkTable.merge(
         rebuilt.select(col("h").as("key"), col("docs")),
         affected.join(rebuilt.select(col("h").as("key")),
@@ -138,7 +125,7 @@ object StreamingChunkDedup {
   def cdcChunkView(
       spark: SparkSession, stateDir: String,
       name: String = "cdc_chunk_dedup", table: String = "documents",
-      textCol: String = "text", buckets: Int = 32): ViewDef =
-    sharedChunkView(spark, stateDir, name, table, textCol, buckets,
+      textCol: String = "text"): ViewDef =
+    sharedChunkView(spark, stateDir, name, table, textCol,
       chunker = Curation.cdcChunkHashes)
 }

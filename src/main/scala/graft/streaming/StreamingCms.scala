@@ -55,10 +55,7 @@ object StreamingCms {
         .groupBy("cell").agg(sum("d").as("d"))
         .filter(col("d") =!= 0)
         .select(col("cell").cast("string").as("key"), col("d"))
-      val preV = ctx.batchId match {
-        case Some(id) => state.versionBefore(id)
-        case None     => state.version
-      }
+      val preV = state.versionBefore(ctx.batchId)
       val old = state.rowsForKeysAt(preV, stateSchema, delta.select("key"))
         .withColumnRenamed("cnt", "o_cnt")
       val merged = delta.join(old, Seq("key"), "left")

@@ -75,23 +75,17 @@ object StreamingContainment {
       spark: SparkSession, stateDir: String,
       name: String = "containment_pairs", table: String = "documents",
       textCol: String = "text", theta: Double = 0.9,
-      shingleN: Int = 3, buckets: Int = 32): ViewDef = {
+      shingleN: Int = 3): ViewDef = {
     val fullPost =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-full", "key", buckets)
+      new ParquetKeyedTable(spark, s"$stateDir/$name-full")
     val prefPost =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-prefix", "key", buckets)
+      new ParquetKeyedTable(spark, s"$stateDir/$name-prefix")
 
     ViewDef(name, (pre, post, batch, ctx) => {
-      val mem = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-      def pin(t: ParquetKeyedTable): Option[Int] = ctx.batchId match {
-        case Some(id) => t.versionBefore(id)
-        case None     => t.version
-      }
-      val preFullV = pin(fullPost)
-      val prefPreV = pin(prefPost)
+      val preFullV = fullPost.versionBefore(ctx.batchId)
+      val prefPreV = prefPost.versionBefore(ctx.batchId)
 
-      val touched = batch(table).select("key").distinct().persist(mem)
-      ctx.defer(touched.unpersist())
+      val touched = ctx.cache(batch(table).select("key").distinct())
       val touchedDocs = touched.withColumnRenamed("key", "doc_id")
 
       def feats(rows: DataFrame): DataFrame = rows
@@ -99,27 +93,21 @@ object StreamingContainment {
           explode(Dedup.shingles(col(textCol), shingleN)).as("f"))
 
       // old/new feature sets of the batch docs only
-      val oldFeats = feats(pre.rows(table, touched)).persist(mem)
-      ctx.defer(oldFeats.unpersist())
-      val newFeats = feats(post.rows(table, touched)).persist(mem)
-      ctx.defer(newFeats.unpersist())
+      val oldFeats = ctx.cache(feats(pre.rows(table, touched)))
+      val newFeats = ctx.cache(feats(post.rows(table, touched)))
       val oldPrefix = prefixOf(oldFeats, theta)
-      val newPrefix = prefixOf(newFeats, theta).persist(mem)
-      ctx.defer(newPrefix.unpersist())
+      val newPrefix = ctx.cache(prefixOf(newFeats, theta))
 
       // pre-state postings of every affected key (pruned lookups)
       def members(t: ParquetKeyedTable, v: Option[Int],
           keys: DataFrame): DataFrame =
         t.rowsForKeysAt(v, postSchema, keys)
           .select(col("key").as("f"), explode(col("members")).as("member"))
-      val affectedFull = oldFeats.select("f").union(newFeats.select("f"))
-        .distinct().withColumnRenamed("f", "key").persist(mem)
-      ctx.defer(affectedFull.unpersist())
-      val affectedPref = oldPrefix.select("f").union(newPrefix.select("f"))
-        .distinct().withColumnRenamed("f", "key").persist(mem)
-      ctx.defer(affectedPref.unpersist())
-      val preFull = members(fullPost, preFullV, affectedFull).persist(mem)
-      ctx.defer(preFull.unpersist())
+      val affectedFull = ctx.cache(oldFeats.select("f").union(newFeats.select("f"))
+        .distinct().withColumnRenamed("f", "key"))
+      val affectedPref = ctx.cache(oldPrefix.select("f").union(newPrefix.select("f"))
+        .distinct().withColumnRenamed("f", "key"))
+      val preFull = ctx.cache(members(fullPost, preFullV, affectedFull))
       // prefix postings are READ over affectedFull, not affectedPref:
       // the as-B directions join a batch doc's WHOLE feature set against
       // resident prefixes, and a resident partner's prefix key need not
@@ -128,8 +116,7 @@ object StreamingContainment {
       // unretracted. Membership, by contrast, only changes on the batch
       // docs' own prefix keys, so the MERGE below stays affectedPref-
       // scoped (prePrefNarrow).
-      val prePref = members(prefPost, prefPreV, affectedFull).persist(mem)
-      ctx.defer(prePref.unpersist())
+      val prePref = ctx.cache(members(prefPost, prefPreV, affectedFull))
 
       // retract superset: pairs any previous batch could have emitted
       // with a batch member on either side
@@ -147,10 +134,8 @@ object StreamingContainment {
         val kept = preMembers.join(
           touchedDocs.withColumnRenamed("doc_id", "member"),
           Seq("member"), "left_anti")
-        val postMembers = kept.unionByName(
-          newMemb.select(col("f"), col("doc_id").as("member")))
-          .persist(mem)
-        ctx.defer(postMembers.unpersist())
+        val postMembers = ctx.cache(kept.unionByName(
+          newMemb.select(col("f"), col("doc_id").as("member"))))
         val rows = postMembers.groupBy("f")
           .agg(collect_list("member").as("members"))
           .select(col("f").as("key"), col("members"))
@@ -164,12 +149,10 @@ object StreamingContainment {
       // affectedPref included — see above), while the prefix-table MERGE
       // takes only its affectedPref slice (the only keys whose
       // membership can change)
-      val postPref = prePref.join(
+      val postPref = ctx.cache(prePref.join(
           touchedDocs.withColumnRenamed("doc_id", "member"),
           Seq("member"), "left_anti")
-        .unionByName(newPrefix.select(col("f"), col("doc_id").as("member")))
-        .persist(mem)
-      ctx.defer(postPref.unpersist())
+        .unionByName(newPrefix.select(col("f"), col("doc_id").as("member"))))
       val prefRows = postPref.join(
           affectedPref.withColumnRenamed("key", "f"), Seq("f"), "left_semi")
         .groupBy("f").agg(collect_list("member").as("members"))
@@ -192,10 +175,8 @@ object StreamingContainment {
       val vIds = candidates.select(col("doc_a").as("key"))
         .union(candidates.select(col("doc_b").as("key"))).distinct()
       val vExploded = feats(post.rows(table, vIds))
-      val verified = Dedup
-        .verifyContainment(candidates, vExploded, theta)
-        .persist(mem)
-      ctx.defer(verified.unpersist())
+      val verified = ctx.cache(Dedup
+        .verifyContainment(candidates, vExploded, theta))
 
       val upserts = verified.select(
         Keys.pair(col("doc_a"), col("doc_b")).as("id"),

@@ -83,8 +83,6 @@ object StreamingCuration {
       post: StateAccess, batch: Map[String, DataFrame], ctx: BatchCtx,
       table: String, textCol: String, threshold: Double,
       bandRows: Int, nBands: Int, shingleN: Int): ClusterState = {
-    val mem = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-
     // 1. pair maintenance (shared machinery with the near-dup view)
     val delta = StreamingDedup.maintainPairState(
       sigTable, bucketTable, post, batch, ctx,
@@ -102,15 +100,10 @@ object StreamingCuration {
     val postPairs = pairTable
       .snapshotAt(pairTable.version, pairSchema)
       .select(col("doc_a"), col("doc_b"))
-    val newLabels = Dedup.clusterPairsStar(postPairs)
-      .select(col("doc_id").as("key"), col("cluster_id"))
-      .persist(mem)
-    ctx.defer(newLabels.unpersist())
+    val newLabels = ctx.cache(Dedup.clusterPairsStar(postPairs)
+      .select(col("doc_id").as("key"), col("cluster_id")))
 
-    val preLabelV = ctx.batchId match {
-      case Some(id) => labelTable.versionBefore(id)
-      case None     => labelTable.version
-    }
+    val preLabelV = labelTable.versionBefore(ctx.batchId)
     val oldLabels = labelTable.snapshotAt(preLabelV, labelSchema)
     labelTable.merge(newLabels,
       oldLabels.select("key").join(newLabels.select("key"),
@@ -144,24 +137,18 @@ object StreamingCuration {
       policy: SurvivorPolicy, newLabels: DataFrame, affected0: DataFrame,
       post: StateAccess, table: String, textCol: String,
       ctx: BatchCtx): (DataFrame, DataFrame) = {
-    val mem = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     policy match {
       case SurvivorPolicy.MinId =>
-        val a = affected0.persist(mem)
-        ctx.defer(a.unpersist())
+        val a = ctx.cache(affected0)
         (a, newLabels.filter(col("key") =!= col("cluster_id"))
           .select("key"))
       case SurvivorPolicy.BestQuality =>
         val touchedClusters = newLabels
           .join(affected0, Seq("key"), "left_semi")
           .select("cluster_id").distinct()
-        val touchedMembers = newLabels
-          .join(touchedClusters, Seq("cluster_id"), "left_semi")
-          .persist(mem)
-        ctx.defer(touchedMembers.unpersist())
-        val a = affected0.union(touchedMembers.select("key")).distinct()
-          .persist(mem)
-        ctx.defer(a.unpersist())
+        val touchedMembers = ctx.cache(newLabels
+          .join(touchedClusters, Seq("cluster_id"), "left_semi"))
+        val a = ctx.cache(affected0.union(touchedMembers.select("key")).distinct())
         val q = post.rows(table, touchedMembers.select("key"))
           .select(col("key"),
             TextAnalysis.qualityScore(col(textCol)).as("quality"))
@@ -189,20 +176,18 @@ object StreamingCuration {
       name: String = "curated_corpus", table: String = "documents",
       textCol: String = "text", threshold: Double = 0.8,
       minQuality: Double = 0.5, bandRows: Int = 2, nBands: Int = 32,
-      shingleN: Int = 3, buckets: Int = 32,
+      shingleN: Int = 3,
       policy: SurvivorPolicy = SurvivorPolicy.MinId): ViewDef = {
     val sigTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-sigs", "key", buckets)
+      new ParquetKeyedTable(spark, s"$stateDir/$name-sigs")
     val bucketTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-buckets", "key", buckets)
+      new ParquetKeyedTable(spark, s"$stateDir/$name-buckets")
     val pairTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-pairs", "key", buckets)
+      new ParquetKeyedTable(spark, s"$stateDir/$name-pairs")
     val labelTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-labels", "key", buckets)
+      new ParquetKeyedTable(spark, s"$stateDir/$name-labels")
 
     ViewDef(name, (pre, post, batch, ctx) => {
-      val mem = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-
       val cs = maintainClusterState(sigTable, bucketTable, pairTable,
         labelTable, post, batch, ctx, table, textCol, threshold,
         bandRows, nBands, shingleN)
@@ -219,15 +204,13 @@ object StreamingCuration {
       val bucket = pmod(
         conv(substring(md5(col("text")), 1, 8), 16, 10).cast("long"),
         lit(100L))
-      val upserts = live
+      val upserts = ctx.cache(live
         .filter(TextAnalysis.qualityScore(col("text")) >= minQuality)
         .join(losers, Seq("key"), "left_anti")
         .select(col("key").as("id"),
           when(bucket < 90, "train").when(bucket < 95, "val")
             .otherwise("test").as("split"),
-          TextAnalysis.qualityScore(col("text")).as("quality"))
-        .persist(mem)
-      ctx.defer(upserts.unpersist())
+          TextAnalysis.qualityScore(col("text")).as("quality")))
       val deletes = affected.select(col("key").as("id"))
         .join(upserts.select("id"), Seq("id"), "left_anti")
       (upserts, deletes)

@@ -52,37 +52,29 @@ object StreamingDatasheet {
       name: String = "corpus_datasheet", table: String = "documents",
       textCol: String = "text", langCol: String = "lang",
       threshold: Double = 0.8, bandRows: Int = 2, nBands: Int = 32,
-      shingleN: Int = 3, buckets: Int = 32): ViewDef = {
+      shingleN: Int = 3): ViewDef = {
     val statsTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-stats", "key", buckets)
+      new ParquetKeyedTable(spark, s"$stateDir/$name-stats")
     val cntTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-cnt", "key", buckets)
+      new ParquetKeyedTable(spark, s"$stateDir/$name-cnt")
     val fpTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-fps", "key", buckets)
+      new ParquetKeyedTable(spark, s"$stateDir/$name-fps")
     val langTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-lang", "key", buckets)
+      new ParquetKeyedTable(spark, s"$stateDir/$name-lang")
     val sigTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-sigs", "key", buckets)
+      new ParquetKeyedTable(spark, s"$stateDir/$name-sigs")
     val bucketTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-buckets", "key", buckets)
+      new ParquetKeyedTable(spark, s"$stateDir/$name-buckets")
     val pairTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-pairs", "key", buckets)
+      new ParquetKeyedTable(spark, s"$stateDir/$name-pairs")
     val labelTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-labels", "key", buckets)
+      new ParquetKeyedTable(spark, s"$stateDir/$name-labels")
 
     ViewDef(name, (pre, post, batch, ctx) => {
       import spark.implicits._
-      val mem = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-      def pin(t: ParquetKeyedTable): Option[Int] = ctx.batchId match {
-        case Some(id) => t.versionBefore(id)
-        case None     => t.version
-      }
-      val touched = batch(table).select("key").distinct().persist(mem)
-      ctx.defer(touched.unpersist())
-      val preRows = pre.rows(table, touched).persist(mem)
-      ctx.defer(preRows.unpersist())
-      val postRows = post.rows(table, touched).persist(mem)
-      ctx.defer(postRows.unpersist())
+      val touched = ctx.cache(batch(table).select("key").distinct())
+      val preRows = ctx.cache(pre.rows(table, touched))
+      val postRows = ctx.cache(post.rows(table, touched))
 
       // per-row contributions: docs, tokens, quality micro-units
       def contrib(rows: DataFrame, sign: Int): DataFrame = rows.select(
@@ -102,7 +94,8 @@ object StreamingDatasheet {
         .select(col("key").as("doc"),
           explode(split(trim(col(textCol)), "\\s+")).as("tok"))
       val cNew = StreamingVocabCoverage.maintainTokenCounters(
-        cntTable, pin(cntTable), toks(preRows), toks(postRows), ctx)
+        cntTable, cntTable.versionBefore(ctx.batchId), toks(preRows),
+        toks(postRows), ctx)
       val vocabDelta = cNew.agg(
         coalesce(sum(when(col("old_cnt") <= 0 && col("new_cnt") > 0, 1L)
           .when(col("old_cnt") > 0 && col("new_cnt") <= 0, -1L)
@@ -117,7 +110,7 @@ object StreamingDatasheet {
           fs.preMembers.select("fp").distinct().count()
 
       // language counters ±
-      val preLV = pin(langTable)
+      val preLV = langTable.versionBefore(ctx.batchId)
       val langDeltas = postRows.select(col(langCol).as("lang"))
         .groupBy("lang").agg(count(lit(1)).as("post_n"))
         .join(preRows.select(col(langCol).as("lang"))
@@ -146,7 +139,7 @@ object StreamingDatasheet {
       val nNearDocs = cs.newLabels.count()
 
       // running-counter transition
-      val preSV = pin(statsTable)
+      val preSV = statsTable.versionBefore(ctx.batchId)
       val old = statsTable
         .rowsForKeysAt(preSV, statsSchema, Seq("all").toDF("key"))
         .collect().headOption

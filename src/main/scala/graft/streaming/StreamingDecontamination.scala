@@ -71,13 +71,8 @@ object StreamingDecontamination {
       pre: StateAccess, post: StateAccess,
       touched: DataFrame, ctx: BatchCtx,
       table: String, textCol: String, gramN: Int): GramState = {
-    val mem = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    def pin(t: ParquetKeyedTable): Option[Int] = ctx.batchId match {
-      case Some(id) => t.versionBefore(id)
-      case None     => t.version
-    }
-    val preHV = pin(hTable)
-    val preTV = pin(tTable)
+    val preHV = hTable.versionBefore(ctx.batchId)
+    val preTV = tTable.versionBefore(ctx.batchId)
 
     // per-doc DISTINCT grams (wordShingles dedups) with the split tag
     def grams(docs: DataFrame): DataFrame = docs
@@ -86,10 +81,8 @@ object StreamingDecontamination {
           .as("gram"))
       .select(col("doc"), col("train"), md5(col("gram")).as("g"))
 
-      val preG = grams(pre.rows(table, touched)).persist(mem)
-      ctx.defer(preG.unpersist())
-      val postG = grams(post.rows(table, touched)).persist(mem)
-      ctx.defer(postG.unpersist())
+      val preG = ctx.cache(grams(pre.rows(table, touched)))
+      val postG = ctx.cache(grams(post.rows(table, touched)))
 
       // 2. holdout count ± — only grams whose holdout membership within
       // B changed can move the count
@@ -103,13 +96,11 @@ object StreamingDecontamination {
         .filter(col("delta") =!= 0)
       val hOld = hTable.rowsForKeysAt(preHV, cntSchema,
         deltas.select(col("g").as("key")))
-      val hNew = deltas
+      val hNew = ctx.cache(deltas
         .join(hOld.withColumnRenamed("key", "g"), Seq("g"), "left")
         .select(col("g"),
           (coalesce(col("cnt"), lit(0L)) + col("delta")).as("new_cnt"),
-          coalesce(col("cnt"), lit(0L)).as("old_cnt"))
-        .persist(mem)
-      ctx.defer(hNew.unpersist())
+          coalesce(col("cnt"), lit(0L)).as("old_cnt")))
       hTable.merge(
         hNew.filter(col("new_cnt") > 0)
           .select(col("g").as("key"), col("new_cnt").as("cnt")),
@@ -169,24 +160,19 @@ object StreamingDecontamination {
   def decontaminationView(
       spark: SparkSession, stateDir: String,
       name: String = "decontamination", table: String = "documents",
-      textCol: String = "text", gramN: Int = 5,
-      buckets: Int = 32): ViewDef = {
+      textCol: String = "text", gramN: Int = 5): ViewDef = {
     val hTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-hgrams", "key", buckets)
+      new ParquetKeyedTable(spark, s"$stateDir/$name-hgrams")
     val tTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-tgrams", "key", buckets)
+      new ParquetKeyedTable(spark, s"$stateDir/$name-tgrams")
 
     ViewDef(name, (pre, post, batch, ctx) => {
-      val mem = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-      val touched = batch(table).select("key").distinct().persist(mem)
-      ctx.defer(touched.unpersist())
+      val touched = ctx.cache(batch(table).select("key").distinct())
       val gs = maintainGramState(hTable, tTable, pre, post, touched, ctx,
         table, textCol, gramN)
-      val affectedDocs = touched
-        .union(gs.transHolders).distinct().persist(mem)
-      ctx.defer(affectedDocs.unpersist())
-      val upserts = gs.sharedCounts(affectedDocs).persist(mem)
-      ctx.defer(upserts.unpersist())
+      val affectedDocs = ctx.cache(touched
+        .union(gs.transHolders).distinct())
+      val upserts = ctx.cache(gs.sharedCounts(affectedDocs))
       val deletes = affectedDocs.select(col("key").as("id"))
         .join(upserts.select("id"), Seq("id"), "left_anti")
       (upserts, deletes)

@@ -68,12 +68,11 @@ object StreamingDedup {
       spark: SparkSession, stateDir: String,
       name: String = "near_dup_pairs", table: String = "documents",
       textCol: String = "text", threshold: Double = 0.8,
-      bandRows: Int = 2, nBands: Int = 32, shingleN: Int = 3,
-      buckets: Int = 32): ViewDef = {
+      bandRows: Int = 2, nBands: Int = 32, shingleN: Int = 3): ViewDef = {
     val sigTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-sigs", "key", buckets)
+      new ParquetKeyedTable(spark, s"$stateDir/$name-sigs")
     val bucketTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-buckets", "key", buckets)
+      new ParquetKeyedTable(spark, s"$stateDir/$name-buckets")
 
     ViewDef(name, (pre, post, batch, ctx) => {
       val delta = maintainPairState(sigTable, bucketTable, post, batch, ctx,
@@ -97,16 +96,10 @@ object StreamingDedup {
       post: StateAccess, batch: Map[String, DataFrame], ctx: BatchCtx,
       table: String, textCol: String, threshold: Double,
       bandRows: Int, nBands: Int, shingleN: Int): PairDelta = {
-      val mem = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-      def pin(t: ParquetKeyedTable): Option[Int] = ctx.batchId match {
-        case Some(id) => t.versionBefore(id)
-        case None     => t.version
-      }
-      val preSigV = pin(sigTable)
-      val preBktV = pin(bucketTable)
+      val preSigV = sigTable.versionBefore(ctx.batchId)
+      val preBktV = bucketTable.versionBefore(ctx.batchId)
 
-      val touched = batch(table).select("key").distinct().persist(mem)
-      ctx.defer(touched.unpersist())
+      val touched = ctx.cache(batch(table).select("key").distinct())
 
       // live post images of the batch docs; a touched key absent here was
       // deleted this batch
@@ -114,29 +107,23 @@ object StreamingDedup {
         .select(col("key").as("doc_id"), col(textCol).as("text"))
 
       // 1. sign ONLY the batch docs
-      val newSigs = Dedup.signatureArray(
+      val newSigs = ctx.cache(Dedup.signatureArray(
         docs.select(col("doc_id"),
-          explode(Dedup.shingles(col("text"), shingleN)).as("f")), "f")
-        .persist(mem)
-      ctx.defer(newSigs.unpersist())
+          explode(Dedup.shingles(col("text"), shingleN)).as("f")), "f"))
 
       // band membership, old (pre-state sigs of touched docs) and new
       val oldSigs = sigTable.rowsForKeysAt(preSigV, sigSchema, touched)
       val oldMemb = oldSigs.select(col("key").as("doc_id"),
         explode(Dedup.bandKeys(col("sig"), bandRows, nBands)).as("bkey"))
-      val newMemb = newSigs.select(col("doc_id"),
-        explode(Dedup.bandKeys(col("sig"), bandRows, nBands)).as("bkey"))
-        .persist(mem)
-      ctx.defer(newMemb.unpersist())
+      val newMemb = ctx.cache(newSigs.select(col("doc_id"),
+        explode(Dedup.bandKeys(col("sig"), bandRows, nBands)).as("bkey")))
 
       // pre-state membership of every affected bucket (pruned lookup)
       val affected = oldMemb.select("bkey").union(newMemb.select("bkey"))
         .distinct().withColumnRenamed("bkey", "key")
-      val preMembers = bucketTable
+      val preMembers = ctx.cache(bucketTable
         .rowsForKeysAt(preBktV, bucketSchema, affected)
-        .select(col("key").as("bkey"), explode(col("members")).as("doc_id"))
-        .persist(mem)
-      ctx.defer(preMembers.unpersist())
+        .select(col("key").as("bkey"), explode(col("members")).as("doc_id")))
 
       // 2. retract: every pair a PREVIOUS batch could have emitted with a
       // member of B shares one of B's OLD buckets — a superset of the
@@ -154,10 +141,8 @@ object StreamingDedup {
       //    membership: batch docs leave their old buckets, enter new ones
       val keptMembers = preMembers.join(
         touched.withColumnRenamed("key", "doc_id"), Seq("doc_id"), "left_anti")
-      val postMembers = keptMembers
-        .unionByName(newMemb.select(col("doc_id"), col("bkey")))
-        .persist(mem)
-      ctx.defer(postMembers.unpersist())
+      val postMembers = ctx.cache(keptMembers
+        .unionByName(newMemb.select(col("doc_id"), col("bkey"))))
       val bucketRows = postMembers.groupBy("bkey")
         .agg(collect_list("doc_id").as("members"))
         .select(col("bkey").as("key"), col("members"))
@@ -207,10 +192,8 @@ object StreamingDedup {
       val vExploded = post.rows(table, vIds)
         .select(col("key").as("doc_id"),
           explode(Dedup.shingles(col(textCol), shingleN)).as("f"))
-      val verified = Dedup
-        .verifyJaccard(prefiltered, vExploded, "f", threshold)
-        .persist(mem)
-      ctx.defer(verified.unpersist())
+      val verified = ctx.cache(Dedup
+        .verifyJaccard(prefiltered, vExploded, "f", threshold))
 
       PairDelta(verified, oldPairs)
   }

@@ -45,57 +45,44 @@ object StreamingDomainCap {
       spark: SparkSession, stateDir: String,
       name: String = "domain_cap_view", table: String = "documents",
       textCol: String = "text", sourceCol: String = "source",
-      capN: Int = 10, ledgerShards: Int = 16,
-      buckets: Int = 32): ViewDef = {
+      capN: Int = 10, ledgerShards: Int = 16): ViewDef = {
     val ledger =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-ledger", "key", buckets)
+      new ParquetKeyedTable(spark, s"$stateDir/$name-ledger")
 
     def shardKey(src: Column, doc: Column): Column =
       Keys.pair(src, pmod(xxhash64(doc), lit(ledgerShards)))
 
     ViewDef(name, (pre, post, batch, ctx) => {
-      val mem = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-      val preV = ctx.batchId match {
-        case Some(id) => ledger.versionBefore(id)
-        case None     => ledger.version
-      }
+      val preV = ledger.versionBefore(ctx.batchId)
 
-      val touched = batch(table).select("key").distinct().persist(mem)
-      ctx.defer(touched.unpersist())
+      val touched = ctx.cache(batch(table).select("key").distinct())
 
       def docsOf(rows: DataFrame): DataFrame = rows.select(
         col("key").as("doc_id"), col(sourceCol).as("source"),
         graft.operators.TextAnalysis.qualityScore(col(textCol))
           .as("quality"))
 
-      val oldDocs = docsOf(pre.rows(table, touched)).persist(mem)
-      ctx.defer(oldDocs.unpersist())
-      val newDocs = docsOf(post.rows(table, touched)).persist(mem)
-      ctx.defer(newDocs.unpersist())
+      val oldDocs = ctx.cache(docsOf(pre.rows(table, touched)))
+      val newDocs = ctx.cache(docsOf(post.rows(table, touched)))
 
       // every source whose ranking can change, with all its shard keys
-      val touchedSources = oldDocs.select("source")
-        .union(newDocs.select("source")).distinct().persist(mem)
-      ctx.defer(touchedSources.unpersist())
+      val touchedSources = ctx.cache(oldDocs.select("source")
+        .union(newDocs.select("source")).distinct())
       val shardKeys = touchedSources
         .select(col("source"),
           explode(sequence(lit(0), lit(ledgerShards - 1))).as("sh"))
         .select(Keys.pair(col("source"), col("sh")).as("key"))
 
-      val preEntries = ledger.rowsForKeysAt(preV, ledgerSchema, shardKeys)
+      val preEntries = ctx.cache(ledger.rowsForKeysAt(preV, ledgerSchema, shardKeys)
         .select(col("source"), explode(col("entries")).as("e"))
         .select(col("source"), col("e.doc_id").as("doc_id"),
-          col("e.quality").as("quality"))
-        .persist(mem)
-      ctx.defer(preEntries.unpersist())
+          col("e.quality").as("quality")))
 
       // ledger transition: batch docs' entries replaced wholesale
-      val postEntries = preEntries.join(
+      val postEntries = ctx.cache(preEntries.join(
           touched.withColumnRenamed("key", "doc_id"), Seq("doc_id"),
           "left_anti")
-        .unionByName(newDocs.select("doc_id", "source", "quality"))
-        .persist(mem)
-      ctx.defer(postEntries.unpersist())
+        .unionByName(newDocs.select("doc_id", "source", "quality")))
       val rows = postEntries
         .groupBy(shardKey(col("source"), col("doc_id")).as("key"),
           col("source"))
@@ -116,8 +103,7 @@ object StreamingDomainCap {
             .orderBy(col("quality").desc, col("doc_id"))))
         .filter(col("rk") <= capN)
 
-      val postTop = topK(postEntries).persist(mem)
-      ctx.defer(postTop.unpersist())
+      val postTop = ctx.cache(topK(postEntries))
       val upserts = postTop.select(
         Keys.pair(col("source"), col("rk")).as("id"),
         col("source"), col("doc_id"), col("quality"),

@@ -58,20 +58,12 @@ object StreamingDsir {
       .agg(count(lit(1)).as("c"))
 
     val view: ViewDef = ViewDef("dsir", (pre, post, batch, ctx) => {
-      val mem = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-      def pin(t: ParquetKeyedTable): Option[Int] = ctx.batchId match {
-        case Some(id) => t.versionBefore(id)
-        case None     => t.version
-      }
-      val preRawV = pin(rawLedger)
-      val preTgtV = pin(tgtLedger)
+      val preRawV = rawLedger.versionBefore(ctx.batchId)
+      val preTgtV = tgtLedger.versionBefore(ctx.batchId)
 
-      val touched = batch(table).select("key").distinct().persist(mem)
-      ctx.defer(touched.unpersist())
-      val preF = featsOf(pre.rows(table, touched)).persist(mem)
-      ctx.defer(preF.unpersist())
-      val postF = featsOf(post.rows(table, touched)).persist(mem)
-      ctx.defer(postF.unpersist())
+      val touched = ctx.cache(batch(table).select("key").distinct())
+      val preF = ctx.cache(featsOf(pre.rows(table, touched)))
+      val postF = ctx.cache(featsOf(post.rows(table, touched)))
 
       // ± ledgers: raw counts every image, target counts target images
       def ledgerDeltas(filterTgt: Boolean): DataFrame = {
@@ -98,10 +90,8 @@ object StreamingDsir {
       applyDeltas(tgtLedger, preTgtV, ledgerDeltas(filterTgt = true))
 
       // replace touched docs' feature rows
-      val newRows = postF.groupBy("key")
-        .agg(collect_list(struct(col("b"), col("c"))).as("feats"))
-        .persist(mem)
-      ctx.defer(newRows.unpersist())
+      val newRows = ctx.cache(postF.groupBy("key")
+        .agg(collect_list(struct(col("b"), col("c"))).as("feats")))
       val gone = touched.join(newRows.select("key"), Seq("key"), "left_anti")
       docFeats.merge(newRows, gone, ctx.batchId)
 

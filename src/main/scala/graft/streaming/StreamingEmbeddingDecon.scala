@@ -36,19 +36,16 @@ object StreamingEmbeddingDecon {
   def deconView(
       spark: SparkSession, stateDir: String,
       name: String = "embedding_decon", table: String = "embeddings",
-      vecCol: String = "embedding", threshold: Double = 0.4,
-      buckets: Int = 32): ViewDef = {
+      vecCol: String = "embedding", threshold: Double = 0.4): ViewDef = {
     val holdSchema = StructType(Seq(
       StructField("key", StringType),
       StructField(vecCol, ArrayType(DoubleType))))
     val holdState = new ParquetKeyedTable(
-      spark, s"$stateDir/$name-holdout", "key", buckets)
+      spark, s"$stateDir/$name-holdout")
 
     ViewDef(name, (pre, post, batch, ctx) => {
-      val mem = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
       val isHold = pmod(col("key").cast("long"), lit(29)) === 0
-      val touched = batch(table).select("key").distinct().persist(mem)
-      ctx.defer(touched.unpersist())
+      val touched = ctx.cache(batch(table).select("key").distinct())
       // the mod-29 split needs numeric keys; a key whose cast is null
       // would be neither benchmark nor corpus (null-false on BOTH
       // branches) and silently vanish from the sink — fail loudly
@@ -57,8 +54,7 @@ object StreamingEmbeddingDecon {
       require(badKeys.isEmpty,
         s"$name requires numeric keys for the benchmark split; got " +
           badKeys.limit(5).collect().map(_.getString(0)).mkString(", "))
-      val holdTouched = touched.filter(isHold).persist(mem)
-      ctx.defer(holdTouched.unpersist())
+      val holdTouched = ctx.cache(touched.filter(isHold))
       val benchmarkChanged = !holdTouched.isEmpty
 
       // benchmark-side state maintenance: touched holdout keys that are
@@ -73,8 +69,7 @@ object StreamingEmbeddingDecon {
       val holdNow = holdState.snapshot(holdSchema) // benchmark-sized
       val corpusRows =
         if (benchmarkChanged) {
-          val all = post(table).persist(mem)
-          ctx.defer(all.unpersist())
+          val all = ctx.cache(post(table))
           // the batch guard above only sees keys TOUCHED in this batch;
           // a non-numeric key that entered state before this view was
           // attached would be null on BOTH mod-29 branches and silently

@@ -52,34 +52,23 @@ object StreamingExactDedup {
       table: String, textCol: String,
       fpFn: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
         sha2(_, 256)): FpState = {
-    val mem = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val preV = ctx.batchId match {
-      case Some(id) => postings.versionBefore(id)
-      case None     => postings.version
-    }
+    val preV = postings.versionBefore(ctx.batchId)
 
     def fps(rows: DataFrame): DataFrame = rows
       .select(col("key").as("doc_id"),
         fpFn(col(textCol)).as("fp"))
 
-    val oldFps = fps(pre.rows(table, touched)).persist(mem)
-    ctx.defer(oldFps.unpersist())
-    val newFps = fps(post.rows(table, touched)).persist(mem)
-    ctx.defer(newFps.unpersist())
+    val oldFps = ctx.cache(fps(pre.rows(table, touched)))
+    val newFps = ctx.cache(fps(post.rows(table, touched)))
 
-    val affected = oldFps.select("fp").union(newFps.select("fp"))
-      .distinct().withColumnRenamed("fp", "key").persist(mem)
-    ctx.defer(affected.unpersist())
-    val preMembers = postings.rowsForKeysAt(preV, postSchema, affected)
-      .select(col("key").as("fp"), explode(col("members")).as("member"))
-      .persist(mem)
-    ctx.defer(preMembers.unpersist())
-    val postMembers = preMembers.join(
+    val affected = ctx.cache(oldFps.select("fp").union(newFps.select("fp"))
+      .distinct().withColumnRenamed("fp", "key"))
+    val preMembers = ctx.cache(postings.rowsForKeysAt(preV, postSchema, affected)
+      .select(col("key").as("fp"), explode(col("members")).as("member")))
+    val postMembers = ctx.cache(preMembers.join(
         touched.withColumnRenamed("key", "member"), Seq("member"),
         "left_anti")
-      .unionByName(newFps.select(col("fp"), col("doc_id").as("member")))
-      .persist(mem)
-    ctx.defer(postMembers.unpersist())
+      .unionByName(newFps.select(col("fp"), col("doc_id").as("member"))))
 
     val rows = postMembers.groupBy("fp")
       .agg(collect_list("member").as("members"))
@@ -107,14 +96,12 @@ object StreamingExactDedup {
   def exactDedupView(
       spark: SparkSession, stateDir: String,
       name: String = "exact_dedup", table: String = "documents",
-      textCol: String = "text", buckets: Int = 32): ViewDef = {
+      textCol: String = "text"): ViewDef = {
     val postings =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-post", "key", buckets)
+      new ParquetKeyedTable(spark, s"$stateDir/$name-post")
 
     ViewDef(name, (pre, post, batch, ctx) => {
-      val touched = batch(table).select("key").distinct()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      ctx.defer(touched.unpersist())
+      val touched = ctx.cache(batch(table).select("key").distinct())
       val st = maintainFpState(postings, pre, post, touched, ctx,
         table, textCol)
       val upserts = st.postMembers.groupBy("fp")
@@ -141,14 +128,12 @@ object StreamingExactDedup {
   def canonicalDedupView(
       spark: SparkSession, stateDir: String,
       name: String = "canonical_dedup", table: String = "documents",
-      textCol: String = "text", buckets: Int = 32): ViewDef = {
+      textCol: String = "text"): ViewDef = {
     val postings =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-post", "key", buckets)
+      new ParquetKeyedTable(spark, s"$stateDir/$name-post")
 
     ViewDef(name, (pre, post, batch, ctx) => {
-      val touched = batch(table).select("key").distinct()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      ctx.defer(touched.unpersist())
+      val touched = ctx.cache(batch(table).select("key").distinct())
       val st = maintainFpState(postings, pre, post, touched, ctx,
         table, textCol,
         fpFn = t => md5(graft.operators.Dedup.canonicalText(t)))

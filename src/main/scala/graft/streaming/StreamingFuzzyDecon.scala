@@ -44,25 +44,20 @@ object StreamingFuzzyDecon {
       spark: org.apache.spark.sql.SparkSession, stateDir: String,
       name: String = "fuzzy_decon", table: String = "documents",
       textCol: String = "text", threshold: Double = 0.8,
-      bandRows: Int = 2, nBands: Int = 32, shingleN: Int = 3,
-      buckets: Int = 32): ViewDef = {
+      bandRows: Int = 2, nBands: Int = 32, shingleN: Int = 3): ViewDef = {
     val sigTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-sigs", "key", buckets)
+      new ParquetKeyedTable(spark, s"$stateDir/$name-sigs")
     val bucketTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-buckets", "key", buckets)
+      new ParquetKeyedTable(spark, s"$stateDir/$name-buckets")
     val pairTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-pairs", "key", buckets)
+      new ParquetKeyedTable(spark, s"$stateDir/$name-pairs")
 
     ViewDef(name, (pre, post, batch, ctx) => {
-      val mem = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
       // pin the pre-batch pair version BEFORE the merge below: in the
       // direct-call (batchId=None) mode `version` after the merge IS the
       // post state, and the retraction logic would lose every
       // retracted-pair partner
-      val prePairV = ctx.batchId match {
-        case Some(id) => pairTable.versionBefore(id)
-        case None     => pairTable.version
-      }
+      val prePairV = pairTable.versionBefore(ctx.batchId)
 
       // 1. pair maintenance (shared ladder) + pair-table merge
       val delta = StreamingDedup.maintainPairState(
@@ -76,14 +71,12 @@ object StreamingFuzzyDecon {
         .join(pairUpserts.select("key"), Seq("key"), "left_anti")
       pairTable.merge(pairUpserts, pairDeletes, ctx.batchId)
 
-      val touched = batch(table).select("key").distinct().persist(mem)
-      ctx.defer(touched.unpersist())
+      val touched = ctx.cache(batch(table).select("key").distinct())
       // post-state pairs (duplicate-density-sized; on replay the merge
       // skipped and `version` is already the post state)
-      val postPairs = pairTable
+      val postPairs = ctx.cache(pairTable
         .snapshotAt(pairTable.version, pairSchema)
-        .select("doc_a", "doc_b", "j").persist(mem)
-      ctx.defer(postPairs.unpersist())
+        .select("doc_a", "doc_b", "j"))
 
       // 2. affected docs: batch ∪ PRE- and POST-state pair partners of
       // batch docs. This covers every changed-pair endpoint (a pair can
@@ -103,13 +96,11 @@ object StreamingFuzzyDecon {
         .select(col("p").as("key"))
       val prePairs = pairTable.snapshotAt(prePairV, pairSchema)
         .select("doc_a", "doc_b", "j")
-      val both = expand(postPairs).persist(mem)
-      ctx.defer(both.unpersist())
-      val affected = touched
+      val both = ctx.cache(expand(postPairs))
+      val affected = ctx.cache(touched
         .union(partnersOfTouched(expand(prePairs)))
         .union(partnersOfTouched(both))
-        .distinct().persist(mem)
-      ctx.defer(affected.unpersist())
+        .distinct())
 
       // 3. re-evaluate affected docs: their pairs, both endpoints' split
       // flags from pruned post-state text reads
@@ -118,19 +109,15 @@ object StreamingFuzzyDecon {
       val evalKeys = mine.select(col("d").as("key"))
         .union(mine.select(col("p").as("key")))
         .union(affected).distinct()
-      val flags = post.rows(table, evalKeys)
-        .select(col("key"), isTrain(col(textCol)).as("train"))
-        .persist(mem)
-      ctx.defer(flags.unpersist())
-      val upserts = mine
+      val flags = ctx.cache(post.rows(table, evalKeys)
+        .select(col("key"), isTrain(col(textCol)).as("train")))
+      val upserts = ctx.cache(mine
         .join(flags.select(col("key").as("d"), col("train").as("d_train")), "d")
         .join(flags.select(col("key").as("p"), col("train").as("p_train")), "p")
         .filter(col("d_train") && !col("p_train"))
         .groupBy(col("d").as("id"))
         .agg(count(lit(1)).as("n_holdout_neardups"),
-          max(round(col("j"), 6)).as("max_jaccard"))
-        .persist(mem)
-      ctx.defer(upserts.unpersist())
+          max(round(col("j"), 6)).as("max_jaccard")))
       val deletes = affected.select(col("key").as("id"))
         .join(upserts.select("id"), Seq("id"), "left_anti")
       (upserts, deletes)

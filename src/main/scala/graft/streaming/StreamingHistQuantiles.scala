@@ -47,10 +47,7 @@ object StreamingHistQuantiles {
         .unionAll(bucketCounts(pre.rows(table, touched), len, -1))
         .groupBy("source", "k").agg(sum("d").as("d"))
         .filter(col("d") =!= 0)
-      val preV = ctx.batchId match {
-        case Some(id) => state.versionBefore(id)
-        case None     => state.version
-      }
+      val preV = state.versionBefore(ctx.batchId)
       val keyed = delta.select(
         concat(col("source"), lit("|"), col("k")).as("key"),
         col("source"), col("k"), col("d"))

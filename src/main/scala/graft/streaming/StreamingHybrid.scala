@@ -33,13 +33,13 @@ object StreamingHybrid {
       fetchVectors: DataFrame => DataFrame,
       kR: Int = 20, kF: Int = 10,
       annName: String = "ann_index", bm25Name: String = "bm25_index",
-      nShards: Int = 4, buckets: Int = 32): DataFrame = {
+      nShards: Int = 4): DataFrame = {
     val dense = StreamingAnn.search(spark, stateDir, probes, fetchVectors,
-      kR, annName, buckets = buckets)
+      kR, annName)
       .select(col("query_id"), col("neighbor_id").as("id"),
         col("rank").as("rnk"))
     val sparse = StreamingBm25.searchMany(spark, stateDir, probeTerms,
-      bm25Name, nShards, buckets)
+      bm25Name, nShards)
       // the probe itself never ranks (its own terms trivially match);
       // ties break on the NUMERIC id, exactly batch q167's rank order
       // (string doc keys would order "10" before "2")

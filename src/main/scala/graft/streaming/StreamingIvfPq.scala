@@ -55,37 +55,27 @@ object StreamingIvfPq {
   def indexView(
       spark: SparkSession, stateDir: String, model: Pq.Model,
       name: String = "ivfpq_index", table: String = "embeddings",
-      vecCol: String = "embedding", cellCol: String = "label",
-      buckets: Int = 32): ViewDef = {
+      vecCol: String = "embedding", cellCol: String = "label"): ViewDef = {
     val cellTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-cells", "key", buckets)
+      new ParquetKeyedTable(spark, s"$stateDir/$name-cells")
     ViewDef(name, (pre, post, batch, ctx) => {
-      val mem = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-      val preV = ctx.batchId match {
-        case Some(id) => cellTable.versionBefore(id)
-        case None     => cellTable.version
-      }
-      val touched = batch(table).select("key").distinct().persist(mem)
-      ctx.defer(touched.unpersist())
+      val preV = cellTable.versionBefore(ctx.batchId)
+      val touched = ctx.cache(batch(table).select("key").distinct())
 
       // cells the batch vectors leave (pre image) and enter (post image;
       // a deleted key has no post row — it only leaves)
       val oldCells = pre.rows(table, touched)
         .select(col("key").as("vec_key"),
           col(cellCol).cast("string").as("cell"))
-      val postRows = post.rows(table, touched)
+      val postRows = ctx.cache(post.rows(table, touched)
         .select(col("key").as("vec_key"), col(vecCol).as("v"),
-          col(cellCol).cast("string").as("cell"))
-        .persist(mem)
-      ctx.defer(postRows.unpersist())
+          col(cellCol).cast("string").as("cell")))
       // encode ONLY the batch's post vectors with the frozen codebooks
-      val newEnc = Pq.encode(model,
+      val newEnc = ctx.cache(Pq.encode(model,
           postRows.select(col("vec_key").as("vec_id"), col("v")))
         .join(postRows.select(col("vec_key"), col("cell")),
           col("vec_id") === col("vec_key"))
-        .select(col("vec_key"), col("cell"), col("codes"))
-        .persist(mem)
-      ctx.defer(newEnc.unpersist())
+        .select(col("vec_key"), col("cell"), col("codes")))
 
       val affected = oldCells.select("cell").union(newEnc.select("cell"))
         .distinct().withColumnRenamed("cell", "key")
@@ -98,12 +88,10 @@ object StreamingIvfPq {
         touched.withColumnRenamed("key", "vec_key"), Seq("vec_key"),
         "left_anti")
       val postMembers = kept.unionByName(newEnc)
-      val cellRows = postMembers.groupBy("cell")
+      val cellRows = ctx.cache(postMembers.groupBy("cell")
         .agg(collect_list(struct(col("vec_key"), col("codes")))
           .as("members"))
-        .select(col("cell").as("key"), col("members"))
-        .persist(mem)
-      ctx.defer(cellRows.unpersist())
+        .select(col("cell").as("key"), col("members")))
       val emptied = affected
         .join(cellRows.select("key"), Seq("key"), "left_anti")
       cellTable.merge(cellRows, emptied, ctx.batchId)
@@ -120,9 +108,9 @@ object StreamingIvfPq {
     * the equality surface the spec pins against a frozen-model encode
     * of the corpus state. */
   def codesState(spark: SparkSession, stateDir: String,
-      name: String = "ivfpq_index", buckets: Int = 32): DataFrame = {
+      name: String = "ivfpq_index"): DataFrame = {
     val t =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-cells", "key", buckets)
+      new ParquetKeyedTable(spark, s"$stateDir/$name-cells")
     t.snapshotAt(t.version, cellSchema)
       .select(col("key").as("cell"), explode(col("members")).as("m"))
       .select(col("cell"), col("m.vec_key").as("vec_key"),
@@ -142,9 +130,9 @@ object StreamingIvfPq {
       centroids: Seq[(String, Seq[Double])], probes: DataFrame,
       fetchVectors: DataFrame => DataFrame, topK: Int, nprobe: Int = 2,
       shortlist: Int = 10, name: String = "ivfpq_index",
-      vecCol: String = "embedding", buckets: Int = 32): DataFrame = {
+      vecCol: String = "embedding"): DataFrame = {
     val cellTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-cells", "key", buckets)
+      new ParquetKeyedTable(spark, s"$stateDir/$name-cells")
 
     // driver-side routing over the frozen centroid table: euclidean to
     // match how PQ ranks candidates, ties to the smaller cell id — the

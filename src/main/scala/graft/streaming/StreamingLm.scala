@@ -49,29 +49,22 @@ object StreamingLm {
     StructField("key", StringType),
     StructField("v_count", LongType)))
 
-  private def tables(spark: SparkSession, stateDir: String, name: String,
-      buckets: Int) = (
-    new ParquetKeyedTable(spark, s"$stateDir/$name-c2", "key", buckets),
-    new ParquetKeyedTable(spark, s"$stateDir/$name-c1", "key", buckets),
-    new ParquetKeyedTable(spark, s"$stateDir/$name-vtok", "key", buckets),
-    new ParquetKeyedTable(spark, s"$stateDir/$name-stats", "key", buckets))
+  private def tables(spark: SparkSession, stateDir: String, name: String) = (
+    new ParquetKeyedTable(spark, s"$stateDir/$name-c2"),
+    new ParquetKeyedTable(spark, s"$stateDir/$name-c1"),
+    new ParquetKeyedTable(spark, s"$stateDir/$name-vtok"),
+    new ParquetKeyedTable(spark, s"$stateDir/$name-stats"))
 
   /** Continuous model-maintenance view. */
   def lmView(
       spark: SparkSession, stateDir: String,
       name: String = "lm_model", table: String = "documents",
-      textCol: String = "text", buckets: Int = 32): ViewDef = {
+      textCol: String = "text"): ViewDef = {
     val (c2Table, c1Table, vTable, statsTable) =
-      tables(spark, stateDir, name, buckets)
+      tables(spark, stateDir, name)
 
     ViewDef(name, (pre, post, batch, ctx) => {
-      val mem = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-      def pin(t: ParquetKeyedTable): Option[Int] = ctx.batchId match {
-        case Some(id) => t.versionBefore(id)
-        case None     => t.version
-      }
-      val touched = batch(table).select("key").distinct().persist(mem)
-      ctx.defer(touched.unpersist())
+      val touched = ctx.cache(batch(table).select("key").distinct())
 
       // signed bigram contributions of one state image's hi docs
       def bigrams(rows: DataFrame, sign: Int): DataFrame = rows
@@ -83,33 +76,30 @@ object StreamingLm {
         .select(col("w1"), element_at(col("w"), col("p0") + 2).as("w2"),
           lit(sign.toLong).as("d"))
 
-      val biDeltas = bigrams(pre.rows(table, touched), -1)
+      val biDeltas = ctx.cache(bigrams(pre.rows(table, touched), -1)
         .unionByName(bigrams(post.rows(table, touched), 1))
         .groupBy("w1", "w2").agg(sum("d").as("d"))
-        .filter(col("d") =!= 0)
-        .persist(mem)
-      ctx.defer(biDeltas.unpersist())
+        .filter(col("d") =!= 0))
 
       /** ± merge of a (key, cnt) running-counter table; returns the
         * merged frame (key, cnt) including zeros for flip detection. */
       def mergeCounts(t: ParquetKeyedTable, deltas: DataFrame): DataFrame = {
-        val old = t.rowsForKeysAt(pin(t), cntSchema, deltas.select("key"))
-        val merged = deltas.join(old.withColumnRenamed("cnt", "o"),
+        val old = t.rowsForKeysAt(t.versionBefore(ctx.batchId), cntSchema,
+          deltas.select("key"))
+        val merged = ctx.cache(deltas.join(old.withColumnRenamed("cnt", "o"),
             Seq("key"), "full_outer")
           .select(col("key"),
             (coalesce(col("o"), lit(0L)) + coalesce(col("d"), lit(0L)))
-              .as("cnt"))
-          .persist(mem)
-        ctx.defer(merged.unpersist())
+              .as("cnt")))
         t.merge(merged.filter(col("cnt") > 0),
           merged.filter(col("cnt") <= 0).select("key"), ctx.batchId)
         merged
       }
 
       // c2 (carries w1/w2 for the sink)
-      val c2Old = c2Table.rowsForKeysAt(pin(c2Table), c2Schema,
+      val c2Old = c2Table.rowsForKeysAt(c2Table.versionBefore(ctx.batchId), c2Schema,
         biDeltas.select(Keys.pair(col("w1"), col("w2")).as("key")))
-      val c2Merged = biDeltas
+      val c2Merged = ctx.cache(biDeltas
         .select(Keys.pair(col("w1"), col("w2")).as("key"),
           col("w1"), col("w2"), col("d"))
         .join(c2Old.select(col("key"), col("w1").as("ow1"),
@@ -118,9 +108,7 @@ object StreamingLm {
           coalesce(col("w1"), col("ow1")).as("w1"),
           coalesce(col("w2"), col("ow2")).as("w2"),
           (coalesce(col("o"), lit(0L)) + coalesce(col("d"), lit(0L)))
-            .as("cnt"))
-        .persist(mem)
-      ctx.defer(c2Merged.unpersist())
+            .as("cnt")))
       c2Table.merge(
         c2Merged.filter(col("cnt") > 0).select("key", "w1", "w2", "cnt"),
         c2Merged.filter(col("cnt") <= 0).select("key"), ctx.batchId)
@@ -140,15 +128,14 @@ object StreamingLm {
           .when(col("cnt") <= 0 && col("cnt") - col("d") > 0, -1L)
           .otherwise(0L).as("f"))
         .agg(coalesce(sum("f"), lit(0L)).as("dv"))
-      val statsOld = statsTable.rowsForKeysAt(pin(statsTable), statsSchema,
+      val statsOld = statsTable.rowsForKeysAt(
+        statsTable.versionBefore(ctx.batchId), statsSchema,
         spark.createDataFrame(Seq(Tuple1("corpus"))).toDF("key"))
-      val statsNew = flips.crossJoin(
+      val statsNew = ctx.cache(flips.crossJoin(
           statsOld.select(col("v_count").as("ov"))
             .unionByName(spark.createDataFrame(Seq(Tuple1(0L))).toDF("ov"))
             .agg(max("ov").as("ov")))
-        .select(lit("corpus").as("key"), (col("ov") + col("dv")).as("v_count"))
-        .persist(mem)
-      ctx.defer(statsNew.unpersist())
+        .select(lit("corpus").as("key"), (col("ov") + col("dv")).as("v_count")))
       statsTable.merge(statsNew,
         statsNew.filter(lit(false)).select("key"), ctx.batchId)
 
@@ -172,10 +159,9 @@ object StreamingLm {
     * fewer than two tokens are absent, like the batch form. */
   def score(
       spark: SparkSession, stateDir: String, docs: DataFrame,
-      name: String = "lm_model", textCol: String = "text",
-      buckets: Int = 32): DataFrame = {
+      name: String = "lm_model", textCol: String = "text"): DataFrame = {
     val (c2Table, c1Table, vTable, statsTable) =
-      tables(spark, stateDir, name, buckets)
+      tables(spark, stateDir, name)
 
     val bi = docs
       .select(col("key").as("doc_id"),

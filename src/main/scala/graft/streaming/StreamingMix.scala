@@ -46,10 +46,7 @@ object StreamingMix {
         .groupBy("source").agg(sum("d").as("d"))
         .filter(col("d") =!= 0)
         .select(col("source").as("key"), col("d"))
-      val preV = ctx.batchId match {
-        case Some(id) => state.versionBefore(id)
-        case None     => state.version
-      }
+      val preV = state.versionBefore(ctx.batchId)
       val old = state.rowsForKeysAt(preV, stateSchema, delta.select("key"))
         .select(col("key"), col("n_tokens").as("o_n"))
       val merged = delta.join(old, Seq("key"), "left")

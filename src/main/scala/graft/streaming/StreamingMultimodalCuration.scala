@@ -57,28 +57,25 @@ object StreamingMultimodalCuration {
       name: String = "multimodal_corpus", table: String = "documents",
       textCol: String = "text", threshold: Double = 0.8,
       minQuality: Double = 0.5, bandRows: Int = 2, nBands: Int = 32,
-      shingleN: Int = 3, mediaHamming: Int = 5, mediaBands: Int = 8,
-      buckets: Int = 32): ViewDef = {
+      shingleN: Int = 3, mediaHamming: Int = 5, mediaBands: Int = 8): ViewDef = {
     val sigTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-sigs", "key", buckets)
+      new ParquetKeyedTable(spark, s"$stateDir/$name-sigs")
     val bucketTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-buckets", "key", buckets)
+      new ParquetKeyedTable(spark, s"$stateDir/$name-buckets")
     val pairTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-pairs", "key", buckets)
+      new ParquetKeyedTable(spark, s"$stateDir/$name-pairs")
     val labelTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-labels", "key", buckets)
+      new ParquetKeyedTable(spark, s"$stateDir/$name-labels")
     val mHashTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-mhashes", "key", buckets)
+      new ParquetKeyedTable(spark, s"$stateDir/$name-mhashes")
     val mBucketTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-mbuckets", "key", buckets)
+      new ParquetKeyedTable(spark, s"$stateDir/$name-mbuckets")
     val mPairTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-mpairs", "key", buckets)
+      new ParquetKeyedTable(spark, s"$stateDir/$name-mpairs")
     val mLabelTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-mlabels", "key", buckets)
+      new ParquetKeyedTable(spark, s"$stateDir/$name-mlabels")
 
     ViewDef(name, (pre, post, batch, ctx) => {
-      val mem = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-
       // 1. text clusters (shared machinery with the curated view)
       val cs = StreamingCuration.maintainClusterState(sigTable,
         bucketTable, pairTable, labelTable, post, batch, ctx, table,
@@ -98,14 +95,9 @@ object StreamingMultimodalCuration {
       val mPostPairs = mPairTable
         .snapshotAt(mPairTable.version, pairSchema)
         .select(col("doc_a"), col("doc_b"))
-      val mNewLabels = Dedup.clusterPairsStar(mPostPairs)
-        .select(col("doc_id").as("key"), col("cluster_id"))
-        .persist(mem)
-      ctx.defer(mNewLabels.unpersist())
-      val preMLabelV = ctx.batchId match {
-        case Some(id) => mLabelTable.versionBefore(id)
-        case None     => mLabelTable.version
-      }
+      val mNewLabels = ctx.cache(Dedup.clusterPairsStar(mPostPairs)
+        .select(col("doc_id").as("key"), col("cluster_id")))
+      val preMLabelV = mLabelTable.versionBefore(ctx.batchId)
       val mOldLabels = mLabelTable.snapshotAt(preMLabelV, labelSchema)
       mLabelTable.merge(mNewLabels,
         mOldLabels.select("key").join(mNewLabels.select("key"),
@@ -128,10 +120,8 @@ object StreamingMultimodalCuration {
       val mTouchedClusters = mNewLabels
         .join(affected0, Seq("key"), "left_semi")
         .select("cluster_id").distinct()
-      val mMembers = mNewLabels
-        .join(mTouchedClusters, Seq("cluster_id"), "left_semi")
-        .persist(mem)
-      ctx.defer(mMembers.unpersist())
+      val mMembers = ctx.cache(mNewLabels
+        .join(mTouchedClusters, Seq("cluster_id"), "left_semi"))
       // pixels of every member of a touched media cluster, from the
       // REAL header parse of pruned post-state payloads (q154's signal)
       val mDocs = post.rows(table, mMembers.select("key"))
@@ -148,9 +138,8 @@ object StreamingMultimodalCuration {
       val mediaLosers = mMembers.join(mSurv, "cluster_id")
         .filter(col("key") =!= col("survivor")).select("key")
 
-      val affected = affectedText.union(mMembers.select("key"))
-        .distinct().persist(mem)
-      ctx.defer(affected.unpersist())
+      val affected = ctx.cache(affectedText.union(mMembers.select("key"))
+        .distinct())
 
       // 4. re-evaluate ONLY the frontier
       val live = post.rows(table, affected)
@@ -158,16 +147,14 @@ object StreamingMultimodalCuration {
       val bucket = pmod(
         conv(substring(md5(col("text")), 1, 8), 16, 10).cast("long"),
         lit(100L))
-      val upserts = live
+      val upserts = ctx.cache(live
         .filter(TextAnalysis.qualityScore(col("text")) >= minQuality)
         .join(textLosers, Seq("key"), "left_anti")
         .join(mediaLosers, Seq("key"), "left_anti")
         .select(col("key").as("id"),
           when(bucket < 90, "train").when(bucket < 95, "val")
             .otherwise("test").as("split"),
-          TextAnalysis.qualityScore(col("text")).as("quality"))
-        .persist(mem)
-      ctx.defer(upserts.unpersist())
+          TextAnalysis.qualityScore(col("text")).as("quality")))
       val deletes = affected.select(col("key").as("id"))
         .join(upserts.select("id"), Seq("id"), "left_anti")
       (upserts, deletes)

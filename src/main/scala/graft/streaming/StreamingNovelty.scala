@@ -52,19 +52,13 @@ object StreamingNovelty {
   def noveltyView(
       spark: SparkSession, stateDir: String,
       name: String = "novelty", table: String = "documents",
-      textCol: String = "text", gramN: Int = 5,
-      buckets: Int = 32): ViewDef = {
+      textCol: String = "text", gramN: Int = 5): ViewDef = {
     val postings =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-postings", "key", buckets)
+      new ParquetKeyedTable(spark, s"$stateDir/$name-postings")
 
     ViewDef(name, (pre, post, batch, ctx) => {
-      val mem = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-      val preV = ctx.batchId match {
-        case Some(id) => postings.versionBefore(id)
-        case None     => postings.version
-      }
-      val touched = batch(table).select("key").distinct().persist(mem)
-      ctx.defer(touched.unpersist())
+      val preV = postings.versionBefore(ctx.batchId)
+      val touched = ctx.cache(batch(table).select("key").distinct())
 
       // per-doc DISTINCT grams (wordShingles dedups within a doc)
       def grams(docs: DataFrame): DataFrame = docs
@@ -73,26 +67,20 @@ object StreamingNovelty {
             .as("gram"))
         .select(col("doc"), md5(col("gram")).as("g"))
 
-      val preG = grams(pre.rows(table, touched)).persist(mem)
-      ctx.defer(preG.unpersist())
-      val postG = grams(post.rows(table, touched)).persist(mem)
-      ctx.defer(postG.unpersist())
+      val preG = ctx.cache(grams(pre.rows(table, touched)))
+      val postG = ctx.cache(grams(post.rows(table, touched)))
 
       // 2. posting-list maintenance on the affected grams only
       val affected = preG.select("g").union(postG.select("g"))
         .distinct().withColumnRenamed("g", "key")
-      val oldRows = postings.rowsForKeysAt(preV, postingSchema, affected)
-        .persist(mem)
-      ctx.defer(oldRows.unpersist())
+      val oldRows = ctx.cache(postings.rowsForKeysAt(preV, postingSchema, affected))
       val kept = oldRows
         .select(col("key").as("g"), explode(col("members")).as("doc"))
         .join(touched.withColumnRenamed("key", "doc"), Seq("doc"), "left_anti")
       val newMembers = kept.unionByName(postG.select("g", "doc"))
-      val newRows = newMembers.groupBy("g")
+      val newRows = ctx.cache(newMembers.groupBy("g")
         .agg(collect_list("doc").as("members"))
-        .select(col("g").as("key"), col("members"))
-        .persist(mem)
-      ctx.defer(newRows.unpersist())
+        .select(col("g").as("key"), col("members")))
       val emptied = affected.join(newRows.select("key"), Seq("key"), "left_anti")
       postings.merge(newRows, emptied, ctx.batchId)
 
@@ -107,25 +95,21 @@ object StreamingNovelty {
       val movedHolders = minMoves.select(col("old_min").as("key"))
         .union(minMoves.select(col("new_min").as("key")))
         .filter(col("key").isNotNull)
-      val affectedDocs = touched.union(movedHolders).distinct().persist(mem)
-      ctx.defer(affectedDocs.unpersist())
+      val affectedDocs = ctx.cache(touched.union(movedHolders).distinct())
 
       // 4. re-score against the post-merge postings (identical on
       // replay: the merge was skipped, the table is already post-batch)
-      val scoreG = grams(post.rows(table, affectedDocs)).persist(mem)
-      ctx.defer(scoreG.unpersist())
+      val scoreG = ctx.cache(grams(post.rows(table, affectedDocs)))
       val mins = postings.rowsForKeys(postingSchema,
         scoreG.select(col("g").as("key")).distinct())
         .select(col("key").as("g"), array_min(col("members")).as("first_doc"))
-      val upserts = scoreG.join(mins, Seq("g"))
+      val upserts = ctx.cache(scoreG.join(mins, Seq("g"))
         .groupBy("doc")
         .agg(count(lit(1)).as("n_grams"),
           sum(when(col("first_doc") === col("doc"), 1L).otherwise(0L))
             .as("n_novel"))
         .select(col("doc").as("id"), col("n_grams"), col("n_novel"),
-          round(col("n_novel") * 1.0 / col("n_grams"), 6).as("novel_frac"))
-        .persist(mem)
-      ctx.defer(upserts.unpersist())
+          round(col("n_novel") * 1.0 / col("n_grams"), 6).as("novel_frac")))
       val deletes = affectedDocs.select(col("key").as("id"))
         .join(upserts.select("id"), Seq("id"), "left_anti")
       (upserts, deletes)

@@ -60,25 +60,20 @@ object StreamingPageRank {
       name: String = "dup_pagerank", table: String = "documents",
       textCol: String = "text", threshold: Double = 0.8,
       bandRows: Int = 2, nBands: Int = 32, shingleN: Int = 3,
-      rounds: Int = 10, buckets: Int = 32): ViewDef = {
+      rounds: Int = 10): ViewDef = {
     val sigTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-sigs", "key", buckets)
+      new ParquetKeyedTable(spark, s"$stateDir/$name-sigs")
     val bucketTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-buckets", "key", buckets)
+      new ParquetKeyedTable(spark, s"$stateDir/$name-buckets")
     val pairTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-pairs", "key", buckets)
+      new ParquetKeyedTable(spark, s"$stateDir/$name-pairs")
     val labelTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-labels", "key", buckets)
+      new ParquetKeyedTable(spark, s"$stateDir/$name-labels")
 
     ViewDef(name, (pre, post, batch, ctx) => {
-      val mem = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-
       // pre-batch labels BEFORE maintainClusterState merges the new ones
       // (versionBefore also makes this replay-stable)
-      val preLabelV = ctx.batchId match {
-        case Some(id) => labelTable.versionBefore(id)
-        case None     => labelTable.version
-      }
+      val preLabelV = labelTable.versionBefore(ctx.batchId)
       val oldLabels = labelTable.snapshotAt(preLabelV, labelSchema)
 
       val cs = StreamingCuration.maintainClusterState(
@@ -89,18 +84,16 @@ object StreamingPageRank {
       // post-batch cluster ids of batch ∪ label-diff docs
       val touched = batch(table).select("key")
         .union(cs.labelDiff).distinct()
-      val affectedCids = oldLabels.join(touched, Seq("key"))
+      val affectedCids = ctx.cache(oldLabels.join(touched, Seq("key"))
         .select("cluster_id")
         .union(cs.newLabels.join(touched, Seq("key")).select("cluster_id"))
-        .distinct().persist(mem)
-      ctx.defer(affectedCids.unpersist())
+        .distinct())
 
       // nodes/edges of the affected components under the POST labeling
       // (both endpoints of an edge share a cluster, so labeling doc_a
       // suffices to classify the edge)
-      val affNodes = cs.newLabels.join(affectedCids, Seq("cluster_id"))
-        .select("key").persist(mem)
-      ctx.defer(affNodes.unpersist())
+      val affNodes = ctx.cache(cs.newLabels.join(affectedCids, Seq("cluster_id"))
+        .select("key"))
       val postPairs = pairTable
         .snapshotAt(pairTable.version, pairSchema)
         .join(affNodes.withColumnRenamed("key", "doc_a"), Seq("doc_a"))
@@ -127,11 +120,9 @@ object StreamingPageRank {
           .checkpoint()
       }
 
-      val upserts = ranks
+      val upserts = ctx.cache(ranks
         .select(col("node").as("id"),
-          round(col("rank"), 6).as("unit_rank"))
-        .persist(mem)
-      ctx.defer(upserts.unpersist())
+          round(col("rank"), 6).as("unit_rank")))
       // nodes of affected components that no longer carry any edge —
       // including docs deleted outright — leave the sink
       val deletes = affNodes.select(col("key").as("id"))

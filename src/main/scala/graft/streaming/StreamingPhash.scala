@@ -77,13 +77,8 @@ object StreamingPhash {
         "maxHamming < bands)")
     val bandBits = 32 / nBands
     val mask = (1L << bandBits) - 1
-    val mem = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    def pin(t: ParquetKeyedTable): Option[Int] = ctx.batchId match {
-      case Some(id) => t.versionBefore(id)
-      case None     => t.version
-    }
-    val preHashV = pin(hashTable)
-    val preBktV = pin(bucketTable)
+    val preHashV = hashTable.versionBefore(ctx.batchId)
+    val preBktV = bucketTable.versionBefore(ctx.batchId)
 
     def bandKeys(h: org.apache.spark.sql.Column) =
       array((0 until nBands).map { b =>
@@ -91,36 +86,29 @@ object StreamingPhash {
           shiftright(h, b * bandBits).bitwiseAND(lit(mask)).cast("string"))
       }: _*)
 
-    val touched = batch(table).select("key").distinct().persist(mem)
-    ctx.defer(touched.unpersist())
+    val touched = ctx.cache(batch(table).select("key").distinct())
 
     // 1. hash ONLY the batch docs, through batch q125's exact path
     val docs = post.rows(table, touched)
       .select(col("key").cast("long").as("doc_id"),
         col(textCol).as("text"))
-    val newHashes = Multimodal.perceptualHashes(
+    val newHashes = ctx.cache(Multimodal.perceptualHashes(
         Multimodal.mediaFrameOf(docs))
       .filter(col("data_len") >= 32)
-      .select(col("media_id").cast("string").as("doc_id"), col("phash"))
-      .persist(mem)
-    ctx.defer(newHashes.unpersist())
+      .select(col("media_id").cast("string").as("doc_id"), col("phash")))
 
     // band membership, old (pre-state hashes of touched docs) and new
     val oldMemb = hashTable.rowsForKeysAt(preHashV, hashSchema, touched)
       .select(col("key").as("doc_id"),
         explode(bandKeys(col("phash"))).as("bkey"))
-    val newMemb = newHashes
-      .select(col("doc_id"), explode(bandKeys(col("phash"))).as("bkey"))
-      .persist(mem)
-    ctx.defer(newMemb.unpersist())
+    val newMemb = ctx.cache(newHashes
+      .select(col("doc_id"), explode(bandKeys(col("phash"))).as("bkey")))
 
     val affected = oldMemb.select("bkey").union(newMemb.select("bkey"))
       .distinct().withColumnRenamed("bkey", "key")
-    val preMembers = bucketTable
+    val preMembers = ctx.cache(bucketTable
       .rowsForKeysAt(preBktV, bucketSchema, affected)
-      .select(col("key").as("bkey"), explode(col("members")).as("doc_id"))
-      .persist(mem)
-    ctx.defer(preMembers.unpersist())
+      .select(col("key").as("bkey"), explode(col("members")).as("doc_id")))
 
     // 2. retract superset: every pair a previous batch could have
     // emitted with a member of B shares one of B's OLD buckets
@@ -137,10 +125,8 @@ object StreamingPhash {
     val keptMembers = preMembers.join(
       touched.withColumnRenamed("key", "doc_id"), Seq("doc_id"),
       "left_anti")
-    val postMembers = keptMembers
-      .unionByName(newMemb.select(col("doc_id"), col("bkey")))
-      .persist(mem)
-    ctx.defer(postMembers.unpersist())
+    val postMembers = ctx.cache(keptMembers
+      .unionByName(newMemb.select(col("doc_id"), col("bkey"))))
     val bucketRows = postMembers.groupBy("bkey")
       .agg(collect_list("doc_id").as("members"))
       .select(col("bkey").as("key"), col("members"))
@@ -191,11 +177,11 @@ object StreamingPhash {
       spark: SparkSession, stateDir: String,
       name: String = "phash_neardup", table: String = "documents",
       textCol: String = "text", maxHamming: Int = 3,
-      buckets: Int = 32, nBands: Int = 4): ViewDef = {
+      nBands: Int = 4): ViewDef = {
     val hashTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-hashes", "key", buckets)
+      new ParquetKeyedTable(spark, s"$stateDir/$name-hashes")
     val bucketTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-buckets", "key", buckets)
+      new ParquetKeyedTable(spark, s"$stateDir/$name-buckets")
 
     ViewDef(name, (pre, post, batch, ctx) => {
       val delta = maintainHashState(hashTable, bucketTable, post, batch,

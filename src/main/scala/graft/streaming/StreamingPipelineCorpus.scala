@@ -69,33 +69,30 @@ object StreamingPipelineCorpus {
       capN: Int = 10, threshold: Double = 0.8,
       bandRows: Int = 2, nBands: Int = 32, shingleN: Int = 3,
       gramN: Int = 5, ledgerShards: Int = 16,
-      buckets: Int = 32,
       policy: StreamingCuration.SurvivorPolicy =
         StreamingCuration.SurvivorPolicy.MinId): ViewDef = {
     val sigTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-sigs", "key", buckets)
+      new ParquetKeyedTable(spark, s"$stateDir/$name-sigs")
     val bucketTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-buckets", "key", buckets)
+      new ParquetKeyedTable(spark, s"$stateDir/$name-buckets")
     val pairTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-pairs", "key", buckets)
+      new ParquetKeyedTable(spark, s"$stateDir/$name-pairs")
     val labelTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-labels", "key", buckets)
+      new ParquetKeyedTable(spark, s"$stateDir/$name-labels")
     val fpTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-fps", "key", buckets)
+      new ParquetKeyedTable(spark, s"$stateDir/$name-fps")
     val hTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-hgrams", "key", buckets)
+      new ParquetKeyedTable(spark, s"$stateDir/$name-hgrams")
     val tTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-tgrams", "key", buckets)
+      new ParquetKeyedTable(spark, s"$stateDir/$name-tgrams")
     val ledger =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-ledger", "key", buckets)
+      new ParquetKeyedTable(spark, s"$stateDir/$name-ledger")
 
     def shardKey(src: Column, doc: Column): Column =
       Keys.pair(src, pmod(xxhash64(doc), lit(ledgerShards)))
 
     ViewDef(name, (pre, post, batch, ctx) => {
-      val mem = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-      val touched = batch(table).select("key").distinct().persist(mem)
-      ctx.defer(touched.unpersist())
+      val touched = ctx.cache(batch(table).select("key").distinct())
 
       // shared-state maintenance — each stage's standalone machinery
       val cs = StreamingCuration.maintainClusterState(
@@ -119,11 +116,9 @@ object StreamingPipelineCorpus {
 
       // eligibility of the affected docs from post state: train split ∧
       // Gopher keep ∧ exact survivor ∧ near-dup survivor ∧ clean
-      val live = post.rows(table, affected)
+      val live = ctx.cache(post.rows(table, affected)
         .select(col("key"), col(textCol).as("text"),
-          col(sourceCol).as("source"))
-        .persist(mem)
-      ctx.defer(live.unpersist())
+          col(sourceCol).as("source")))
       val bucket = pmod(
         conv(substring(md5(col("text")), 1, 8), 16, 10).cast("long"),
         lit(100L))
@@ -133,43 +128,33 @@ object StreamingPipelineCorpus {
       val exactLosers = fs.losersAmong(affected)
       val contaminated = gs.sharedCounts(affected)
         .select(col("id").as("key"))
-      val eligible = live.filter(bucket < 90)
+      val eligible = ctx.cache(live.filter(bucket < 90)
         .join(gateKeep, Seq("key"), "left_semi")
         .join(exactLosers, Seq("key"), "left_anti")
         .join(nearLosers, Seq("key"), "left_anti")
         .join(contaminated, Seq("key"), "left_anti")
         .select(col("key").as("doc_id"), col("source"),
-          TextAnalysis.qualityScore(col("text")).as("quality"))
-        .persist(mem)
-      ctx.defer(eligible.unpersist())
+          TextAnalysis.qualityScore(col("text")).as("quality")))
 
       // per-source eligible-doc ledger (the StreamingDomainCap shape):
       // affected docs' entries replaced wholesale by their new
       // eligibility; only the touched sources' shards are read
-      val preV = ctx.batchId match {
-        case Some(id) => ledger.versionBefore(id)
-        case None     => ledger.version
-      }
-      val touchedSources = pre.rows(table, affected)
+      val preV = ledger.versionBefore(ctx.batchId)
+      val touchedSources = ctx.cache(pre.rows(table, affected)
         .select(col(sourceCol).as("source"))
-        .union(live.select("source")).distinct().persist(mem)
-      ctx.defer(touchedSources.unpersist())
+        .union(live.select("source")).distinct())
       val shardKeys = touchedSources
         .select(col("source"),
           explode(sequence(lit(0), lit(ledgerShards - 1))).as("sh"))
         .select(Keys.pair(col("source"), col("sh")).as("key"))
-      val preEntries = ledger.rowsForKeysAt(preV, ledgerSchema, shardKeys)
+      val preEntries = ctx.cache(ledger.rowsForKeysAt(preV, ledgerSchema, shardKeys)
         .select(col("source"), explode(col("entries")).as("e"))
         .select(col("source"), col("e.doc_id").as("doc_id"),
-          col("e.quality").as("quality"))
-        .persist(mem)
-      ctx.defer(preEntries.unpersist())
-      val postEntries = preEntries.join(
+          col("e.quality").as("quality")))
+      val postEntries = ctx.cache(preEntries.join(
           affected.withColumnRenamed("key", "doc_id"), Seq("doc_id"),
           "left_anti")
-        .unionByName(eligible.select("doc_id", "source", "quality"))
-        .persist(mem)
-      ctx.defer(postEntries.unpersist())
+        .unionByName(eligible.select("doc_id", "source", "quality")))
       val rows = postEntries
         .groupBy(shardKey(col("source"), col("doc_id")).as("key"),
           col("source"))
@@ -188,8 +173,7 @@ object StreamingPipelineCorpus {
             .orderBy(col("quality").desc, col("doc_id"))))
         .filter(col("rk") <= capN)
 
-      val postTop = topK(postEntries).persist(mem)
-      ctx.defer(postTop.unpersist())
+      val postTop = ctx.cache(topK(postEntries))
       // PII signature of each winner's post-state text — a pruned read
       // bounded by capN × touched sources
       val sigs = post.rows(table, postTop.select(col("doc_id").as("key")))

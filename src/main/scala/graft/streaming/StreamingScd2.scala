@@ -59,42 +59,29 @@ object StreamingScd2 {
       spark: SparkSession, stateDir: String,
       name: String = "scd2_history", table: String = "events",
       userCol: String = "user_id", tsCol: String = "ts",
-      typeCol: String = "event_type", valueCol: String = "value",
-      buckets: Int = 32): ViewDef = {
+      typeCol: String = "event_type", valueCol: String = "value"): ViewDef = {
     val byUser =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-by-user", "key", buckets)
+      new ParquetKeyedTable(spark, s"$stateDir/$name-by-user")
 
     ViewDef(name, (pre, post, batch, ctx) => {
-      val mem = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-      val preIdxV = ctx.batchId match {
-        case Some(id) => byUser.versionBefore(id)
-        case None     => byUser.version
-      }
+      val preIdxV = byUser.versionBefore(ctx.batchId)
 
-      val touched = batch(table).select("key").distinct().persist(mem)
-      ctx.defer(touched.unpersist())
-      val preRows = pre.rows(table, touched)
+      val touched = ctx.cache(batch(table).select("key").distinct())
+      val preRows = ctx.cache(pre.rows(table, touched)
         .select(col("key"), col(userCol), col(tsCol), col(typeCol),
-          col(valueCol))
-        .persist(mem)
-      ctx.defer(preRows.unpersist())
-      val postRows = post.rows(table, touched)
+          col(valueCol)))
+      val postRows = ctx.cache(post.rows(table, touched)
         .select(col("key"), col(userCol), col(tsCol), col(typeCol),
-          col(valueCol))
-        .persist(mem)
-      ctx.defer(postRows.unpersist())
+          col(valueCol)))
 
-      val touchedUsers = preRows.select(col(userCol))
+      val touchedUsers = ctx.cache(preRows.select(col(userCol))
         .union(postRows.select(col(userCol)))
         .distinct().filter(col(userCol).isNotNull)
-        .select(col(userCol).cast("string").as("key")).persist(mem)
-      ctx.defer(touchedUsers.unpersist())
+        .select(col(userCol).cast("string").as("key")))
 
       // pre-batch history length per touched user — versions beyond the
       // rebuilt count retract below
-      val preIdx = byUser.rowsForKeysAt(preIdxV, idxSchema, touchedUsers)
-        .persist(mem)
-      ctx.defer(preIdx.unpersist())
+      val preIdx = ctx.cache(byUser.rowsForKeysAt(preIdxV, idxSchema, touchedUsers))
       val oldCounts = preIdx.select(col("key"),
         size(col("events")).cast("long").as("n_old"))
 
@@ -108,8 +95,7 @@ object StreamingScd2 {
         col(userCol).cast("string").as("key"), col("key").as("id"),
         col(tsCol).cast("long").as("ts"), col(typeCol).as("typ"),
         col(valueCol).cast("double").as("value"))
-      val allEvents = resident.unionByName(fresh).persist(mem)
-      ctx.defer(allEvents.unpersist())
+      val allEvents = ctx.cache(resident.unionByName(fresh))
 
       val idxRows = allEvents.groupBy("key")
         .agg(collect_list(

@@ -49,46 +49,33 @@ object StreamingSemDeDup {
   def semDedupView(
       spark: SparkSession, stateDir: String, model: KMeans.Model,
       name: String = "semdedup_view", table: String = "embeddings",
-      vecCol: String = "embedding", tau: Double = 0.45,
-      buckets: Int = 32): ViewDef = {
+      vecCol: String = "embedding", tau: Double = 0.45): ViewDef = {
     val postings =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-post", "key", buckets)
+      new ParquetKeyedTable(spark, s"$stateDir/$name-post")
 
     ViewDef(name, (pre, post, batch, ctx) => {
-      val mem = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-      val preV = ctx.batchId match {
-        case Some(id) => postings.versionBefore(id)
-        case None     => postings.version
-      }
+      val preV = postings.versionBefore(ctx.batchId)
 
-      val touched = batch(table).select("key").distinct().persist(mem)
-      ctx.defer(touched.unpersist())
+      val touched = ctx.cache(batch(table).select("key").distinct())
 
       def assigned(rows: DataFrame): DataFrame = model
         .assign(rows.select(col("key").as("vec_id"),
           col(vecCol).cast(ArrayType(DoubleType)).as("v")))
         .select(col("vec_id"), col("cluster").cast("string").as("cluster"))
 
-      val oldAssign = assigned(pre.rows(table, touched)).persist(mem)
-      ctx.defer(oldAssign.unpersist())
-      val newAssign = assigned(post.rows(table, touched)).persist(mem)
-      ctx.defer(newAssign.unpersist())
+      val oldAssign = ctx.cache(assigned(pre.rows(table, touched)))
+      val newAssign = ctx.cache(assigned(post.rows(table, touched)))
 
-      val affected = oldAssign.select("cluster")
+      val affected = ctx.cache(oldAssign.select("cluster")
         .union(newAssign.select("cluster")).distinct()
-        .withColumnRenamed("cluster", "key").persist(mem)
-      ctx.defer(affected.unpersist())
+        .withColumnRenamed("cluster", "key"))
 
-      val preMembers = postings.rowsForKeysAt(preV, postSchema, affected)
-        .select(col("key").as("cluster"), explode(col("members")).as("vec_id"))
-        .persist(mem)
-      ctx.defer(preMembers.unpersist())
-      val postMembers = preMembers.join(
+      val preMembers = ctx.cache(postings.rowsForKeysAt(preV, postSchema, affected)
+        .select(col("key").as("cluster"), explode(col("members")).as("vec_id")))
+      val postMembers = ctx.cache(preMembers.join(
           touched.withColumnRenamed("key", "vec_id"), Seq("vec_id"),
           "left_anti")
-        .unionByName(newAssign.select("cluster", "vec_id"))
-        .persist(mem)
-      ctx.defer(postMembers.unpersist())
+        .unionByName(newAssign.select("cluster", "vec_id")))
       val rows = postMembers.groupBy("cluster")
         .agg(collect_list("vec_id").as("members"))
         .select(col("cluster").as("key"), col("members"))
@@ -111,8 +98,7 @@ object StreamingSemDeDup {
         KMeans.semDedup(vecs, model, tau)
       }
 
-      val postScore = score(postMembers, post).persist(mem)
-      ctx.defer(postScore.unpersist())
+      val postScore = ctx.cache(score(postMembers, post))
       val preScore = score(preMembers, pre)
 
       val upserts = postScore.select(

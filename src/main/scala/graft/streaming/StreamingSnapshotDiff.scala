@@ -60,10 +60,8 @@ object StreamingSnapshotDiff {
         lit(sign.toDouble).as("d_amt"), lit(sign.toLong).as("d_cnt"))
 
     ViewDef("snapshot_diff", (pre, post, batch, ctx) => {
-      val touched = batch(tableA).select("key")
-        .unionByName(batch(tableB).select("key")).distinct()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      ctx.defer(touched.unpersist())
+      val touched = ctx.cache(batch(tableA).select("key")
+        .unionByName(batch(tableB).select("key")).distinct())
       val deltas = contrib(
         classes(post.rows(tableA, touched), post.rows(tableB, touched)), 1)
         .unionByName(contrib(

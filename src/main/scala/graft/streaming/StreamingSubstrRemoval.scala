@@ -52,20 +52,14 @@ object StreamingSubstrRemoval {
   def substrRemovalView(
       spark: SparkSession, stateDir: String,
       name: String = "substr_removal", table: String = "documents",
-      textCol: String = "text", n: Int = 50,
-      buckets: Int = 32): ViewDef = {
+      textCol: String = "text", n: Int = 50): ViewDef = {
     val postings =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-post", "key", buckets)
+      new ParquetKeyedTable(spark, s"$stateDir/$name-post")
 
     ViewDef(name, (pre, post, batch, ctx) => {
-      val mem = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-      val preV = ctx.batchId match {
-        case Some(id) => postings.versionBefore(id)
-        case None     => postings.version
-      }
+      val preV = postings.versionBefore(ctx.batchId)
 
-      val touched = batch(table).select("key").distinct().persist(mem)
-      ctx.defer(touched.unpersist())
+      val touched = ctx.cache(batch(table).select("key").distinct())
 
       def wins(rows: DataFrame): DataFrame = rows
         .select(col("key").as("doc_id"),
@@ -75,29 +69,22 @@ object StreamingSubstrRemoval {
       def occ(rows: DataFrame): DataFrame = wins(rows)
         .groupBy("g", "doc_id").agg(count(lit(1)).as("c"))
 
-      val oldOcc = occ(pre.rows(table, touched)).persist(mem)
-      ctx.defer(oldOcc.unpersist())
-      val newOcc = occ(post.rows(table, touched)).persist(mem)
-      ctx.defer(newOcc.unpersist())
+      val oldOcc = ctx.cache(occ(pre.rows(table, touched)))
+      val newOcc = ctx.cache(occ(post.rows(table, touched)))
 
-      val affected = oldOcc.select("g").union(newOcc.select("g"))
-        .distinct().withColumnRenamed("g", "key").persist(mem)
-      ctx.defer(affected.unpersist())
-      val preMembers = postings.rowsForKeysAt(preV, postSchema, affected)
+      val affected = ctx.cache(oldOcc.select("g").union(newOcc.select("g"))
+        .distinct().withColumnRenamed("g", "key"))
+      val preMembers = ctx.cache(postings.rowsForKeysAt(preV, postSchema, affected)
         .select(col("key").as("g"), explode(col("members")).as("mc"))
-        .select(col("g"), col("mc.m").as("member"), col("mc.c").as("c"))
-        .persist(mem)
-      ctx.defer(preMembers.unpersist())
+        .select(col("g"), col("mc.m").as("member"), col("mc.c").as("c")))
 
       // postings update: batch docs leave their old (member, count)
       // entries, enter with their new per-doc occurrence counts
-      val postMembers = preMembers.join(
+      val postMembers = ctx.cache(preMembers.join(
           touched.withColumnRenamed("key", "member"), Seq("member"),
           "left_anti")
         .unionByName(newOcc.select(col("g"), col("doc_id").as("member"),
-          col("c")))
-        .persist(mem)
-      ctx.defer(postMembers.unpersist())
+          col("c"))))
       val rows = postMembers.groupBy("g")
         .agg(collect_list(struct(col("member").as("m"), col("c")))
           .as("members"))
@@ -109,26 +96,22 @@ object StreamingSubstrRemoval {
       // postings; only flipped postings can change an untouched doc's cut
       val preTot = preMembers.groupBy("g").agg(sum("c").as("t0"))
       val postTot = postMembers.groupBy("g").agg(sum("c").as("t1"))
-      val flipped = preTot.join(postTot, Seq("g"), "full")
+      val flipped = ctx.cache(preTot.join(postTot, Seq("g"), "full")
         .filter((coalesce(col("t0"), lit(0L)) >= 2) =!=
           (coalesce(col("t1"), lit(0L)) >= 2))
-        .select("g").persist(mem)
-      ctx.defer(flipped.unpersist())
+        .select("g"))
 
-      val rescore = touched
+      val rescore = ctx.cache(touched
         .union(flipped.join(preMembers, "g").select(col("member").as("key")))
         .union(flipped.join(postMembers, "g").select(col("member").as("key")))
-        .distinct().persist(mem)
-      ctx.defer(rescore.unpersist())
+        .distinct())
 
       // exact q122 rows for the re-emit docs at post state: windows from
       // the doc's own text, posting totals pruned to those windows, the
       // shared interval fold for the cut
-      val docRows = post.rows(table, rescore)
-        .select(col("key"), col(textCol)).persist(mem)
-      ctx.defer(docRows.unpersist())
-      val rw = wins(docRows).persist(mem)
-      ctx.defer(rw.unpersist())
+      val docRows = ctx.cache(post.rows(table, rescore)
+        .select(col("key"), col(textCol)))
+      val rw = ctx.cache(wins(docRows))
       val dupNow = postings
         .rowsForKeys(postSchema, rw.select(col("g").as("key")).distinct())
         .select(col("key").as("g"), explode(col("members")).as("mc"))

@@ -43,20 +43,14 @@ object StreamingSubstringDedup {
   def substringDupView(
       spark: SparkSession, stateDir: String,
       name: String = "substring_dup_pairs", table: String = "documents",
-      textCol: String = "text", windowLen: Int = 50,
-      buckets: Int = 32): ViewDef = {
+      textCol: String = "text", windowLen: Int = 50): ViewDef = {
     val bucketTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-buckets", "key", buckets)
+      new ParquetKeyedTable(spark, s"$stateDir/$name-buckets")
 
     ViewDef(name, (pre, post, batch, ctx) => {
-      val mem = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-      val preBktV = ctx.batchId match {
-        case Some(id) => bucketTable.versionBefore(id)
-        case None     => bucketTable.version
-      }
+      val preBktV = bucketTable.versionBefore(ctx.batchId)
 
-      val touched = batch(table).select("key").distinct().persist(mem)
-      ctx.defer(touched.unpersist())
+      val touched = ctx.cache(batch(table).select("key").distinct())
 
       def windows(docs: org.apache.spark.sql.DataFrame) = docs
         .select(col("key").as("doc_id"),
@@ -67,16 +61,13 @@ object StreamingSubstringDedup {
       // 1. window only the batch docs — pre text for retraction keys,
       // post text for discovery (a deleted doc has no post image)
       val oldWin = windows(pre.rows(table, touched))
-      val newWin = windows(post.rows(table, touched)).persist(mem)
-      ctx.defer(newWin.unpersist())
+      val newWin = ctx.cache(windows(post.rows(table, touched)))
 
       val affected = oldWin.select("h").union(newWin.select("h"))
         .distinct().withColumnRenamed("h", "key")
-      val preMembers = bucketTable
+      val preMembers = ctx.cache(bucketTable
         .rowsForKeysAt(preBktV, bucketSchema, affected)
-        .select(col("key").as("h"), explode(col("members")).as("doc_id"))
-        .persist(mem)
-      ctx.defer(preMembers.unpersist())
+        .select(col("key").as("h"), explode(col("members")).as("doc_id")))
 
       // 2. retract superset: stale entries (minus re-emitted pairs below)
       // delete as no-ops when never emitted
@@ -90,10 +81,8 @@ object StreamingSubstringDedup {
       // 3. membership update (idempotent-by-batchId)
       val keptMembers = preMembers.join(
         touched.withColumnRenamed("key", "doc_id"), Seq("doc_id"), "left_anti")
-      val postMembers = keptMembers
-        .unionByName(newWin.select(col("doc_id"), col("h")))
-        .persist(mem)
-      ctx.defer(postMembers.unpersist())
+      val postMembers = ctx.cache(keptMembers
+        .unionByName(newWin.select(col("doc_id"), col("h"))))
       val bucketRows = postMembers.groupBy("h")
         .agg(collect_list("doc_id").as("members"))
         .select(col("h").as("key"), col("members"))

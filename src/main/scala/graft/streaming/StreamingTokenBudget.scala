@@ -34,9 +34,9 @@ object StreamingTokenBudget {
   def budgetView(
       spark: SparkSession, stateDir: String,
       name: String = "token_budget", table: String = "documents",
-      budget: Long = 500L, buckets: Int = 32): ViewDef = {
+      budget: Long = 500L): ViewDef = {
     val aggTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-agg", "key", buckets)
+      new ParquetKeyedTable(spark, s"$stateDir/$name-agg")
     val gNames = Seq("g_rd", "g_qb")
     val spec = IncrementalAgg.GroupSpec(
       Seq(
@@ -47,7 +47,6 @@ object StreamingTokenBudget {
       amount = Provenance.tokenCount(col("text")).cast("double"))
 
     ViewDef(name, (pre, post, batch, ctx) => {
-      val mem = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
       val touched = batch(table).select("key").distinct()
       val deltas = IncrementalAgg
         .contrib(post.rows(table, touched), spec, 1)
@@ -59,11 +58,10 @@ object StreamingTokenBudget {
       // domains whose bucket set changed this batch — from the merged
       // group keys ("rd|qb"; domains contain no '|' and the qb tail is
       // numeric, so the split is unambiguous)
-      val touchedDomains = liveGroups.select(col("g_rd").as("rd"))
+      val touchedDomains = ctx.cache(liveGroups.select(col("g_rd").as("rd"))
         .unionByName(deadGroups
           .select(substring_index(col("key"), "|", 1).as("rd")))
-        .distinct().persist(mem)
-      ctx.defer(touchedDomains.unpersist())
+        .distinct())
 
       // candidate keys = touched domains × the enumerable bucket range;
       // bucket-pruned read of whatever of those actually exist

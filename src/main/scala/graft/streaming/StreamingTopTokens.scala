@@ -56,17 +56,12 @@ object StreamingTopTokens {
       val deltas = tokenCounts(post.rows(table, touched), 1L)
         .unionByName(tokenCounts(pre.rows(table, touched), -1L))
         .groupBy("key").agg(sum("d").as("d"))
-      val preV = ctx.batchId match {
-        case Some(id) => state.versionBefore(id)
-        case None     => state.version
-      }
+      val preV = state.versionBefore(ctx.batchId)
       val old = state.rowsForKeysAt(preV, stateSchema, deltas.select("key"))
         .withColumnRenamed("cnt", "o_cnt")
-      val merged = deltas.join(old, Seq("key"), "left")
+      val merged = ctx.cache(deltas.join(old, Seq("key"), "left")
         .select(col("key"),
-          (coalesce(col("o_cnt"), lit(0L)) + col("d")).as("cnt"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      ctx.defer(merged.unpersist()) // released after the sink consumes
+          (coalesce(col("o_cnt"), lit(0L)) + col("d")).as("cnt")))
       val live = merged.filter(col("cnt") > 0)
       val dead = merged.filter(col("cnt") <= 0).select("key")
       state.merge(live, dead, ctx.batchId)

@@ -23,17 +23,14 @@ object StreamingUrlDedup {
 
   def urlDedupView(
       spark: SparkSession, stateDir: String,
-      name: String = "url_dedup", table: String = "documents",
-      buckets: Int = 32): ViewDef = {
+      name: String = "url_dedup", table: String = "documents"): ViewDef = {
     val postings =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-post", "key", buckets)
+      new ParquetKeyedTable(spark, s"$stateDir/$name-post")
     def rawUrl(id: org.apache.spark.sql.Column) =
       Provenance.syntheticUrl(id.cast("long"))
 
     ViewDef(name, (pre, post, batch, ctx) => {
-      val touched = batch(table).select("key").distinct()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      ctx.defer(touched.unpersist())
+      val touched = ctx.cache(batch(table).select("key").distinct())
       // the fingerprint reads the doc's key (its id), not its text —
       // textCol = "key" feeds the ladder's fp function the id column
       val st = StreamingExactDedup.maintainFpState(

@@ -64,12 +64,10 @@ object StreamingVocabCoverage {
       .filter(col("delta") =!= 0)
     val cOld = cntTable.rowsForKeysAt(preCV, cntSchema,
       deltas.select(col("tok").as("key")))
-    val cNew = deltas
+    val cNew = ctx.cache(deltas
       .join(cOld.withColumnRenamed("key", "tok"), Seq("tok"), "left")
       .select(col("tok"), coalesce(col("cnt"), lit(0L)).as("old_cnt"),
-        (coalesce(col("cnt"), lit(0L)) + col("delta")).as("new_cnt"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    ctx.defer(cNew.unpersist())
+        (coalesce(col("cnt"), lit(0L)) + col("delta")).as("new_cnt")))
     cntTable.merge(
       cNew.filter(col("new_cnt") > 0)
         .select(col("tok").as("key"), col("new_cnt").as("cnt")),
@@ -82,39 +80,31 @@ object StreamingVocabCoverage {
       spark: SparkSession, stateDir: String,
       name: String = "vocab_coverage", table: String = "documents",
       textCol: String = "text", topK: Int = 20,
-      memberShards: Int = 16, buckets: Int = 32): ViewDef = {
+      memberShards: Int = 16): ViewDef = {
     val cntTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-cnt", "key", buckets)
+      new ParquetKeyedTable(spark, s"$stateDir/$name-cnt")
     val holdTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-members", "key", buckets)
+      new ParquetKeyedTable(spark, s"$stateDir/$name-members")
     val headTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-head", "key", buckets)
+      new ParquetKeyedTable(spark, s"$stateDir/$name-head")
 
     def shardKey(tok: Column, doc: Column): Column =
       Keys.pair(tok, pmod(xxhash64(doc), lit(memberShards)))
 
     ViewDef(name, (pre, post, batch, ctx) => {
       import spark.implicits._
-      val mem = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-      def pin(t: ParquetKeyedTable): Option[Int] = ctx.batchId match {
-        case Some(id) => t.versionBefore(id)
-        case None     => t.version
-      }
-      val preCV = pin(cntTable)
-      val preMV = pin(holdTable)
-      val preHV = pin(headTable)
+      val preCV = cntTable.versionBefore(ctx.batchId)
+      val preMV = holdTable.versionBefore(ctx.batchId)
+      val preHV = headTable.versionBefore(ctx.batchId)
 
-      val touched = batch(table).select("key").distinct().persist(mem)
-      ctx.defer(touched.unpersist())
+      val touched = ctx.cache(batch(table).select("key").distinct())
 
       def toks(rows: DataFrame): DataFrame = rows
         .select(col("key").as("doc"),
           explode(split(trim(col(textCol)), "\\s+")).as("tok"))
 
-      val preT = toks(pre.rows(table, touched)).persist(mem)
-      ctx.defer(preT.unpersist())
-      val postT = toks(post.rows(table, touched)).persist(mem)
-      ctx.defer(postT.unpersist())
+      val preT = ctx.cache(toks(pre.rows(table, touched)))
+      val postT = ctx.cache(toks(post.rows(table, touched)))
 
       // 1. occurrence counters ±
       maintainTokenCounters(cntTable, preCV, preT, postT, ctx)
@@ -170,22 +160,19 @@ object StreamingVocabCoverage {
       val batchHolders = postT
         .filter(col("tok").isin(transToks: _*))
         .select(col("doc").as("key"))
-      val affectedDocs = touched.union(resHolders).union(batchHolders)
-        .distinct().persist(mem)
-      ctx.defer(affectedDocs.unpersist())
+      val affectedDocs = ctx.cache(touched.union(resHolders).union(batchHolders)
+        .distinct())
 
       // 5. re-score from post state against the new head literal
       val headLit = typedlit(newHead)
       val w = split(trim(col(textCol)), "\\s+")
-      val upserts = post.rows(table, affectedDocs)
+      val upserts = ctx.cache(post.rows(table, affectedDocs)
         .select(col("key").as("id"),
           size(w).cast("long").as("n_tok"),
           size(filter(w, x => array_contains(headLit, x))).cast("long")
             .as("n_head"))
         .select(col("id"), col("n_tok"), col("n_head"),
-          round(col("n_head") * 1.0 / col("n_tok"), 6).as("coverage"))
-        .persist(mem)
-      ctx.defer(upserts.unpersist())
+          round(col("n_head") * 1.0 / col("n_tok"), 6).as("coverage")))
       val deletes = affectedDocs.select(col("key").as("id"))
         .join(upserts.select("id"), Seq("id"), "left_anti")
       (upserts, deletes)

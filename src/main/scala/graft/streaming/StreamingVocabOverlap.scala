@@ -56,27 +56,20 @@ object StreamingVocabOverlap {
   def vocabOverlapView(
       spark: SparkSession, stateDir: String,
       name: String = "vocab_overlap", table: String = "documents",
-      textCol: String = "text", sourceCol: String = "source",
-      buckets: Int = 32): ViewDef = {
+      textCol: String = "text", sourceCol: String = "source"): ViewDef = {
     val tokTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-tok", "key", buckets)
+      new ParquetKeyedTable(spark, s"$stateDir/$name-tok")
     val nvTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-nv", "key", buckets)
+      new ParquetKeyedTable(spark, s"$stateDir/$name-nv")
     val pairTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-pairs", "key", buckets)
+      new ParquetKeyedTable(spark, s"$stateDir/$name-pairs")
 
     ViewDef(name, (pre, post, batch, ctx) => {
-      val mem = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-      def pin(t: ParquetKeyedTable): Option[Int] = ctx.batchId match {
-        case Some(id) => t.versionBefore(id)
-        case None     => t.version
-      }
-      val tokPreV = pin(tokTable)
-      val nvPreV = pin(nvTable)
-      val pairPreV = pin(pairTable)
+      val tokPreV = tokTable.versionBefore(ctx.batchId)
+      val nvPreV = nvTable.versionBefore(ctx.batchId)
+      val pairPreV = pairTable.versionBefore(ctx.batchId)
 
-      val touched = batch(table).select("key").distinct().persist(mem)
-      ctx.defer(touched.unpersist())
+      val touched = ctx.cache(batch(table).select("key").distinct())
 
       // doc-distinct (source, token) contributions of one state image
       def docTokens(rows: DataFrame, sign: Int): DataFrame = rows
@@ -85,32 +78,24 @@ object StreamingVocabOverlap {
             .as("tok"))
         .select(col("source"), col("tok"), lit(sign.toLong).as("d"))
 
-      val deltas = docTokens(pre.rows(table, touched), -1)
+      val deltas = ctx.cache(docTokens(pre.rows(table, touched), -1)
         .unionByName(docTokens(post.rows(table, touched), 1))
         .groupBy("tok", "source").agg(sum("d").as("d"))
-        .filter(col("d") =!= 0)
-        .persist(mem)
-      ctx.defer(deltas.unpersist())
+        .filter(col("d") =!= 0))
 
-      val affectedToks = deltas.select(col("tok").as("key")).distinct()
-        .persist(mem)
-      ctx.defer(affectedToks.unpersist())
-      val preTok = tokTable.rowsForKeysAt(tokPreV, tokSchema, affectedToks)
+      val affectedToks = ctx.cache(deltas.select(col("tok").as("key")).distinct())
+      val preTok = ctx.cache(tokTable.rowsForKeysAt(tokPreV, tokSchema, affectedToks)
         .select(col("key").as("tok"), explode(col("entries")).as("e"))
         .select(col("tok"), col("e.source").as("source"),
-          col("e.cnt").as("cnt"))
-        .persist(mem)
-      ctx.defer(preTok.unpersist())
+          col("e.cnt").as("cnt")))
 
       // merged refcounts; a negative count would mean a corrupt envelope
       // (state diff is exact, so clamp-and-continue like IncrementalAgg)
-      val postTok = preTok.join(deltas, Seq("tok", "source"), "full_outer")
+      val postTok = ctx.cache(preTok.join(deltas, Seq("tok", "source"), "full_outer")
         .select(col("tok"), col("source"),
           (coalesce(col("cnt"), lit(0L)) + coalesce(col("d"), lit(0L)))
             .as("cnt"))
-        .filter(col("cnt") > 0)
-        .persist(mem)
-      ctx.defer(postTok.unpersist())
+        .filter(col("cnt") > 0))
       val tokRows = postTok
         .groupBy("tok")
         .agg(collect_list(struct(col("source"), col("cnt"))).as("entries"))
@@ -122,27 +107,21 @@ object StreamingVocabOverlap {
       // membership flips (0↔1 refcount transitions)
       val preSet = preTok.select("tok", "source")
       val postSet = postTok.select("tok", "source")
-      val enters = postSet.except(preSet).persist(mem)
-      ctx.defer(enters.unpersist())
-      val leaves = preSet.except(postSet).persist(mem)
-      ctx.defer(leaves.unpersist())
+      val enters = ctx.cache(postSet.except(preSet))
+      val leaves = ctx.cache(preSet.except(postSet))
 
       // nv merge: ± flips per source against the pinned pre-version
-      val nvDeltas = enters.select(col("source"), lit(1L).as("d"))
+      val nvDeltas = ctx.cache(enters.select(col("source"), lit(1L).as("d"))
         .unionByName(leaves.select(col("source"), lit(-1L).as("d")))
-        .groupBy("source").agg(sum("d").as("d"))
-        .persist(mem)
-      ctx.defer(nvDeltas.unpersist())
+        .groupBy("source").agg(sum("d").as("d")))
       val nvOld = nvTable.rowsForKeysAt(nvPreV, nvSchema,
         nvDeltas.select(col("source").as("key")))
-      val nvMerged = nvDeltas
+      val nvMerged = ctx.cache(nvDeltas
         .join(nvOld.select(col("key").as("source"), col("nv")),
           Seq("source"), "full_outer")
         .select(col("source").as("key"),
           (coalesce(col("nv"), lit(0L)) + coalesce(col("d"), lit(0L)))
-            .as("nv"))
-        .persist(mem)
-      ctx.defer(nvMerged.unpersist())
+            .as("nv")))
       nvTable.merge(nvMerged.filter(col("nv") > 0),
         nvMerged.filter(col("nv") <= 0).select("key"), ctx.batchId)
 
@@ -154,16 +133,14 @@ object StreamingVocabOverlap {
         a.join(b, "tok").filter(col("sa") < col("sb"))
           .select(col("sa"), col("sb"), lit(sign.toLong).as("d"))
       }
-      val pairDeltas = tokenPairs(postSet, 1)
+      val pairDeltas = ctx.cache(tokenPairs(postSet, 1)
         .unionByName(tokenPairs(preSet, -1))
         .groupBy("sa", "sb").agg(sum("d").as("d"))
-        .filter(col("d") =!= 0)
-        .persist(mem)
-      ctx.defer(pairDeltas.unpersist())
+        .filter(col("d") =!= 0))
       val pairKeys = pairDeltas
         .select(Keys.pair(col("sa"), col("sb")).as("key"))
       val pairOld = pairTable.rowsForKeysAt(pairPreV, pairSchema, pairKeys)
-      val pairMerged = pairDeltas
+      val pairMerged = ctx.cache(pairDeltas
         .select(Keys.pair(col("sa"), col("sb")).as("key"),
           col("sa"), col("sb"), col("d"))
         .join(pairOld.select(col("key"), col("source_a"),
@@ -172,9 +149,7 @@ object StreamingVocabOverlap {
           coalesce(col("sa"), col("source_a")).as("source_a"),
           coalesce(col("sb"), col("source_b")).as("source_b"),
           (coalesce(col("n_common"), lit(0L)) + coalesce(col("d"), lit(0L)))
-            .as("n_common"))
-        .persist(mem)
-      ctx.defer(pairMerged.unpersist())
+            .as("n_common")))
       pairTable.merge(
         pairMerged.filter(col("n_common") > 0)
           .select("key", "source_a", "source_b", "n_common"),

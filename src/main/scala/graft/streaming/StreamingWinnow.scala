@@ -56,20 +56,14 @@ object StreamingWinnow {
       spark: SparkSession, stateDir: String,
       name: String = "winnow_pairs", table: String = "documents",
       textCol: String = "text", k: Int = 8, w: Int = 4,
-      dfLo: Int = 2, dfHi: Int = 10, minShared: Int = 5,
-      buckets: Int = 32): ViewDef = {
+      dfLo: Int = 2, dfHi: Int = 10, minShared: Int = 5): ViewDef = {
     val postings =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-post", "key", buckets)
+      new ParquetKeyedTable(spark, s"$stateDir/$name-post")
 
     ViewDef(name, (pre, post, batch, ctx) => {
-      val mem = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-      val preV = ctx.batchId match {
-        case Some(id) => postings.versionBefore(id)
-        case None     => postings.version
-      }
+      val preV = postings.versionBefore(ctx.batchId)
 
-      val touched = batch(table).select("key").distinct().persist(mem)
-      ctx.defer(touched.unpersist())
+      val touched = ctx.cache(batch(table).select("key").distinct())
 
       def fps(rows: DataFrame): DataFrame = rows
         .select(col("key").as("doc_id"),
@@ -77,25 +71,18 @@ object StreamingWinnow {
             .as("fl"))
         .select(col("doc_id"), col("fl").cast("string").as("f"))
 
-      val oldFps = fps(pre.rows(table, touched)).persist(mem)
-      ctx.defer(oldFps.unpersist())
-      val newFps = fps(post.rows(table, touched)).persist(mem)
-      ctx.defer(newFps.unpersist())
+      val oldFps = ctx.cache(fps(pre.rows(table, touched)))
+      val newFps = ctx.cache(fps(post.rows(table, touched)))
 
-      val affected = oldFps.select("f").union(newFps.select("f"))
-        .distinct().withColumnRenamed("f", "key").persist(mem)
-      ctx.defer(affected.unpersist())
-      val preMembers = postings.rowsForKeysAt(preV, postSchema, affected)
-        .select(col("key").as("f"), explode(col("members")).as("member"))
-        .persist(mem)
-      ctx.defer(preMembers.unpersist())
+      val affected = ctx.cache(oldFps.select("f").union(newFps.select("f"))
+        .distinct().withColumnRenamed("f", "key"))
+      val preMembers = ctx.cache(postings.rowsForKeysAt(preV, postSchema, affected)
+        .select(col("key").as("f"), explode(col("members")).as("member")))
 
       // postings update: batch docs leave old keys, enter new ones
-      val postMembers = preMembers.join(
+      val postMembers = ctx.cache(preMembers.join(
           touched.withColumnRenamed("key", "member"), Seq("member"), "left_anti")
-        .unionByName(newFps.select(col("f"), col("doc_id").as("member")))
-        .persist(mem)
-      ctx.defer(postMembers.unpersist())
+        .unionByName(newFps.select(col("f"), col("doc_id").as("member"))))
       val rows = postMembers.groupBy("f")
         .agg(collect_list("member").as("members"))
         .select(col("f").as("key"), col("members"))
@@ -104,11 +91,10 @@ object StreamingWinnow {
 
       // complete re-score set: batch docs + every pre/post member of an
       // affected posting (the only docs whose pair rows can change)
-      val rescore = touched
+      val rescore = ctx.cache(touched
         .union(preMembers.select(col("member").as("key")))
         .union(postMembers.select(col("member").as("key")))
-        .distinct().persist(mem)
-      ctx.defer(rescore.unpersist())
+        .distinct())
 
       /** Exact q105 pair rows for the re-score docs against one state
         * side: fingerprints from the docs' own text, postings pruned to
@@ -117,8 +103,7 @@ object StreamingWinnow {
         * sit in R. */
       def score(docRows: DataFrame, postingsAt: DataFrame => DataFrame)
           : DataFrame = {
-        val rfps = fps(docRows).persist(mem)
-        ctx.defer(rfps.unpersist())
+        val rfps = ctx.cache(fps(docRows))
         val keys = rfps.select(col("f").as("key")).distinct()
         val capped = postingsAt(keys)
           .filter(size(col("members")).between(dfLo, dfHi))
@@ -133,9 +118,8 @@ object StreamingWinnow {
           .filter(col("n_shared") >= minShared)
       }
 
-      val postScore = score(post.rows(table, rescore),
-        ks => postings.rowsForKeys(postSchema, ks)).persist(mem)
-      ctx.defer(postScore.unpersist())
+      val postScore = ctx.cache(score(post.rows(table, rescore),
+        ks => postings.rowsForKeys(postSchema, ks)))
       val preScore = score(pre.rows(table, rescore),
         ks => postings.rowsForKeysAt(preV, postSchema, ks))
 

@@ -41,37 +41,29 @@ object StreamingZipf {
       spark: SparkSession, stateDir: String,
       name: String = "zipf_fit", table: String = "documents",
       textCol: String = "text", langCol: String = "lang",
-      shards: Int = 64, buckets: Int = 32): ViewDef = {
+      shards: Int = 64): ViewDef = {
     val vocabTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-vocab", "key", buckets)
+      new ParquetKeyedTable(spark, s"$stateDir/$name-vocab")
 
     def shardKey(lang: Column, tok: Column): Column =
       Keys.pair(lang, pmod(xxhash64(tok), lit(shards)))
 
     ViewDef(name, (pre, post, batch, ctx) => {
-      val mem = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-      val preV = ctx.batchId match {
-        case Some(id) => vocabTable.versionBefore(id)
-        case None     => vocabTable.version
-      }
-      val touched = batch(table).select("key").distinct().persist(mem)
-      ctx.defer(touched.unpersist())
+      val preV = vocabTable.versionBefore(ctx.batchId)
+      val touched = ctx.cache(batch(table).select("key").distinct())
 
       def occurrences(rows: DataFrame, sign: Int): DataFrame = rows
         .select(col(langCol).as("lang"),
           explode(split(trim(col(textCol)), "\\s+")).as("tok"))
         .select(col("lang"), col("tok"), lit(sign.toLong).as("d"))
 
-      val deltas = occurrences(pre.rows(table, touched), -1)
+      val deltas = ctx.cache(occurrences(pre.rows(table, touched), -1)
         .unionByName(occurrences(post.rows(table, touched), 1))
         .groupBy("lang", "tok").agg(sum("d").as("d"))
-        .filter(col("d") =!= 0)
-        .persist(mem)
-      ctx.defer(deltas.unpersist())
+        .filter(col("d") =!= 0))
 
       // every touched language re-fits, whichever shards its deltas hit
-      val touchedLangs = deltas.select("lang").distinct().persist(mem)
-      ctx.defer(touchedLangs.unpersist())
+      val touchedLangs = ctx.cache(deltas.select("lang").distinct())
       val shardKeys = touchedLangs
         .select(col("lang"), explode(sequence(lit(0), lit(shards - 1)))
           .as("sh"))
@@ -80,13 +72,11 @@ object StreamingZipf {
       val preVocab = vocabTable.rowsForKeysAt(preV, vocabSchema, shardKeys)
         .select(col("lang"), explode(col("entries")).as("e"))
         .select(col("lang"), col("e.tok").as("tok"), col("e.cnt").as("cnt"))
-      val postVocab = preVocab.join(deltas, Seq("lang", "tok"), "full_outer")
+      val postVocab = ctx.cache(preVocab.join(deltas, Seq("lang", "tok"), "full_outer")
         .select(col("lang"), col("tok"),
           (coalesce(col("cnt"), lit(0L)) + coalesce(col("d"), lit(0L)))
             .as("c"))
-        .filter(col("c") > 0)
-        .persist(mem)
-      ctx.defer(postVocab.unpersist())
+        .filter(col("c") > 0))
 
       val rows = postVocab
         .groupBy(shardKey(col("lang"), col("tok")).as("key"), col("lang"))

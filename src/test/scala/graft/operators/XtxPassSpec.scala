@@ -14,7 +14,16 @@ import graft.SparkSuite
   * with the iterate evolving through the new path. */
 class XtxPassSpec extends SparkSuite {
   test("xtxPassRows equals the explode+groupBy plan exactly across " +
-      "five chained rounds") {
+      "five chained rounds") { check(scale = 1.0) }
+
+  // contributions far outside [-1, 1]: where a 12-decimal value needs
+  // more digits than a double holds, the plan's Round-then-Cast goes
+  // through a double between its two roundings
+  test("xtxPassRows equals the plan when contributions reach |d·x| ≥ 1e4") {
+    check(scale = 300.0)
+  }
+
+  private def check(scale: Double): Unit = {
     val s = spark
     import s.implicits._
     def r6d(x: Double): java.math.BigDecimal =
@@ -22,7 +31,7 @@ class XtxPassSpec extends SparkSuite {
         .setScale(6, java.math.RoundingMode.HALF_UP)
     val rnd = new scala.util.Random(7)
     val rows = (1 to 500).map { _ =>
-      Tuple1(IndexedSeq.fill(64)(rnd.nextDouble() * 2 - 1))
+      Tuple1(IndexedSeq.fill(64)((rnd.nextDouble() * 2 - 1) * scale))
     }
     val e = rows.toDF("v").persist()
     e.count()

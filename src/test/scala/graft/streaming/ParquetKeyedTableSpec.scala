@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.types._
+import org.apache.spark.storage.StorageLevel
 
 import graft.SparkSuite
 
@@ -90,15 +91,6 @@ class ParquetKeyedTableSpec extends SparkSuite {
     assert(t.snapshot(schema).count() == 63)
   }
 
-  test("unbucketed layout still round-trips (default)") {
-    val t = new ParquetKeyedTable(spark, tmpDir("flat"))
-    t.merge(Seq(("x", 1)).toDF("key", "v"), Seq.empty[String].toDF("key"))
-    t.merge(Seq(("x", 2), ("y", 5)).toDF("key", "v"),
-      Seq.empty[String].toDF("key"))
-    assert(t.snapshot(schema).as[(String, Int)].collect().toSet ==
-      Set(("x", 2), ("y", 5)))
-  }
-
   test("batchId commits: replayed merge skips, versionBefore pins pre-state") {
     val root = tmpDir("batchid")
     val t = new ParquetKeyedTable(spark, root, numBuckets = 4)
@@ -119,6 +111,9 @@ class ParquetKeyedTableSpec extends SparkSuite {
       .as[(String, Int)].collect().toSet == Set(("a", 1)))
     // a batch this table never saw: pre-state == current
     assert(t.versionBefore(7L) == t.version)
+    // the replay pin: current version outside a stream
+    assert(t.versionBefore(None) == t.version)
+    assert(t.versionBefore(Some(1L)) == t.versionBefore(1L))
 
     // REPLAY of batch 1 (crash-redelivery): must be a no-op, even with
     // different (stale-recomputed) content
@@ -136,6 +131,17 @@ class ParquetKeyedTableSpec extends SparkSuite {
     // pointer hygiene: no temp file left behind by the atomic flip
     assert(!java.nio.file.Files.exists(
       java.nio.file.Paths.get(root, "_CURRENT.tmp")))
+  }
+
+  test("BatchCtx.cache persists until close(), also when the batch failed before commit()") {
+    for (failed <- Seq(false, true)) {
+      val ctx = new BatchCtx(Some(0L), Set.empty, replay = false)
+      val df = ctx.cache(Seq(("a", 1)).toDF("key", "v"))
+      assert(df.storageLevel == StorageLevel.MEMORY_AND_DISK)
+      if (!failed) ctx.commit()
+      ctx.close()
+      assert(df.storageLevel == StorageLevel.NONE)
+    }
   }
 
   test("retention under delete-heavy churn: version count, file count " +
