@@ -17,8 +17,9 @@ import org.apache.spark.storage.StorageLevel
   * until the store thrashes — measured in round 4 as a 4-15× tail
   * inflation (q81 33.6s in-suite vs 5.2s isolated).
   *
-  * The fix mirrors the streaming side's proven `ctx.defer(unpersist)`
-  * pattern (IncrementalAgg): builders register every persist here, and
+  * The fix mirrors the streaming side's batch-scoped cache
+  * (`BatchCtx.cache`, released when the batch closes): each query-
+  * building method registers every persist here, and
   * every executor of a query (Bench, BenchOne, Verify, the test gates)
   * calls `drain()` once the action completes. Frames are released
   * non-blocking, lineage intact — on a cluster nothing is lost but the

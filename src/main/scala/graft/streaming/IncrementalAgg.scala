@@ -31,6 +31,16 @@ import org.apache.spark.sql.types._
   * A group whose running count reaches 0 is deleted from both the agg
   * state and the sink — the retraction contract (a cancelled order's
   * group disappears, flink-ddl.sql:208).
+  *
+  * The module owns the two state shapes every view-owned store uses:
+  *   - a ± counter store (key, attrs…, measures…), folded by
+  *     [[applyDeltas]]: a row lives while its count measure is > 0;
+  *   - a group → members store (key, array of entries), maintained by
+  *     [[swapMembers]]: the batch's touched docs leave their old
+  *     entries and enter with their fresh ones.
+  * Both read the pre-batch rows at `versionBefore(ctx.batchId)` and
+  * merge with `ctx.batchId`, so a replayed batch reads the same rows,
+  * returns the same frames and skips the already-committed merge.
   */
 object IncrementalAgg {
 
@@ -60,39 +70,97 @@ object IncrementalAgg {
         (col("a") * sign).as("d_amt"), lit(sign.toLong).as("d_cnt")): _*)
   }
 
-  /** Fold a delta frame (key, groups..., d_amt, d_cnt) into the running
-    * aggregate state; returns (sink upserts (key, groups..., amt, cnt),
-    * sink deletes (key)). Reads ONLY the touched groups' agg rows
-    * (bucket-pruned) and merges only their buckets.
+  /** [[applyDeltas]]'s result: `merged` = (key, attrs…, m…, o_m…) for
+    * every key the deltas name, with each measure's new value `m` and
+    * its pre-batch value `o_m` (0 for a new key); `live` = the merged
+    * rows whose count measure is > 0, `dead` = (key) the others. */
+  private[streaming] final case class Folded(
+      merged: DataFrame, live: DataFrame, dead: DataFrame)
+
+  /** Fold a delta frame (key, attrs…, d_m…) into a ± counter store
+    * (key, attrs…, m…): deltas are summed per (key, attrs), added to the
+    * old measures, attributes carry as coalesce(new, old), and a row
+    * lives iff its `countCol` measure is > 0. Reads ONLY the touched keys'
+    * rows (bucket-pruned) and merges only their buckets; live rows are
+    * upserted, dead ones deleted.
     *
     * Replay safety: running sums are the one store a double-apply would
     * CORRUPT (±deltas are not value-idempotent), so the old rows pin
     * `versionBefore(batchId)` — identical on first delivery and on replay
     * after a partial crash — and the merge carries the batchId so an
-    * already-committed agg store skips. The returned sink frames derive
-    * from (pre-version rows + deltas), so they too are replay-identical. */
+    * already-committed store skips. The returned frames derive from
+    * (pre-version rows + deltas), so they too are replay-identical. */
   private[streaming] def applyDeltas(
-      aggTable: ParquetKeyedTable, gNames: Seq[String],
-      deltas: DataFrame, ctx: BatchCtx): (DataFrame, DataFrame) = {
-    val summed = ctx.cache(deltas
-      .groupBy(("key" +: gNames).map(col): _*)
-      .agg(sum("d_amt").as("d_amt"), sum("d_cnt").as("d_cnt")))
-    val schema = aggSchema(gNames)
-    val preV = aggTable.versionBefore(ctx.batchId)
-    val old = aggTable.rowsForKeysAt(preV, schema, summed.select("key"))
-      .select(col("key") +: gNames.map(n => col(n).as(s"o_$n")) :+
-        col("amt").as("o_amt") :+ col("cnt").as("o_cnt"): _*)
-    val merged = ctx.cache(summed.join(old, Seq("key"), "full_outer")
+      store: ParquetKeyedTable, deltas: DataFrame, countCol: String,
+      ctx: BatchCtx): Folded = {
+    val (dNames, attrs) = deltas.columns.toSeq.filter(_ != "key")
+      .partition(_.startsWith("d_"))
+    val measures = dNames.map(_.stripPrefix("d_"))
+    val summed = ctx.cache(deltas.groupBy(("key" +: attrs).map(col): _*)
+      .agg(sum(dNames.head).as(dNames.head),
+        dNames.tail.map(d => sum(d).as(d)): _*))
+    val schema = StructType(StructField("key", StringType) +:
+      (attrs ++ dNames).map(n => StructField(n.stripPrefix("d_"),
+        summed.schema(n).dataType)))
+    val old = store.rowsForKeysAt(store.versionBefore(ctx.batchId), schema,
+        summed.select("key"))
       .select(col("key") +:
-        gNames.map(n => coalesce(col(n), col(s"o_$n")).as(n)) :+
-        (coalesce(col("o_amt"), lit(0.0)) + coalesce(col("d_amt"), lit(0.0))).as("amt") :+
-        (coalesce(col("o_cnt"), lit(0L)) + coalesce(col("d_cnt"), lit(0L))).as("cnt"): _*))
-    val liveGroups = merged.filter(col("cnt") > 0)
-    val deadGroups = merged.filter(col("cnt") <= 0).select("key")
-    aggTable.merge(
-      liveGroups.select(schema.fieldNames.map(col): _*), deadGroups,
+        schema.fieldNames.tail.map(n => col(n).as(s"o_$n")): _*)
+    val merged = ctx.cache(summed.join(old, Seq("key"), "left")
+      .select(col("key") +:
+        (attrs.map(n => coalesce(col(n), col(s"o_$n")).as(n)) ++
+          measures.flatMap { m =>
+            val zero = lit(0).cast(schema(m).dataType)
+            val o = coalesce(col(s"o_$m"), zero)
+            Seq((o + coalesce(col(s"d_$m"), zero)).as(m), o.as(s"o_$m"))
+          }): _*))
+    val live = merged.filter(col(countCol) > 0)
+    val dead = merged.filter(col(countCol) <= 0).select("key")
+    store.merge(live.select(schema.fieldNames.map(col): _*), dead,
       ctx.batchId)
-    (liveGroups, deadGroups)
+    Folded(merged, live, dead)
+  }
+
+  /** [[swapMembers]]' result: the affected groups' exploded entries
+    * (key, owner, fields…) before (`pre`) and after (`post`) the batch,
+    * both batch-cached, and `emptied` = (key) the affected groups left
+    * with no entry. */
+  private[streaming] final case class Swapped(
+      pre: DataFrame, post: DataFrame, emptied: DataFrame)
+
+  /** Membership swap of a group → members store (key, array): each
+    * array element is its owner doc's key, or a struct whose first field
+    * is that key. The `affected` groups' pre-batch rows are exploded,
+    * the `touched` docs' entries dropped and the `fresh` ones — (key,
+    * owner) or (key, struct fields…) — added; the affected groups are
+    * then regrouped, the emptied ones deleted. Same replay pin and
+    * batchId merge as [[applyDeltas]]. */
+  private[streaming] def swapMembers(
+      store: ParquetKeyedTable, schema: StructType, affected: DataFrame,
+      touched: DataFrame, fresh: DataFrame, ctx: BatchCtx): Swapped = {
+    val arr = schema.fieldNames(1)
+    // entry columns, the stored element built from them, and the
+    // exploded element's field `n`
+    val (names, entry, field) = schema(arr).dataType match {
+      case ArrayType(e: StructType, _) => (e.fieldNames.toSeq,
+        struct(e.fieldNames.map(col): _*), (n: String) => col(s"e.$n"))
+      case _ =>
+        val owner = fresh.columns.filter(_ != "key").head
+        (Seq(owner), col(owner), (_: String) => col("e"))
+    }
+    val cols = ("key" +: names).map(col)
+    val pre = ctx.cache(store
+      .rowsForKeysAt(store.versionBefore(ctx.batchId), schema, affected)
+      .select(col("key"), explode(col(arr)).as("e"))
+      .select(col("key") +: names.map(n => field(n).as(n)): _*))
+    val post = ctx.cache(pre
+      .join(touched.select(col("key").as(names.head)), Seq(names.head),
+        "left_anti")
+      .select(cols: _*).unionByName(fresh.select(cols: _*)))
+    val rows = post.groupBy("key").agg(collect_list(entry).as(arr))
+    val emptied = affected.join(rows.select("key"), Seq("key"), "left_anti")
+    store.merge(rows, emptied, ctx.batchId)
+    Swapped(pre, post, emptied)
   }
 
   /** Single-input incremental GROUP BY view: deltas from the pre→post
@@ -105,14 +173,12 @@ object IncrementalAgg {
       index: String = null): ViewDef = {
     val aggTable =
       new ParquetKeyedTable(spark, s"$stateDir/$name-agg")
-    val gNames = spec.groupCols.map(_._1)
     ViewDef(name, (pre, post, batch, ctx) => {
       val touched = batch(table).select("key").distinct()
       val deltas = contrib(post.rows(table, touched), spec, 1)
         .unionByName(contrib(pre.rows(table, touched), spec, -1))
-      val (liveGroups, deadGroups) =
-        applyDeltas(aggTable, gNames, deltas, ctx)
-      (toDoc(liveGroups), deadGroups.select(col("key").as("id")))
+      val folded = applyDeltas(aggTable, deltas, "cnt", ctx)
+      (toDoc(folded.live), folded.dead.select(col("key").as("id")))
     }, index)
   }
 
@@ -182,11 +248,10 @@ object IncrementalAgg {
     * item state merge, so pre-version reads align with pre item state.
     */
   def productStats(spark: SparkSession, stateDir: String): ViewDef = {
-    val gNames = Seq("product_id")
-    val aggTable = new ParquetKeyedTable(
-      spark, s"$stateDir/product_stats_view-agg", "key", 32)
+    val aggTable =
+      new ParquetKeyedTable(spark, s"$stateDir/product_stats_view-agg")
     val idxTable = new ParquetKeyedTable(
-      spark, s"$stateDir/product_stats_view-items-by-order", "key", 32)
+      spark, s"$stateDir/product_stats_view-items-by-order")
     val idxSchema = StructType(Seq(
       StructField("key", StringType),
       StructField("items", ArrayType(StringType))))
@@ -210,19 +275,9 @@ object IncrementalAgg {
       // post images enter their POST order's row (which may differ)
       val idxAffected = preI.select(col("order_id").as("key"))
         .unionByName(postI.select(col("order_id").as("key"))).distinct()
-      val oldRefs = idxTable.rowsForKeysAt(preIdxV, idxSchema, idxAffected)
-        .select(col("key"), explode(col("items")).as("item_key"))
-      val keptRefs = oldRefs.join(
-        touchedItems.withColumnRenamed("key", "item_key"),
-        Seq("item_key"), "left_anti")
-      val newRefs = keptRefs.select(col("key"), col("item_key"))
-        .unionByName(postI.select(col("order_id").as("key"),
-          col("key").as("item_key")))
-      val idxRows = newRefs.groupBy("key")
-        .agg(collect_list("item_key").as("items"))
-      val idxEmptied = idxAffected
-        .join(idxRows.select("key"), Seq("key"), "left_anti")
-      idxTable.merge(idxRows, idxEmptied, ctx.batchId)
+      swapMembers(idxTable, idxSchema, idxAffected, touchedItems,
+        postI.select(col("order_id").as("key"), col("key").as("item_key")),
+        ctx)
       val wantedOrders = preI.select(col("order_id").as("key"))
         .unionByName(postI.select(col("order_id").as("key"))).distinct()
       val livePostOrders = post.rows("orders", wantedOrders)
@@ -251,11 +306,11 @@ object IncrementalAgg {
       val flipDeltas = asContrib(itemsOf(nowLive), 1)
         .unionByName(asContrib(itemsOf(nowDead), -1))
 
-      val (liveGroups, deadGroups) =
-        applyDeltas(aggTable, gNames, itemDeltas.unionByName(flipDeltas), ctx)
-      (liveGroups.select(col("key").as("id"),
+      val folded =
+        applyDeltas(aggTable, itemDeltas.unionByName(flipDeltas), "cnt", ctx)
+      (folded.live.select(col("key").as("id"),
         col("cnt").as("quantity"), col("amt").as("amount")),
-        deadGroups.select(col("key").as("id")))
+        folded.dead.select(col("key").as("id")))
     })
   }
 }

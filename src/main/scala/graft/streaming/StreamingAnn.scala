@@ -61,7 +61,6 @@ object StreamingAnn {
     val bucketTable =
       new ParquetKeyedTable(spark, s"$stateDir/$name-buckets")
     ViewDef(name, (pre, post, batch, ctx) => {
-      val preBktV = bucketTable.versionBefore(ctx.batchId)
       val touched = ctx.cache(batch(table).select("key").distinct())
 
       // buckets the batch vectors leave (pre-state image) and enter
@@ -75,24 +74,14 @@ object StreamingAnn {
 
       val affected = oldKeys.select("bkey").union(newKeys.select("bkey"))
         .distinct().withColumnRenamed("bkey", "key")
-      val preMembers = bucketTable
-        .rowsForKeysAt(preBktV, bucketSchema, affected)
-        .select(col("key").as("bkey"), explode(col("members")).as("vec_key"))
-      val kept = preMembers.join(
-        touched.withColumnRenamed("key", "vec_key"), Seq("vec_key"),
-        "left_anti")
-      val postMembers = kept
-        .unionByName(newKeys.select(col("bkey"), col("vec_key")))
-      val bucketRows = ctx.cache(postMembers.groupBy("bkey")
-        .agg(collect_list("vec_key").as("members"))
-        .select(col("bkey").as("key"), col("members")))
-      val emptied = affected
-        .join(bucketRows.select("key"), Seq("key"), "left_anti")
-      bucketTable.merge(bucketRows, emptied, ctx.batchId)
+      val sw = IncrementalAgg.swapMembers(bucketTable, bucketSchema,
+        affected, touched,
+        newKeys.select(col("bkey").as("key"), col("vec_key")), ctx)
 
-      val upserts = bucketRows.select(col("key").as("id"),
-        array_join(array_sort(col("members")), ",").as("members_csv"))
-      (upserts, emptied.select(col("key").as("id")))
+      val upserts = sw.post.groupBy(col("key").as("id"))
+        .agg(array_join(array_sort(collect_list("vec_key")), ",")
+          .as("members_csv"))
+      (upserts, sw.emptied.select(col("key").as("id")))
     })
   }
 

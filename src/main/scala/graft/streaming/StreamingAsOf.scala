@@ -56,8 +56,6 @@ object StreamingAsOf {
       new ParquetKeyedTable(spark, s"$stateDir/$name-by-key")
 
     ViewDef(name, (pre, post, batch, ctx) => {
-      val preIdxV = byKey.versionBefore(ctx.batchId)
-
       val touched = ctx.cache(batch(table).select("key").distinct())
       val preRows = ctx.cache(pre.rows(table, touched)
         .select(col("key"), col(keyCol), col(tsCol), col(typeCol)))
@@ -72,23 +70,12 @@ object StreamingAsOf {
         .distinct().filter(col(keyCol).isNotNull)
         .select(col(keyCol).cast("string").as("key")))
 
-      val resident = byKey.rowsForKeysAt(preIdxV, idxSchema, touchedKeys)
-        .select(col("key"), explode(col("events")).as("e"))
-        .select(col("key"), col("e.id"), col("e.ts"), col("e.typ"))
-        .join(touched.withColumnRenamed("key", "id"), Seq("id"), "left_anti")
-      val fresh = postRows
-        .filter(col(typeCol).isin(leftType, rightType))
-        .select(col(keyCol).cast("string").as("key"),
-          col("key").as("id"), col(tsCol).cast("long").as("ts"),
-          col(typeCol).as("typ"))
-      val allEvents = ctx.cache(resident.unionByName(fresh))
-
-      val idxRows = allEvents.groupBy("key")
-        .agg(collect_list(struct(col("id"), col("ts"), col("typ")))
-          .as("events"))
-      val emptiedKeys = touchedKeys
-        .join(idxRows.select("key"), Seq("key"), "left_anti")
-      byKey.merge(idxRows, emptiedKeys, ctx.batchId)
+      val allEvents = IncrementalAgg.swapMembers(byKey, idxSchema,
+        touchedKeys, touched, postRows
+          .filter(col(typeCol).isin(leftType, rightType))
+          .select(col(keyCol).cast("string").as("key"),
+            col("key").as("id"), col(tsCol).cast("long").as("ts"),
+            col(typeCol).as("typ")), ctx).post
 
       // 2. re-attribute every left event of the touched keys with the
       // SAME operator the batch query uses

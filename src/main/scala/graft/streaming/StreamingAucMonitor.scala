@@ -63,7 +63,6 @@ object StreamingAucMonitor {
 
     ViewDef(name, (pre, post, batch, ctx) => {
       import spark.implicits._
-      val preV = cntTable.versionBefore(ctx.batchId)
       val touched = ctx.cache(batch(table).select("key").distinct())
 
       def cells(rows: DataFrame): DataFrame = rows.select(
@@ -80,20 +79,9 @@ object StreamingAucMonitor {
         .groupBy("score")
         .agg(sum("d_cnt").as("d_cnt"), sum("d_pos").as("d_pos"))
         .filter(col("d_cnt") =!= 0 || col("d_pos") =!= 0)
-      val old = cntTable.rowsForKeysAt(preV, cntSchema,
-        deltas.select(col("score").cast("string").as("key")))
-      val merged = deltas
-        .join(old.drop("key"), Seq("score"), "left")
-        .select(col("score"),
-          (coalesce(col("cnt"), lit(0L)) + col("d_cnt")).as("cnt"),
-          (coalesce(col("pos"), lit(0L)) + col("d_pos")).as("pos"))
-      cntTable.merge(
-        merged.filter(col("cnt") > 0)
-          .select(col("score").cast("string").as("key"), col("score"),
-            col("cnt"), col("pos")),
-        merged.filter(col("cnt") <= 0)
-          .select(col("score").cast("string").as("key")),
-        ctx.batchId)
+      IncrementalAgg.applyDeltas(cntTable,
+        deltas.select(col("score").cast("string").as("key"), col("*")),
+        "cnt", ctx)
 
       // emit: the q112 mid-rank identity over the post-merge counter
       // table (bounded distinct-score rows; identical on replay)

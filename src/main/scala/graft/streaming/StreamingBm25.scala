@@ -98,7 +98,6 @@ object StreamingBm25 {
       vocab: Seq[String], table: String, textCol: String, nShards: Int,
       pre: StateAccess, post: StateAccess, touched: DataFrame,
       ctx: BatchCtx): (DataFrame, DataFrame) = {
-      val prePostV = postTable.versionBefore(ctx.batchId)
       val preDlV = dlTable.versionBefore(ctx.batchId)
       val preStatsV = statsTable.versionBefore(ctx.batchId)
 
@@ -122,21 +121,10 @@ object StreamingBm25 {
         .distinct()
       val affected = shards.crossJoin(vocabDf)
         .select(concat_ws("|", col("term"), col("shard")).as("key"))
-      val prePostings = postTable
-        .rowsForKeysAt(prePostV, postSchema, affected)
-        .select(col("key"), explode(col("postings")).as("p"))
-        .select(col("key"), col("p.doc").as("doc"), col("p.tf").as("tf"))
-      val kept = prePostings.join(
-        touched.withColumnRenamed("key", "doc"), Seq("doc"), "left_anti")
-      val added = newTf.select(
-        concat_ws("|", col("term"), shardOf(col("doc"), nShards)).as("key"),
-        col("doc"), col("tf"))
-      val postRows = ctx.cache(kept.select("key", "doc", "tf").unionByName(added)
-        .groupBy("key")
-        .agg(collect_list(struct(col("doc"), col("tf"))).as("postings")))
-      val emptied = affected
-        .join(postRows.select("key"), Seq("key"), "left_anti")
-      postTable.merge(postRows, emptied, ctx.batchId)
+      val sw = IncrementalAgg.swapMembers(postTable, postSchema, affected,
+        touched, newTf.select(
+          concat_ws("|", col("term"), shardOf(col("doc"), nShards)).as("key"),
+          col("doc"), col("tf")), ctx)
 
       // 3. doc lengths (± source of the corpus-stat deltas) + stats
       val preDl = dlTable.rowsForKeysAt(preDlV, dlSchema, touched)
@@ -165,12 +153,12 @@ object StreamingBm25 {
       statsTable.merge(newStats, statsKeys.limit(0), ctx.batchId)
 
       // sink mirror: affected posting rows + the stats doc
-      val upserts = postRows.select(col("key").as("id"),
-        array_join(array_sort(transform(col("postings"),
-          p => concat_ws(":", p("doc"), p("tf")))), ",").as("postings_csv"))
+      val upserts = sw.post.groupBy(col("key").as("id"))
+        .agg(array_join(array_sort(collect_list(
+          concat_ws(":", col("doc"), col("tf")))), ",").as("postings_csv"))
         .unionByName(newStats.select(lit("corpus|stats").as("id"),
           concat_ws(":", col("n_docs"), col("total_tok")).as("postings_csv")))
-      (upserts, emptied.select(col("key").as("id")))
+      (upserts, sw.emptied.select(col("key").as("id")))
   }
 
   /** Register a query term AFTER the fact: one pass over the CURRENT

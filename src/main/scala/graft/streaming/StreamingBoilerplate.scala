@@ -76,7 +76,6 @@ object StreamingBoilerplate {
 
     ViewDef(name, (pre, post, batch, ctx) => {
       val prePV = postings.versionBefore(ctx.batchId)
-      val preNV = ndTable.versionBefore(ctx.batchId)
 
       val touched = ctx.cache(batch(table).select("key").distinct())
 
@@ -98,38 +97,20 @@ object StreamingBoilerplate {
       val ndDeltas = preSrc.groupBy("src").agg(count(lit(1)).as("pre_n"))
         .join(postSrc.groupBy("src").agg(count(lit(1)).as("post_n")),
           Seq("src"), "full_outer")
-        .select(col("src"),
+        .select(col("src").as("key"),
           (coalesce(col("post_n"), lit(0L)) - coalesce(col("pre_n"), lit(0L)))
-            .as("delta"))
-      val affectedSources = ctx.cache(ndDeltas.select("src").distinct())
-      val ndOld = ndTable.rowsForKeysAt(preNV, ndSchema,
-        affectedSources.select(col("src").as("key")))
-        .select(col("key").as("src"), col("cnt").as("old_nd"))
-      val ndNew = ctx.cache(ndDeltas
-        .join(ndOld, Seq("src"), "left")
-        .select(col("src"), coalesce(col("old_nd"), lit(0L)).as("old_nd"),
-          (coalesce(col("old_nd"), lit(0L)) + col("delta")).as("new_nd")))
-      ndTable.merge(
-        ndNew.filter(col("new_nd") > 0)
-          .select(col("src").as("key"), col("new_nd").as("cnt")),
-        ndNew.filter(col("new_nd") <= 0).select(col("src").as("key")),
-        ctx.batchId)
+            .as("d_cnt"))
+      val ndNew = IncrementalAgg.applyDeltas(ndTable, ndDeltas, "cnt", ctx)
+        .merged.select(col("key").as("src"), col("o_cnt").as("old_nd"),
+          col("cnt").as("new_nd"))
+      val affectedSources = ndNew.select("src")
 
       // postings read-modify-write for the batch-touched (source, token)
       // keys only — bucket-pruned, the gram-view pattern
       val affectedSt = preM.select("st").union(postM.select("st"))
         .distinct().withColumnRenamed("st", "key")
-      val pPre = postings.rowsForKeysAt(prePV, postSchema, affectedSt)
-        .select(col("key").as("st"), explode(col("members")).as("doc"))
-      val kept = pPre.join(
-        touched.withColumnRenamed("key", "doc"), Seq("doc"), "left_anti")
-      val postMembers = kept
-        .unionByName(postM.select(col("st"), col("doc")))
-      val pRows = postMembers.groupBy("st")
-        .agg(collect_list("doc").as("members"))
-        .select(col("st").as("key"), col("members"))
-      val emptied = affectedSt.join(pRows.select("key"), Seq("key"), "left_anti")
-      postings.merge(pRows, emptied, ctx.batchId)
+      IncrementalAgg.swapMembers(postings, postSchema, affectedSt, touched,
+        postM.select(col("st").as("key"), col("doc")), ctx)
 
       // membership flips: evaluate the WHOLE vocabulary state of every
       // affected source against old and new (df, ndocs). Old df from the

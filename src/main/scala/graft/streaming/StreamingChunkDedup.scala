@@ -64,7 +64,6 @@ object StreamingChunkDedup {
 
     ViewDef(name, (pre, post, batch, ctx) => {
       val preDocV = docTable.versionBefore(ctx.batchId)
-      val preChunkV = chunkTable.versionBefore(ctx.batchId)
 
       val touched = ctx.cache(batch(table).select("key").distinct())
 
@@ -88,29 +87,15 @@ object StreamingChunkDedup {
       val affected = ctx.cache(oldHashes
         .union(newContribs.select(col("h"))).distinct()
         .withColumnRenamed("h", "key"))
-      val keptEntries = chunkTable
-        .rowsForKeysAt(preChunkV, chunkSchema, affected)
-        .select(col("key").as("h"), explode(col("docs")).as("e"))
-        .select(col("h"), col("e.d").as("d"), col("e.c").as("c"))
-        .join(touched.withColumnRenamed("key", "d"), Seq("d"), "left_anti")
-      val postEntries = ctx.cache(keptEntries.unionByName(
-        newContribs.select(col("h"), col("d"), col("c"))))
-
-      val rebuilt = ctx.cache(postEntries.groupBy("h")
-        .agg(collect_list(struct(col("d"), col("c"))).as("docs"),
-          countDistinct("d").as("n_docs"),
-          sum("c").cast("long").as("n_occ"),
-          min(col("d").cast("long")).as("first_doc")))
-      chunkTable.merge(
-        rebuilt.select(col("h").as("key"), col("docs")),
-        affected.join(rebuilt.select(col("h").as("key")),
-          Seq("key"), "left_anti"),
-        ctx.batchId)
+      val sw = IncrementalAgg.swapMembers(chunkTable, chunkSchema, affected,
+        touched, newContribs.withColumnRenamed("h", "key"), ctx)
 
       // 4. shared fingerprints upsert; fallen/vanished ones delete
-      val upserts = rebuilt.filter(col("n_docs") > 1)
-        .select(col("h").as("id"), col("n_docs"), col("n_occ"),
-          col("first_doc"))
+      val upserts = ctx.cache(sw.post.groupBy(col("key").as("id"))
+        .agg(countDistinct("d").as("n_docs"),
+          sum("c").cast("long").as("n_occ"),
+          min(col("d").cast("long")).as("first_doc"))
+        .filter(col("n_docs") > 1))
       val deletes = affected.select(col("key").as("id"))
         .join(upserts.select("id"), Seq("id"), "left_anti")
       (upserts, deletes)

@@ -26,9 +26,6 @@ import org.apache.spark.sql.types._
   * an already-applied batchId. */
 object StreamingCms {
 
-  private val stateSchema = StructType(Seq(
-    StructField("key", StringType), StructField("cnt", LongType)))
-
   /** Signed per-cell occurrence counts of `rows`' tokens: each token
     * occurrence lands in 4 cells (row r at md5 hex slice r mod 256) —
     * identical addressing to [[graft.functions.CountMinAgg]]. */
@@ -52,18 +49,11 @@ object StreamingCms {
       val touched = batch(table).select("key").distinct()
       val delta = cellCounts(post.rows(table, touched), textCol, 1)
         .unionAll(cellCounts(pre.rows(table, touched), textCol, -1))
-        .groupBy("cell").agg(sum("d").as("d"))
-        .filter(col("d") =!= 0)
-        .select(col("cell").cast("string").as("key"), col("d"))
-      val preV = state.versionBefore(ctx.batchId)
-      val old = state.rowsForKeysAt(preV, stateSchema, delta.select("key"))
-        .withColumnRenamed("cnt", "o_cnt")
-      val merged = delta.join(old, Seq("key"), "left")
-        .select(col("key"),
-          (coalesce(col("o_cnt"), lit(0L)) + col("d")).as("cnt"))
-      val ups = merged.filter(col("cnt") =!= 0)
-      val dels = merged.filter(col("cnt") === 0).select("key")
-      state.merge(ups, dels, ctx.batchId)
+        .groupBy("cell").agg(sum("d").as("d_cnt"))
+        .filter(col("d_cnt") =!= 0)
+        .select(col("cell").cast("string").as("key"), col("d_cnt"))
+      val IncrementalAgg.Folded(_, ups, dels) =
+        IncrementalAgg.applyDeltas(state, delta, "cnt", ctx)
       (ups.select(col("key").as("id"),
         expr("CAST(key AS LONG) div 256").as("r"),
         pmod(col("key").cast("long"), lit(256L)).as("b"),

@@ -82,11 +82,9 @@ object StreamingContainment {
       new ParquetKeyedTable(spark, s"$stateDir/$name-prefix")
 
     ViewDef(name, (pre, post, batch, ctx) => {
-      val preFullV = fullPost.versionBefore(ctx.batchId)
       val prefPreV = prefPost.versionBefore(ctx.batchId)
 
       val touched = ctx.cache(batch(table).select("key").distinct())
-      val touchedDocs = touched.withColumnRenamed("key", "doc_id")
 
       def feats(rows: DataFrame): DataFrame = rows
         .select(col("key").as("doc_id"),
@@ -98,16 +96,17 @@ object StreamingContainment {
       val oldPrefix = prefixOf(oldFeats, theta)
       val newPrefix = ctx.cache(prefixOf(newFeats, theta))
 
-      // pre-state postings of every affected key (pruned lookups)
-      def members(t: ParquetKeyedTable, v: Option[Int],
-          keys: DataFrame): DataFrame =
-        t.rowsForKeysAt(v, postSchema, keys)
-          .select(col("key").as("f"), explode(col("members")).as("member"))
+      // postings of every affected key (pruned lookups); full postings:
+      // batch docs leave their old keys, enter their new ones
       val affectedFull = ctx.cache(oldFeats.select("f").union(newFeats.select("f"))
         .distinct().withColumnRenamed("f", "key"))
       val affectedPref = ctx.cache(oldPrefix.select("f").union(newPrefix.select("f"))
         .distinct().withColumnRenamed("f", "key"))
-      val preFull = ctx.cache(members(fullPost, preFullV, affectedFull))
+      val full = IncrementalAgg.swapMembers(fullPost, postSchema, affectedFull,
+        touched, newFeats.select(col("f").as("key"), col("doc_id").as("member")),
+        ctx)
+      val preFull = full.pre.withColumnRenamed("key", "f")
+      val postFull = full.post.withColumnRenamed("key", "f")
       // prefix postings are READ over affectedFull, not affectedPref:
       // the as-B directions join a batch doc's WHOLE feature set against
       // resident prefixes, and a resident partner's prefix key need not
@@ -116,7 +115,8 @@ object StreamingContainment {
       // unretracted. Membership, by contrast, only changes on the batch
       // docs' own prefix keys, so the MERGE below stays affectedPref-
       // scoped (prePrefNarrow).
-      val prePref = ctx.cache(members(prefPost, prefPreV, affectedFull))
+      val prePref = ctx.cache(prefPost.rowsForKeysAt(prefPreV, postSchema, affectedFull)
+        .select(col("key").as("f"), explode(col("members")).as("member")))
 
       // retract superset: pairs any previous batch could have emitted
       // with a batch member on either side
@@ -128,29 +128,13 @@ object StreamingContainment {
         .select(col("member").as("doc_a"), col("doc_id").as("doc_b"))
       val retractCandidates = oldAsA.union(oldAsB).distinct()
 
-      // posting updates: batch docs leave old keys, enter new ones
-      def updatePostings(t: ParquetKeyedTable, preMembers: DataFrame,
-          affected: DataFrame, newMemb: DataFrame): DataFrame = {
-        val kept = preMembers.join(
-          touchedDocs.withColumnRenamed("doc_id", "member"),
-          Seq("member"), "left_anti")
-        val postMembers = ctx.cache(kept.unionByName(
-          newMemb.select(col("f"), col("doc_id").as("member"))))
-        val rows = postMembers.groupBy("f")
-          .agg(collect_list("member").as("members"))
-          .select(col("f").as("key"), col("members"))
-        val emptied = affected.join(rows.select("key"), Seq("key"), "left_anti")
-        t.merge(rows, emptied, ctx.batchId)
-        postMembers
-      }
-      val postFull = updatePostings(fullPost, preFull, affectedFull, newFeats)
       // post-state prefix members over the WIDE read set, computed ONCE:
       // discovery joins against all of it (resident prefix keys outside
       // affectedPref included — see above), while the prefix-table MERGE
       // takes only its affectedPref slice (the only keys whose
       // membership can change)
       val postPref = ctx.cache(prePref.join(
-          touchedDocs.withColumnRenamed("doc_id", "member"),
+          touched.withColumnRenamed("key", "member"),
           Seq("member"), "left_anti")
         .unionByName(newPrefix.select(col("f"), col("doc_id").as("member"))))
       val prefRows = postPref.join(

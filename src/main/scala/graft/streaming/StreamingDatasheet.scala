@@ -21,9 +21,11 @@ import graft.operators.TextAnalysis
   *  - vocabulary size integrates the zero-crossings of the shared token
   *    counters ([[StreamingVocabCoverage.maintainTokenCounters]]);
   *  - distinct-text count integrates fingerprint-group births and
-  *    deaths from [[StreamingExactDedup.maintainFpState]]'s touched
-  *    groups;
-  *  - language counts are a bounded per-lang counter table, re-read
+  *    deaths among the touched groups of
+  *    [[StreamingExactDedup.maintainFpState]]'s postings (an
+  *    [[IncrementalAgg.swapMembers]] store);
+  *  - language counts are a bounded per-lang counter table
+  *    ([[IncrementalAgg.applyDeltas]]), re-read
   *    whole at emit (language set ≈ dozens — driver-metadata-sized);
   *  - the near-dup doc count is the one honest per-batch seam: it reads
   *    the post-batch label table from
@@ -94,11 +96,10 @@ object StreamingDatasheet {
         .select(col("key").as("doc"),
           explode(split(trim(col(textCol)), "\\s+")).as("tok"))
       val cNew = StreamingVocabCoverage.maintainTokenCounters(
-        cntTable, cntTable.versionBefore(ctx.batchId), toks(preRows),
-        toks(postRows), ctx)
+        cntTable, toks(preRows), toks(postRows), ctx)
       val vocabDelta = cNew.agg(
-        coalesce(sum(when(col("old_cnt") <= 0 && col("new_cnt") > 0, 1L)
-          .when(col("old_cnt") > 0 && col("new_cnt") <= 0, -1L)
+        coalesce(sum(when(col("o_cnt") <= 0 && col("cnt") > 0, 1L)
+          .when(col("o_cnt") > 0 && col("cnt") <= 0, -1L)
           .otherwise(0L)), lit(0L))).head().getLong(0)
 
       // distinct-text delta: fingerprint-group births − deaths among
@@ -110,27 +111,16 @@ object StreamingDatasheet {
           fs.preMembers.select("fp").distinct().count()
 
       // language counters ±
-      val preLV = langTable.versionBefore(ctx.batchId)
       val langDeltas = postRows.select(col(langCol).as("lang"))
         .groupBy("lang").agg(count(lit(1)).as("post_n"))
         .join(preRows.select(col(langCol).as("lang"))
           .groupBy("lang").agg(count(lit(1)).as("pre_n")),
           Seq("lang"), "full_outer")
-        .select(col("lang"),
+        .select(col("lang").as("key"),
           (coalesce(col("post_n"), lit(0L)) - coalesce(col("pre_n"), lit(0L)))
-            .as("delta"))
-        .filter(col("delta") =!= 0)
-      val lOld = langTable.rowsForKeysAt(preLV, langSchema,
-        langDeltas.select(col("lang").as("key")))
-      val lNew = langDeltas
-        .join(lOld.withColumnRenamed("key", "lang"), Seq("lang"), "left")
-        .select(col("lang"),
-          (coalesce(col("cnt"), lit(0L)) + col("delta")).as("new_cnt"))
-      langTable.merge(
-        lNew.filter(col("new_cnt") > 0)
-          .select(col("lang").as("key"), col("new_cnt").as("cnt")),
-        lNew.filter(col("new_cnt") <= 0).select(col("lang").as("key")),
-        ctx.batchId)
+            .as("d_cnt"))
+        .filter(col("d_cnt") =!= 0)
+      IncrementalAgg.applyDeltas(langTable, langDeltas, "cnt", ctx)
 
       // near-dup pair/label maintenance — the duplicate-density seam
       val cs = StreamingCuration.maintainClusterState(

@@ -71,7 +71,6 @@ object StreamingDecontamination {
       pre: StateAccess, post: StateAccess,
       touched: DataFrame, ctx: BatchCtx,
       table: String, textCol: String, gramN: Int): GramState = {
-    val preHV = hTable.versionBefore(ctx.batchId)
     val preTV = tTable.versionBefore(ctx.batchId)
 
     // per-doc DISTINCT grams (wordShingles dedups) with the split tag
@@ -90,43 +89,23 @@ object StreamingDecontamination {
         .agg(count(lit(1)).as("pre_n"))
         .join(postG.filter(!col("train")).groupBy("g")
           .agg(count(lit(1)).as("post_n")), Seq("g"), "full_outer")
-        .select(col("g"),
+        .select(col("g").as("key"),
           (coalesce(col("post_n"), lit(0L)) - coalesce(col("pre_n"), lit(0L)))
-            .as("delta"))
-        .filter(col("delta") =!= 0)
-      val hOld = hTable.rowsForKeysAt(preHV, cntSchema,
-        deltas.select(col("g").as("key")))
-      val hNew = ctx.cache(deltas
-        .join(hOld.withColumnRenamed("key", "g"), Seq("g"), "left")
-        .select(col("g"),
-          (coalesce(col("cnt"), lit(0L)) + col("delta")).as("new_cnt"),
-          coalesce(col("cnt"), lit(0L)).as("old_cnt")))
-      hTable.merge(
-        hNew.filter(col("new_cnt") > 0)
-          .select(col("g").as("key"), col("new_cnt").as("cnt")),
-        hNew.filter(col("new_cnt") <= 0).select(col("g").as("key")),
-        ctx.batchId)
+            .as("d_cnt"))
+        .filter(col("d_cnt") =!= 0)
+      val hNew = IncrementalAgg.applyDeltas(hTable, deltas, "cnt", ctx).merged
       // grams entering or leaving the holdout set — the retraction /
       // discovery events for RESIDENT train docs
       val transitions = hNew
-        .filter((col("old_cnt") > 0) =!= (col("new_cnt") > 0))
-        .select(col("g"))
+        .filter((col("o_cnt") > 0) =!= (col("cnt") > 0))
+        .select(col("key").as("g"))
 
       // 3. train inverted-index maintenance (affected gram rows only)
       val affectedT = preG.filter(col("train")).select("g")
         .union(postG.filter(col("train")).select("g"))
         .distinct().withColumnRenamed("g", "key")
-      val tPre = tTable.rowsForKeysAt(preTV, memberSchema, affectedT)
-        .select(col("key").as("g"), explode(col("members")).as("doc"))
-      val keptT = tPre.join(
-        touched.withColumnRenamed("key", "doc"), Seq("doc"), "left_anti")
-      val postMembers = keptT
-        .unionByName(postG.filter(col("train")).select(col("g"), col("doc")))
-      val tRows = postMembers.groupBy("g")
-        .agg(collect_list("doc").as("members"))
-        .select(col("g").as("key"), col("members"))
-      val emptiedT = affectedT.join(tRows.select("key"), Seq("key"), "left_anti")
-      tTable.merge(tRows, emptiedT, ctx.batchId)
+      IncrementalAgg.swapMembers(tTable, memberSchema, affectedT, touched,
+        postG.filter(col("train")).select(col("g").as("key"), col("doc")), ctx)
 
     // the re-score set beyond B itself: every train holder of a
     // transitioned gram — resident holders from the PRE index (their

@@ -97,7 +97,6 @@ object StreamingDedup {
       table: String, textCol: String, threshold: Double,
       bandRows: Int, nBands: Int, shingleN: Int): PairDelta = {
       val preSigV = sigTable.versionBefore(ctx.batchId)
-      val preBktV = bucketTable.versionBefore(ctx.batchId)
 
       val touched = ctx.cache(batch(table).select("key").distinct())
 
@@ -118,12 +117,15 @@ object StreamingDedup {
       val newMemb = ctx.cache(newSigs.select(col("doc_id"),
         explode(Dedup.bandKeys(col("sig"), bandRows, nBands)).as("bkey")))
 
-      // pre-state membership of every affected bucket (pruned lookup)
+      // membership of every affected bucket (pruned lookup): batch docs
+      // leave their old buckets, enter new ones (idempotent-by-batchId)
       val affected = oldMemb.select("bkey").union(newMemb.select("bkey"))
         .distinct().withColumnRenamed("bkey", "key")
-      val preMembers = ctx.cache(bucketTable
-        .rowsForKeysAt(preBktV, bucketSchema, affected)
-        .select(col("key").as("bkey"), explode(col("members")).as("doc_id")))
+      val sw = IncrementalAgg.swapMembers(bucketTable, bucketSchema,
+        affected, touched,
+        newMemb.select(col("bkey").as("key"), col("doc_id")), ctx)
+      val preMembers = sw.pre.withColumnRenamed("key", "bkey")
+      val postMembers = sw.post.withColumnRenamed("key", "bkey")
 
       // 2. retract: every pair a PREVIOUS batch could have emitted with a
       // member of B shares one of B's OLD buckets — a superset of the
@@ -137,20 +139,7 @@ object StreamingDedup {
           greatest(col("doc_id"), col("partner")).as("doc_b"))
         .distinct()
 
-      // 3. state updates (idempotent-by-batchId)
-      //    membership: batch docs leave their old buckets, enter new ones
-      val keptMembers = preMembers.join(
-        touched.withColumnRenamed("key", "doc_id"), Seq("doc_id"), "left_anti")
-      val postMembers = ctx.cache(keptMembers
-        .unionByName(newMemb.select(col("doc_id"), col("bkey"))))
-      val bucketRows = postMembers.groupBy("bkey")
-        .agg(collect_list("doc_id").as("members"))
-        .select(col("bkey").as("key"), col("members"))
-      val emptiedBuckets = affected
-        .join(bucketRows.select("key"), Seq("key"), "left_anti")
-      bucketTable.merge(bucketRows, emptiedBuckets, ctx.batchId)
-
-      //    signatures: upsert batch docs that produced one; drop the rest
+      // 3. signatures: upsert batch docs that produced one; drop the rest
       //    (deleted docs, and a live doc whose new text has no shingles —
       //    its old signature must not linger)
       val sigless = touched.join(

@@ -39,12 +39,12 @@ object StreamingDsir {
 
   final class DsirWeights(spark: SparkSession, stateDir: String,
       table: String, textCol: String, isTarget: Column, buckets: Int) {
-    private val docFeats = new ParquetKeyedTable(
-      spark, s"$stateDir/dsir-docfeats", "key", 32)
-    private val rawLedger = new ParquetKeyedTable(
-      spark, s"$stateDir/dsir-raw", "key", 32)
-    private val tgtLedger = new ParquetKeyedTable(
-      spark, s"$stateDir/dsir-target", "key", 32)
+    private val docFeats =
+      new ParquetKeyedTable(spark, s"$stateDir/dsir-docfeats")
+    private val rawLedger =
+      new ParquetKeyedTable(spark, s"$stateDir/dsir-raw")
+    private val tgtLedger =
+      new ParquetKeyedTable(spark, s"$stateDir/dsir-target")
 
     private def bucketOf(g: Column): Column =
       pmod(conv(substring(md5(g), 1, 8), 16, 10).cast("long"),
@@ -58,9 +58,6 @@ object StreamingDsir {
       .agg(count(lit(1)).as("c"))
 
     val view: ViewDef = ViewDef("dsir", (pre, post, batch, ctx) => {
-      val preRawV = rawLedger.versionBefore(ctx.batchId)
-      val preTgtV = tgtLedger.versionBefore(ctx.batchId)
-
       val touched = ctx.cache(batch(table).select("key").distinct())
       val preF = ctx.cache(featsOf(pre.rows(table, touched)))
       val postF = ctx.cache(featsOf(post.rows(table, touched)))
@@ -72,22 +69,13 @@ object StreamingDsir {
           r.groupBy("b").agg((sum("c") * sign).as("d"))
         }
         side(postF, 1L).unionByName(side(preF, -1L))
-          .groupBy("b").agg(sum("d").as("d")).filter(col("d") =!= 0)
+          .groupBy(col("b").cast("string").as("key"))
+          .agg(sum("d").as("d_cnt")).filter(col("d_cnt") =!= 0)
       }
-      def applyDeltas(t: ParquetKeyedTable, preV: Option[Int],
-          deltas: DataFrame): Unit = {
-        val old = t.rowsForKeysAt(preV, cntSchema,
-          deltas.select(col("b").cast("string").as("key")))
-        val merged = deltas
-          .join(old.select(col("key").cast("long").as("b"),
-            col("cnt").as("o")), Seq("b"), "left")
-          .select(col("b").cast("string").as("key"),
-            (coalesce(col("o"), lit(0L)) + col("d")).as("cnt"))
-        t.merge(merged.filter(col("cnt") > 0),
-          merged.filter(col("cnt") <= 0).select("key"), ctx.batchId)
-      }
-      applyDeltas(rawLedger, preRawV, ledgerDeltas(filterTgt = false))
-      applyDeltas(tgtLedger, preTgtV, ledgerDeltas(filterTgt = true))
+      IncrementalAgg.applyDeltas(rawLedger, ledgerDeltas(filterTgt = false),
+        "cnt", ctx)
+      IncrementalAgg.applyDeltas(tgtLedger, ledgerDeltas(filterTgt = true),
+        "cnt", ctx)
 
       // replace touched docs' feature rows
       val newRows = ctx.cache(postF.groupBy("key")

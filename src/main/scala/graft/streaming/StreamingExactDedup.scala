@@ -52,8 +52,6 @@ object StreamingExactDedup {
       table: String, textCol: String,
       fpFn: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
         sha2(_, 256)): FpState = {
-    val preV = postings.versionBefore(ctx.batchId)
-
     def fps(rows: DataFrame): DataFrame = rows
       .select(col("key").as("doc_id"),
         fpFn(col(textCol)).as("fp"))
@@ -63,18 +61,11 @@ object StreamingExactDedup {
 
     val affected = ctx.cache(oldFps.select("fp").union(newFps.select("fp"))
       .distinct().withColumnRenamed("fp", "key"))
-    val preMembers = ctx.cache(postings.rowsForKeysAt(preV, postSchema, affected)
-      .select(col("key").as("fp"), explode(col("members")).as("member")))
-    val postMembers = ctx.cache(preMembers.join(
-        touched.withColumnRenamed("key", "member"), Seq("member"),
-        "left_anti")
-      .unionByName(newFps.select(col("fp"), col("doc_id").as("member"))))
-
-    val rows = postMembers.groupBy("fp")
-      .agg(collect_list("member").as("members"))
-      .select(col("fp").as("key"), col("members"))
-    val emptied = affected.join(rows.select("key"), Seq("key"), "left_anti")
-    postings.merge(rows, emptied, ctx.batchId)
+    val sw = IncrementalAgg.swapMembers(postings, postSchema, affected,
+      touched, newFps.select(col("fp").as("key"), col("doc_id").as("member")),
+      ctx)
+    val preMembers = sw.pre.withColumnRenamed("key", "fp")
+    val postMembers = sw.post.withColumnRenamed("key", "fp")
 
     val affectedMembers = preMembers.select(col("member").as("key"))
       .union(postMembers.select(col("member").as("key"))).distinct()
@@ -90,7 +81,7 @@ object StreamingExactDedup {
         .filter(col("doc_id") =!= col("keep_id"))
         .select(col("doc_id").as("key"))
     }
-    FpState(preMembers, postMembers, emptied, affectedMembers, losersAmong)
+    FpState(preMembers, postMembers, sw.emptied, affectedMembers, losersAmong)
   }
 
   def exactDedupView(

@@ -45,20 +45,11 @@ object StreamingHistQuantiles {
       val len = length(col(textCol))
       val delta = bucketCounts(post.rows(table, touched), len, 1)
         .unionAll(bucketCounts(pre.rows(table, touched), len, -1))
-        .groupBy("source", "k").agg(sum("d").as("d"))
-        .filter(col("d") =!= 0)
-      val preV = state.versionBefore(ctx.batchId)
-      val keyed = delta.select(
+        .groupBy("source", "k").agg(sum("d").as("d_cnt"))
+        .filter(col("d_cnt") =!= 0)
+      val merged = IncrementalAgg.applyDeltas(state, delta.select(
         concat(col("source"), lit("|"), col("k")).as("key"),
-        col("source"), col("k"), col("d"))
-      val old = state.rowsForKeysAt(preV, stateSchema,
-        keyed.select("key"))
-        .select(col("key"), col("cnt").as("o_cnt"))
-      val merged = keyed.join(old, Seq("key"), "left")
-        .select(col("key"), col("source"), col("k"),
-          (coalesce(col("o_cnt"), lit(0L)) + col("d")).as("cnt"))
-      state.merge(merged.filter(col("cnt") =!= 0),
-        merged.filter(col("cnt") === 0).select("key"), ctx.batchId)
+        col("source"), col("k"), col("d_cnt")), "cnt", ctx).merged
       // re-answer ONLY the touched sources from their (bounded) bucket
       // rows — post-merge state, so read at the store's current version
       val touchedSources = merged.select("source").distinct()

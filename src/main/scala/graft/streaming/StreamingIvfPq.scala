@@ -59,7 +59,6 @@ object StreamingIvfPq {
     val cellTable =
       new ParquetKeyedTable(spark, s"$stateDir/$name-cells")
     ViewDef(name, (pre, post, batch, ctx) => {
-      val preV = cellTable.versionBefore(ctx.batchId)
       val touched = ctx.cache(batch(table).select("key").distinct())
 
       // cells the batch vectors leave (pre image) and enter (post image;
@@ -79,28 +78,14 @@ object StreamingIvfPq {
 
       val affected = oldCells.select("cell").union(newEnc.select("cell"))
         .distinct().withColumnRenamed("cell", "key")
-      val preMembers = cellTable
-        .rowsForKeysAt(preV, cellSchema, affected)
-        .select(col("key").as("cell"), explode(col("members")).as("m"))
-        .select(col("cell"), col("m.vec_key").as("vec_key"),
-          col("m.codes").as("codes"))
-      val kept = preMembers.join(
-        touched.withColumnRenamed("key", "vec_key"), Seq("vec_key"),
-        "left_anti")
-      val postMembers = kept.unionByName(newEnc)
-      val cellRows = ctx.cache(postMembers.groupBy("cell")
-        .agg(collect_list(struct(col("vec_key"), col("codes")))
-          .as("members"))
-        .select(col("cell").as("key"), col("members")))
-      val emptied = affected
-        .join(cellRows.select("key"), Seq("key"), "left_anti")
-      cellTable.merge(cellRows, emptied, ctx.batchId)
+      val sw = IncrementalAgg.swapMembers(cellTable, cellSchema, affected,
+        touched, newEnc.withColumnRenamed("cell", "key"), ctx)
 
-      val upserts = cellRows.select(col("key").as("id"),
-        size(col("members")).cast("long").as("n_vectors"),
-        array_join(array_sort(transform(col("members"), m => m("vec_key"))),
-          ",").as("members_csv"))
-      (upserts, emptied.select(col("key").as("id")))
+      val upserts = sw.post.groupBy(col("key").as("id"))
+        .agg(count(lit(1)).as("n_vectors"),
+          array_join(array_sort(collect_list("vec_key")), ",")
+            .as("members_csv"))
+      (upserts, sw.emptied.select(col("key").as("id")))
     })
   }
 

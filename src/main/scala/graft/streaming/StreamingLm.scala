@@ -81,51 +81,23 @@ object StreamingLm {
         .groupBy("w1", "w2").agg(sum("d").as("d"))
         .filter(col("d") =!= 0))
 
-      /** ± merge of a (key, cnt) running-counter table; returns the
-        * merged frame (key, cnt) including zeros for flip detection. */
-      def mergeCounts(t: ParquetKeyedTable, deltas: DataFrame): DataFrame = {
-        val old = t.rowsForKeysAt(t.versionBefore(ctx.batchId), cntSchema,
-          deltas.select("key"))
-        val merged = ctx.cache(deltas.join(old.withColumnRenamed("cnt", "o"),
-            Seq("key"), "full_outer")
-          .select(col("key"),
-            (coalesce(col("o"), lit(0L)) + coalesce(col("d"), lit(0L)))
-              .as("cnt")))
-        t.merge(merged.filter(col("cnt") > 0),
-          merged.filter(col("cnt") <= 0).select("key"), ctx.batchId)
-        merged
-      }
-
       // c2 (carries w1/w2 for the sink)
-      val c2Old = c2Table.rowsForKeysAt(c2Table.versionBefore(ctx.batchId), c2Schema,
-        biDeltas.select(Keys.pair(col("w1"), col("w2")).as("key")))
-      val c2Merged = ctx.cache(biDeltas
+      val c2 = IncrementalAgg.applyDeltas(c2Table, biDeltas
         .select(Keys.pair(col("w1"), col("w2")).as("key"),
-          col("w1"), col("w2"), col("d"))
-        .join(c2Old.select(col("key"), col("w1").as("ow1"),
-          col("w2").as("ow2"), col("cnt").as("o")), Seq("key"), "full_outer")
-        .select(col("key"),
-          coalesce(col("w1"), col("ow1")).as("w1"),
-          coalesce(col("w2"), col("ow2")).as("w2"),
-          (coalesce(col("o"), lit(0L)) + coalesce(col("d"), lit(0L)))
-            .as("cnt")))
-      c2Table.merge(
-        c2Merged.filter(col("cnt") > 0).select("key", "w1", "w2", "cnt"),
-        c2Merged.filter(col("cnt") <= 0).select("key"), ctx.batchId)
+          col("w1"), col("w2"), col("d").as("d_cnt")), "cnt", ctx)
 
       // c1 = Σ c2 by left context
-      mergeCounts(c1Table,
-        biDeltas.groupBy(col("w1").as("key")).agg(sum("d").as("d")))
+      IncrementalAgg.applyDeltas(c1Table,
+        biDeltas.select(col("w1").as("key"), col("d").as("d_cnt")), "cnt", ctx)
 
       // vocabulary refcounts: each bigram row contributes one endpoint
       // occurrence per side; |V| moves by the membership flips
-      val vDeltas = biDeltas
-        .select(explode(array(col("w1"), col("w2"))).as("key"), col("d"))
-        .groupBy("key").agg(sum("d").as("d"))
-      val vMerged = mergeCounts(vTable, vDeltas)
-      val flips = vMerged.join(vDeltas, Seq("key"))
-        .select(when(col("cnt") > 0 && col("cnt") - col("d") <= 0, 1L)
-          .when(col("cnt") <= 0 && col("cnt") - col("d") > 0, -1L)
+      val vMerged = IncrementalAgg.applyDeltas(vTable, biDeltas
+        .select(explode(array(col("w1"), col("w2"))).as("key"),
+          col("d").as("d_cnt")), "cnt", ctx).merged
+      val flips = vMerged
+        .select(when(col("cnt") > 0 && col("o_cnt") <= 0, 1L)
+          .when(col("cnt") <= 0 && col("o_cnt") > 0, -1L)
           .otherwise(0L).as("f"))
         .agg(coalesce(sum("f"), lit(0L)).as("dv"))
       val statsOld = statsTable.rowsForKeysAt(
@@ -139,13 +111,12 @@ object StreamingLm {
       statsTable.merge(statsNew,
         statsNew.filter(lit(false)).select("key"), ctx.batchId)
 
-      val upserts = c2Merged.filter(col("cnt") > 0)
+      val upserts = c2.live
         .select(col("key").as("id"), col("w1"), col("w2"), col("cnt"))
         .unionByName(statsNew
           .select(lit("corpus|stats").as("id"), lit(null).cast("string").as("w1"),
             lit(null).cast("string").as("w2"), col("v_count").as("cnt")))
-      val deletes = c2Merged.filter(col("cnt") <= 0)
-        .select(col("key").as("id"))
+      val deletes = c2.dead.select(col("key").as("id"))
       (upserts, deletes)
     })
   }

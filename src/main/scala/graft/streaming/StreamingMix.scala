@@ -43,25 +43,17 @@ object StreamingMix {
       val touched = batch(table).select("key").distinct()
       val delta = tokenCounts(post.rows(table, touched), textCol, 1)
         .unionAll(tokenCounts(pre.rows(table, touched), textCol, -1))
-        .groupBy("source").agg(sum("d").as("d"))
-        .filter(col("d") =!= 0)
-        .select(col("source").as("key"), col("d"))
-      val preV = state.versionBefore(ctx.batchId)
-      val old = state.rowsForKeysAt(preV, stateSchema, delta.select("key"))
-        .select(col("key"), col("n_tokens").as("o_n"))
-      val merged = delta.join(old, Seq("key"), "left")
-        .select(col("key"),
-          (coalesce(col("o_n"), lit(0L)) + col("d")).as("n_tokens"))
-      state.merge(merged.filter(col("n_tokens") =!= 0),
-        merged.filter(col("n_tokens") === 0).select("key"), ctx.batchId)
+        .groupBy("source").agg(sum("d").as("d_n_tokens"))
+        .filter(col("d_n_tokens") =!= 0)
+        .select(col("source").as("key"), col("d_n_tokens"))
+      val folded = IncrementalAgg.applyDeltas(state, delta, "n_tokens", ctx)
       // the denominator is global → re-emit the whole (bounded) table
       val live = state.snapshot(stateSchema)
         .select(col("key").as("source"), col("n_tokens"))
       val upserts = Curation.alphaMix(live)
         .select(col("source").as("id"), col("n_tokens"),
           col("weight"), col("epochs"))
-      val deletes = merged.filter(col("n_tokens") === 0)
-        .select(col("key").as("id"))
+      val deletes = folded.dead.select(col("key").as("id"))
       (upserts, deletes)
     })
   }

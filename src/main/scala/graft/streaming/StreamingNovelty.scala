@@ -57,7 +57,6 @@ object StreamingNovelty {
       new ParquetKeyedTable(spark, s"$stateDir/$name-postings")
 
     ViewDef(name, (pre, post, batch, ctx) => {
-      val preV = postings.versionBefore(ctx.batchId)
       val touched = ctx.cache(batch(table).select("key").distinct())
 
       // per-doc DISTINCT grams (wordShingles dedups within a doc)
@@ -73,23 +72,13 @@ object StreamingNovelty {
       // 2. posting-list maintenance on the affected grams only
       val affected = preG.select("g").union(postG.select("g"))
         .distinct().withColumnRenamed("g", "key")
-      val oldRows = ctx.cache(postings.rowsForKeysAt(preV, postingSchema, affected))
-      val kept = oldRows
-        .select(col("key").as("g"), explode(col("members")).as("doc"))
-        .join(touched.withColumnRenamed("key", "doc"), Seq("doc"), "left_anti")
-      val newMembers = kept.unionByName(postG.select("g", "doc"))
-      val newRows = ctx.cache(newMembers.groupBy("g")
-        .agg(collect_list("doc").as("members"))
-        .select(col("g").as("key"), col("members")))
-      val emptied = affected.join(newRows.select("key"), Seq("key"), "left_anti")
-      postings.merge(newRows, emptied, ctx.batchId)
+      val sw = IncrementalAgg.swapMembers(postings, postingSchema, affected,
+        touched, postG.select(col("g").as("key"), col("doc")), ctx)
 
       // 3. min movements hand novelty credit between docs the batch
       // never touched — their holders join the re-score set
-      val minMoves = oldRows
-        .select(col("key"), array_min(col("members")).as("old_min"))
-        .join(newRows
-          .select(col("key"), array_min(col("members")).as("new_min")),
+      val minMoves = sw.pre.groupBy("key").agg(min("doc").as("old_min"))
+        .join(sw.post.groupBy("key").agg(min("doc").as("new_min")),
           Seq("key"), "full_outer")
         .filter(!(col("old_min") <=> col("new_min")))
       val movedHolders = minMoves.select(col("old_min").as("key"))

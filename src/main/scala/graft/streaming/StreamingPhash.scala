@@ -78,7 +78,6 @@ object StreamingPhash {
     val bandBits = 32 / nBands
     val mask = (1L << bandBits) - 1
     val preHashV = hashTable.versionBefore(ctx.batchId)
-    val preBktV = bucketTable.versionBefore(ctx.batchId)
 
     def bandKeys(h: org.apache.spark.sql.Column) =
       array((0 until nBands).map { b =>
@@ -104,11 +103,13 @@ object StreamingPhash {
     val newMemb = ctx.cache(newHashes
       .select(col("doc_id"), explode(bandKeys(col("phash"))).as("bkey")))
 
+    // membership of every affected bucket (idempotent-by-batchId)
     val affected = oldMemb.select("bkey").union(newMemb.select("bkey"))
       .distinct().withColumnRenamed("bkey", "key")
-    val preMembers = ctx.cache(bucketTable
-      .rowsForKeysAt(preBktV, bucketSchema, affected)
-      .select(col("key").as("bkey"), explode(col("members")).as("doc_id")))
+    val sw = IncrementalAgg.swapMembers(bucketTable, bucketSchema, affected,
+      touched, newMemb.select(col("bkey").as("key"), col("doc_id")), ctx)
+    val preMembers = sw.pre.withColumnRenamed("key", "bkey")
+    val postMembers = sw.post.withColumnRenamed("key", "bkey")
 
     // 2. retract superset: every pair a previous batch could have
     // emitted with a member of B shares one of B's OLD buckets
@@ -121,19 +122,7 @@ object StreamingPhash {
           col("partner").cast("long")).cast("string").as("doc_b"))
       .distinct()
 
-    // 3. state updates (idempotent-by-batchId)
-    val keptMembers = preMembers.join(
-      touched.withColumnRenamed("key", "doc_id"), Seq("doc_id"),
-      "left_anti")
-    val postMembers = ctx.cache(keptMembers
-      .unionByName(newMemb.select(col("doc_id"), col("bkey"))))
-    val bucketRows = postMembers.groupBy("bkey")
-      .agg(collect_list("doc_id").as("members"))
-      .select(col("bkey").as("key"), col("members"))
-    val emptied = affected
-      .join(bucketRows.select("key"), Seq("key"), "left_anti")
-    bucketTable.merge(bucketRows, emptied, ctx.batchId)
-
+    // 3. hash state (idempotent-by-batchId)
     val hashless = touched.join(
       newHashes.select(col("doc_id").as("key")), Seq("key"), "left_anti")
     hashTable.merge(

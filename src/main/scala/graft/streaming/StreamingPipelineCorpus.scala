@@ -15,7 +15,8 @@ import graft.operators.{Curation, TextAnalysis}
   *   1. Gopher admission + the b < 90 content-hash train split —
   *      stateless row arithmetic ([[StreamingGopher]]'s posture);
   *   2. exact dedup over the full corpus —
-  *      [[StreamingExactDedup.maintainFpState]]'s fingerprint postings;
+  *      [[StreamingExactDedup.maintainFpState]]'s fingerprint postings
+  *      (an [[IncrementalAgg.swapMembers]] store);
   *   3. near-dup survivor selection over the full corpus —
   *      [[StreamingCuration.maintainClusterState]]'s pair + label
   *      machinery (the q39 lesson applied twice: dedup sees gated-out

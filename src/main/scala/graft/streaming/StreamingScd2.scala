@@ -64,8 +64,6 @@ object StreamingScd2 {
       new ParquetKeyedTable(spark, s"$stateDir/$name-by-user")
 
     ViewDef(name, (pre, post, batch, ctx) => {
-      val preIdxV = byUser.versionBefore(ctx.batchId)
-
       val touched = ctx.cache(batch(table).select("key").distinct())
       val preRows = ctx.cache(pre.rows(table, touched)
         .select(col("key"), col(userCol), col(tsCol), col(typeCol),
@@ -79,36 +77,17 @@ object StreamingScd2 {
         .distinct().filter(col(userCol).isNotNull)
         .select(col(userCol).cast("string").as("key")))
 
-      // pre-batch history length per touched user — versions beyond the
-      // rebuilt count retract below
-      val preIdx = ctx.cache(byUser.rowsForKeysAt(preIdxV, idxSchema, touchedUsers))
-      val oldCounts = preIdx.select(col("key"),
-        size(col("events")).cast("long").as("n_old"))
-
       // 1. read-modify-write the per-user projection for touched users
-      val resident = preIdx
-        .select(col("key"), explode(col("events")).as("e"))
-        .select(col("key"), col("e.id"), col("e.ts"), col("e.typ"),
-          col("e.value"))
-        .join(touched.withColumnRenamed("key", "id"), Seq("id"), "left_anti")
-      val fresh = postRows.select(
-        col(userCol).cast("string").as("key"), col("key").as("id"),
-        col(tsCol).cast("long").as("ts"), col(typeCol).as("typ"),
-        col(valueCol).cast("double").as("value"))
-      val allEvents = ctx.cache(resident.unionByName(fresh))
-
-      val idxRows = allEvents.groupBy("key")
-        .agg(collect_list(
-          struct(col("id"), col("ts"), col("typ"), col("value")))
-          .as("events"))
-      val emptiedUsers = touchedUsers
-        .join(idxRows.select("key"), Seq("key"), "left_anti")
-      byUser.merge(idxRows, emptiedUsers, ctx.batchId)
+      val sw = IncrementalAgg.swapMembers(byUser, idxSchema, touchedUsers,
+        touched, postRows.select(
+          col(userCol).cast("string").as("key"), col("key").as("id"),
+          col(tsCol).cast("long").as("ts"), col(typeCol).as("typ"),
+          col(valueCol).cast("double").as("value")), ctx)
 
       // 2. rebuild the touched users' history with the SAME operator
       // batch q158 uses
       val rebuilt = Temporal.scd2Intervals(
-        allEvents.select(col("key").as("user"), col("id").as("event_id"),
+        sw.post.select(col("key").as("user"), col("id").as("event_id"),
           col("ts"), col("typ"), col("value")),
         userCol = "user", tsNsCol = "ts", idCol = "event_id")
       val upserts = rebuilt.select(
@@ -119,9 +98,9 @@ object StreamingScd2 {
         col("valid_to_ns").as("valid_to"), col("is_current"))
 
       // 3. stale version numbers retract (n_new < v <= n_old; an
-      // emptied user has no idxRows row → n_new = 0 retracts them all)
-      val newCounts = idxRows.select(col("key"),
-        size(col("events")).cast("long").as("n_new"))
+      // emptied user has no post entry → n_new = 0 retracts them all)
+      val oldCounts = sw.pre.groupBy("key").agg(count(lit(1)).as("n_old"))
+      val newCounts = sw.post.groupBy("key").agg(count(lit(1)).as("n_new"))
       val deletes = oldCounts
         .join(newCounts, Seq("key"), "left")
         .select(col("key"), col("n_old"),

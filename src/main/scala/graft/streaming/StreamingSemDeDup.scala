@@ -54,8 +54,6 @@ object StreamingSemDeDup {
       new ParquetKeyedTable(spark, s"$stateDir/$name-post")
 
     ViewDef(name, (pre, post, batch, ctx) => {
-      val preV = postings.versionBefore(ctx.batchId)
-
       val touched = ctx.cache(batch(table).select("key").distinct())
 
       def assigned(rows: DataFrame): DataFrame = model
@@ -70,17 +68,9 @@ object StreamingSemDeDup {
         .union(newAssign.select("cluster")).distinct()
         .withColumnRenamed("cluster", "key"))
 
-      val preMembers = ctx.cache(postings.rowsForKeysAt(preV, postSchema, affected)
-        .select(col("key").as("cluster"), explode(col("members")).as("vec_id")))
-      val postMembers = ctx.cache(preMembers.join(
-          touched.withColumnRenamed("key", "vec_id"), Seq("vec_id"),
-          "left_anti")
-        .unionByName(newAssign.select("cluster", "vec_id")))
-      val rows = postMembers.groupBy("cluster")
-        .agg(collect_list("vec_id").as("members"))
-        .select(col("cluster").as("key"), col("members"))
-      val emptied = affected.join(rows.select("key"), Seq("key"), "left_anti")
-      postings.merge(rows, emptied, ctx.batchId)
+      val sw = IncrementalAgg.swapMembers(postings, postSchema, affected,
+        touched, newAssign.select(col("cluster").as("key"), col("vec_id")),
+        ctx)
 
       /** Batch q101 removal rows for the touched clusters from one state
         * image: member vectors fetched by key (bucket-pruned), then
@@ -98,8 +88,8 @@ object StreamingSemDeDup {
         KMeans.semDedup(vecs, model, tau)
       }
 
-      val postScore = ctx.cache(score(postMembers, post))
-      val preScore = score(preMembers, pre)
+      val postScore = ctx.cache(score(sw.post, post))
+      val preScore = score(sw.pre, pre)
 
       val upserts = postScore.select(
         col("vec_id").as("id"), col("vec_id"),

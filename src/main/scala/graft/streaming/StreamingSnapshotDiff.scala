@@ -17,9 +17,9 @@ import org.apache.spark.sql.functions._
   * Delta rule per touched id: −(its class under the PRE states),
   * +(its class under the POST states); ids absent from both sides of a
   * state version contribute nothing there. The running counts live in
-  * the same replay-safe [[IncrementalAgg.applyDeltas]] store every
-  * retractive view uses (versionBefore-pinned reads, idempotent by
-  * batchId).
+  * a ± counter store folded by [[IncrementalAgg.applyDeltas]], the one
+  * fold every retractive view uses (versionBefore-pinned reads,
+  * idempotent by batchId).
   */
 object StreamingSnapshotDiff {
 
@@ -32,9 +32,8 @@ object StreamingSnapshotDiff {
       tableA: String = "docs_v1", tableB: String = "docs_v2",
       idCol: String = "doc_id", sourceCol: String = "source",
       textCol: String = "text"): ViewDef = {
-    val gNames = Seq("change_class", "source")
-    val aggTable = new ParquetKeyedTable(
-      spark, s"$stateDir/snapshot_diff-agg", "key", 32)
+    val aggTable =
+      new ParquetKeyedTable(spark, s"$stateDir/snapshot_diff-agg")
 
     // (key, source, h) digest reduction of one side's state rows — the
     // 16-byte shuffle currency of the batch operator, never documents
@@ -66,8 +65,8 @@ object StreamingSnapshotDiff {
         classes(post.rows(tableA, touched), post.rows(tableB, touched)), 1)
         .unionByName(contrib(
           classes(pre.rows(tableA, touched), pre.rows(tableB, touched)), -1))
-      val (liveGroups, deadGroups) =
-        IncrementalAgg.applyDeltas(aggTable, gNames, deltas, ctx)
+      val IncrementalAgg.Folded(_, liveGroups, deadGroups) =
+        IncrementalAgg.applyDeltas(aggTable, deltas, "cnt", ctx)
       (liveGroups.select(col("key").as("id"), col("change_class"),
         col("source"), col("cnt").as("n_docs")),
         deadGroups.select(col("key").as("id")))

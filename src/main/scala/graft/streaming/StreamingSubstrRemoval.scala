@@ -57,8 +57,6 @@ object StreamingSubstrRemoval {
       new ParquetKeyedTable(spark, s"$stateDir/$name-post")
 
     ViewDef(name, (pre, post, batch, ctx) => {
-      val preV = postings.versionBefore(ctx.batchId)
-
       val touched = ctx.cache(batch(table).select("key").distinct())
 
       def wins(rows: DataFrame): DataFrame = rows
@@ -74,36 +72,24 @@ object StreamingSubstrRemoval {
 
       val affected = ctx.cache(oldOcc.select("g").union(newOcc.select("g"))
         .distinct().withColumnRenamed("g", "key"))
-      val preMembers = ctx.cache(postings.rowsForKeysAt(preV, postSchema, affected)
-        .select(col("key").as("g"), explode(col("members")).as("mc"))
-        .select(col("g"), col("mc.m").as("member"), col("mc.c").as("c")))
-
       // postings update: batch docs leave their old (member, count)
       // entries, enter with their new per-doc occurrence counts
-      val postMembers = ctx.cache(preMembers.join(
-          touched.withColumnRenamed("key", "member"), Seq("member"),
-          "left_anti")
-        .unionByName(newOcc.select(col("g"), col("doc_id").as("member"),
-          col("c"))))
-      val rows = postMembers.groupBy("g")
-        .agg(collect_list(struct(col("member").as("m"), col("c")))
-          .as("members"))
-        .select(col("g").as("key"), col("members"))
-      val emptied = affected.join(rows.select("key"), Seq("key"), "left_anti")
-      postings.merge(rows, emptied, ctx.batchId)
+      val sw = IncrementalAgg.swapMembers(postings, postSchema, affected,
+        touched, newOcc.select(col("g").as("key"), col("doc_id").as("m"),
+          col("c")), ctx)
 
       // dup status (Σ occurrence counts ≥ 2) flips only on affected
       // postings; only flipped postings can change an untouched doc's cut
-      val preTot = preMembers.groupBy("g").agg(sum("c").as("t0"))
-      val postTot = postMembers.groupBy("g").agg(sum("c").as("t1"))
-      val flipped = ctx.cache(preTot.join(postTot, Seq("g"), "full")
+      val preTot = sw.pre.groupBy("key").agg(sum("c").as("t0"))
+      val postTot = sw.post.groupBy("key").agg(sum("c").as("t1"))
+      val flipped = ctx.cache(preTot.join(postTot, Seq("key"), "full")
         .filter((coalesce(col("t0"), lit(0L)) >= 2) =!=
           (coalesce(col("t1"), lit(0L)) >= 2))
-        .select("g"))
+        .select("key"))
 
       val rescore = ctx.cache(touched
-        .union(flipped.join(preMembers, "g").select(col("member").as("key")))
-        .union(flipped.join(postMembers, "g").select(col("member").as("key")))
+        .union(flipped.join(sw.pre, "key").select(col("m").as("key")))
+        .union(flipped.join(sw.post, "key").select(col("m").as("key")))
         .distinct())
 
       // exact q122 rows for the re-emit docs at post state: windows from

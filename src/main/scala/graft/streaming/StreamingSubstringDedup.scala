@@ -48,8 +48,6 @@ object StreamingSubstringDedup {
       new ParquetKeyedTable(spark, s"$stateDir/$name-buckets")
 
     ViewDef(name, (pre, post, batch, ctx) => {
-      val preBktV = bucketTable.versionBefore(ctx.batchId)
-
       val touched = ctx.cache(batch(table).select("key").distinct())
 
       def windows(docs: org.apache.spark.sql.DataFrame) = docs
@@ -65,9 +63,11 @@ object StreamingSubstringDedup {
 
       val affected = oldWin.select("h").union(newWin.select("h"))
         .distinct().withColumnRenamed("h", "key")
-      val preMembers = ctx.cache(bucketTable
-        .rowsForKeysAt(preBktV, bucketSchema, affected)
-        .select(col("key").as("h"), explode(col("members")).as("doc_id")))
+      // membership update (idempotent-by-batchId)
+      val sw = IncrementalAgg.swapMembers(bucketTable, bucketSchema, affected,
+        touched, newWin.select(col("h").as("key"), col("doc_id")), ctx)
+      val preMembers = sw.pre.withColumnRenamed("key", "h")
+      val postMembers = sw.post.withColumnRenamed("key", "h")
 
       // 2. retract superset: stale entries (minus re-emitted pairs below)
       // delete as no-ops when never emitted
@@ -78,19 +78,7 @@ object StreamingSubstringDedup {
           greatest(col("doc_id"), col("partner")).as("doc_b"))
         .distinct()
 
-      // 3. membership update (idempotent-by-batchId)
-      val keptMembers = preMembers.join(
-        touched.withColumnRenamed("key", "doc_id"), Seq("doc_id"), "left_anti")
-      val postMembers = ctx.cache(keptMembers
-        .unionByName(newWin.select(col("doc_id"), col("h"))))
-      val bucketRows = postMembers.groupBy("h")
-        .agg(collect_list("doc_id").as("members"))
-        .select(col("h").as("key"), col("members"))
-      val emptiedBuckets = affected
-        .join(bucketRows.select("key"), Seq("key"), "left_anti")
-      bucketTable.merge(bucketRows, emptiedBuckets, ctx.batchId)
-
-      // 4. discover + count: distinct (pair, window) — a batch-batch pair
+      // 3. discover + count: distinct (pair, window) — a batch-batch pair
       // reaches the join from both sides, distinct collapses it — then
       // the count per pair is exactly |window intersection| (windows are
       // per-doc distinct, and a hit needs the window on both sides)

@@ -52,8 +52,8 @@ object StreamingTokenBudget {
         .contrib(post.rows(table, touched), spec, 1)
         .unionByName(IncrementalAgg.contrib(pre.rows(table, touched),
           spec, -1))
-      val (liveGroups, deadGroups) =
-        IncrementalAgg.applyDeltas(aggTable, gNames, deltas, ctx)
+      val IncrementalAgg.Folded(_, liveGroups, deadGroups) =
+        IncrementalAgg.applyDeltas(aggTable, deltas, "cnt", ctx)
 
       // domains whose bucket set changed this batch — from the merged
       // group keys ("rd|qb"; domains contain no '|' and the qb tail is

@@ -45,26 +45,18 @@ object StreamingTopTokens {
   /** Handle exposing the maintained view and its read path. */
   final class TokenCounts(spark: SparkSession, stateDir: String,
       table: String, tokens: Column) {
-    private val state = new ParquetKeyedTable(
-      spark, s"$stateDir/token_counts-state", "key", 32)
+    private val state =
+      new ParquetKeyedTable(spark, s"$stateDir/token_counts-state")
 
     val view: ViewDef = ViewDef("token_counts", (pre, post, batch, ctx) => {
       val touched = batch(table).select("key").distinct()
       def tokenCounts(rows: DataFrame, sign: Long): DataFrame =
         rows.select(explode(tokens).as("key"))
-          .groupBy("key").agg((count(lit(1)) * sign).as("d"))
+          .groupBy("key").agg((count(lit(1)) * sign).as("d_cnt"))
       val deltas = tokenCounts(post.rows(table, touched), 1L)
         .unionByName(tokenCounts(pre.rows(table, touched), -1L))
-        .groupBy("key").agg(sum("d").as("d"))
-      val preV = state.versionBefore(ctx.batchId)
-      val old = state.rowsForKeysAt(preV, stateSchema, deltas.select("key"))
-        .withColumnRenamed("cnt", "o_cnt")
-      val merged = ctx.cache(deltas.join(old, Seq("key"), "left")
-        .select(col("key"),
-          (coalesce(col("o_cnt"), lit(0L)) + col("d")).as("cnt")))
-      val live = merged.filter(col("cnt") > 0)
-      val dead = merged.filter(col("cnt") <= 0).select("key")
-      state.merge(live, dead, ctx.batchId)
+      val IncrementalAgg.Folded(_, live, dead) =
+        IncrementalAgg.applyDeltas(state, deltas, "cnt", ctx)
       (live.select(col("key").as("id"), col("key").as("token"),
         col("cnt")),
         dead.select(col("key").as("id")))

@@ -7,7 +7,8 @@ import graft.operators.Provenance
 
 /** Incremental URL-level dedup groups — the streaming form of batch
   * q147, riding [[StreamingExactDedup.maintainFpState]]'s
-  * fingerprint-agnostic ladder exactly as the canonical-dedup view
+  * fingerprint-agnostic ladder (its postings swap through
+  * [[IncrementalAgg.swapMembers]]) exactly as the canonical-dedup view
   * does: the fingerprint is the NORMALIZED synthetic URL (one code
   * path with batch — [[Provenance.syntheticUrl]] →
   * [[Provenance.normalizeUrl]], a pure function of the doc id, so a

@@ -48,32 +48,20 @@ object StreamingVocabCoverage {
     StructField("toks", ArrayType(StringType))))
 
   /** ± token occurrence-counter maintenance over (doc, tok) occurrence
-    * frames of the batch's pre/post images. Returns (tok, old_cnt,
-    * new_cnt) for every token whose count moved — zero-crossings in
+    * frames of the batch's pre/post images. Returns (key = tok, cnt,
+    * o_cnt) for every token whose count moved — zero-crossings in
     * this frame are the vocabulary-size deltas the streaming datasheet
     * consumes. Merge carries the batchId (replay-idempotent). */
-  private[streaming] def maintainTokenCounters(
-      cntTable: ParquetKeyedTable, preCV: Option[Int],
+  private[streaming] def maintainTokenCounters(cntTable: ParquetKeyedTable,
       preT: DataFrame, postT: DataFrame, ctx: BatchCtx): DataFrame = {
     val deltas = preT.groupBy("tok").agg(count(lit(1)).as("pre_n"))
       .join(postT.groupBy("tok").agg(count(lit(1)).as("post_n")),
         Seq("tok"), "full_outer")
-      .select(col("tok"),
+      .select(col("tok").as("key"),
         (coalesce(col("post_n"), lit(0L)) - coalesce(col("pre_n"), lit(0L)))
-          .as("delta"))
-      .filter(col("delta") =!= 0)
-    val cOld = cntTable.rowsForKeysAt(preCV, cntSchema,
-      deltas.select(col("tok").as("key")))
-    val cNew = ctx.cache(deltas
-      .join(cOld.withColumnRenamed("key", "tok"), Seq("tok"), "left")
-      .select(col("tok"), coalesce(col("cnt"), lit(0L)).as("old_cnt"),
-        (coalesce(col("cnt"), lit(0L)) + col("delta")).as("new_cnt")))
-    cntTable.merge(
-      cNew.filter(col("new_cnt") > 0)
-        .select(col("tok").as("key"), col("new_cnt").as("cnt")),
-      cNew.filter(col("new_cnt") <= 0).select(col("tok").as("key")),
-      ctx.batchId)
-    cNew
+          .as("d_cnt"))
+      .filter(col("d_cnt") =!= 0)
+    IncrementalAgg.applyDeltas(cntTable, deltas, "cnt", ctx).merged
   }
 
   def coverageView(
@@ -93,7 +81,6 @@ object StreamingVocabCoverage {
 
     ViewDef(name, (pre, post, batch, ctx) => {
       import spark.implicits._
-      val preCV = cntTable.versionBefore(ctx.batchId)
       val preMV = holdTable.versionBefore(ctx.batchId)
       val preHV = headTable.versionBefore(ctx.batchId)
 
@@ -107,7 +94,7 @@ object StreamingVocabCoverage {
       val postT = ctx.cache(toks(post.rows(table, touched)))
 
       // 1. occurrence counters ±
-      maintainTokenCounters(cntTable, preCV, preT, postT, ctx)
+      maintainTokenCounters(cntTable, preT, postT, ctx)
 
       // 2. sharded inverted-index maintenance: distinct (tok, doc) of
       // the touched docs move from their old shard rows to the new

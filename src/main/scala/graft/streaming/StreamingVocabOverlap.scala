@@ -66,8 +66,6 @@ object StreamingVocabOverlap {
 
     ViewDef(name, (pre, post, batch, ctx) => {
       val tokPreV = tokTable.versionBefore(ctx.batchId)
-      val nvPreV = nvTable.versionBefore(ctx.batchId)
-      val pairPreV = pairTable.versionBefore(ctx.batchId)
 
       val touched = ctx.cache(batch(table).select("key").distinct())
 
@@ -111,19 +109,10 @@ object StreamingVocabOverlap {
       val leaves = ctx.cache(preSet.except(postSet))
 
       // nv merge: ± flips per source against the pinned pre-version
-      val nvDeltas = ctx.cache(enters.select(col("source"), lit(1L).as("d"))
-        .unionByName(leaves.select(col("source"), lit(-1L).as("d")))
-        .groupBy("source").agg(sum("d").as("d")))
-      val nvOld = nvTable.rowsForKeysAt(nvPreV, nvSchema,
-        nvDeltas.select(col("source").as("key")))
-      val nvMerged = ctx.cache(nvDeltas
-        .join(nvOld.select(col("key").as("source"), col("nv")),
-          Seq("source"), "full_outer")
-        .select(col("source").as("key"),
-          (coalesce(col("nv"), lit(0L)) + coalesce(col("d"), lit(0L)))
-            .as("nv")))
-      nvTable.merge(nvMerged.filter(col("nv") > 0),
-        nvMerged.filter(col("nv") <= 0).select("key"), ctx.batchId)
+      val nvMerged = IncrementalAgg.applyDeltas(nvTable,
+        enters.select(col("source").as("key"), lit(1L).as("d_nv"))
+          .unionByName(leaves.select(col("source").as("key"),
+            lit(-1L).as("d_nv"))), "nv", ctx).merged
 
       // pair deltas per affected token: pairs(post source set) − pairs(pre
       // source set) — handles several sources flipping one token at once
@@ -133,34 +122,19 @@ object StreamingVocabOverlap {
         a.join(b, "tok").filter(col("sa") < col("sb"))
           .select(col("sa"), col("sb"), lit(sign.toLong).as("d"))
       }
-      val pairDeltas = ctx.cache(tokenPairs(postSet, 1)
+      val pairs = IncrementalAgg.applyDeltas(pairTable, tokenPairs(postSet, 1)
         .unionByName(tokenPairs(preSet, -1))
-        .groupBy("sa", "sb").agg(sum("d").as("d"))
-        .filter(col("d") =!= 0))
-      val pairKeys = pairDeltas
-        .select(Keys.pair(col("sa"), col("sb")).as("key"))
-      val pairOld = pairTable.rowsForKeysAt(pairPreV, pairSchema, pairKeys)
-      val pairMerged = ctx.cache(pairDeltas
+        .groupBy("sa", "sb").agg(sum("d").as("d_n_common"))
+        .filter(col("d_n_common") =!= 0)
         .select(Keys.pair(col("sa"), col("sb")).as("key"),
-          col("sa"), col("sb"), col("d"))
-        .join(pairOld.select(col("key"), col("source_a"),
-          col("source_b"), col("n_common")), Seq("key"), "full_outer")
-        .select(col("key"),
-          coalesce(col("sa"), col("source_a")).as("source_a"),
-          coalesce(col("sb"), col("source_b")).as("source_b"),
-          (coalesce(col("n_common"), lit(0L)) + coalesce(col("d"), lit(0L)))
-            .as("n_common")))
-      pairTable.merge(
-        pairMerged.filter(col("n_common") > 0)
-          .select("key", "source_a", "source_b", "n_common"),
-        pairMerged.filter(col("n_common") <= 0).select("key"),
-        ctx.batchId)
+          col("sa").as("source_a"), col("sb").as("source_b"),
+          col("d_n_common")), "n_common", ctx)
 
       // sink: re-emit every pair involving a flip-affected source from
       // the POST snapshots (both tables source-bounded). jaccard depends
       // on nv of BOTH endpoints, so pairs with unchanged n_common still
       // move when their source's vocabulary grows or shrinks.
-      val affectedSources = nvDeltas.select("source").distinct()
+      val affectedSources = nvMerged.select(col("key").as("source"))
       val pairsNow = pairTable.snapshotAt(pairTable.version, pairSchema)
       val nvNow = nvTable.snapshotAt(nvTable.version, nvSchema)
         .select(col("key"), col("nv"))
@@ -181,8 +155,7 @@ object StreamingVocabOverlap {
           round(col("n_common") * 1.0 /
             (col("na") + col("nb") - col("n_common")), 6).as("jaccard"))
       // retract pairs whose intersection emptied this batch
-      val deletes = pairMerged.filter(col("n_common") <= 0)
-        .select(col("key").as("id"))
+      val deletes = pairs.dead.select(col("key").as("id"))
         .join(upserts.select("id"), Seq("id"), "left_anti")
       (upserts, deletes)
     })

@@ -76,24 +76,16 @@ object StreamingWinnow {
 
       val affected = ctx.cache(oldFps.select("f").union(newFps.select("f"))
         .distinct().withColumnRenamed("f", "key"))
-      val preMembers = ctx.cache(postings.rowsForKeysAt(preV, postSchema, affected)
-        .select(col("key").as("f"), explode(col("members")).as("member")))
-
       // postings update: batch docs leave old keys, enter new ones
-      val postMembers = ctx.cache(preMembers.join(
-          touched.withColumnRenamed("key", "member"), Seq("member"), "left_anti")
-        .unionByName(newFps.select(col("f"), col("doc_id").as("member"))))
-      val rows = postMembers.groupBy("f")
-        .agg(collect_list("member").as("members"))
-        .select(col("f").as("key"), col("members"))
-      val emptied = affected.join(rows.select("key"), Seq("key"), "left_anti")
-      postings.merge(rows, emptied, ctx.batchId)
+      val sw = IncrementalAgg.swapMembers(postings, postSchema, affected,
+        touched, newFps.select(col("f").as("key"), col("doc_id").as("member")),
+        ctx)
 
       // complete re-score set: batch docs + every pre/post member of an
       // affected posting (the only docs whose pair rows can change)
       val rescore = ctx.cache(touched
-        .union(preMembers.select(col("member").as("key")))
-        .union(postMembers.select(col("member").as("key")))
+        .union(sw.pre.select(col("member").as("key")))
+        .union(sw.post.select(col("member").as("key")))
         .distinct())
 
       /** Exact q105 pair rows for the re-score docs against one state
