@@ -20,7 +20,7 @@ import org.apache.spark.storage.StorageLevel
   * The fix mirrors the streaming side's batch-scoped cache
   * (`BatchCtx.cache`, released when the batch closes): each query-
   * building method registers every persist here, and
-  * every executor of a query (Bench, BenchOne, Verify, the test gates)
+  * every executor of a query (Bench, Dev, Verify, the test gates)
   * calls `drain()` once the action completes. Frames are released
   * non-blocking, lineage intact — on a cluster nothing is lost but the
   * blocks.
@@ -140,7 +140,7 @@ object CacheScope {
     * deleting the current scope and re-setting the PARENT both reclaims
     * the files and isolates the next query — queries never share a
     * scope, so the delete can never race a later query's checkpoint
-    * writes. Callers serialize queries (Bench, BenchOne, Verify, the
+    * writes. Callers serialize queries (Bench, Dev, Verify, the
     * test gates run one query at a time per process), which is the same
     * single-thread contract the cache scope already documents. */
   def drainWithCheckpoints(spark: SparkSession): Unit = {

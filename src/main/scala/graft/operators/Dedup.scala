@@ -1672,7 +1672,7 @@ object Dedup {
     * to [[clusterPairs]] (pinned by DedupSpec equality tests).
     *
     * Measured (sf0.1, 256 pairs, max component size 4; single-query
-    * repeat harness `BenchOne`, 6 runs warm): star median 2.3 s vs
+    * repeat harness `Dev time`, 6 runs warm): star median 2.3 s vs
     * propagation 7.5 s — even on this shallow diameter-2 graph star's
     * fewer, flatter rounds beat propagation's per-round checkpoint
     * cadence, and propagation's diameter dependence is additionally

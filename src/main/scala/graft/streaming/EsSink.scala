@@ -17,11 +17,10 @@ trait EsTransport extends Serializable {
 
 /** Minimal JDK-only HTTP transport (round-robin over `hosts`, like the
   * reference's multi-host `'hosts'` option, flink-ddl.sql:107). */
-final class HttpEsTransport(
-    hosts: Seq[String],
-    connectTimeoutMs: Int = 5000,
-    readTimeoutMs: Int = 30000) extends EsTransport {
+final class HttpEsTransport(hosts: Seq[String]) extends EsTransport {
   require(hosts.nonEmpty, "at least one Elasticsearch host required")
+  private val ConnectTimeoutMs = 5000
+  private val ReadTimeoutMs = 30000
   private val next = new java.util.concurrent.atomic.AtomicInteger(0)
 
   override def post(path: String, body: String): String = {
@@ -33,8 +32,8 @@ final class HttpEsTransport(
       .asInstanceOf[java.net.HttpURLConnection]
     conn.setRequestMethod("POST")
     conn.setRequestProperty("Content-Type", "application/x-ndjson")
-    conn.setConnectTimeout(connectTimeoutMs)
-    conn.setReadTimeout(readTimeoutMs)
+    conn.setConnectTimeout(ConnectTimeoutMs)
+    conn.setReadTimeout(ReadTimeoutMs)
     conn.setDoOutput(true)
     val bytes = body.getBytes(java.nio.charset.StandardCharsets.UTF_8)
     conn.setFixedLengthStreamingMode(bytes.length)

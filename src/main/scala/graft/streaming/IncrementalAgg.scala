@@ -5,12 +5,14 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Incremental ± aggregation — the Spark-first re-expression of Flink's
-  * retractive GROUP BY (reference: flink-ddl.sql:197-227, the
-  * "要加入撤回功能" stats sinks). Instead of re-aggregating affected
-  * groups against the full materialized input per micro-batch (the r2
-  * design: correct, but O(state scan) per batch), each view keeps its own
-  * RUNNING (sum, count) per group in a bucketed [[ParquetKeyedTable]] and
-  * applies per-key deltas:
+  * retractive GROUP BY (the reference's "要加入撤回功能" stats sinks,
+  * flink-ddl.sql:197-227, whose statements themselves run through
+  * [[SqlInsert]]). Instead of re-aggregating affected groups against the
+  * full materialized input per micro-batch (O(state scan) per batch),
+  * each [[view]] — the group-aggregate streaming views (language and
+  * source mixtures, drift, data-quality rules, k-anonymity, …) — keeps
+  * its own RUNNING (sum, count) per group in a bucketed
+  * [[ParquetKeyedTable]] and applies per-key deltas:
   *
   *   delta(batch) = Σ over touched keys k:
   *       + contribution(post-state row of k)   [row entering/updated]
@@ -29,8 +31,8 @@ import org.apache.spark.sql.types._
   * changelog its own upsert materialization EMITS rather than raw inputs.
   *
   * A group whose running count reaches 0 is deleted from both the agg
-  * state and the sink — the retraction contract (a cancelled order's
-  * group disappears, flink-ddl.sql:208).
+  * state and the sink — the retraction contract (flink-ddl.sql:208: a
+  * cancelled order's group disappears).
   *
   * The module owns the two state shapes every view-owned store uses:
   *   - a ± counter store (key, attrs…, measures…), folded by
@@ -44,8 +46,8 @@ import org.apache.spark.sql.types._
   */
 object IncrementalAgg {
 
-  /** One measure set: SUM(amount) + COUNT(*) per group — the shape all
-    * the reference's stats sinks use (flink-ddl.sql:197-259). */
+  /** One measure set: SUM(amount) + COUNT(*) per group — the shape of
+    * the reference's stats sinks (flink-ddl.sql:197-259). */
   final case class GroupSpec(
       groupCols: Seq[(String, Column)], // name -> expr over a state row
       live: Column,                     // row contributes iff
@@ -180,137 +182,5 @@ object IncrementalAgg {
       val folded = applyDeltas(aggTable, deltas, "cnt", ctx)
       (toDoc(folded.live), folded.dead.select(col("key").as("id")))
     }, index)
-  }
-
-  // ——— the reference's three retractive stats sinks, incremental ———
-
-  /** `user_order_stats_view` (flink-ddl.sql:197-211): per (user, day)
-    * SUM(amount)/COUNT(*) over non-closed orders. */
-  def userOrderStats(spark: SparkSession, stateDir: String): ViewDef =
-    view(spark, stateDir, "user_order_stats_view", "orders",
-      GroupSpec(
-        Seq("g_user" -> col("user_id").cast("string"),
-          "g_day" -> date_format(col("ctime"), "yyyy-MM-dd")),
-        live = col("status") =!= "closed",
-        amount = col("amount")),
-      toDoc = m => m.select(col("key").as("id"),
-        col("g_user").as("user_id"), col("g_day").as("cday"),
-        col("amt").as("order.amount.day"), col("cnt").as("order.count.day")))
-
-  /** `order_stats_view` (flink-ddl.sql:214-227): per-day totals. */
-  def orderStats(spark: SparkSession, stateDir: String): ViewDef =
-    view(spark, stateDir, "order_stats_view", "orders",
-      GroupSpec(
-        Seq("g_day" -> date_format(col("ctime"), "yyyy-MM-dd")),
-        live = col("status") =!= "closed",
-        amount = col("amount")),
-      toDoc = m => m.select(col("key").as("id"),
-        col("amt").as("amount"), col("cnt").as("cnt")))
-
-  /** Cumulative per-user totals merged into the shared `user_view` index
-    * (flink-ddl.sql:165). */
-  def userTotals(spark: SparkSession, stateDir: String): ViewDef =
-    view(spark, stateDir, "user_totals", "orders",
-      GroupSpec(
-        Seq("g_user" -> col("user_id").cast("string")),
-        live = col("status") =!= "closed",
-        amount = col("amount")),
-      toDoc = m => m.select(col("key").as("id"),
-        col("amt").as("order.amount.total"),
-        col("cnt").as("order.count.total")),
-      index = "user_view")
-
-  /** `product_stats_view` (flink-ddl.sql:243-259): incremental agg over
-    * the JOIN order_items ⋈ non-closed orders, per product. The join
-    * changelog decomposes exactly as
-    *
-    *   ΔC = [C(postItems, postOrders) − C(preItems, postOrders)]   (1)
-    *      + [C(preItems,  postOrders) − C(preItems,  preOrders)]   (2)
-    *
-    * (1) item-side: ± touched items' pre/post rows, each contributing iff
-    *     its order is live in POST order state — order liveness comes
-    *     from bucket-pruned lookups of exactly the orders those items
-    *     reference.
-    * (2) order-side: orders whose liveness FLIPPED this batch contribute
-    *     ± all their PRE-state items. "Items of an order" resolves through
-    *     a SECONDARY PROJECTION: a bucketed [[ParquetKeyedTable]] keyed by
-    *     order_id whose rows hold the order's item keys, maintained from
-    *     the same item changelog (read-modify-write of exactly the
-    *     affected order rows, idempotent-by-batchId like every store).
-    *     A liveness flip is then two bucket-pruned lookups — order_id →
-    *     item keys → item rows — instead of an O(item-state) semi-join
-    *     scan (the r3 seam, closed): at 100 TB of item state a flip costs
-    *     the flipped orders' buckets, nothing else.
-    *
-    * Invariant: the projection at version v maps order_id → exactly the
-    * item keys whose state row at the pipeline's same batch boundary
-    * carries that order_id — it is maintained in the SAME batch as the
-    * item state merge, so pre-version reads align with pre item state.
-    */
-  def productStats(spark: SparkSession, stateDir: String): ViewDef = {
-    val aggTable =
-      new ParquetKeyedTable(spark, s"$stateDir/product_stats_view-agg")
-    val idxTable = new ParquetKeyedTable(
-      spark, s"$stateDir/product_stats_view-items-by-order")
-    val idxSchema = StructType(Seq(
-      StructField("key", StringType),
-      StructField("items", ArrayType(StringType))))
-    def asContrib(rows: DataFrame, sign: Int): DataFrame =
-      rows.filter(col("product_id").isNotNull)
-        .select(col("product_id").cast("string").as("key"),
-          col("product_id").cast("string").as("product_id"),
-          (col("amount").cast("double") * sign).as("d_amt"),
-          lit(sign.toLong).as("d_cnt"))
-    ViewDef("product_stats_view", (pre, post, batch, ctx) => {
-      val isLive = col("status") =!= "closed"
-      val preIdxV = idxTable.versionBefore(ctx.batchId)
-
-      // (1) item-side deltas, joined against POST order liveness
-      val touchedItems = ctx.cache(batch("order_items").select("key").distinct())
-      val preI = ctx.cache(pre.rows("order_items", touchedItems))
-      val postI = ctx.cache(post.rows("order_items", touchedItems))
-
-      // maintain the item-by-order projection from this batch's item
-      // transitions: touched items leave their PRE order's row, live
-      // post images enter their POST order's row (which may differ)
-      val idxAffected = preI.select(col("order_id").as("key"))
-        .unionByName(postI.select(col("order_id").as("key"))).distinct()
-      swapMembers(idxTable, idxSchema, idxAffected, touchedItems,
-        postI.select(col("order_id").as("key"), col("key").as("item_key")),
-        ctx)
-      val wantedOrders = preI.select(col("order_id").as("key"))
-        .unionByName(postI.select(col("order_id").as("key"))).distinct()
-      val livePostOrders = post.rows("orders", wantedOrders)
-        .filter(isLive).select(col("key").as("order_id"))
-      def liveItems(items: DataFrame) =
-        items.join(livePostOrders, Seq("order_id"), "left_semi")
-      val itemDeltas = asContrib(liveItems(postI), 1)
-        .unionByName(asContrib(liveItems(preI), -1))
-
-      // (2) order-liveness flips, applied to PRE item state
-      val touchedOrders = batch("orders").select("key").distinct()
-      val preLive = pre.rows("orders", touchedOrders).filter(isLive)
-        .select(col("key").as("o_key"))
-      val postLive = post.rows("orders", touchedOrders).filter(isLive)
-        .select(col("key").as("o_key"))
-      val nowLive = postLive.exceptAll(preLive)   // closed/absent -> live
-      val nowDead = preLive.exceptAll(postLive)   // live -> closed/deleted
-      // two bucket-pruned hops via the secondary projection (PRE-version
-      // index → PRE item rows), never an item-state scan
-      def itemsOf(orderKeys: DataFrame) = {
-        val refs = idxTable.rowsForKeysAt(preIdxV, idxSchema,
-          orderKeys.withColumnRenamed("o_key", "key"))
-          .select(explode(col("items")).as("key"))
-        pre.rows("order_items", refs)
-      }
-      val flipDeltas = asContrib(itemsOf(nowLive), 1)
-        .unionByName(asContrib(itemsOf(nowDead), -1))
-
-      val folded =
-        applyDeltas(aggTable, itemDeltas.unionByName(flipDeltas), "cnt", ctx)
-      (folded.live.select(col("key").as("id"),
-        col("cnt").as("quantity"), col("amt").as("amount")),
-        folded.dead.select(col("key").as("id")))
-    })
   }
 }

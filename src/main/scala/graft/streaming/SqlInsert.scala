@@ -51,10 +51,10 @@ import graft.{Engine, TableSpec}
   * not O(batch) — this is the semantic fallback that makes any statement
   * runnable, not the scale path. The carried result removes the
   * pre-batch half of that cost, not its order. The O(batch) forms in
-  * this library are hand-written per view ([[IncrementalAgg]]'s
-  * retractive aggregates, [[StreamingDedup]]); a production deployment
-  * runs those for hot statements and the generic form for the long
-  * tail, trading per-batch cost for generality exactly like
+  * this library are written per view on [[IncrementalAgg]]'s ± fold
+  * and membership swap (the streaming `Streaming*` views); the
+  * reference's own statements run here until a statement is lowered
+  * to those forms, trading per-batch cost for generality exactly like
   * periodically-refreshed materialized views in a warehouse.
   */
 object SqlInsert {

@@ -18,9 +18,8 @@ import graft.operators.Governance
   * sources × 4 cells. */
 object StreamingAgreement {
 
-  def confusionCells(spark: SparkSession, stateDir: String,
-      table: String = "documents"): ViewDef =
-    IncrementalAgg.view(spark, stateDir, "gate_agreement", table,
+  def confusionCells(spark: SparkSession, stateDir: String): ViewDef =
+    IncrementalAgg.view(spark, stateDir, "gate_agreement", "documents",
       IncrementalAgg.GroupSpec(
         Seq("g_source" -> col("source"),
           "g_a" -> Governance.raterA,

@@ -47,30 +47,34 @@ object StreamingAnn {
     transform(Similarity.signBands(v, planes), b =>
       concat_ws("|", b("band_id"), b("bh")))
 
+  private val Name = "ann_index"
+  private val Seed = 7
+
+  /** The bucket store and its hyperplanes, opened the same way by the
+    * writer ([[indexView]]) and the reader ([[search]]). */
+  private def index(spark: SparkSession, stateDir: String) = (
+    new ParquetKeyedTable(spark, s"$stateDir/$Name-buckets"),
+    Similarity.hyperplanes(Seed))
+
   /** Continuous sign-LSH index over a CDC embeddings-shaped source
     * (primary-keyed, with a vector column). Sink documents mirror the
     * bucket state: (id = "band|bh", members_csv sorted) — the index is
-    * observable from the sink like every other view. Defaults match
+    * observable from the sink like every other view. Constants match
     * batch q41 (seed 7, 4 bands × 4 bits over 16×64 hyperplanes), so the
     * maintained buckets equal a q41 recompute over current state. */
-  def indexView(
-      spark: SparkSession, stateDir: String,
-      name: String = "ann_index", table: String = "embeddings",
-      vecCol: String = "embedding", seed: Int = 7): ViewDef = {
-    val planes = Similarity.hyperplanes(seed)
-    val bucketTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-buckets")
-    ViewDef(name, (pre, post, batch, ctx) => {
-      val touched = ctx.cache(batch(table).select("key").distinct())
+  def indexView(spark: SparkSession, stateDir: String): ViewDef = {
+    val (bucketTable, planes) = index(spark, stateDir)
+    ViewDef(Name, (pre, post, batch, ctx) => {
+      val touched = ctx.cache(batch("embeddings").select("key").distinct())
 
       // buckets the batch vectors leave (pre-state image) and enter
       // (post-state image; a deleted key has no post row → leaves only)
-      val oldKeys = pre.rows(table, touched)
+      val oldKeys = pre.rows("embeddings", touched)
         .select(col("key").as("vec_key"),
-          explode(bandKeys(col(vecCol), planes)).as("bkey"))
-      val newKeys = ctx.cache(post.rows(table, touched)
+          explode(bandKeys(col("embedding"), planes)).as("bkey"))
+      val newKeys = ctx.cache(post.rows("embeddings", touched)
         .select(col("key").as("vec_key"),
-          explode(bandKeys(col(vecCol), planes)).as("bkey")))
+          explode(bandKeys(col("embedding"), planes)).as("bkey")))
 
       val affected = oldKeys.select("bkey").union(newKeys.select("bkey"))
         .distinct().withColumnRenamed("bkey", "key")
@@ -87,18 +91,13 @@ object StreamingAnn {
 
   /** Top-k search against the maintained index. `probes` is
     * (query_id: long, qv: vector); `fetchVectors` resolves a single-column
-    * `key` frame to (key, `vecCol`) rows — pass the pipeline's keyed
+    * `key` frame to (key, `embedding`) rows — pass the pipeline's keyed
     * state lookup ([[CdcPipeline.stateRows]]) so the vector fetch is
     * bucket-pruned, never a corpus scan. Output matches q41's shape:
     * (query_id, rank, neighbor_id, score), ties (score DESC, id ASC). */
-  def search(
-      spark: SparkSession, stateDir: String, probes: DataFrame,
-      fetchVectors: DataFrame => DataFrame, k: Int,
-      name: String = "ann_index", vecCol: String = "embedding",
-      seed: Int = 7): DataFrame = {
-    val planes = Similarity.hyperplanes(seed)
-    val bucketTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-buckets")
+  def search(spark: SparkSession, stateDir: String, probes: DataFrame,
+      fetchVectors: DataFrame => DataFrame, k: Int): DataFrame = {
+    val (bucketTable, planes) = index(spark, stateDir)
     val probeKeys = probes.select(col("query_id"), col("qv"),
       explode(bandKeys(col("qv"), planes)).as("key"))
     val members = bucketTable
@@ -108,7 +107,7 @@ object StreamingAnn {
       .filter(col("vec_key") =!= col("query_id").cast("string"))
       .select(col("query_id"), col("qv"), col("vec_key")).distinct()
     val vecs = fetchVectors(cands.select(col("vec_key").as("key")).distinct())
-      .select(col("key").as("vec_key"), col(vecCol).as("v"))
+      .select(col("key").as("vec_key"), col("embedding").as("v"))
     val scored = cands.join(vecs, "vec_key")
       .select(col("query_id"),
         col("vec_key").cast("long").as("neighbor_id"),

@@ -20,9 +20,8 @@ import graft.operators.AsOf
   *   1. a per-key secondary projection (one bucketed [[ParquetKeyedTable]]
   *      row per join key holding that key's live events) is read for
   *      exactly the touched keys, batch events replace their old
-  *      versions, and the updated rows merge back — the same
-  *      read-modify-write pattern as [[IncrementalAgg.productStats]]'s
-  *      items-by-order index,
+  *      versions, and the updated rows merge back — the membership swap
+  *      of [[IncrementalAgg.swapMembers]],
   *   2. attribution recomputes ONLY for the touched keys' events, by
   *      running the SAME carry-forward window operator the batch query
   *      uses over those keys' rows — incremental and batch can't drift,
@@ -42,56 +41,56 @@ object StreamingAsOf {
       StructField("ts", LongType),
       StructField("typ", StringType)))))))
 
-  /** Continuous as-of attribution over a CDC `events`-shaped source
-    * (primary-keyed; `keyCol` is the join key, `tsCol` a LONG event
-    * time). Sink documents: (id = left event id, <keyCol>, ts,
-    * attributed right id + ts, nulls when nothing precedes). */
-  def attributionView(
-      spark: SparkSession, stateDir: String,
-      name: String = "purchase_attribution", table: String = "events",
-      keyCol: String = "user_id", tsCol: String = "ts",
-      typeCol: String = "event_type", leftType: String = "purchase",
-      rightType: String = "click"): ViewDef = {
-    val byKey =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-by-key")
+  private val Name = "purchase_attribution"
+  private val LeftType = "purchase"
+  private val RightType = "click"
 
-    ViewDef(name, (pre, post, batch, ctx) => {
-      val touched = ctx.cache(batch(table).select("key").distinct())
-      val preRows = ctx.cache(pre.rows(table, touched)
-        .select(col("key"), col(keyCol), col(tsCol), col(typeCol)))
-      val postRows = ctx.cache(post.rows(table, touched)
-        .select(col("key"), col(keyCol), col(tsCol), col(typeCol)))
+  /** Continuous as-of attribution over a CDC `events`-shaped source
+    * (primary-keyed; `user_id` is the join key, `ts` a LONG event
+    * time). Sink documents: (id = left event id, user_id, ts,
+    * attributed right id + ts, nulls when nothing precedes). */
+  def attributionView(spark: SparkSession, stateDir: String): ViewDef = {
+    val byKey =
+      new ParquetKeyedTable(spark, s"$stateDir/$Name-by-key")
+
+    ViewDef(Name, (pre, post, batch, ctx) => {
+      val touched = ctx.cache(batch("events").select("key").distinct())
+      val preRows = ctx.cache(pre.rows("events", touched)
+        .select(col("key"), col("user_id"), col("ts"), col("event_type")))
+      val postRows = ctx.cache(post.rows("events", touched)
+        .select(col("key"), col("user_id"), col("ts"), col("event_type")))
 
       // 1. read-modify-write the per-key projection for touched keys:
       // resident events of those keys minus the touched event ids, plus
       // the touched events' post images
-      val touchedKeys = ctx.cache(preRows.select(col(keyCol))
-        .union(postRows.select(col(keyCol)))
-        .distinct().filter(col(keyCol).isNotNull)
-        .select(col(keyCol).cast("string").as("key")))
+      val touchedKeys = ctx.cache(preRows.select(col("user_id"))
+        .union(postRows.select(col("user_id")))
+        .distinct().filter(col("user_id").isNotNull)
+        .select(col("user_id").cast("string").as("key")))
 
       val allEvents = IncrementalAgg.swapMembers(byKey, idxSchema,
         touchedKeys, touched, postRows
-          .filter(col(typeCol).isin(leftType, rightType))
-          .select(col(keyCol).cast("string").as("key"),
-            col("key").as("id"), col(tsCol).cast("long").as("ts"),
-            col(typeCol).as("typ")), ctx).post
+          .filter(col("event_type").isin(LeftType, RightType))
+          .select(col("user_id").cast("string").as("key"),
+            col("key").as("id"), col("ts").cast("long").as("ts"),
+            col("event_type").as("typ")), ctx).post
 
       // 2. re-attribute every left event of the touched keys with the
       // SAME operator the batch query uses
-      val lefts = allEvents.filter(col("typ") === leftType)
+      val lefts = allEvents.filter(col("typ") === LeftType)
         .select(col("key").as("jk"), col("id").as("left_id"), col("ts"))
-      val rights = allEvents.filter(col("typ") === rightType)
+      val rights = allEvents.filter(col("typ") === RightType)
         .select(col("key").as("jk"), col("id"), col("ts"))
       val attributed = AsOf.asofBackward(lefts, rights, Seq("jk"),
         "ts", "ts", Seq("id" -> "right_id", "ts" -> "right_ts"))
       val upserts = attributed.select(
-        col("left_id").as("id"), col("jk").as(keyCol), col("ts"),
+        col("left_id").as("id"), col("jk").as("user_id"), col("ts"),
         col("right_id"), col("right_ts"))
 
       // 3. left events that stopped being left events retract
-      val deletes = preRows.filter(col(typeCol) === leftType).select("key")
-        .join(postRows.filter(col(typeCol) === leftType).select("key"),
+      val deletes = preRows.filter(col("event_type") === LeftType)
+        .select("key")
+        .join(postRows.filter(col("event_type") === LeftType).select("key"),
           Seq("key"), "left_anti")
         .select(col("key").as("id"))
       (upserts, deletes)

@@ -51,29 +51,29 @@ object StreamingAucMonitor {
       (acc, b) => acc + coalesce(element_at(wMap, b), lit(0.0))), 6)
   }
 
+  private val Name = "auc_monitor"
+
   /** Continuous AUC view over a CDC `documents`-shaped source. Sink:
     * one document id="auc" with (n_pos, n_neg, auc, gini). `weights`:
     * the frozen per-bucket log-odds. */
-  def aucView(
-      spark: SparkSession, stateDir: String, weights: Map[Long, Double],
-      name: String = "auc_monitor", table: String = "documents",
-      textCol: String = "text"): ViewDef = {
+  def aucView(spark: SparkSession, stateDir: String,
+      weights: Map[Long, Double]): ViewDef = {
     val cntTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-cnt")
+      new ParquetKeyedTable(spark, s"$stateDir/$Name-cnt")
 
-    ViewDef(name, (pre, post, batch, ctx) => {
+    ViewDef(Name, (pre, post, batch, ctx) => {
       import spark.implicits._
-      val touched = ctx.cache(batch(table).select("key").distinct())
+      val touched = ctx.cache(batch("documents").select("key").distinct())
 
       def cells(rows: DataFrame): DataFrame = rows.select(
-        scoreExpr(col(textCol), weights).as("score"),
-        (TextAnalysis.qualityScore(col(textCol)) >= 0.5).as("hi"))
+        scoreExpr(col("text"), weights).as("score"),
+        (TextAnalysis.qualityScore(col("text")) >= 0.5).as("hi"))
 
       // ± per (score) cell: docs entering/leaving/changing score or label
-      val deltas = cells(post.rows(table, touched))
+      val deltas = cells(post.rows("documents", touched))
         .select(col("score"), lit(1L).as("d_cnt"),
           when(col("hi"), 1L).otherwise(0L).as("d_pos"))
-        .unionByName(cells(pre.rows(table, touched))
+        .unionByName(cells(pre.rows("documents", touched))
           .select(col("score"), lit(-1L).as("d_cnt"),
             when(col("hi"), -1L).otherwise(0L).as("d_pos")))
         .groupBy("score")

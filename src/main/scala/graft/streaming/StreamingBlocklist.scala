@@ -16,7 +16,7 @@ object StreamingBlocklist {
 
   /** Sink documents: (id = doc key, n_tokens, n_blocked, matched_terms,
     * keep). */
-  def blocklistView(name: String = "blocklist_gate",
-      table: String = "documents"): ViewDef =
-    ViewDef.perRow(name, table)(Curation.blocklistReport(_, col("key").as("id")))
+  def blocklistView(): ViewDef =
+    ViewDef.perRow("blocklist_gate", "documents")(
+      Curation.blocklistReport(_, col("key").as("id")))
 }

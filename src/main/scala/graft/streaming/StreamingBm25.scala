@@ -29,7 +29,7 @@ import org.apache.spark.sql.types._
   *
   * 100 TB posture: postings are sharded `term|shard` rows (shard =
   * portable hash of the doc key), so a stopword-frequency query term
-  * splits across `nShards` bounded rows instead of one doc-frequency-
+  * splits across `NShards` bounded rows instead of one doc-frequency-
   * sized list, and search reads an enumerable |terms| × nShards key set
   * — a pruned point-lookup fan-out, never an index scan. Per-batch work
   * tracks |B|; nothing re-reads resident documents. The fixed-vocabulary
@@ -54,30 +54,34 @@ object StreamingBm25 {
     StructField("n_docs", LongType),
     StructField("total_tok", LongType)))
 
-  /** q34's portable md5-prefix hash, mod `n` — deterministic shard of a
-    * doc key, identical on replay. */
-  private def shardOf(key: org.apache.spark.sql.Column, n: Int) =
-    pmod(conv(substring(md5(key), 1, 8), 16, 10).cast("long"), lit(n.toLong))
+  private val Name = "bm25_index"
+  private val NShards = 4
+
+  /** q34's portable md5-prefix hash, mod [[NShards]] — deterministic
+    * shard of a doc key, identical on replay. */
+  private def shardOf(key: org.apache.spark.sql.Column) =
+    pmod(conv(substring(md5(key), 1, 8), 16, 10).cast("long"),
+      lit(NShards.toLong))
+
+  /** The index's stores (postings, doc lengths, corpus stats), opened
+    * the same way by the writers ([[indexView]], [[backfill]]) and the
+    * readers ([[search]], [[searchMany]], [[StreamingHybrid.search]]). */
+  private def stores(spark: SparkSession, stateDir: String) = (
+    new ParquetKeyedTable(spark, s"$stateDir/$Name-postings"),
+    new ParquetKeyedTable(spark, s"$stateDir/$Name-dl"),
+    new ParquetKeyedTable(spark, s"$stateDir/$Name-stats"))
 
   /** Continuous index view. Sink documents mirror the state (observable
     * like every other view): one doc per live posting row
     * (id = "term|shard", postings_csv sorted "doc:tf"), plus a
     * "corpus|stats" doc with (n_docs, total_tok). Defaults match batch
     * q60's query terms. */
-  def indexView(
-      spark: SparkSession, stateDir: String,
-      vocab: Seq[String] = Seq("data", "vector", "window"),
-      name: String = "bm25_index", table: String = "documents",
-      textCol: String = "text", nShards: Int = 4): ViewDef = {
-    val postTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-postings")
-    val dlTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-dl")
-    val statsTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-stats")
+  def indexView(spark: SparkSession, stateDir: String,
+      vocab: Seq[String] = Seq("data", "vector", "window")): ViewDef = {
+    val (postTable, dlTable, statsTable) = stores(spark, stateDir)
 
-    ViewDef(name, (pre, post, batch, ctx) => {
-      val touched = ctx.cache(batch(table).select("key").distinct())
+    ViewDef(Name, (pre, post, batch, ctx) => {
+      val touched = ctx.cache(batch("documents").select("key").distinct())
       // a batch that touches no documents must not commit anything —
       // without this, the unconditional stats upsert below would write a
       // new (identical) version per batch on a multi-source pipeline
@@ -86,7 +90,7 @@ object StreamingBm25 {
           lit("").as("postings_csv"))
         (none, none.select("id"))
       } else maintainBatch(spark, postTable, dlTable, statsTable, vocab,
-        table, textCol, nShards, pre, post, touched, ctx)
+        pre, post, touched, ctx)
     })
   }
 
@@ -95,16 +99,15 @@ object StreamingBm25 {
   private def maintainBatch(
       spark: SparkSession, postTable: ParquetKeyedTable,
       dlTable: ParquetKeyedTable, statsTable: ParquetKeyedTable,
-      vocab: Seq[String], table: String, textCol: String, nShards: Int,
-      pre: StateAccess, post: StateAccess, touched: DataFrame,
-      ctx: BatchCtx): (DataFrame, DataFrame) = {
+      vocab: Seq[String], pre: StateAccess, post: StateAccess,
+      touched: DataFrame, ctx: BatchCtx): (DataFrame, DataFrame) = {
       val preDlV = dlTable.versionBefore(ctx.batchId)
       val preStatsV = statsTable.versionBefore(ctx.batchId)
 
       // 1. tokenize only B's live post images
-      val docs = ctx.cache(post.rows(table, touched)
+      val docs = ctx.cache(post.rows("documents", touched)
         .select(col("key").as("doc"),
-          split(trim(col(textCol)), "\\s+").as("toks")))
+          split(trim(col("text")), "\\s+").as("toks")))
       val newDl = ctx.cache(
         docs.select(col("doc"), size(col("toks")).cast("long").as("dl")))
       val vocabDf = broadcast(
@@ -117,13 +120,13 @@ object StreamingBm25 {
       // 2. affected posting rows: every vocab term × the shards B's docs
       // hash to — covers old AND new contributions of every touched doc
       // (a doc's shard never changes), ≤ |vocab| × |B| keys
-      val shards = touched.select(shardOf(col("key"), nShards).as("shard"))
+      val shards = touched.select(shardOf(col("key")).as("shard"))
         .distinct()
       val affected = shards.crossJoin(vocabDf)
         .select(concat_ws("|", col("term"), col("shard")).as("key"))
       val sw = IncrementalAgg.swapMembers(postTable, postSchema, affected,
         touched, newTf.select(
-          concat_ws("|", col("term"), shardOf(col("doc"), nShards)).as("key"),
+          concat_ws("|", col("term"), shardOf(col("doc"))).as("key"),
           col("doc"), col("tf")), ctx)
 
       // 3. doc lengths (± source of the corpus-stat deltas) + stats
@@ -173,24 +176,21 @@ object StreamingBm25 {
     * outside any batch, so no batchId: a rerun recomputes the same rows
     * deterministically (value-idempotent). dl and corpus stats need no
     * backfill — they are vocabulary-independent. */
-  def backfill(
-      spark: SparkSession, stateDir: String, term: String, docs: DataFrame,
-      name: String = "bm25_index", textCol: String = "text",
-      nShards: Int = 4): Unit = {
-    val postTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-postings")
+  def backfill(spark: SparkSession, stateDir: String, term: String,
+      docs: DataFrame): Unit = {
+    val (postTable, _, _) = stores(spark, stateDir)
     val tf = docs
       .select(col("key").as("doc"),
-        explode(split(trim(col(textCol)), "\\s+")).as("t"))
+        explode(split(trim(col("text")), "\\s+")).as("t"))
       .filter(col("t") === term)
       .groupBy("doc").agg(count(lit(1)).as("tf"))
     val rows = tf
-      .select(concat_ws("|", lit(term), shardOf(col("doc"), nShards)).as("key"),
+      .select(concat_ws("|", lit(term), shardOf(col("doc"))).as("key"),
         col("doc"), col("tf"))
       .groupBy("key")
       .agg(collect_list(struct(col("doc"), col("tf"))).as("postings"))
     val allKeys = spark.createDataFrame(
-      (0 until nShards).map(s => Tuple1(s"$term|$s"))).toDF("key")
+      (0 until NShards).map(s => Tuple1(s"$term|$s"))).toDF("key")
     val emptied = allKeys.join(rows.select("key"), Seq("key"), "left_anti")
     postTable.merge(rows, emptied, None)
   }
@@ -201,19 +201,12 @@ object StreamingBm25 {
     * `terms`. Reads |terms| × nShards posting rows (pruned point
     * lookups), the 1-row stats, and the candidate docs' lengths (pruned)
     * — cost tracks postings of the query terms, never corpus size. */
-  def search(
-      spark: SparkSession, stateDir: String,
-      terms: Seq[String] = Seq("data", "vector", "window"),
-      name: String = "bm25_index", nShards: Int = 4): DataFrame = {
-    val postTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-postings")
-    val dlTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-dl")
-    val statsTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-stats")
+  def search(spark: SparkSession, stateDir: String,
+      terms: Seq[String] = Seq("data", "vector", "window")): DataFrame = {
+    val (postTable, dlTable, statsTable) = stores(spark, stateDir)
 
     val keys = spark.createDataFrame(
-      for (t <- terms; s <- 0 until nShards) yield (s"$t|$s", t))
+      for (t <- terms; s <- 0 until NShards) yield (s"$t|$s", t))
       .toDF("key", "term")
     val postings = postTable
       .rowsForKeys(postSchema, keys.select("key"))
@@ -251,20 +244,13 @@ object StreamingBm25 {
     * cannot move with reducer assignment. Returns
     * (query_id, doc, bm25); df is each term's GLOBAL document
     * frequency, identical to batch q167's sparse ranker. */
-  def searchMany(
-      spark: SparkSession, stateDir: String,
-      queries: Seq[(Long, Seq[String])],
-      name: String = "bm25_index", nShards: Int = 4): DataFrame = {
-    val postTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-postings")
-    val dlTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-dl")
-    val statsTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-stats")
+  def searchMany(spark: SparkSession, stateDir: String,
+      queries: Seq[(Long, Seq[String])]): DataFrame = {
+    val (postTable, dlTable, statsTable) = stores(spark, stateDir)
 
     val allTerms = queries.flatMap(_._2).distinct
     val keys = spark.createDataFrame(
-      for (t <- allTerms; sh <- 0 until nShards) yield (s"$t|$sh", t))
+      for (t <- allTerms; sh <- 0 until NShards) yield (s"$t|$sh", t))
       .toDF("key", "term")
     val postings = postTable
       .rowsForKeys(postSchema, keys.select("key"))

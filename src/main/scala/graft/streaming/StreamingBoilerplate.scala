@@ -61,39 +61,38 @@ object StreamingBoilerplate {
   private def srcOfKey(key: Column): Column =
     decode(unbase64(substring_index(key, "|", 1)), "UTF-8")
 
+  private val Name = "boilerplate"
+  private val Threshold = 0.9
+
   /** Continuous boilerplate view over a CDC `documents`-shaped source
     * with (doc key, source, text) rows. Sink documents:
     * (id, n_tokens, n_boiler, content_ratio). */
-  def boilerplateView(
-      spark: SparkSession, stateDir: String,
-      name: String = "boilerplate", table: String = "documents",
-      textCol: String = "text", sourceCol: String = "source",
-      threshold: Double = 0.9): ViewDef = {
+  def boilerplateView(spark: SparkSession, stateDir: String): ViewDef = {
     val postings =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-postings")
+      new ParquetKeyedTable(spark, s"$stateDir/$Name-postings")
     val ndTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-ndocs")
+      new ParquetKeyedTable(spark, s"$stateDir/$Name-ndocs")
 
-    ViewDef(name, (pre, post, batch, ctx) => {
+    ViewDef(Name, (pre, post, batch, ctx) => {
       val prePV = postings.versionBefore(ctx.batchId)
 
-      val touched = ctx.cache(batch(table).select("key").distinct())
+      val touched = ctx.cache(batch("documents").select("key").distinct())
 
       // distinct (source|token, doc) membership of the touched docs,
       // before and after
       def membership(docs: DataFrame): DataFrame = docs
-        .select(col("key").as("doc"), col(sourceCol).as("src"),
-          explode(array_distinct(tokens(col(textCol)))).as("tok"))
+        .select(col("key").as("doc"), col("source").as("src"),
+          explode(array_distinct(tokens(col("text")))).as("tok"))
         .select(col("doc"), col("src"),
           stKey(col("src"), col("tok")).as("st"))
-      val preM = ctx.cache(membership(pre.rows(table, touched)))
-      val postM = ctx.cache(membership(post.rows(table, touched)))
+      val preM = ctx.cache(membership(pre.rows("documents", touched)))
+      val postM = ctx.cache(membership(post.rows("documents", touched)))
 
       // ndocs ± per source (an update may move a doc between sources)
-      val preSrc = pre.rows(table, touched)
-        .select(col("key").as("doc"), col(sourceCol).as("src"))
-      val postSrc = post.rows(table, touched)
-        .select(col("key").as("doc"), col(sourceCol).as("src"))
+      val preSrc = pre.rows("documents", touched)
+        .select(col("key").as("doc"), col("source").as("src"))
+      val postSrc = post.rows("documents", touched)
+        .select(col("key").as("doc"), col("source").as("src"))
       val ndDeltas = preSrc.groupBy("src").agg(count(lit(1)).as("pre_n"))
         .join(postSrc.groupBy("src").agg(count(lit(1)).as("post_n")),
           Seq("src"), "full_outer")
@@ -129,9 +128,9 @@ object StreamingBoilerplate {
         .join(broadcast(ndNew), Seq("src"), "left")
         .select(col("st"),
           (coalesce(col("old_df"), lit(0L)) >
-            lit(threshold) * coalesce(col("old_nd"), lit(0L))).as("was"),
+            lit(Threshold) * coalesce(col("old_nd"), lit(0L))).as("was"),
           (coalesce(col("new_df"), lit(0L)) >
-            lit(threshold) * coalesce(col("new_nd"), lit(0L))).as("is"))
+            lit(Threshold) * coalesce(col("new_nd"), lit(0L))).as("is"))
         .filter(col("was") =!= col("is"))
         .select("st")
 
@@ -144,9 +143,9 @@ object StreamingBoilerplate {
       // per-doc counts against the CURRENT vocabulary: token instances
       // from post text, membership from the post df/ndocs state (pruned
       // by the docs' own token keys)
-      val docToks = ctx.cache(post.rows(table, affectedDocs)
-        .select(col("key"), col(sourceCol).as("src"),
-          explode(tokens(col(textCol))).as("tok"))
+      val docToks = ctx.cache(post.rows("documents", affectedDocs)
+        .select(col("key"), col("source").as("src"),
+          explode(tokens(col("text"))).as("tok"))
         .select(col("key"), col("src"), col("tok"),
           stKey(col("src"), col("tok")).as("st")))
       val liveDf = postings.rowsForKeys(postSchema,
@@ -162,7 +161,7 @@ object StreamingBoilerplate {
         .join(broadcast(liveNd), Seq("src"), "left")
         .withColumn("boiler",
           coalesce(col("df"), lit(0L)) >
-            lit(threshold) * coalesce(col("nd"), lit(0L)))
+            lit(Threshold) * coalesce(col("nd"), lit(0L)))
         .groupBy(col("key").as("id"))
         .agg(count(lit(1)).as("n_tokens"),
           count(when(col("boiler"), 1)).as("n_boiler"),

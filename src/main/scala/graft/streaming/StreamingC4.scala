@@ -16,8 +16,8 @@ object StreamingC4 {
   /** Sink documents: (id = doc key, n_lines, n_kept, page_keep,
     * cleaned). `docIdNum` drives the plant schedule — doc keys must be
     * numeric strings (the batch fixture's doc_id). */
-  def c4View(name: String = "c4_gate", table: String = "documents"): ViewDef =
-    ViewDef.perRow(name, table) { live =>
+  def c4View(): ViewDef =
+    ViewDef.perRow("c4_gate", "documents") { live =>
       Curation.c4Report(live, col("key").as("id"), col("key").cast("long"))
     }
 }

@@ -33,17 +33,15 @@ object StreamingCalibration {
 
   /** Sink documents: (id = bin key, logit_bin, n, n_pos, pos_rate) —
     * batch q152's exact shape over the frozen scorer. */
-  def calibrationView(
-      spark: SparkSession, stateDir: String, weights: Map[Long, Double],
-      name: String = "calibration", table: String = "documents",
-      textCol: String = "text"): ViewDef =
-    IncrementalAgg.view(spark, stateDir, name, table,
+  def calibrationView(spark: SparkSession, stateDir: String,
+      weights: Map[Long, Double]): ViewDef =
+    IncrementalAgg.view(spark, stateDir, "calibration", "documents",
       IncrementalAgg.GroupSpec(
         Seq("g_bin" ->
-          floor(StreamingAucMonitor.scoreExpr(col(textCol), weights))
+          floor(StreamingAucMonitor.scoreExpr(col("text"), weights))
             .cast("long").cast("string")),
         live = lit(true),
-        amount = when(TextAnalysis.qualityScore(col(textCol)) >= 0.5,
+        amount = when(TextAnalysis.qualityScore(col("text")) >= 0.5,
           lit(1.0)).otherwise(lit(0.0))),
       toDoc = m => m.select(col("key").as("id"),
         col("g_bin").cast("long").as("logit_bin"),

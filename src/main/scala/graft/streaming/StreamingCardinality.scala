@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -35,19 +35,19 @@ object StreamingCardinality {
   private val stateSchema = StructType(Seq(
     StructField("key", StringType), StructField("sketch", BinaryType)))
 
-  /** Per-language distinct-token sketch view over `table`'s changelog.
-    * `group` classifies a state row (default: the q31 language scorer);
-    * `tokens` extracts the counted items. */
-  def vocabSketch(spark: SparkSession, stateDir: String,
-      table: String = "documents",
-      group: Column = TextAnalysis.predLang(col("text")),
-      tokens: Column = split(trim(col("text")), "\\s+")): ViewDef = {
+  private val Group = TextAnalysis.predLang(col("text"))
+  private val Tokens = split(trim(col("text")), "\\s+")
+
+  /** Per-language distinct-token sketch view over the `documents`
+    * changelog: `Group` classifies a state row (the q31 language
+    * scorer), `Tokens` extracts the counted items. */
+  def vocabSketch(spark: SparkSession, stateDir: String): ViewDef = {
     val state = new ParquetKeyedTable(
       spark, s"$stateDir/vocab_sketch-state", "key", 8)
     ViewDef("vocab_sketch", (pre, post, batch, ctx) => {
-      val touched = batch(table).select("key").distinct()
-      val partials = post.rows(table, touched)
-        .select(group.as("key"), explode(tokens).as("tok"))
+      val touched = batch("documents").select("key").distinct()
+      val partials = post.rows("documents", touched)
+        .select(Group.as("key"), explode(Tokens).as("tok"))
         .groupBy("key")
         .agg(hll_sketch_agg(col("tok")).as("d_sketch"))
       val preV = state.versionBefore(ctx.batchId)

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -46,17 +46,23 @@ object StreamingChunkDedup {
 
   /** Continuous shared-chunk view over a CDC `documents`-shaped source.
     * Sink documents: (id = chunk_hash, n_docs, n_occ, first_doc) —
-    * batch q157's shape. `chunker` maps a text Column to its array of
-    * chunk digests: the default is q157's fixed 32-token/stride-24
-    * windows; pass [[Curation.cdcChunkHashes]] for q169's
-    * content-defined boundaries (the retraction machinery is chunking-
+    * batch q157's shape, over q157's fixed 32-token/stride-24 windows. */
+  def sharedChunkView(spark: SparkSession, stateDir: String): ViewDef =
+    chunkView(spark, stateDir, "chunk_dedup", Curation.chunkHashes)
+
+  /** Batch q169's content-defined chunking, continuous: the same
+    * retraction machinery with [[Curation.cdcChunkHashes]] as the
+    * digest rule — shared-chunk tracking that survives insertions,
+    * since an edited doc's UNTOUCHED chunks keep their digests and
+    * only the edited chunk's state entry changes. */
+  def cdcChunkView(spark: SparkSession, stateDir: String): ViewDef =
+    chunkView(spark, stateDir, "cdc_chunk_dedup", Curation.cdcChunkHashes)
+
+  /** The shared-chunk view under `chunker`, which maps a text Column to
+    * its array of chunk digests (the retraction machinery is chunking-
     * rule-agnostic — only the digest list changes). */
-  def sharedChunkView(
-      spark: SparkSession, stateDir: String,
-      name: String = "chunk_dedup", table: String = "documents",
-      textCol: String = "text",
-      chunker: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
-        Curation.chunkHashes): ViewDef = {
+  private def chunkView(spark: SparkSession, stateDir: String, name: String,
+      chunker: Column => Column): ViewDef = {
     val docTable =
       new ParquetKeyedTable(spark, s"$stateDir/$name-docs")
     val chunkTable =
@@ -65,11 +71,11 @@ object StreamingChunkDedup {
     ViewDef(name, (pre, post, batch, ctx) => {
       val preDocV = docTable.versionBefore(ctx.batchId)
 
-      val touched = ctx.cache(batch(table).select("key").distinct())
+      val touched = ctx.cache(batch("documents").select("key").distinct())
 
       // 1. chunk ONLY the batch docs, through the batch query's path
-      val newLists = ctx.cache(post.rows(table, touched)
-        .select(col("key"), chunker(col(textCol)).as("hashes")))
+      val newLists = ctx.cache(post.rows("documents", touched)
+        .select(col("key"), chunker(col("text")).as("hashes")))
       val newContribs = newLists
         .select(col("key").as("d"), explode(col("hashes")).as("h"))
         .groupBy("d", "h").agg(count(lit(1)).cast("int").as("c"))
@@ -101,16 +107,4 @@ object StreamingChunkDedup {
       (upserts, deletes)
     })
   }
-
-  /** Batch q169's content-defined chunking, continuous: the same
-    * retraction machinery with [[Curation.cdcChunkHashes]] as the
-    * digest rule — shared-chunk tracking that survives insertions,
-    * since an edited doc's UNTOUCHED chunks keep their digests and
-    * only the edited chunk's state entry changes. */
-  def cdcChunkView(
-      spark: SparkSession, stateDir: String,
-      name: String = "cdc_chunk_dedup", table: String = "documents",
-      textCol: String = "text"): ViewDef =
-    sharedChunkView(spark, stateDir, name, table, textCol,
-      chunker = Curation.cdcChunkHashes)
 }

@@ -27,13 +27,11 @@ import graft.operators.KMeans
 object StreamingClusterMonitor {
 
   /** Sink documents: (id = cluster, cluster, n_vecs, mean_dist). */
-  def clusterStatsView(
-      spark: SparkSession, stateDir: String, model: KMeans.Model,
-      name: String = "cluster_stats", table: String = "embeddings",
-      vecCol: String = "embedding"): ViewDef = {
+  def clusterStatsView(spark: SparkSession, stateDir: String,
+      model: KMeans.Model): ViewDef = {
     val (cluster, dist2) = KMeans.assignExprs(
-      col(vecCol).cast(ArrayType(DoubleType)), model.centroids)
-    IncrementalAgg.view(spark, stateDir, name, table,
+      col("embedding").cast(ArrayType(DoubleType)), model.centroids)
+    IncrementalAgg.view(spark, stateDir, "cluster_stats", "embeddings",
       IncrementalAgg.GroupSpec(
         Seq("g_cluster" -> cluster.cast("string")),
         live = lit(true),

@@ -41,14 +41,13 @@ object StreamingCms {
 
   /** Sink documents: (id = cell index "0".."1023", r, b, cnt); a cell
     * whose counter returns to 0 is deleted from sink and state. */
-  def cmsView(spark: SparkSession, stateDir: String,
-      table: String = "documents", textCol: String = "text"): ViewDef = {
+  def cmsView(spark: SparkSession, stateDir: String): ViewDef = {
     val state = new ParquetKeyedTable(
       spark, s"$stateDir/cms-state", "key", 8)
     ViewDef("cms_sketch", (pre, post, batch, ctx) => {
-      val touched = batch(table).select("key").distinct()
-      val delta = cellCounts(post.rows(table, touched), textCol, 1)
-        .unionAll(cellCounts(pre.rows(table, touched), textCol, -1))
+      val touched = batch("documents").select("key").distinct()
+      val delta = cellCounts(post.rows("documents", touched), "text", 1)
+        .unionAll(cellCounts(pre.rows("documents", touched), "text", -1))
         .groupBy("cell").agg(sum("d").as("d_cnt"))
         .filter(col("d_cnt") =!= 0)
         .select(col("cell").cast("string").as("key"), col("d_cnt"))

@@ -68,33 +68,33 @@ object StreamingContainment {
       .select("doc_id", "f")
   }
 
+  private val Name = "containment_pairs"
+  private val Theta = 0.9
+  private val ShingleN = 3
+
   /** Continuous containment-pairs view over a CDC `documents`-shaped
     * source. Sink documents: (id = "a|b", doc_a, doc_b, containment),
-    * directed. Defaults match batch q83: word 3-shingles, θ = 0.9. */
-  def containmentView(
-      spark: SparkSession, stateDir: String,
-      name: String = "containment_pairs", table: String = "documents",
-      textCol: String = "text", theta: Double = 0.9,
-      shingleN: Int = 3): ViewDef = {
+    * directed. Constants match batch q83: word 3-shingles, θ = 0.9. */
+  def containmentView(spark: SparkSession, stateDir: String): ViewDef = {
     val fullPost =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-full")
+      new ParquetKeyedTable(spark, s"$stateDir/$Name-full")
     val prefPost =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-prefix")
+      new ParquetKeyedTable(spark, s"$stateDir/$Name-prefix")
 
-    ViewDef(name, (pre, post, batch, ctx) => {
+    ViewDef(Name, (pre, post, batch, ctx) => {
       val prefPreV = prefPost.versionBefore(ctx.batchId)
 
-      val touched = ctx.cache(batch(table).select("key").distinct())
+      val touched = ctx.cache(batch("documents").select("key").distinct())
 
       def feats(rows: DataFrame): DataFrame = rows
         .select(col("key").as("doc_id"),
-          explode(Dedup.shingles(col(textCol), shingleN)).as("f"))
+          explode(Dedup.shingles(col("text"), ShingleN)).as("f"))
 
       // old/new feature sets of the batch docs only
-      val oldFeats = ctx.cache(feats(pre.rows(table, touched)))
-      val newFeats = ctx.cache(feats(post.rows(table, touched)))
-      val oldPrefix = prefixOf(oldFeats, theta)
-      val newPrefix = ctx.cache(prefixOf(newFeats, theta))
+      val oldFeats = ctx.cache(feats(pre.rows("documents", touched)))
+      val newFeats = ctx.cache(feats(post.rows("documents", touched)))
+      val oldPrefix = prefixOf(oldFeats, Theta)
+      val newPrefix = ctx.cache(prefixOf(newFeats, Theta))
 
       // postings of every affected key (pruned lookups); full postings:
       // batch docs leave their old keys, enter their new ones
@@ -158,9 +158,9 @@ object StreamingContainment {
       // exact verify over the candidate docs' texts (pruned state reads)
       val vIds = candidates.select(col("doc_a").as("key"))
         .union(candidates.select(col("doc_b").as("key"))).distinct()
-      val vExploded = feats(post.rows(table, vIds))
+      val vExploded = feats(post.rows("documents", vIds))
       val verified = ctx.cache(Dedup
-        .verifyContainment(candidates, vExploded, theta))
+        .verifyContainment(candidates, vExploded, Theta))
 
       val upserts = verified.select(
         Keys.pair(col("doc_a"), col("doc_b")).as("id"),

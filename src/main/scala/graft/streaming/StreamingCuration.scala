@@ -75,18 +75,18 @@ object StreamingCuration {
       newLabels: DataFrame, labelDiff: DataFrame)
 
   /** Steps 1–2 of [[curatedView]]: pair-state maintenance + star
-    * re-contraction + label diff. All merges carry the batchId
-    * (replay-idempotent); `newLabels` is persisted and deferred. */
+    * re-contraction + label diff. `touched`: the batch's distinct
+    * `documents` keys, already persisted by the caller. All merges carry
+    * the batchId (replay-idempotent); `newLabels` is persisted and
+    * deferred. */
   private[streaming] def maintainClusterState(
       sigTable: ParquetKeyedTable, bucketTable: ParquetKeyedTable,
       pairTable: ParquetKeyedTable, labelTable: ParquetKeyedTable,
-      post: StateAccess, batch: Map[String, DataFrame], ctx: BatchCtx,
-      table: String, textCol: String, threshold: Double,
-      bandRows: Int, nBands: Int, shingleN: Int): ClusterState = {
+      post: StateAccess, touched: DataFrame,
+      ctx: BatchCtx): ClusterState = {
     // 1. pair maintenance (shared machinery with the near-dup view)
     val delta = StreamingDedup.maintainPairState(
-      sigTable, bucketTable, post, batch, ctx,
-      table, textCol, threshold, bandRows, nBands, shingleN)
+      sigTable, bucketTable, post, touched, ctx)
     val pairUpserts = delta.verified.select(
       Keys.pair(col("doc_a"), col("doc_b")).as("key"),
       col("doc_a"), col("doc_b"))
@@ -135,8 +135,7 @@ object StreamingCuration {
     * `ctx` — , loser keys). */
   private[streaming] def survivorLosers(
       policy: SurvivorPolicy, newLabels: DataFrame, affected0: DataFrame,
-      post: StateAccess, table: String, textCol: String,
-      ctx: BatchCtx): (DataFrame, DataFrame) = {
+      post: StateAccess, ctx: BatchCtx): (DataFrame, DataFrame) = {
     policy match {
       case SurvivorPolicy.MinId =>
         val a = ctx.cache(affected0)
@@ -149,9 +148,9 @@ object StreamingCuration {
         val touchedMembers = ctx.cache(newLabels
           .join(touchedClusters, Seq("cluster_id"), "left_semi"))
         val a = ctx.cache(affected0.union(touchedMembers.select("key")).distinct())
-        val q = post.rows(table, touchedMembers.select("key"))
+        val q = post.rows("documents", touchedMembers.select("key"))
           .select(col("key"),
-            TextAnalysis.qualityScore(col(textCol)).as("quality"))
+            TextAnalysis.qualityScore(col("text")).as("quality"))
         val surv = touchedMembers.join(q, "key")
           .groupBy("cluster_id")
           .agg(max(struct(col("quality").as("q"),
@@ -163,49 +162,46 @@ object StreamingCuration {
     }
   }
 
+  private val Name = "curated_corpus"
+  private val MinQuality = 0.5
+
   /** Continuous curated-corpus view over a CDC `documents`-shaped source.
-    * Sink documents: (id = doc_id, split, quality). Defaults match batch
-    * q39: word 3-shingles, 32×2 banding, jaccard ≥ 0.8, quality ≥ 0.5,
+    * Sink documents: (id = doc_id, split, quality). Constants match
+    * batch q39: [[StreamingDedup]]'s near-dup geometry, quality ≥ 0.5,
     * 90/5/5 content-hash split, min-id survivors. With
     * `policy = BestQuality` the sink equals batch q153 instead (q151's
     * argmax survivors); the numeric (quality, −id) tie-break casts the
     * string CDC key to long — the q147/URL-dedup posture, ids are
     * numeric in this corpus contract. */
-  def curatedView(
-      spark: SparkSession, stateDir: String,
-      name: String = "curated_corpus", table: String = "documents",
-      textCol: String = "text", threshold: Double = 0.8,
-      minQuality: Double = 0.5, bandRows: Int = 2, nBands: Int = 32,
-      shingleN: Int = 3,
+  def curatedView(spark: SparkSession, stateDir: String,
       policy: SurvivorPolicy = SurvivorPolicy.MinId): ViewDef = {
     val sigTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-sigs")
+      new ParquetKeyedTable(spark, s"$stateDir/$Name-sigs")
     val bucketTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-buckets")
+      new ParquetKeyedTable(spark, s"$stateDir/$Name-buckets")
     val pairTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-pairs")
+      new ParquetKeyedTable(spark, s"$stateDir/$Name-pairs")
     val labelTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-labels")
+      new ParquetKeyedTable(spark, s"$stateDir/$Name-labels")
 
-    ViewDef(name, (pre, post, batch, ctx) => {
+    ViewDef(Name, (pre, post, batch, ctx) => {
+      val touched = ctx.cache(batch("documents").select("key").distinct())
       val cs = maintainClusterState(sigTable, bucketTable, pairTable,
-        labelTable, post, batch, ctx, table, textCol, threshold,
-        bandRows, nBands, shingleN)
+        labelTable, post, touched, ctx)
       val newLabels = cs.newLabels
-      val affected0 = batch(table).select("key").union(cs.labelDiff)
-        .distinct()
+      val affected0 = touched.union(cs.labelDiff).distinct()
       val (affected, losers) = survivorLosers(policy, newLabels,
-        affected0, post, table, textCol, ctx)
+        affected0, post, ctx)
 
       // 3. re-evaluate ONLY the affected docs: pruned post-state text
       // reads; a doc absent from post state was deleted this batch
-      val live = post.rows(table, affected)
-        .select(col("key"), col(textCol).as("text"))
+      val live = post.rows("documents", affected)
+        .select(col("key"), col("text"))
       val bucket = pmod(
         conv(substring(md5(col("text")), 1, 8), 16, 10).cast("long"),
         lit(100L))
       val upserts = ctx.cache(live
-        .filter(TextAnalysis.qualityScore(col("text")) >= minQuality)
+        .filter(TextAnalysis.qualityScore(col("text")) >= MinQuality)
         .join(losers, Seq("key"), "left_anti")
         .select(col("key").as("id"),
           when(bucket < 90, "train").when(bucket < 95, "val")
@@ -224,13 +220,12 @@ object StreamingCuration {
     * groups, and a language whose count reaches 0 leaves the sink. One
     * more demonstration that the incremental-agg path is not welded to
     * the reference's order views. */
-  def langStats(spark: SparkSession, stateDir: String,
-      table: String = "documents", textCol: String = "text"): ViewDef =
-    IncrementalAgg.view(spark, stateDir, "corpus_lang_stats", table,
+  def langStats(spark: SparkSession, stateDir: String): ViewDef =
+    IncrementalAgg.view(spark, stateDir, "corpus_lang_stats", "documents",
       IncrementalAgg.GroupSpec(
-        Seq("g_lang" -> TextAnalysis.predLang(col(textCol))),
+        Seq("g_lang" -> TextAnalysis.predLang(col("text"))),
         live = lit(true),
-        amount = size(split(trim(col(textCol)), "\\s+")).cast("double")),
+        amount = size(split(trim(col("text")), "\\s+")).cast("double")),
       toDoc = m => m.select(col("key").as("id"),
         col("g_lang").as("lang"),
         col("amt").cast("long").as("tokens"), col("cnt").as("docs")))
@@ -242,14 +237,12 @@ object StreamingCuration {
     * AT READ over the bounded strata table by [[mixtureWeights]] — the
     * [[StreamingBm25]] posture (global normalizers computed on read
     * from maintained aggregates, never corpus-rescanned on write). */
-  def sourceMixture(spark: SparkSession, stateDir: String,
-      table: String = "documents", textCol: String = "text",
-      langCol: String = "lang", srcCol: String = "source"): ViewDef =
-    IncrementalAgg.view(spark, stateDir, "source_mixture", table,
+  def sourceMixture(spark: SparkSession, stateDir: String): ViewDef =
+    IncrementalAgg.view(spark, stateDir, "source_mixture", "documents",
       IncrementalAgg.GroupSpec(
-        Seq("g_lang" -> col(langCol), "g_source" -> col(srcCol)),
+        Seq("g_lang" -> col("lang"), "g_source" -> col("source")),
         live = lit(true),
-        amount = size(split(trim(col(textCol)), "\\s+")).cast("double")),
+        amount = size(split(trim(col("text")), "\\s+")).cast("double")),
       toDoc = m => m.select(col("key").as("id"),
         col("g_lang").as("lang"), col("g_source").as("source"),
         col("amt").cast("long").as("n_tok"), col("cnt").as("docs")))

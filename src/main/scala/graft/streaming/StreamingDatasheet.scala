@@ -49,41 +49,38 @@ object StreamingDatasheet {
     StructField("key", StringType),
     StructField("cnt", LongType)))
 
-  def datasheetView(
-      spark: SparkSession, stateDir: String,
-      name: String = "corpus_datasheet", table: String = "documents",
-      textCol: String = "text", langCol: String = "lang",
-      threshold: Double = 0.8, bandRows: Int = 2, nBands: Int = 32,
-      shingleN: Int = 3): ViewDef = {
-    val statsTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-stats")
-    val cntTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-cnt")
-    val fpTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-fps")
-    val langTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-lang")
-    val sigTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-sigs")
-    val bucketTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-buckets")
-    val pairTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-pairs")
-    val labelTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-labels")
+  private val Name = "corpus_datasheet"
 
-    ViewDef(name, (pre, post, batch, ctx) => {
+  def datasheetView(spark: SparkSession, stateDir: String): ViewDef = {
+    val statsTable =
+      new ParquetKeyedTable(spark, s"$stateDir/$Name-stats")
+    val cntTable =
+      new ParquetKeyedTable(spark, s"$stateDir/$Name-cnt")
+    val fpTable =
+      new ParquetKeyedTable(spark, s"$stateDir/$Name-fps")
+    val langTable =
+      new ParquetKeyedTable(spark, s"$stateDir/$Name-lang")
+    val sigTable =
+      new ParquetKeyedTable(spark, s"$stateDir/$Name-sigs")
+    val bucketTable =
+      new ParquetKeyedTable(spark, s"$stateDir/$Name-buckets")
+    val pairTable =
+      new ParquetKeyedTable(spark, s"$stateDir/$Name-pairs")
+    val labelTable =
+      new ParquetKeyedTable(spark, s"$stateDir/$Name-labels")
+
+    ViewDef(Name, (pre, post, batch, ctx) => {
       import spark.implicits._
-      val touched = ctx.cache(batch(table).select("key").distinct())
-      val preRows = ctx.cache(pre.rows(table, touched))
-      val postRows = ctx.cache(post.rows(table, touched))
+      val touched = ctx.cache(batch("documents").select("key").distinct())
+      val preRows = ctx.cache(pre.rows("documents", touched))
+      val postRows = ctx.cache(post.rows("documents", touched))
 
       // per-row contributions: docs, tokens, quality micro-units
       def contrib(rows: DataFrame, sign: Int): DataFrame = rows.select(
         lit(sign.toLong).as("d_docs"),
-        (size(split(trim(col(textCol)), "\\s+")).cast("long") * sign)
+        (size(split(trim(col("text")), "\\s+")).cast("long") * sign)
           .as("d_tokens"),
-        (round(TextAnalysis.qualityScore(col(textCol)) * 1e6, 0) * sign)
+        (round(TextAnalysis.qualityScore(col("text")) * 1e6, 0) * sign)
           .as("d_qmu"))
       val deltas = contrib(postRows, 1).unionByName(contrib(preRows, -1))
         .agg(coalesce(sum("d_docs"), lit(0L)).as("d_docs"),
@@ -94,7 +91,7 @@ object StreamingDatasheet {
       // vocabulary delta: token-counter zero-crossings
       def toks(rows: DataFrame): DataFrame = rows
         .select(col("key").as("doc"),
-          explode(split(trim(col(textCol)), "\\s+")).as("tok"))
+          explode(split(trim(col("text")), "\\s+")).as("tok"))
       val cNew = StreamingVocabCoverage.maintainTokenCounters(
         cntTable, toks(preRows), toks(postRows), ctx)
       val vocabDelta = cNew.agg(
@@ -105,15 +102,15 @@ object StreamingDatasheet {
       // distinct-text delta: fingerprint-group births − deaths among
       // the touched groups (untouched groups cannot change existence)
       val fs = StreamingExactDedup.maintainFpState(
-        fpTable, pre, post, touched, ctx, table, textCol)
+        fpTable, pre, post, touched, ctx, "text")
       val textsDelta =
         fs.postMembers.select("fp").distinct().count() -
           fs.preMembers.select("fp").distinct().count()
 
       // language counters ±
-      val langDeltas = postRows.select(col(langCol).as("lang"))
+      val langDeltas = postRows.select(col("lang"))
         .groupBy("lang").agg(count(lit(1)).as("post_n"))
-        .join(preRows.select(col(langCol).as("lang"))
+        .join(preRows.select(col("lang"))
           .groupBy("lang").agg(count(lit(1)).as("pre_n")),
           Seq("lang"), "full_outer")
         .select(col("lang").as("key"),
@@ -124,8 +121,7 @@ object StreamingDatasheet {
 
       // near-dup pair/label maintenance — the duplicate-density seam
       val cs = StreamingCuration.maintainClusterState(
-        sigTable, bucketTable, pairTable, labelTable, post, batch, ctx,
-        table, textCol, threshold, bandRows, nBands, shingleN)
+        sigTable, bucketTable, pairTable, labelTable, post, touched, ctx)
       val nNearDocs = cs.newLabels.count()
 
       // running-counter transition

@@ -43,6 +43,10 @@ import org.apache.spark.sql.types._
   */
 object StreamingDecontamination {
 
+  private val Name = "decontamination"
+  /** Batch q26's word 5-grams, shared with the composed pipeline view. */
+  private val GramN = 5
+
   private def cntSchema = StructType(Seq(
     StructField("key", StringType),
     StructField("cnt", LongType)))
@@ -69,19 +73,18 @@ object StreamingDecontamination {
   private[streaming] def maintainGramState(
       hTable: ParquetKeyedTable, tTable: ParquetKeyedTable,
       pre: StateAccess, post: StateAccess,
-      touched: DataFrame, ctx: BatchCtx,
-      table: String, textCol: String, gramN: Int): GramState = {
+      touched: DataFrame, ctx: BatchCtx): GramState = {
     val preTV = tTable.versionBefore(ctx.batchId)
 
     // per-doc DISTINCT grams (wordShingles dedups) with the split tag
     def grams(docs: DataFrame): DataFrame = docs
-      .select(col("key").as("doc"), isTrain(col(textCol)).as("train"),
-        explode(graft.functions.NGrams.wordShingles(col(textCol), gramN))
+      .select(col("key").as("doc"), isTrain(col("text")).as("train"),
+        explode(graft.functions.NGrams.wordShingles(col("text"), GramN))
           .as("gram"))
       .select(col("doc"), col("train"), md5(col("gram")).as("g"))
 
-      val preG = ctx.cache(grams(pre.rows(table, touched)))
-      val postG = ctx.cache(grams(post.rows(table, touched)))
+      val preG = ctx.cache(grams(pre.rows("documents", touched)))
+      val postG = ctx.cache(grams(post.rows("documents", touched)))
 
       // 2. holdout count ± — only grams whose holdout membership within
       // B changed can move the count
@@ -118,7 +121,7 @@ object StreamingDecontamination {
         .join(transitions, Seq("g"), "left_semi").select(col("doc").as("key")))
 
     val sharedCounts = (docs: DataFrame) => {
-      val scoreG = grams(post.rows(table, docs))
+      val scoreG = grams(post.rows("documents", docs))
         .filter(col("train"))
       // post-merge holdout membership: identical on replay (merge skipped,
       // table already at the post-batch version)
@@ -134,21 +137,17 @@ object StreamingDecontamination {
   }
 
   /** Continuous decontamination view over a CDC `documents`-shaped
-    * source. Sink documents: (id = doc key, n_shared_grams). Defaults
+    * source. Sink documents: (id = doc key, n_shared_grams). Constants
     * match batch q26 (word 5-grams). */
-  def decontaminationView(
-      spark: SparkSession, stateDir: String,
-      name: String = "decontamination", table: String = "documents",
-      textCol: String = "text", gramN: Int = 5): ViewDef = {
+  def decontaminationView(spark: SparkSession, stateDir: String): ViewDef = {
     val hTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-hgrams")
+      new ParquetKeyedTable(spark, s"$stateDir/$Name-hgrams")
     val tTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-tgrams")
+      new ParquetKeyedTable(spark, s"$stateDir/$Name-tgrams")
 
-    ViewDef(name, (pre, post, batch, ctx) => {
-      val touched = ctx.cache(batch(table).select("key").distinct())
-      val gs = maintainGramState(hTable, tTable, pre, post, touched, ctx,
-        table, textCol, gramN)
+    ViewDef(Name, (pre, post, batch, ctx) => {
+      val touched = ctx.cache(batch("documents").select("key").distinct())
+      val gs = maintainGramState(hTable, tTable, pre, post, touched, ctx)
       val affectedDocs = ctx.cache(touched
         .union(gs.transHolders).distinct())
       val upserts = ctx.cache(gs.sharedCounts(affectedDocs))

@@ -60,23 +60,28 @@ object StreamingDedup {
   private[streaming] final case class PairDelta(
     verified: DataFrame, retractCandidates: DataFrame)
 
+  /** Batch q21's near-dup geometry, which every caller of
+    * [[maintainPairState]] runs (this view, curation, the datasheet,
+    * fuzzy decontamination, PageRank and the composed corpora): word
+    * 3-shingles, 32 bands × 2 rows, exact-verify at jaccard ≥ 0.8. */
+  private val ShingleN = 3
+  private val BandRows = 2
+  private val NBands = 32
+  private val Threshold = 0.8
+  private val Name = "near_dup_pairs"
+
   /** Continuous near-dup-pairs view over a CDC `documents`-shaped source
     * (primary-keyed, with a `text` column). Sink documents:
-    * (id = "a|b", doc_a, doc_b, jaccard). Defaults match batch q21:
-    * word 3-shingles, 32 bands × 2 rows, exact-verify at jaccard ≥ 0.8. */
-  def nearDupView(
-      spark: SparkSession, stateDir: String,
-      name: String = "near_dup_pairs", table: String = "documents",
-      textCol: String = "text", threshold: Double = 0.8,
-      bandRows: Int = 2, nBands: Int = 32, shingleN: Int = 3): ViewDef = {
+    * (id = "a|b", doc_a, doc_b, jaccard). Constants match batch q21. */
+  def nearDupView(spark: SparkSession, stateDir: String): ViewDef = {
     val sigTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-sigs")
+      new ParquetKeyedTable(spark, s"$stateDir/$Name-sigs")
     val bucketTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-buckets")
+      new ParquetKeyedTable(spark, s"$stateDir/$Name-buckets")
 
-    ViewDef(name, (pre, post, batch, ctx) => {
-      val delta = maintainPairState(sigTable, bucketTable, post, batch, ctx,
-        table, textCol, threshold, bandRows, nBands, shingleN)
+    ViewDef(Name, (pre, post, batch, ctx) => {
+      val touched = ctx.cache(batch("documents").select("key").distinct())
+      val delta = maintainPairState(sigTable, bucketTable, post, touched, ctx)
       val upserts = delta.verified.select(
         Keys.pair(col("doc_a"), col("doc_b")).as("id"),
         col("doc_a"), col("doc_b"), col("jaccard"))
@@ -89,33 +94,30 @@ object StreamingDedup {
 
   /** Steps 1–4 of the scaladoc: sign the batch, retract via old buckets,
     * merge signature + bucket state (idempotent-by-batchId), discover and
-    * exact-verify new pairs. The returned frames are batch-scoped
-    * (persisted; unpersist deferred on `ctx`). */
+    * exact-verify new pairs. `touched`: the batch's distinct `documents`
+    * keys, already persisted by the caller. The returned frames are
+    * batch-scoped (persisted; unpersist deferred on `ctx`). */
   private[streaming] def maintainPairState(
       sigTable: ParquetKeyedTable, bucketTable: ParquetKeyedTable,
-      post: StateAccess, batch: Map[String, DataFrame], ctx: BatchCtx,
-      table: String, textCol: String, threshold: Double,
-      bandRows: Int, nBands: Int, shingleN: Int): PairDelta = {
+      post: StateAccess, touched: DataFrame, ctx: BatchCtx): PairDelta = {
       val preSigV = sigTable.versionBefore(ctx.batchId)
-
-      val touched = ctx.cache(batch(table).select("key").distinct())
 
       // live post images of the batch docs; a touched key absent here was
       // deleted this batch
-      val docs = post.rows(table, touched)
-        .select(col("key").as("doc_id"), col(textCol).as("text"))
+      val docs = post.rows("documents", touched)
+        .select(col("key").as("doc_id"), col("text"))
 
       // 1. sign ONLY the batch docs
       val newSigs = ctx.cache(Dedup.signatureArray(
         docs.select(col("doc_id"),
-          explode(Dedup.shingles(col("text"), shingleN)).as("f")), "f"))
+          explode(Dedup.shingles(col("text"), ShingleN)).as("f")), "f"))
 
       // band membership, old (pre-state sigs of touched docs) and new
       val oldSigs = sigTable.rowsForKeysAt(preSigV, sigSchema, touched)
       val oldMemb = oldSigs.select(col("key").as("doc_id"),
-        explode(Dedup.bandKeys(col("sig"), bandRows, nBands)).as("bkey"))
+        explode(Dedup.bandKeys(col("sig"), BandRows, NBands)).as("bkey"))
       val newMemb = ctx.cache(newSigs.select(col("doc_id"),
-        explode(Dedup.bandKeys(col("sig"), bandRows, nBands)).as("bkey")))
+        explode(Dedup.bandKeys(col("sig"), BandRows, NBands)).as("bkey")))
 
       // membership of every affected bucket (pruned lookup): batch docs
       // leave their old buckets, enter new ones (idempotent-by-batchId)
@@ -172,17 +174,17 @@ object StreamingDedup {
         .join(sigAll.select(col("doc_id").as("doc_b"), col("sig").as("sb")),
           "doc_b")
         .filter(Dedup.estimateFromArrays(col("sa"), col("sb")) >=
-          threshold - 0.2)
+          Threshold - 0.2)
         .select("doc_a", "doc_b")
 
       // exact verify over the candidate docs' texts (pruned state reads)
       val vIds = prefiltered.select(col("doc_a").as("key"))
         .union(prefiltered.select(col("doc_b").as("key"))).distinct()
-      val vExploded = post.rows(table, vIds)
+      val vExploded = post.rows("documents", vIds)
         .select(col("key").as("doc_id"),
-          explode(Dedup.shingles(col(textCol), shingleN)).as("f"))
+          explode(Dedup.shingles(col("text"), ShingleN)).as("f"))
       val verified = ctx.cache(Dedup
-        .verifyJaccard(prefiltered, vExploded, "f", threshold))
+        .verifyJaccard(prefiltered, vExploded, "f", Threshold))
 
       PairDelta(verified, oldPairs)
   }

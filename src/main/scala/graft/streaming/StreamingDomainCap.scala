@@ -14,7 +14,7 @@ import org.apache.spark.sql.types._
   * DELETE of a kept document must promote the current (k+1)-th, which
   * requires knowing everyone below the cut. The view therefore keeps a
   * per-source LEDGER of (doc_id, quality) — quality memoized at write so
-  * resident documents never re-read text — sharded across `ledgerShards`
+  * resident documents never re-read text — sharded across `LedgerShards`
   * state keys per source (the [[StreamingBm25]] posting-shard pattern):
   * one source's ledger is spread over bounded-width rows instead of one
   * giant array row, and a batch reads exactly the touched sources'
@@ -39,38 +39,38 @@ object StreamingDomainCap {
       StructField("doc_id", StringType),
       StructField("quality", DoubleType)))))))
 
+  private val Name = "domain_cap_view"
+  private val LedgerShards = 16
+
   /** Continuous per-source cap view over a CDC `documents`-shaped
-    * source. Defaults match batch q109: top 10 by quality score. */
+    * source. Defaults match batch q109: top `capN` = 10 by quality score. */
   def domainCapView(
-      spark: SparkSession, stateDir: String,
-      name: String = "domain_cap_view", table: String = "documents",
-      textCol: String = "text", sourceCol: String = "source",
-      capN: Int = 10, ledgerShards: Int = 16): ViewDef = {
+      spark: SparkSession, stateDir: String, capN: Int = 10): ViewDef = {
     val ledger =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-ledger")
+      new ParquetKeyedTable(spark, s"$stateDir/$Name-ledger")
 
     def shardKey(src: Column, doc: Column): Column =
-      Keys.pair(src, pmod(xxhash64(doc), lit(ledgerShards)))
+      Keys.pair(src, pmod(xxhash64(doc), lit(LedgerShards)))
 
-    ViewDef(name, (pre, post, batch, ctx) => {
+    ViewDef(Name, (pre, post, batch, ctx) => {
       val preV = ledger.versionBefore(ctx.batchId)
 
-      val touched = ctx.cache(batch(table).select("key").distinct())
+      val touched = ctx.cache(batch("documents").select("key").distinct())
 
       def docsOf(rows: DataFrame): DataFrame = rows.select(
-        col("key").as("doc_id"), col(sourceCol).as("source"),
-        graft.operators.TextAnalysis.qualityScore(col(textCol))
+        col("key").as("doc_id"), col("source"),
+        graft.operators.TextAnalysis.qualityScore(col("text"))
           .as("quality"))
 
-      val oldDocs = ctx.cache(docsOf(pre.rows(table, touched)))
-      val newDocs = ctx.cache(docsOf(post.rows(table, touched)))
+      val oldDocs = ctx.cache(docsOf(pre.rows("documents", touched)))
+      val newDocs = ctx.cache(docsOf(post.rows("documents", touched)))
 
       // every source whose ranking can change, with all its shard keys
       val touchedSources = ctx.cache(oldDocs.select("source")
         .union(newDocs.select("source")).distinct())
       val shardKeys = touchedSources
         .select(col("source"),
-          explode(sequence(lit(0), lit(ledgerShards - 1))).as("sh"))
+          explode(sequence(lit(0), lit(LedgerShards - 1))).as("sh"))
         .select(Keys.pair(col("source"), col("sh")).as("key"))
 
       val preEntries = ctx.cache(ledger.rowsForKeysAt(preV, ledgerSchema, shardKeys)

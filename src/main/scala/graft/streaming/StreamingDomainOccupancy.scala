@@ -28,10 +28,8 @@ object StreamingDomainOccupancy {
 
   /** Sink documents: (id = domain key, registered_domain, n_docs,
     * n_tokens). */
-  def domainStatsView(
-      spark: SparkSession, stateDir: String,
-      name: String = "domain_stats", table: String = "documents"): ViewDef =
-    IncrementalAgg.view(spark, stateDir, name, table,
+  def domainStatsView(spark: SparkSession, stateDir: String): ViewDef =
+    IncrementalAgg.view(spark, stateDir, "domain_stats", "documents",
       IncrementalAgg.GroupSpec(
         Seq("g_domain" ->
           coalesce(

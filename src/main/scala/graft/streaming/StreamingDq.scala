@@ -26,8 +26,7 @@ object StreamingDq {
   /** One ViewDef per (ruleName, violationPredicate) over `table`'s
     * materialized state rows. */
   def ruleViews(spark: SparkSession, stateDir: String, table: String,
-      rules: Seq[(String, Column)],
-      index: String = "dq_view"): Seq[ViewDef] =
+      rules: Seq[(String, Column)]): Seq[ViewDef] =
     rules.map { case (name, pred) =>
       IncrementalAgg.view(spark, stateDir, s"dq_$name", table,
         IncrementalAgg.GroupSpec(
@@ -36,6 +35,6 @@ object StreamingDq {
           amount = lit(1.0)),
         toDoc = m => m.select(col("key").as("id"),
           col("g_rule").as("rule"), col("cnt").as("n_bad")),
-        index = index)
+        index = "dq_view")
     }
 }

@@ -21,15 +21,13 @@ import graft.operators.Governance
   * is exact at any epoch magnitude. */
 object StreamingDrift {
 
-  def eventTypeCounts(spark: SparkSession, stateDir: String,
-      table: String = "events", tsCol: String = "ts",
-      typeCol: String = "event_type"): ViewDef =
-    IncrementalAgg.view(spark, stateDir, "event_drift", table,
+  def eventTypeCounts(spark: SparkSession, stateDir: String): ViewDef =
+    IncrementalAgg.view(spark, stateDir, "event_drift", "events",
       IncrementalAgg.GroupSpec(
         Seq(
           "g_day" -> expr(
-            s"date_format(timestamp_micros($tsCol DIV 1000), 'yyyy-MM-dd')"),
-          "g_type" -> col(typeCol)),
+            "date_format(timestamp_micros(ts DIV 1000), 'yyyy-MM-dd')"),
+          "g_type" -> col("event_type")),
         live = lit(true),
         amount = lit(1.0)),
       toDoc = m => m.select(col("key").as("id"),

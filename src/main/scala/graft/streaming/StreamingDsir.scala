@@ -38,7 +38,7 @@ object StreamingDsir {
       StructField("b", LongType), StructField("c", LongType)))))))
 
   final class DsirWeights(spark: SparkSession, stateDir: String,
-      table: String, textCol: String, isTarget: Column, buckets: Int) {
+      buckets: Int) {
     private val docFeats =
       new ParquetKeyedTable(spark, s"$stateDir/dsir-docfeats")
     private val rawLedger =
@@ -52,15 +52,15 @@ object StreamingDsir {
 
     /** (doc key, target?, bucket, count) for a set of images. */
     private def featsOf(rows: DataFrame): DataFrame = rows
-      .select(col("key"), isTarget.as("tgt"),
-        explode(graft.functions.NGrams.wordGrams(col(textCol), 2)).as("g"))
+      .select(col("key"), (col("lang") === "en").as("tgt"),
+        explode(graft.functions.NGrams.wordGrams(col("text"), 2)).as("g"))
       .groupBy(col("key"), col("tgt"), bucketOf(col("g")).as("b"))
       .agg(count(lit(1)).as("c"))
 
     val view: ViewDef = ViewDef("dsir", (pre, post, batch, ctx) => {
-      val touched = ctx.cache(batch(table).select("key").distinct())
-      val preF = ctx.cache(featsOf(pre.rows(table, touched)))
-      val postF = ctx.cache(featsOf(post.rows(table, touched)))
+      val touched = ctx.cache(batch("documents").select("key").distinct())
+      val preF = ctx.cache(featsOf(pre.rows("documents", touched)))
+      val postF = ctx.cache(featsOf(post.rows("documents", touched)))
 
       // ± ledgers: raw counts every image, target counts target images
       def ledgerDeltas(filterTgt: Boolean): DataFrame = {
@@ -119,11 +119,9 @@ object StreamingDsir {
     }
   }
 
-  /** DSIR view over `table`'s changelog; default target predicate is
-    * batch q102's English slice, default hash width 1024. */
+  /** DSIR view over the `documents` changelog; the target predicate is
+    * batch q102's English slice, the default hash width 1024. */
   def weights(spark: SparkSession, stateDir: String,
-      table: String = "documents", textCol: String = "text",
-      isTarget: Column = col("lang") === "en",
       buckets: Int = 1024): DsirWeights =
-    new DsirWeights(spark, stateDir, table, textCol, isTarget, buckets)
+    new DsirWeights(spark, stateDir, buckets)
 }

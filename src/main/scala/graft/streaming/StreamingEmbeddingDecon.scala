@@ -33,35 +33,35 @@ import graft.operators.Similarity
   * bounded artifact a production pipeline broadcasts. */
 object StreamingEmbeddingDecon {
 
-  def deconView(
-      spark: SparkSession, stateDir: String,
-      name: String = "embedding_decon", table: String = "embeddings",
-      vecCol: String = "embedding", threshold: Double = 0.4): ViewDef = {
+  private val Name = "embedding_decon"
+  private val Threshold = 0.4
+
+  def deconView(spark: SparkSession, stateDir: String): ViewDef = {
     val holdSchema = StructType(Seq(
       StructField("key", StringType),
-      StructField(vecCol, ArrayType(DoubleType))))
+      StructField("embedding", ArrayType(DoubleType))))
     val holdState = new ParquetKeyedTable(
-      spark, s"$stateDir/$name-holdout")
+      spark, s"$stateDir/$Name-holdout")
 
-    ViewDef(name, (pre, post, batch, ctx) => {
+    ViewDef(Name, (pre, post, batch, ctx) => {
       val isHold = pmod(col("key").cast("long"), lit(29)) === 0
-      val touched = ctx.cache(batch(table).select("key").distinct())
+      val touched = ctx.cache(batch("embeddings").select("key").distinct())
       // the mod-29 split needs numeric keys; a key whose cast is null
       // would be neither benchmark nor corpus (null-false on BOTH
       // branches) and silently vanish from the sink — fail loudly
       // instead, the StreamingC4 numeric-key contract enforced
       val badKeys = touched.filter(col("key").cast("long").isNull)
       require(badKeys.isEmpty,
-        s"$name requires numeric keys for the benchmark split; got " +
+        s"$Name requires numeric keys for the benchmark split; got " +
           badKeys.limit(5).collect().map(_.getString(0)).mkString(", "))
       val holdTouched = ctx.cache(touched.filter(isHold))
       val benchmarkChanged = !holdTouched.isEmpty
 
       // benchmark-side state maintenance: touched holdout keys that are
       // live post-batch upsert their vector, dead ones delete
-      val holdLive = post.rows(table, holdTouched)
+      val holdLive = post.rows("embeddings", holdTouched)
         .select(col("key"),
-          col(vecCol).cast(ArrayType(DoubleType)).as(vecCol))
+          col("embedding").cast(ArrayType(DoubleType)).as("embedding"))
       val holdGone = holdTouched
         .join(holdLive.select("key"), Seq("key"), "left_anti")
       holdState.merge(holdLive, holdGone, ctx.batchId)
@@ -69,7 +69,7 @@ object StreamingEmbeddingDecon {
       val holdNow = holdState.snapshot(holdSchema) // benchmark-sized
       val corpusRows =
         if (benchmarkChanged) {
-          val all = ctx.cache(post(table))
+          val all = ctx.cache(post("embeddings"))
           // the batch guard above only sees keys TOUCHED in this batch;
           // a non-numeric key that entered state before this view was
           // attached would be null on BOTH mod-29 branches and silently
@@ -78,11 +78,11 @@ object StreamingEmbeddingDecon {
           val badState = all.select("key")
             .filter(col("key").cast("long").isNull)
           require(badState.isEmpty,
-            s"$name requires numeric keys; pre-existing state holds " +
+            s"$Name requires numeric keys; pre-existing state holds " +
               badState.limit(5).collect().map(_.getString(0))
                 .mkString(", "))
           all.filter(!isHold)
-        } else post.rows(table, touched.filter(!isHold))
+        } else post.rows("embeddings", touched.filter(!isHold))
       val affectedIds =
         if (benchmarkChanged)
           corpusRows.select("key")
@@ -93,15 +93,15 @@ object StreamingEmbeddingDecon {
       // argmax with smallest-benchmark-id tie-break, integer-exact flag
       val scored = corpusRows
         .select(col("key"),
-          col(vecCol).cast(ArrayType(DoubleType)).as("cv"))
+          col("embedding").cast(ArrayType(DoubleType)).as("cv"))
         .crossJoin(broadcast(holdNow.select(
-          col("key").cast("long").as("hold_id"), col(vecCol).as("hv"))))
+          col("key").cast("long").as("hold_id"), col("embedding").as("hv"))))
         .select(col("key"), col("hold_id"),
           round(Similarity.cosine(col("cv"), col("hv")), 6).as("cos"))
       val upserts = scored.groupBy("key")
         .agg(max(struct(col("cos").as("c"), (-col("hold_id")).as("n")))
             .as("m"),
-          count(when(col("cos") >= threshold, lit(1))).as("n_near"))
+          count(when(col("cos") >= Threshold, lit(1))).as("n_near"))
         .select(col("key").as("id"), (-col("m.n")).as("nearest_holdout"),
           col("m.c").as("max_cos"), col("n_near"),
           (col("n_near") > 0).as("contaminated"))

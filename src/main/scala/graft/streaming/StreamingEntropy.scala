@@ -17,9 +17,8 @@ object StreamingEntropy {
   /** Sink documents: (id = doc key, n_cp, n_distinct, entropy_bits,
     * low_entropy). Empty-text docs produce no row (matching batch q138,
     * whose oracle's range(0) is empty) — they delete from the sink. */
-  def entropyView(name: String = "entropy_gate",
-      table: String = "documents"): ViewDef =
-    ViewDef.perRow(name, table) { live =>
+  def entropyView(): ViewDef =
+    ViewDef.perRow("entropy_gate", "documents") { live =>
       TextAnalysis.charEntropyReport(live.select(col("key"), col("text")), "key")
         .withColumnRenamed("key", "id")
     }

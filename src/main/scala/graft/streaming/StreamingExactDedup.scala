@@ -48,16 +48,15 @@ object StreamingExactDedup {
     * q137) — the entire maintenance ladder is fingerprint-agnostic. */
   private[streaming] def maintainFpState(
       postings: ParquetKeyedTable, pre: StateAccess, post: StateAccess,
-      touched: DataFrame, ctx: BatchCtx,
-      table: String, textCol: String,
+      touched: DataFrame, ctx: BatchCtx, textCol: String,
       fpFn: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
         sha2(_, 256)): FpState = {
     def fps(rows: DataFrame): DataFrame = rows
       .select(col("key").as("doc_id"),
         fpFn(col(textCol)).as("fp"))
 
-    val oldFps = ctx.cache(fps(pre.rows(table, touched)))
-    val newFps = ctx.cache(fps(post.rows(table, touched)))
+    val oldFps = ctx.cache(fps(pre.rows("documents", touched)))
+    val newFps = ctx.cache(fps(post.rows("documents", touched)))
 
     val affected = ctx.cache(oldFps.select("fp").union(newFps.select("fp"))
       .distinct().withColumnRenamed("fp", "key"))
@@ -72,7 +71,7 @@ object StreamingExactDedup {
     val losersAmong = (docs: DataFrame) => {
       // post-merge postings (on replay the merge skipped, so `version`
       // is already the post state — the hLive pattern)
-      val docFps = fps(post.rows(table, docs))
+      val docFps = fps(post.rows("documents", docs))
       val members = postings.rowsForKeys(postSchema,
           docFps.select(col("fp").as("key")).distinct())
         .select(col("key").as("fp"), explode(col("members")).as("member"))
@@ -84,17 +83,15 @@ object StreamingExactDedup {
     FpState(preMembers, postMembers, sw.emptied, affectedMembers, losersAmong)
   }
 
-  def exactDedupView(
-      spark: SparkSession, stateDir: String,
-      name: String = "exact_dedup", table: String = "documents",
-      textCol: String = "text"): ViewDef = {
-    val postings =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-post")
+  private val ExactName = "exact_dedup"
 
-    ViewDef(name, (pre, post, batch, ctx) => {
-      val touched = ctx.cache(batch(table).select("key").distinct())
-      val st = maintainFpState(postings, pre, post, touched, ctx,
-        table, textCol)
+  def exactDedupView(spark: SparkSession, stateDir: String): ViewDef = {
+    val postings =
+      new ParquetKeyedTable(spark, s"$stateDir/$ExactName-post")
+
+    ViewDef(ExactName, (pre, post, batch, ctx) => {
+      val touched = ctx.cache(batch("documents").select("key").distinct())
+      val st = maintainFpState(postings, pre, post, touched, ctx, "text")
       val upserts = st.postMembers.groupBy("fp")
         .agg(min("member").as("keep_id"),
           count(lit(1)).as("dup_cnt"))
@@ -104,6 +101,8 @@ object StreamingExactDedup {
       (upserts, deletes)
     })
   }
+
+  private val CanonicalName = "canonical_dedup"
 
   /** Incremental CANONICAL-form dedup — the streaming form of batch
     * q137: groups keyed by md5 of the canonical text (NFC → lowercase →
@@ -116,23 +115,19 @@ object StreamingExactDedup {
     * the canonical group — the catches raw hashing misses), priced as
     * one bucket-pruned text read of exactly the touched groups'
     * members per batch. */
-  def canonicalDedupView(
-      spark: SparkSession, stateDir: String,
-      name: String = "canonical_dedup", table: String = "documents",
-      textCol: String = "text"): ViewDef = {
+  def canonicalDedupView(spark: SparkSession, stateDir: String): ViewDef = {
     val postings =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-post")
+      new ParquetKeyedTable(spark, s"$stateDir/$CanonicalName-post")
 
-    ViewDef(name, (pre, post, batch, ctx) => {
-      val touched = ctx.cache(batch(table).select("key").distinct())
-      val st = maintainFpState(postings, pre, post, touched, ctx,
-        table, textCol,
+    ViewDef(CanonicalName, (pre, post, batch, ctx) => {
+      val touched = ctx.cache(batch("documents").select("key").distinct())
+      val st = maintainFpState(postings, pre, post, touched, ctx, "text",
         fpFn = t => md5(graft.operators.Dedup.canonicalText(t)))
       // texts of the affected groups' CURRENT members — bucket-pruned,
       // O(touched groups' membership), never a corpus read
-      val memberRows = post.rows(table,
+      val memberRows = post.rows("documents",
           st.postMembers.select(col("member").as("key")).distinct())
-        .select(col("key").as("member"), col(textCol).as("text"))
+        .select(col("key").as("member"), col("text"))
       val upserts = st.postMembers.join(memberRows, "member")
         .groupBy("fp")
         .agg(min("member").as("keep_id"), count(lit(1)).as("n_copies"),

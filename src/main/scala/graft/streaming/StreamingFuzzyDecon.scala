@@ -37,32 +37,32 @@ object StreamingFuzzyDecon {
   private def isTrain(text: org.apache.spark.sql.Column) =
     pmod(conv(substring(md5(text), 1, 8), 16, 10).cast("long"), lit(100L)) < 90
 
+  private val Name = "fuzzy_decon"
+
   /** Continuous fuzzy-decontamination view over a CDC `documents`-shaped
     * source. Sink documents: (id = train doc key, n_holdout_neardups,
-    * max_jaccard). Defaults match batch q100. */
-  def fuzzyDeconView(
-      spark: org.apache.spark.sql.SparkSession, stateDir: String,
-      name: String = "fuzzy_decon", table: String = "documents",
-      textCol: String = "text", threshold: Double = 0.8,
-      bandRows: Int = 2, nBands: Int = 32, shingleN: Int = 3): ViewDef = {
+    * max_jaccard). Constants match batch q100. */
+  def fuzzyDeconView(spark: org.apache.spark.sql.SparkSession,
+      stateDir: String): ViewDef = {
     val sigTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-sigs")
+      new ParquetKeyedTable(spark, s"$stateDir/$Name-sigs")
     val bucketTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-buckets")
+      new ParquetKeyedTable(spark, s"$stateDir/$Name-buckets")
     val pairTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-pairs")
+      new ParquetKeyedTable(spark, s"$stateDir/$Name-pairs")
 
-    ViewDef(name, (pre, post, batch, ctx) => {
+    ViewDef(Name, (pre, post, batch, ctx) => {
       // pin the pre-batch pair version BEFORE the merge below: in the
       // direct-call (batchId=None) mode `version` after the merge IS the
       // post state, and the retraction logic would lose every
       // retracted-pair partner
       val prePairV = pairTable.versionBefore(ctx.batchId)
 
+      val touched = ctx.cache(batch("documents").select("key").distinct())
+
       // 1. pair maintenance (shared ladder) + pair-table merge
       val delta = StreamingDedup.maintainPairState(
-        sigTable, bucketTable, post, batch, ctx,
-        table, textCol, threshold, bandRows, nBands, shingleN)
+        sigTable, bucketTable, post, touched, ctx)
       val pairUpserts = delta.verified.select(
         Keys.pair(col("doc_a"), col("doc_b")).as("key"),
         col("doc_a"), col("doc_b"), col("jaccard").as("j"))
@@ -71,7 +71,6 @@ object StreamingFuzzyDecon {
         .join(pairUpserts.select("key"), Seq("key"), "left_anti")
       pairTable.merge(pairUpserts, pairDeletes, ctx.batchId)
 
-      val touched = ctx.cache(batch(table).select("key").distinct())
       // post-state pairs (duplicate-density-sized; on replay the merge
       // skipped and `version` is already the post state)
       val postPairs = ctx.cache(pairTable
@@ -109,8 +108,8 @@ object StreamingFuzzyDecon {
       val evalKeys = mine.select(col("d").as("key"))
         .union(mine.select(col("p").as("key")))
         .union(affected).distinct()
-      val flags = ctx.cache(post.rows(table, evalKeys)
-        .select(col("key"), isTrain(col(textCol)).as("train")))
+      val flags = ctx.cache(post.rows("documents", evalKeys)
+        .select(col("key"), isTrain(col("text")).as("train")))
       val upserts = ctx.cache(mine
         .join(flags.select(col("key").as("d"), col("train").as("d_train")), "d")
         .join(flags.select(col("key").as("p"), col("train").as("p_train")), "p")

@@ -15,10 +15,9 @@ object StreamingGopher {
 
   /** Sink documents: (id = doc key, n_tokens, mean_word_len,
     * n_alpha_words, n_symbols, n_stopwords, r_*, keep). */
-  def gopherView(name: String = "gopher_gate", table: String = "documents",
-      textCol: String = "text"): ViewDef =
-    ViewDef.perRow(name, table) { live =>
-      TextAnalysis.gopherRules(live.select(col("key"), col(textCol).as("text")),
-        col("key").as("id"))
+  def gopherView(): ViewDef =
+    ViewDef.perRow("gopher_gate", "documents") { live =>
+      TextAnalysis.gopherRules(
+        live.select(col("key"), col("text")), col("key").as("id"))
     }
 }

@@ -36,15 +36,14 @@ object StreamingHistQuantiles {
   /** Sink documents: (id = source, n, p50_est, p90_est, p99_est). The
     * measured length is `length(text)` — the live-state analog of the
     * fixture's n_chars column. */
-  def histView(spark: SparkSession, stateDir: String,
-      table: String = "documents", textCol: String = "text"): ViewDef = {
+  def histView(spark: SparkSession, stateDir: String): ViewDef = {
     val state = new ParquetKeyedTable(
       spark, s"$stateDir/histq-state", "key", 8)
     ViewDef("hist_quantiles", (pre, post, batch, ctx) => {
-      val touched = batch(table).select("key").distinct()
-      val len = length(col(textCol))
-      val delta = bucketCounts(post.rows(table, touched), len, 1)
-        .unionAll(bucketCounts(pre.rows(table, touched), len, -1))
+      val touched = batch("documents").select("key").distinct()
+      val len = length(col("text"))
+      val delta = bucketCounts(post.rows("documents", touched), len, 1)
+        .unionAll(bucketCounts(pre.rows("documents", touched), len, -1))
         .groupBy("source", "k").agg(sum("d").as("d_cnt"))
         .filter(col("d_cnt") =!= 0)
       val merged = IncrementalAgg.applyDeltas(state, delta.select(

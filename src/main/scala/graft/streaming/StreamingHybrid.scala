@@ -31,15 +31,12 @@ object StreamingHybrid {
       spark: SparkSession, stateDir: String,
       probes: DataFrame, probeTerms: Seq[(Long, Seq[String])],
       fetchVectors: DataFrame => DataFrame,
-      kR: Int = 20, kF: Int = 10,
-      annName: String = "ann_index", bm25Name: String = "bm25_index",
-      nShards: Int = 4): DataFrame = {
+      kR: Int = 20, kF: Int = 10): DataFrame = {
     val dense = StreamingAnn.search(spark, stateDir, probes, fetchVectors,
-      kR, annName)
+      kR)
       .select(col("query_id"), col("neighbor_id").as("id"),
         col("rank").as("rnk"))
-    val sparse = StreamingBm25.searchMany(spark, stateDir, probeTerms,
-      bm25Name, nShards)
+    val sparse = StreamingBm25.searchMany(spark, stateDir, probeTerms)
       // the probe itself never ranks (its own terms trivially match);
       // ties break on the NUMERIC id, exactly batch q167's rank order
       // (string doc keys would order "10" before "2")

@@ -48,27 +48,32 @@ object StreamingIvfPq {
       StructField("vec_key", StringType),
       StructField("codes", ArrayType(IntegerType))))))))
 
+  private val Name = "ivfpq_index"
+  private val Shortlist = 10
+
+  /** The cell store, opened the same way by the writer ([[indexView]])
+    * and the readers ([[codesState]], [[search]]). */
+  private def cells(spark: SparkSession, stateDir: String) =
+    new ParquetKeyedTable(spark, s"$stateDir/$Name-cells")
+
   /** Continuous IVF-PQ cell maintenance over a CDC embeddings-shaped
     * source (primary-keyed, vector column + cell-assignment column).
     * Sink documents mirror the cell state: (id = cell, n_vectors,
     * members_csv sorted) — observable like every other view. */
   def indexView(
-      spark: SparkSession, stateDir: String, model: Pq.Model,
-      name: String = "ivfpq_index", table: String = "embeddings",
-      vecCol: String = "embedding", cellCol: String = "label"): ViewDef = {
-    val cellTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-cells")
-    ViewDef(name, (pre, post, batch, ctx) => {
-      val touched = ctx.cache(batch(table).select("key").distinct())
+      spark: SparkSession, stateDir: String, model: Pq.Model): ViewDef = {
+    val cellTable = cells(spark, stateDir)
+    ViewDef(Name, (pre, post, batch, ctx) => {
+      val touched = ctx.cache(batch("embeddings").select("key").distinct())
 
       // cells the batch vectors leave (pre image) and enter (post image;
       // a deleted key has no post row — it only leaves)
-      val oldCells = pre.rows(table, touched)
+      val oldCells = pre.rows("embeddings", touched)
         .select(col("key").as("vec_key"),
-          col(cellCol).cast("string").as("cell"))
-      val postRows = ctx.cache(post.rows(table, touched)
-        .select(col("key").as("vec_key"), col(vecCol).as("v"),
-          col(cellCol).cast("string").as("cell")))
+          col("label").cast("string").as("cell"))
+      val postRows = ctx.cache(post.rows("embeddings", touched)
+        .select(col("key").as("vec_key"), col("embedding").as("v"),
+          col("label").cast("string").as("cell")))
       // encode ONLY the batch's post vectors with the frozen codebooks
       val newEnc = ctx.cache(Pq.encode(model,
           postRows.select(col("vec_key").as("vec_id"), col("v")))
@@ -92,10 +97,8 @@ object StreamingIvfPq {
   /** Current (cell, vec_key, codes) rows of the maintained index —
     * the equality surface the spec pins against a frozen-model encode
     * of the corpus state. */
-  def codesState(spark: SparkSession, stateDir: String,
-      name: String = "ivfpq_index"): DataFrame = {
-    val t =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-cells")
+  def codesState(spark: SparkSession, stateDir: String): DataFrame = {
+    val t = cells(spark, stateDir)
     t.snapshotAt(t.version, cellSchema)
       .select(col("key").as("cell"), explode(col("members")).as("m"))
       .select(col("cell"), col("m.vec_key").as("vec_key"),
@@ -106,18 +109,15 @@ object StreamingIvfPq {
     * over live state. `probes`: (query_id: long, qv: array<double>);
     * `centroids`: the frozen (cell, centroid) routing table (metadata-
     * sized — collected driver-side like q42/q99); `fetchVectors`
-    * resolves a single-column `key` frame to (key, `vecCol`) rows — pass
+    * resolves a single-column `key` frame to (key, `embedding`) rows — pass
     * the pipeline's keyed state lookup so the exact re-rank reads only
     * the shortlisted vectors. Output matches q99: (query_id, rank,
     * neighbor_id, d2), ties (d2 ASC, id ASC). */
-  def search(
-      spark: SparkSession, stateDir: String, model: Pq.Model,
+  def search(spark: SparkSession, stateDir: String, model: Pq.Model,
       centroids: Seq[(String, Seq[Double])], probes: DataFrame,
-      fetchVectors: DataFrame => DataFrame, topK: Int, nprobe: Int = 2,
-      shortlist: Int = 10, name: String = "ivfpq_index",
-      vecCol: String = "embedding"): DataFrame = {
-    val cellTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-cells")
+      fetchVectors: DataFrame => DataFrame, topK: Int,
+      nprobe: Int = 2): DataFrame = {
+    val cellTable = cells(spark, stateDir)
 
     // driver-side routing over the frozen centroid table: euclidean to
     // match how PQ ranks candidates, ties to the smaller cell id — the
@@ -148,7 +148,7 @@ object StreamingIvfPq {
         col("m.codes").as("codes"))
 
     val d2adc = Pq.adcD2(model, col("dt"), col("codes"))
-    val short = udaf(new graft.functions.TopKAggregator(topK * shortlist))
+    val short = udaf(new graft.functions.TopKAggregator(topK * Shortlist))
     val shortlisted = members.join(broadcast(probesT), Seq("cell"))
       .filter(col("vec_key") =!= col("query_id").cast("string"))
       .select(col("query_id"), col("vec_key").cast("long").as("nid"),
@@ -162,7 +162,7 @@ object StreamingIvfPq {
       .select(col("query_id"), col("nid").cast("string").as("vec_key"))
     val vecs = fetchVectors(shortIds.select(col("vec_key").as("key")).distinct())
       .select(col("key").as("vec_key"),
-        col(vecCol).cast(ArrayType(DoubleType)).as("nv"))
+        col("embedding").cast(ArrayType(DoubleType)).as("nv"))
     val qvs = routedDf.select("query_id", "qv").distinct()
     val dot = (a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =>
       graft.functions.DotProduct(a, b)

@@ -16,20 +16,19 @@ import org.apache.spark.sql.functions._
   * classes shuffle. */
 object StreamingKAnonymity {
 
-  /** @param qi  quasi-identifier columns of the dimension's state rows
-    * @param k   policy threshold — class_size < k reads at_risk */
-  def view(spark: SparkSession, stateDir: String,
-      table: String = "customer",
-      qi: Seq[String] = Seq("c_nationkey", "c_mktsegment"),
-      k: Int = 8): ViewDef =
-    IncrementalAgg.view(spark, stateDir, "k_anonymity", table,
+  private val Qi = Seq("c_nationkey", "c_mktsegment")
+
+  /** `Qi` are the quasi-identifier columns of the dimension's state
+    * rows; `k` is the policy threshold — class_size < k reads at_risk. */
+  def view(spark: SparkSession, stateDir: String, k: Int = 8): ViewDef =
+    IncrementalAgg.view(spark, stateDir, "k_anonymity", "customer",
       IncrementalAgg.GroupSpec(
-        qi.map(c => s"g_$c" -> col(c)),
+        Qi.map(c => s"g_$c" -> col(c)),
         live = lit(true),
         amount = lit(1.0)),
       toDoc = m => m.select(
         col("key").as("id") +:
-          qi.map(c => col(s"g_$c").as(c)) :+
+          Qi.map(c => col(s"g_$c").as(c)) :+
           col("cnt").as("class_size") :+
           (col("cnt") < k).as("at_risk"): _*))
 }

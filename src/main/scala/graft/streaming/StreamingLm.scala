@@ -49,35 +49,35 @@ object StreamingLm {
     StructField("key", StringType),
     StructField("v_count", LongType)))
 
-  private def tables(spark: SparkSession, stateDir: String, name: String) = (
-    new ParquetKeyedTable(spark, s"$stateDir/$name-c2"),
-    new ParquetKeyedTable(spark, s"$stateDir/$name-c1"),
-    new ParquetKeyedTable(spark, s"$stateDir/$name-vtok"),
-    new ParquetKeyedTable(spark, s"$stateDir/$name-stats"))
+  private val Name = "lm_model"
+
+  /** The model's stores, opened the same way by the writer ([[lmView]])
+    * and the reader ([[score]]). */
+  private def tables(spark: SparkSession, stateDir: String) = (
+    new ParquetKeyedTable(spark, s"$stateDir/$Name-c2"),
+    new ParquetKeyedTable(spark, s"$stateDir/$Name-c1"),
+    new ParquetKeyedTable(spark, s"$stateDir/$Name-vtok"),
+    new ParquetKeyedTable(spark, s"$stateDir/$Name-stats"))
 
   /** Continuous model-maintenance view. */
-  def lmView(
-      spark: SparkSession, stateDir: String,
-      name: String = "lm_model", table: String = "documents",
-      textCol: String = "text"): ViewDef = {
-    val (c2Table, c1Table, vTable, statsTable) =
-      tables(spark, stateDir, name)
+  def lmView(spark: SparkSession, stateDir: String): ViewDef = {
+    val (c2Table, c1Table, vTable, statsTable) = tables(spark, stateDir)
 
-    ViewDef(name, (pre, post, batch, ctx) => {
-      val touched = ctx.cache(batch(table).select("key").distinct())
+    ViewDef(Name, (pre, post, batch, ctx) => {
+      val touched = ctx.cache(batch("documents").select("key").distinct())
 
       // signed bigram contributions of one state image's hi docs
       def bigrams(rows: DataFrame, sign: Int): DataFrame = rows
-        .filter(TextAnalysis.qualityScore(col(textCol)) >= 0.5)
-        .select(col("key"), split(trim(col(textCol)), "\\s+").as("w"))
+        .filter(TextAnalysis.qualityScore(col("text")) >= 0.5)
+        .select(col("key"), split(trim(col("text")), "\\s+").as("w"))
         .select(col("key"), col("w"),
           posexplode(slice(col("w"), lit(1),
             greatest(size(col("w")) - 1, lit(0)))).as(Seq("p0", "w1")))
         .select(col("w1"), element_at(col("w"), col("p0") + 2).as("w2"),
           lit(sign.toLong).as("d"))
 
-      val biDeltas = ctx.cache(bigrams(pre.rows(table, touched), -1)
-        .unionByName(bigrams(post.rows(table, touched), 1))
+      val biDeltas = ctx.cache(bigrams(pre.rows("documents", touched), -1)
+        .unionByName(bigrams(post.rows("documents", touched), 1))
         .groupBy("w1", "w2").agg(sum("d").as("d"))
         .filter(col("d") =!= 0))
 
@@ -129,14 +129,12 @@ object StreamingLm {
     * tracks the scored frame, never the model or corpus size. Docs with
     * fewer than two tokens are absent, like the batch form. */
   def score(
-      spark: SparkSession, stateDir: String, docs: DataFrame,
-      name: String = "lm_model", textCol: String = "text"): DataFrame = {
-    val (c2Table, c1Table, vTable, statsTable) =
-      tables(spark, stateDir, name)
+      spark: SparkSession, stateDir: String, docs: DataFrame): DataFrame = {
+    val (c2Table, c1Table, vTable, statsTable) = tables(spark, stateDir)
 
     val bi = docs
       .select(col("key").as("doc_id"),
-        split(trim(col(textCol)), "\\s+").as("w"))
+        split(trim(col("text")), "\\s+").as("w"))
       .select(col("doc_id"), col("w"),
         posexplode(slice(col("w"), lit(1),
           greatest(size(col("w")) - 1, lit(0)))).as(Seq("p0", "w1")))

@@ -35,14 +35,13 @@ object StreamingMix {
   /** Sink documents: (id = source, n_tokens, weight, epochs); a source
     * whose last document leaves retracts its sink row (and the other
     * rows re-weight). */
-  def mixView(spark: SparkSession, stateDir: String,
-      table: String = "documents", textCol: String = "text"): ViewDef = {
+  def mixView(spark: SparkSession, stateDir: String): ViewDef = {
     val state = new ParquetKeyedTable(
       spark, s"$stateDir/mix-state", "key", 8)
     ViewDef("temperature_mix", (pre, post, batch, ctx) => {
-      val touched = batch(table).select("key").distinct()
-      val delta = tokenCounts(post.rows(table, touched), textCol, 1)
-        .unionAll(tokenCounts(pre.rows(table, touched), textCol, -1))
+      val touched = batch("documents").select("key").distinct()
+      val delta = tokenCounts(post.rows("documents", touched), "text", 1)
+        .unionAll(tokenCounts(pre.rows("documents", touched), "text", -1))
         .groupBy("source").agg(sum("d").as("d_n_tokens"))
         .filter(col("d_n_tokens") =!= 0)
         .select(col("source").as("key"), col("d_n_tokens"))

@@ -16,9 +16,8 @@ import graft.operators.TextAnalysis
 object StreamingMojibake {
 
   /** Sink documents: (id = doc key, n_cp, n_repl, n_ctrl, keep). */
-  def mojibakeView(name: String = "mojibake_gate",
-      table: String = "documents"): ViewDef =
-    ViewDef.perRow(name, table) { live =>
+  def mojibakeView(): ViewDef =
+    ViewDef.perRow("mojibake_gate", "documents") { live =>
       TextAnalysis.mojibakeReport(live.select(col("key"), col("text")), "key")
         .withColumnRenamed("key", "id")
     }

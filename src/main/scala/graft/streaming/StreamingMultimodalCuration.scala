@@ -49,41 +49,41 @@ object StreamingMultimodalCuration {
     StructField("key", StringType),
     StructField("cluster_id", StringType)))
 
+  private val Name = "multimodal_corpus"
+  private val MinQuality = 0.5
+  private val MediaHamming = 5
+  private val MediaBands = 8
+
   /** Continuous composed-corpus view over a CDC `documents`-shaped
     * source. Sink documents: (id = doc_id, split, quality) — batch
     * q155's shape. */
-  def multimodalCuratedView(
-      spark: SparkSession, stateDir: String,
-      name: String = "multimodal_corpus", table: String = "documents",
-      textCol: String = "text", threshold: Double = 0.8,
-      minQuality: Double = 0.5, bandRows: Int = 2, nBands: Int = 32,
-      shingleN: Int = 3, mediaHamming: Int = 5, mediaBands: Int = 8): ViewDef = {
+  def multimodalCuratedView(spark: SparkSession, stateDir: String): ViewDef = {
     val sigTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-sigs")
+      new ParquetKeyedTable(spark, s"$stateDir/$Name-sigs")
     val bucketTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-buckets")
+      new ParquetKeyedTable(spark, s"$stateDir/$Name-buckets")
     val pairTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-pairs")
+      new ParquetKeyedTable(spark, s"$stateDir/$Name-pairs")
     val labelTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-labels")
+      new ParquetKeyedTable(spark, s"$stateDir/$Name-labels")
     val mHashTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-mhashes")
+      new ParquetKeyedTable(spark, s"$stateDir/$Name-mhashes")
     val mBucketTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-mbuckets")
+      new ParquetKeyedTable(spark, s"$stateDir/$Name-mbuckets")
     val mPairTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-mpairs")
+      new ParquetKeyedTable(spark, s"$stateDir/$Name-mpairs")
     val mLabelTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-mlabels")
+      new ParquetKeyedTable(spark, s"$stateDir/$Name-mlabels")
 
-    ViewDef(name, (pre, post, batch, ctx) => {
+    ViewDef(Name, (pre, post, batch, ctx) => {
+      val touched = ctx.cache(batch("documents").select("key").distinct())
       // 1. text clusters (shared machinery with the curated view)
       val cs = StreamingCuration.maintainClusterState(sigTable,
-        bucketTable, pairTable, labelTable, post, batch, ctx, table,
-        textCol, threshold, bandRows, nBands, shingleN)
+        bucketTable, pairTable, labelTable, post, touched, ctx)
 
       // 2. media clusters on the phash rails
       val md = StreamingPhash.maintainHashState(mHashTable, mBucketTable,
-        post, batch, ctx, table, textCol, mediaHamming, mediaBands)
+        post, touched, ctx, MediaHamming, MediaBands)
       val mPairUpserts = md.verified.select(
         Keys.pair(col("doc_a"), col("doc_b")).as("key"),
         col("doc_a"), col("doc_b"))
@@ -111,11 +111,11 @@ object StreamingMultimodalCuration {
         .select("key")
 
       // 3. frontier = batch ∪ both label diffs, widened per policy
-      val affected0 = batch(table).select("key")
+      val affected0 = touched
         .union(cs.labelDiff).union(mLabelDiff).distinct()
       val (affectedText, textLosers) = StreamingCuration.survivorLosers(
         StreamingCuration.SurvivorPolicy.BestQuality, cs.newLabels,
-        affected0, post, table, textCol, ctx)
+        affected0, post, ctx)
 
       val mTouchedClusters = mNewLabels
         .join(affected0, Seq("key"), "left_semi")
@@ -124,9 +124,8 @@ object StreamingMultimodalCuration {
         .join(mTouchedClusters, Seq("cluster_id"), "left_semi"))
       // pixels of every member of a touched media cluster, from the
       // REAL header parse of pruned post-state payloads (q154's signal)
-      val mDocs = post.rows(table, mMembers.select("key"))
-        .select(col("key").cast("long").as("doc_id"),
-          col(textCol).as("text"))
+      val mDocs = post.rows("documents", mMembers.select("key"))
+        .select(col("key").cast("long").as("doc_id"), col("text"))
       val px = Multimodal.pixelFrameOf(Multimodal.mediaFrameOf(mDocs))
         .select(col("media_id").cast("string").as("key"), col("px"))
       val mSurv = mMembers.join(px, "key")
@@ -142,13 +141,13 @@ object StreamingMultimodalCuration {
         .distinct())
 
       // 4. re-evaluate ONLY the frontier
-      val live = post.rows(table, affected)
-        .select(col("key"), col(textCol).as("text"))
+      val live = post.rows("documents", affected)
+        .select(col("key"), col("text"))
       val bucket = pmod(
         conv(substring(md5(col("text")), 1, 8), 16, 10).cast("long"),
         lit(100L))
       val upserts = ctx.cache(live
-        .filter(TextAnalysis.qualityScore(col("text")) >= minQuality)
+        .filter(TextAnalysis.qualityScore(col("text")) >= MinQuality)
         .join(textLosers, Seq("key"), "left_anti")
         .join(mediaLosers, Seq("key"), "left_anti")
         .select(col("key").as("id"),

@@ -6,7 +6,7 @@ import org.apache.spark.sql.types._
 
 /** Per-document n-gram novelty maintained continuously — the streaming
   * form of batch q103: at every batch boundary the sink holds, for each
-  * live document with at least one word `gramN`-gram, the fraction of
+  * live document with at least one word `GramN`-gram, the fraction of
   * its distinct grams whose FIRST holder (minimum document key over the
   * CURRENT corpus) is this document.
   *
@@ -47,27 +47,27 @@ object StreamingNovelty {
     StructField("key", StringType),
     StructField("members", ArrayType(StringType))))
 
+  private val Name = "novelty"
+  private val GramN = 5
+
   /** Continuous novelty view over a CDC `documents`-shaped source.
     * Sink documents: (id = doc key, n_grams, n_novel, novel_frac). */
-  def noveltyView(
-      spark: SparkSession, stateDir: String,
-      name: String = "novelty", table: String = "documents",
-      textCol: String = "text", gramN: Int = 5): ViewDef = {
+  def noveltyView(spark: SparkSession, stateDir: String): ViewDef = {
     val postings =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-postings")
+      new ParquetKeyedTable(spark, s"$stateDir/$Name-postings")
 
-    ViewDef(name, (pre, post, batch, ctx) => {
-      val touched = ctx.cache(batch(table).select("key").distinct())
+    ViewDef(Name, (pre, post, batch, ctx) => {
+      val touched = ctx.cache(batch("documents").select("key").distinct())
 
       // per-doc DISTINCT grams (wordShingles dedups within a doc)
       def grams(docs: DataFrame): DataFrame = docs
         .select(col("key").as("doc"),
-          explode(graft.functions.NGrams.wordShingles(col(textCol), gramN))
+          explode(graft.functions.NGrams.wordShingles(col("text"), GramN))
             .as("gram"))
         .select(col("doc"), md5(col("gram")).as("g"))
 
-      val preG = ctx.cache(grams(pre.rows(table, touched)))
-      val postG = ctx.cache(grams(post.rows(table, touched)))
+      val preG = ctx.cache(grams(pre.rows("documents", touched)))
+      val postG = ctx.cache(grams(post.rows("documents", touched)))
 
       // 2. posting-list maintenance on the affected grams only
       val affected = preG.select("g").union(postG.select("g"))
@@ -88,7 +88,7 @@ object StreamingNovelty {
 
       // 4. re-score against the post-merge postings (identical on
       // replay: the merge was skipped, the table is already post-batch)
-      val scoreG = ctx.cache(grams(post.rows(table, affectedDocs)))
+      val scoreG = ctx.cache(grams(post.rows("documents", affectedDocs)))
       val mins = postings.rowsForKeys(postingSchema,
         scoreG.select(col("g").as("key")).distinct())
         .select(col("key").as("g"), array_min(col("members")).as("first_doc"))

@@ -21,9 +21,8 @@ import graft.operators.Provenance
 object StreamingOptOut {
 
   /** Sink documents: (id = doc key, registered_domain, opted_out). */
-  def optOutView(name: String = "optout_gate",
-      table: String = "documents"): ViewDef =
-    ViewDef.perRow(name, table) { live =>
+  def optOutView(): ViewDef =
+    ViewDef.perRow("optout_gate", "documents") { live =>
       live.select(col("key").as("id"),
           Provenance.registeredDomain(col("key").cast("long"))
             .as("registered_domain"))

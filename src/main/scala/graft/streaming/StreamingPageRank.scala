@@ -55,38 +55,35 @@ object StreamingPageRank {
     StructField("key", StringType),
     StructField("cluster_id", StringType)))
 
-  def pageRankView(
-      spark: SparkSession, stateDir: String,
-      name: String = "dup_pagerank", table: String = "documents",
-      textCol: String = "text", threshold: Double = 0.8,
-      bandRows: Int = 2, nBands: Int = 32, shingleN: Int = 3,
-      rounds: Int = 10): ViewDef = {
-    val sigTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-sigs")
-    val bucketTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-buckets")
-    val pairTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-pairs")
-    val labelTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-labels")
+  private val Name = "dup_pagerank"
+  private val Rounds = 10
 
-    ViewDef(name, (pre, post, batch, ctx) => {
+  def pageRankView(spark: SparkSession, stateDir: String): ViewDef = {
+    val sigTable =
+      new ParquetKeyedTable(spark, s"$stateDir/$Name-sigs")
+    val bucketTable =
+      new ParquetKeyedTable(spark, s"$stateDir/$Name-buckets")
+    val pairTable =
+      new ParquetKeyedTable(spark, s"$stateDir/$Name-pairs")
+    val labelTable =
+      new ParquetKeyedTable(spark, s"$stateDir/$Name-labels")
+
+    ViewDef(Name, (pre, post, batch, ctx) => {
       // pre-batch labels BEFORE maintainClusterState merges the new ones
       // (versionBefore also makes this replay-stable)
       val preLabelV = labelTable.versionBefore(ctx.batchId)
       val oldLabels = labelTable.snapshotAt(preLabelV, labelSchema)
 
+      val touched = ctx.cache(batch("documents").select("key").distinct())
       val cs = StreamingCuration.maintainClusterState(
-        sigTable, bucketTable, pairTable, labelTable, post, batch, ctx,
-        table, textCol, threshold, bandRows, nBands, shingleN)
+        sigTable, bucketTable, pairTable, labelTable, post, touched, ctx)
 
       // 2. components whose rank vector may have changed: pre- and
       // post-batch cluster ids of batch ∪ label-diff docs
-      val touched = batch(table).select("key")
-        .union(cs.labelDiff).distinct()
-      val affectedCids = ctx.cache(oldLabels.join(touched, Seq("key"))
+      val changed = touched.union(cs.labelDiff).distinct()
+      val affectedCids = ctx.cache(oldLabels.join(changed, Seq("key"))
         .select("cluster_id")
-        .union(cs.newLabels.join(touched, Seq("key")).select("cluster_id"))
+        .union(cs.newLabels.join(changed, Seq("key")).select("cluster_id"))
         .distinct())
 
       // nodes/edges of the affected components under the POST labeling
@@ -110,7 +107,7 @@ object StreamingPageRank {
       val deg = edges.groupBy("u").agg(count(lit(1)).as("deg"))
       val contribEdges = edges.join(deg, "u").checkpoint()
       var ranks = deg.select(col("u").as("node"), lit(1.0).as("rank"))
-      for (_ <- 1 to rounds) {
+      for (_ <- 1 to Rounds) {
         ranks = contribEdges
           .join(ranks, contribEdges("u") === ranks("node"))
           .groupBy(col("v"))

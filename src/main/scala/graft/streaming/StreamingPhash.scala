@@ -28,7 +28,7 @@ import graft.operators.Multimodal
   *
   * Banding geometry follows the radius by pigeonhole (`nBands` equal
   * bands of 32/nBands bits are complete for Hamming ≤ nBands−1): the
-  * pair view defaults to batch q125's 4×8-bit/radius-3, the composed
+  * pair view runs batch q125's 4×8-bit/radius-3, the composed
   * multimodal corpus runs 8×4-bit/radius-5 (batch q155's geometry).
   *
   * 100 TB posture: per-batch work is O(|B| × nBands + collisions);
@@ -59,13 +59,14 @@ object StreamingPhash {
   /** Steps 1–4 above over the hash/bucket state tables — factored so
     * the standalone pair view and the composed multimodal-corpus view
     * ([[StreamingMultimodalCuration]]) maintain the SAME state with the
-    * same machinery. All merges carry the batchId (replay-idempotent);
-    * returned frames are persisted with unpersist deferred on `ctx`. */
+    * same machinery. `touched`: the batch's distinct `documents` keys,
+    * already persisted by the caller. All merges carry the batchId
+    * (replay-idempotent); returned frames are persisted with unpersist
+    * deferred on `ctx`. */
   private[streaming] def maintainHashState(
       hashTable: ParquetKeyedTable, bucketTable: ParquetKeyedTable,
-      post: StateAccess, batch: Map[String, DataFrame], ctx: BatchCtx,
-      table: String, textCol: String, maxHamming: Int,
-      nBands: Int): PhashDelta = {
+      post: StateAccess, touched: DataFrame, ctx: BatchCtx,
+      maxHamming: Int, nBands: Int): PhashDelta = {
     require(32 % nBands == 0, s"nBands=$nBands must divide 32")
     // Pigeonhole over nBands equal bands: a Hamming-≤t pair is
     // guaranteed to collide on at least one band only when t < nBands.
@@ -85,12 +86,9 @@ object StreamingPhash {
           shiftright(h, b * bandBits).bitwiseAND(lit(mask)).cast("string"))
       }: _*)
 
-    val touched = ctx.cache(batch(table).select("key").distinct())
-
     // 1. hash ONLY the batch docs, through batch q125's exact path
-    val docs = post.rows(table, touched)
-      .select(col("key").cast("long").as("doc_id"),
-        col(textCol).as("text"))
+    val docs = post.rows("documents", touched)
+      .select(col("key").cast("long").as("doc_id"), col("text"))
     val newHashes = ctx.cache(Multimodal.perceptualHashes(
         Multimodal.mediaFrameOf(docs))
       .filter(col("data_len") >= 32)
@@ -159,22 +157,23 @@ object StreamingPhash {
     PhashDelta(verified, oldPairs)
   }
 
-  /** Continuous Hamming-≤`maxHamming` pair view over a CDC
+  private val Name = "phash_neardup"
+  private val MaxHamming = 3
+  private val NBands = 4
+
+  /** Continuous Hamming-≤`MaxHamming` pair view over a CDC
     * `documents`-shaped source. Sink documents:
     * (id = "a|b", media_a, media_b, hamming) — batch q125's shape. */
-  def phashNearDupView(
-      spark: SparkSession, stateDir: String,
-      name: String = "phash_neardup", table: String = "documents",
-      textCol: String = "text", maxHamming: Int = 3,
-      nBands: Int = 4): ViewDef = {
+  def phashNearDupView(spark: SparkSession, stateDir: String): ViewDef = {
     val hashTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-hashes")
+      new ParquetKeyedTable(spark, s"$stateDir/$Name-hashes")
     val bucketTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-buckets")
+      new ParquetKeyedTable(spark, s"$stateDir/$Name-buckets")
 
-    ViewDef(name, (pre, post, batch, ctx) => {
-      val delta = maintainHashState(hashTable, bucketTable, post, batch,
-        ctx, table, textCol, maxHamming, nBands)
+    ViewDef(Name, (pre, post, batch, ctx) => {
+      val touched = ctx.cache(batch("documents").select("key").distinct())
+      val delta = maintainHashState(hashTable, bucketTable, post, touched,
+        ctx, MaxHamming, NBands)
       val upserts = delta.verified.select(
         Keys.pair(col("doc_a"), col("doc_b")).as("id"),
         col("doc_a").cast("long").as("media_a"),

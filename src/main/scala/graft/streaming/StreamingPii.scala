@@ -19,9 +19,9 @@ object StreamingPii {
 
   /** Sink documents: (id = doc key, n_emails, n_phones, n_ips,
     * clean_sig). */
-  def piiView(name: String = "pii_scrub", table: String = "documents",
-      textCol: String = "text"): ViewDef =
-    ViewDef.perRow(name, table) { live =>
-      live.select((col("key").as("id") +: Curation.piiColumns(col(textCol))): _*)
+  def piiView(): ViewDef =
+    ViewDef.perRow("pii_scrub", "documents") { live =>
+      live.select(
+        (col("key").as("id") +: Curation.piiColumns(col("text"))): _*)
     }
 }

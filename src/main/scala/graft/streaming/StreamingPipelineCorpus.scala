@@ -54,55 +54,53 @@ object StreamingPipelineCorpus {
       StructField("doc_id", StringType),
       StructField("quality", DoubleType)))))))
 
+  private val Name = "pipeline_corpus"
+  private val LedgerShards = 16
+
   /** Continuous composed-pipeline view over a CDC `documents`-shaped
     * source with a source column. Sink documents: id = source|rk,
-    * fields (source, doc_id, quality, rk, clean_sig). Defaults match
-    * batch q115: word 3-shingles ≥ 0.8 for near-dup, word 5-grams for
+    * fields (source, doc_id, quality, rk, clean_sig). Constants and
+    * defaults match batch q115: [[StreamingDedup]]'s near-dup geometry,
+    * [[StreamingDecontamination]]'s word 5-grams for
     * decon, top 10 per source by quality, min-id near-dup survivors.
     * `policy = BestQuality` swaps in q153's argmax survivor rule at
     * the near-dup stage (the composed form of the curatedView policy —
     * the affected frontier widens by the touched clusters' members,
     * exactly [[StreamingCuration.survivorLosers]]'s contract). */
   def pipelineView(
-      spark: SparkSession, stateDir: String,
-      name: String = "pipeline_corpus", table: String = "documents",
-      textCol: String = "text", sourceCol: String = "source",
-      capN: Int = 10, threshold: Double = 0.8,
-      bandRows: Int = 2, nBands: Int = 32, shingleN: Int = 3,
-      gramN: Int = 5, ledgerShards: Int = 16,
+      spark: SparkSession, stateDir: String, capN: Int = 10,
       policy: StreamingCuration.SurvivorPolicy =
         StreamingCuration.SurvivorPolicy.MinId): ViewDef = {
     val sigTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-sigs")
+      new ParquetKeyedTable(spark, s"$stateDir/$Name-sigs")
     val bucketTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-buckets")
+      new ParquetKeyedTable(spark, s"$stateDir/$Name-buckets")
     val pairTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-pairs")
+      new ParquetKeyedTable(spark, s"$stateDir/$Name-pairs")
     val labelTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-labels")
+      new ParquetKeyedTable(spark, s"$stateDir/$Name-labels")
     val fpTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-fps")
+      new ParquetKeyedTable(spark, s"$stateDir/$Name-fps")
     val hTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-hgrams")
+      new ParquetKeyedTable(spark, s"$stateDir/$Name-hgrams")
     val tTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-tgrams")
+      new ParquetKeyedTable(spark, s"$stateDir/$Name-tgrams")
     val ledger =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-ledger")
+      new ParquetKeyedTable(spark, s"$stateDir/$Name-ledger")
 
     def shardKey(src: Column, doc: Column): Column =
-      Keys.pair(src, pmod(xxhash64(doc), lit(ledgerShards)))
+      Keys.pair(src, pmod(xxhash64(doc), lit(LedgerShards)))
 
-    ViewDef(name, (pre, post, batch, ctx) => {
-      val touched = ctx.cache(batch(table).select("key").distinct())
+    ViewDef(Name, (pre, post, batch, ctx) => {
+      val touched = ctx.cache(batch("documents").select("key").distinct())
 
       // shared-state maintenance — each stage's standalone machinery
       val cs = StreamingCuration.maintainClusterState(
-        sigTable, bucketTable, pairTable, labelTable, post, batch, ctx,
-        table, textCol, threshold, bandRows, nBands, shingleN)
+        sigTable, bucketTable, pairTable, labelTable, post, touched, ctx)
       val fs = StreamingExactDedup.maintainFpState(
-        fpTable, pre, post, touched, ctx, table, textCol)
+        fpTable, pre, post, touched, ctx, "text")
       val gs = StreamingDecontamination.maintainGramState(
-        hTable, tTable, pre, post, touched, ctx, table, textCol, gramN)
+        hTable, tTable, pre, post, touched, ctx)
 
       // every doc whose pipeline verdict can have changed this batch;
       // under BestQuality the near-dup stage additionally pulls in the
@@ -113,13 +111,12 @@ object StreamingPipelineCorpus {
         .union(gs.transHolders)
         .distinct()
       val (affected, nearLosers) = StreamingCuration.survivorLosers(
-        policy, cs.newLabels, affected0, post, table, textCol, ctx)
+        policy, cs.newLabels, affected0, post, ctx)
 
       // eligibility of the affected docs from post state: train split ∧
       // Gopher keep ∧ exact survivor ∧ near-dup survivor ∧ clean
-      val live = ctx.cache(post.rows(table, affected)
-        .select(col("key"), col(textCol).as("text"),
-          col(sourceCol).as("source")))
+      val live = ctx.cache(post.rows("documents", affected)
+        .select(col("key"), col("text"), col("source")))
       val bucket = pmod(
         conv(substring(md5(col("text")), 1, 8), 16, 10).cast("long"),
         lit(100L))
@@ -141,12 +138,12 @@ object StreamingPipelineCorpus {
       // affected docs' entries replaced wholesale by their new
       // eligibility; only the touched sources' shards are read
       val preV = ledger.versionBefore(ctx.batchId)
-      val touchedSources = ctx.cache(pre.rows(table, affected)
-        .select(col(sourceCol).as("source"))
+      val touchedSources = ctx.cache(pre.rows("documents", affected)
+        .select(col("source"))
         .union(live.select("source")).distinct())
       val shardKeys = touchedSources
         .select(col("source"),
-          explode(sequence(lit(0), lit(ledgerShards - 1))).as("sh"))
+          explode(sequence(lit(0), lit(LedgerShards - 1))).as("sh"))
         .select(Keys.pair(col("source"), col("sh")).as("key"))
       val preEntries = ctx.cache(ledger.rowsForKeysAt(preV, ledgerSchema, shardKeys)
         .select(col("source"), explode(col("entries")).as("e"))
@@ -177,9 +174,10 @@ object StreamingPipelineCorpus {
       val postTop = ctx.cache(topK(postEntries))
       // PII signature of each winner's post-state text — a pruned read
       // bounded by capN × touched sources
-      val sigs = post.rows(table, postTop.select(col("doc_id").as("key")))
+      val sigs = post
+        .rows("documents", postTop.select(col("doc_id").as("key")))
         .select(col("key").as("doc_id"),
-          md5(Curation.piiRedact(col(textCol))).as("clean_sig"))
+          md5(Curation.piiRedact(col("text"))).as("clean_sig"))
       val upserts = postTop.join(sigs, "doc_id")
         .select(Keys.pair(col("source"), col("rk")).as("id"),
           col("source"), col("doc_id"), col("quality"),

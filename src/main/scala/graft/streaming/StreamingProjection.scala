@@ -19,11 +19,10 @@ import graft.operators.Similarity
 object StreamingProjection {
 
   /** Sink documents: (id = "key:pos", vec_key, pos, coord). */
-  def jlView(name: String = "jl_projection",
-      table: String = "embeddings"): ViewDef =
-    ViewDef(name, (pre, post, batch, ctx) => {
-      val affected = batch(table).select("key").distinct()
-      val upserts = post.rows(table, affected)
+  def jlView(): ViewDef =
+    ViewDef("jl_projection", (pre, post, batch, ctx) => {
+      val affected = batch("embeddings").select("key").distinct()
+      val upserts = post.rows("embeddings", affected)
         .select(col("key"),
           col("embedding").cast("array<double>").as("v"),
           explode(sequence(lit(1), lit(16))).as("pos"))

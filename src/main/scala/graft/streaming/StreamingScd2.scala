@@ -50,39 +50,37 @@ object StreamingScd2 {
       StructField("typ", StringType),
       StructField("value", DoubleType)))))))
 
+  private val Name = "scd2_history"
+
   /** Continuous SCD2 history over a CDC `events`-shaped source
-    * (primary-keyed; `userCol` is the entity key, `tsCol` a LONG event
+    * (primary-keyed; `user_id` is the entity key, `ts` a LONG event
     * time). Sink documents: id = "user:version", with (user, version,
     * event_id, event_type, value, valid_from, valid_to NULL-for-current,
     * is_current). */
-  def scd2View(
-      spark: SparkSession, stateDir: String,
-      name: String = "scd2_history", table: String = "events",
-      userCol: String = "user_id", tsCol: String = "ts",
-      typeCol: String = "event_type", valueCol: String = "value"): ViewDef = {
+  def scd2View(spark: SparkSession, stateDir: String): ViewDef = {
     val byUser =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-by-user")
+      new ParquetKeyedTable(spark, s"$stateDir/$Name-by-user")
 
-    ViewDef(name, (pre, post, batch, ctx) => {
-      val touched = ctx.cache(batch(table).select("key").distinct())
-      val preRows = ctx.cache(pre.rows(table, touched)
-        .select(col("key"), col(userCol), col(tsCol), col(typeCol),
-          col(valueCol)))
-      val postRows = ctx.cache(post.rows(table, touched)
-        .select(col("key"), col(userCol), col(tsCol), col(typeCol),
-          col(valueCol)))
+    ViewDef(Name, (pre, post, batch, ctx) => {
+      val touched = ctx.cache(batch("events").select("key").distinct())
+      val preRows = ctx.cache(pre.rows("events", touched)
+        .select(col("key"), col("user_id"), col("ts"), col("event_type"),
+          col("value")))
+      val postRows = ctx.cache(post.rows("events", touched)
+        .select(col("key"), col("user_id"), col("ts"), col("event_type"),
+          col("value")))
 
-      val touchedUsers = ctx.cache(preRows.select(col(userCol))
-        .union(postRows.select(col(userCol)))
-        .distinct().filter(col(userCol).isNotNull)
-        .select(col(userCol).cast("string").as("key")))
+      val touchedUsers = ctx.cache(preRows.select(col("user_id"))
+        .union(postRows.select(col("user_id")))
+        .distinct().filter(col("user_id").isNotNull)
+        .select(col("user_id").cast("string").as("key")))
 
       // 1. read-modify-write the per-user projection for touched users
       val sw = IncrementalAgg.swapMembers(byUser, idxSchema, touchedUsers,
         touched, postRows.select(
-          col(userCol).cast("string").as("key"), col("key").as("id"),
-          col(tsCol).cast("long").as("ts"), col(typeCol).as("typ"),
-          col(valueCol).cast("double").as("value")), ctx)
+          col("user_id").cast("string").as("key"), col("key").as("id"),
+          col("ts").cast("long").as("ts"), col("event_type").as("typ"),
+          col("value").cast("double").as("value")), ctx)
 
       // 2. rebuild the touched users' history with the SAME operator
       // batch q158 uses
@@ -92,8 +90,8 @@ object StreamingScd2 {
         userCol = "user", tsNsCol = "ts", idCol = "event_id")
       val upserts = rebuilt.select(
         concat(col("user"), lit(":"), col("version")).as("id"),
-        col("user").as(userCol), col("version"), col("event_id"),
-        col("typ").as(typeCol), col("value"),
+        col("user").as("user_id"), col("version"), col("event_id"),
+        col("typ").as("event_type"), col("value"),
         col("valid_from_ns").as("valid_from"),
         col("valid_to_ns").as("valid_to"), col("is_current"))
 

@@ -44,25 +44,26 @@ object StreamingSemDeDup {
     StructField("key", StringType),
     StructField("members", ArrayType(StringType))))
 
-  /** Continuous SemDeDup view. `model` is the frozen clustering;
-    * defaults match batch q101 (τ = 0.45). */
-  def semDedupView(
-      spark: SparkSession, stateDir: String, model: KMeans.Model,
-      name: String = "semdedup_view", table: String = "embeddings",
-      vecCol: String = "embedding", tau: Double = 0.45): ViewDef = {
-    val postings =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-post")
+  private val Name = "semdedup_view"
+  private val Tau = 0.45
 
-    ViewDef(name, (pre, post, batch, ctx) => {
-      val touched = ctx.cache(batch(table).select("key").distinct())
+  /** Continuous SemDeDup view. `model` is the frozen clustering;
+    * constants match batch q101 (τ = 0.45). */
+  def semDedupView(
+      spark: SparkSession, stateDir: String, model: KMeans.Model): ViewDef = {
+    val postings =
+      new ParquetKeyedTable(spark, s"$stateDir/$Name-post")
+
+    ViewDef(Name, (pre, post, batch, ctx) => {
+      val touched = ctx.cache(batch("embeddings").select("key").distinct())
 
       def assigned(rows: DataFrame): DataFrame = model
         .assign(rows.select(col("key").as("vec_id"),
-          col(vecCol).cast(ArrayType(DoubleType)).as("v")))
+          col("embedding").cast(ArrayType(DoubleType)).as("v")))
         .select(col("vec_id"), col("cluster").cast("string").as("cluster"))
 
-      val oldAssign = ctx.cache(assigned(pre.rows(table, touched)))
-      val newAssign = ctx.cache(assigned(post.rows(table, touched)))
+      val oldAssign = ctx.cache(assigned(pre.rows("embeddings", touched)))
+      val newAssign = ctx.cache(assigned(post.rows("embeddings", touched)))
 
       val affected = ctx.cache(oldAssign.select("cluster")
         .union(newAssign.select("cluster")).distinct()
@@ -79,13 +80,13 @@ object StreamingSemDeDup {
         * pinned one. */
       def score(members: DataFrame, state: StateAccess): DataFrame = {
         val keys = members.select(col("vec_id").as("key")).distinct()
-        val vecs = state.rows(table, keys)
+        val vecs = state.rows("embeddings", keys)
           .select(col("key").as("vec_id"),
-            col(vecCol).cast(ArrayType(DoubleType)).as("v"))
+            col("embedding").cast(ArrayType(DoubleType)).as("v"))
         // re-assign from the frozen model rather than trusting the
         // posting side: identical by determinism, and keeps semDedup's
         // contract (one cluster per vector) locally checkable
-        KMeans.semDedup(vecs, model, tau)
+        KMeans.semDedup(vecs, model, Tau)
       }
 
       val postScore = ctx.cache(score(sw.post, post))

@@ -19,15 +19,14 @@ import graft.operators.Relational
   * the cluster-monitor ledger discipline). */
 object StreamingSharding {
 
+  private val NShards = 8
+
   /** Sink documents: (id = shard key, shard, n_docs, n_chars). */
-  def shardStatsView(
-      spark: SparkSession, stateDir: String,
-      name: String = "shard_stats", table: String = "documents",
-      nShards: Int = 8): ViewDef =
-    IncrementalAgg.view(spark, stateDir, name, table,
+  def shardStatsView(spark: SparkSession, stateDir: String): ViewDef =
+    IncrementalAgg.view(spark, stateDir, "shard_stats", "documents",
       IncrementalAgg.GroupSpec(
         Seq("g_shard" ->
-          Relational.rendezvousShard(col("doc_id"), nShards).cast("string")),
+          Relational.rendezvousShard(col("doc_id"), NShards).cast("string")),
         live = lit(true),
         amount = length(col("text")).cast("double")),
       toDoc = m => m.select(col("key").as("id"),

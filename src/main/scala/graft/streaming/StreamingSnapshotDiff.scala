@@ -23,15 +23,10 @@ import org.apache.spark.sql.functions._
   */
 object StreamingSnapshotDiff {
 
-  /** @param tableA the v1 (baseline) corpus table name
-    * @param tableB the v2 (candidate) corpus table name
-    * @param idCol  shared doc identity column in both tables' state rows
-    * @param sourceCol reporting dimension
-    * @param textCol  content column the digest is taken over */
-  def view(spark: SparkSession, stateDir: String,
-      tableA: String = "docs_v1", tableB: String = "docs_v2",
-      idCol: String = "doc_id", sourceCol: String = "source",
-      textCol: String = "text"): ViewDef = {
+  /** Continuous change-class counts per `source` between the v1
+    * (baseline) `docs_v1` and v2 (candidate) `docs_v2` corpus tables,
+    * digesting each doc's `text`. */
+  def view(spark: SparkSession, stateDir: String): ViewDef = {
     val aggTable =
       new ParquetKeyedTable(spark, s"$stateDir/snapshot_diff-agg")
 
@@ -39,8 +34,8 @@ object StreamingSnapshotDiff {
     // 16-byte shuffle currency of the batch operator, never documents
     def digests(rows: DataFrame, side: String): DataFrame =
       rows.select(col("key"),
-        col(sourceCol).cast("string").as(s"s_$side"),
-        md5(col(textCol)).as(s"h_$side"))
+        col("source").cast("string").as(s"s_$side"),
+        md5(col("text")).as(s"h_$side"))
 
     // per-id change class of one (vA, vB) state pair over touched ids
     def classes(a: DataFrame, b: DataFrame): DataFrame =
@@ -59,12 +54,12 @@ object StreamingSnapshotDiff {
         lit(sign.toDouble).as("d_amt"), lit(sign.toLong).as("d_cnt"))
 
     ViewDef("snapshot_diff", (pre, post, batch, ctx) => {
-      val touched = ctx.cache(batch(tableA).select("key")
-        .unionByName(batch(tableB).select("key")).distinct())
-      val deltas = contrib(
-        classes(post.rows(tableA, touched), post.rows(tableB, touched)), 1)
-        .unionByName(contrib(
-          classes(pre.rows(tableA, touched), pre.rows(tableB, touched)), -1))
+      val touched = ctx.cache(batch("docs_v1").select("key")
+        .unionByName(batch("docs_v2").select("key")).distinct())
+      val deltas = contrib(classes(post.rows("docs_v1", touched),
+          post.rows("docs_v2", touched)), 1)
+        .unionByName(contrib(classes(pre.rows("docs_v1", touched),
+          pre.rows("docs_v2", touched)), -1))
       val IncrementalAgg.Folded(_, liveGroups, deadGroups) =
         IncrementalAgg.applyDeltas(aggTable, deltas, "cnt", ctx)
       (liveGroups.select(col("key").as("id"), col("change_class"),

@@ -47,28 +47,28 @@ object StreamingSubstrRemoval {
     StructField("members", ArrayType(StructType(Seq(
       StructField("m", StringType), StructField("c", LongType)))))))
 
+  private val Name = "substr_removal"
+  private val N = 50
+
   /** Continuous span-removal view over a CDC `documents`-shaped source.
     * Sink documents: (id = doc key, cleaned, n_removed). */
-  def substrRemovalView(
-      spark: SparkSession, stateDir: String,
-      name: String = "substr_removal", table: String = "documents",
-      textCol: String = "text", n: Int = 50): ViewDef = {
+  def substrRemovalView(spark: SparkSession, stateDir: String): ViewDef = {
     val postings =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-post")
+      new ParquetKeyedTable(spark, s"$stateDir/$Name-post")
 
-    ViewDef(name, (pre, post, batch, ctx) => {
-      val touched = ctx.cache(batch(table).select("key").distinct())
+    ViewDef(Name, (pre, post, batch, ctx) => {
+      val touched = ctx.cache(batch("documents").select("key").distinct())
 
       def wins(rows: DataFrame): DataFrame = rows
         .select(col("key").as("doc_id"),
-          posexplode(graft.functions.NGrams.charWindowGrams(col(textCol), n))
+          posexplode(graft.functions.NGrams.charWindowGrams(col("text"), N))
             .as(Seq("i", "g")))
 
       def occ(rows: DataFrame): DataFrame = wins(rows)
         .groupBy("g", "doc_id").agg(count(lit(1)).as("c"))
 
-      val oldOcc = ctx.cache(occ(pre.rows(table, touched)))
-      val newOcc = ctx.cache(occ(post.rows(table, touched)))
+      val oldOcc = ctx.cache(occ(pre.rows("documents", touched)))
+      val newOcc = ctx.cache(occ(post.rows("documents", touched)))
 
       val affected = ctx.cache(oldOcc.select("g").union(newOcc.select("g"))
         .distinct().withColumnRenamed("g", "key"))
@@ -95,8 +95,8 @@ object StreamingSubstrRemoval {
       // exact q122 rows for the re-emit docs at post state: windows from
       // the doc's own text, posting totals pruned to those windows, the
       // shared interval fold for the cut
-      val docRows = ctx.cache(post.rows(table, rescore)
-        .select(col("key"), col(textCol)))
+      val docRows = ctx.cache(post.rows("documents", rescore)
+        .select(col("key"), col("text")))
       val rw = ctx.cache(wins(docRows))
       val dupNow = postings
         .rowsForKeys(postSchema, rw.select(col("g").as("key")).distinct())
@@ -108,11 +108,11 @@ object StreamingSubstrRemoval {
         .groupBy("doc_id")
         .agg(sort_array(collect_list(col("i"))).as("starts"))
       val cleaned =
-        graft.operators.Dedup.removeCovered(col(textCol), col("starts"), n)
+        graft.operators.Dedup.removeCovered(col("text"), col("starts"), N)
       val upserts = docRows
         .join(starts, col("key") === col("doc_id"), "left")
         .select(col("key").as("id"), cleaned.as("cleaned"),
-          (length(col(textCol)) - length(cleaned)).cast("long")
+          (length(col("text")) - length(cleaned)).cast("long")
             .as("n_removed"))
       val deletes = rescore.select(col("key").as("id"))
         .join(upserts.select("id"), Seq("id"), "left_anti")

@@ -7,7 +7,7 @@ import org.apache.spark.sql.types._
 /** Incremental EXACT-substring duplicate detection over a growing CDC
   * corpus — the streaming form of batch q59: the sink holds, at every
   * instant, each document pair sharing at least one verbatim
-  * `windowLen`-char run of the CURRENT document state, with its shared
+  * `WindowLen`-char run of the CURRENT document state, with its shared
   * distinct-window count.
   *
   * Simpler than [[StreamingDedup]]'s MinHash ladder because the window
@@ -37,29 +37,29 @@ object StreamingSubstringDedup {
     StructField("key", StringType),
     StructField("members", ArrayType(StringType))))
 
+  private val Name = "substring_dup_pairs"
+  private val WindowLen = 50
+
   /** Continuous substring-dup-pairs view over a CDC `documents`-shaped
     * source. Sink documents: (id = "a|b", doc_a, doc_b, shared_windows).
-    * Defaults match batch q59 (50-char windows). */
-  def substringDupView(
-      spark: SparkSession, stateDir: String,
-      name: String = "substring_dup_pairs", table: String = "documents",
-      textCol: String = "text", windowLen: Int = 50): ViewDef = {
+    * Constants match batch q59 (50-char windows). */
+  def substringDupView(spark: SparkSession, stateDir: String): ViewDef = {
     val bucketTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-buckets")
+      new ParquetKeyedTable(spark, s"$stateDir/$Name-buckets")
 
-    ViewDef(name, (pre, post, batch, ctx) => {
-      val touched = ctx.cache(batch(table).select("key").distinct())
+    ViewDef(Name, (pre, post, batch, ctx) => {
+      val touched = ctx.cache(batch("documents").select("key").distinct())
 
       def windows(docs: org.apache.spark.sql.DataFrame) = docs
         .select(col("key").as("doc_id"),
-          explode(graft.functions.NGrams.charGrams(col(textCol), windowLen))
+          explode(graft.functions.NGrams.charGrams(col("text"), WindowLen))
             .as("g"))
         .select(col("doc_id"), md5(col("g")).as("h"))
 
       // 1. window only the batch docs — pre text for retraction keys,
       // post text for discovery (a deleted doc has no post image)
-      val oldWin = windows(pre.rows(table, touched))
-      val newWin = ctx.cache(windows(post.rows(table, touched)))
+      val oldWin = windows(pre.rows("documents", touched))
+      val newWin = ctx.cache(windows(post.rows("documents", touched)))
 
       val affected = oldWin.select("h").union(newWin.select("h"))
         .distinct().withColumnRenamed("h", "key")

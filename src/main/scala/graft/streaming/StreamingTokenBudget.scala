@@ -29,14 +29,14 @@ import graft.operators.{Provenance, TextAnalysis}
   * dropped by the group-key null filter. */
 object StreamingTokenBudget {
 
+  private val Name = "token_budget"
+
   /** Sink documents: (id = registered domain, registered_domain,
     * n_docs, n_tokens, threshold_qb, n_docs_kept, n_tokens_kept). */
   def budgetView(
-      spark: SparkSession, stateDir: String,
-      name: String = "token_budget", table: String = "documents",
-      budget: Long = 500L): ViewDef = {
+      spark: SparkSession, stateDir: String, budget: Long = 500L): ViewDef = {
     val aggTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-agg")
+      new ParquetKeyedTable(spark, s"$stateDir/$Name-agg")
     val gNames = Seq("g_rd", "g_qb")
     val spec = IncrementalAgg.GroupSpec(
       Seq(
@@ -46,11 +46,11 @@ object StreamingTokenBudget {
       live = lit(true),
       amount = Provenance.tokenCount(col("text")).cast("double"))
 
-    ViewDef(name, (pre, post, batch, ctx) => {
-      val touched = batch(table).select("key").distinct()
+    ViewDef(Name, (pre, post, batch, ctx) => {
+      val touched = batch("documents").select("key").distinct()
       val deltas = IncrementalAgg
-        .contrib(post.rows(table, touched), spec, 1)
-        .unionByName(IncrementalAgg.contrib(pre.rows(table, touched),
+        .contrib(post.rows("documents", touched), spec, 1)
+        .unionByName(IncrementalAgg.contrib(pre.rows("documents", touched),
           spec, -1))
       val IncrementalAgg.Folded(_, liveGroups, deadGroups) =
         IncrementalAgg.applyDeltas(aggTable, deltas, "cnt", ctx)

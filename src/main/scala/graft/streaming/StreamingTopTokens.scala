@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -43,18 +43,17 @@ object StreamingTopTokens {
     StructField("key", StringType), StructField("cnt", LongType)))
 
   /** Handle exposing the maintained view and its read path. */
-  final class TokenCounts(spark: SparkSession, stateDir: String,
-      table: String, tokens: Column) {
+  final class TokenCounts(spark: SparkSession, stateDir: String) {
     private val state =
       new ParquetKeyedTable(spark, s"$stateDir/token_counts-state")
 
     val view: ViewDef = ViewDef("token_counts", (pre, post, batch, ctx) => {
-      val touched = batch(table).select("key").distinct()
+      val touched = batch("documents").select("key").distinct()
       def tokenCounts(rows: DataFrame, sign: Long): DataFrame =
-        rows.select(explode(tokens).as("key"))
+        rows.select(explode(split(trim(col("text")), "\\s+")).as("key"))
           .groupBy("key").agg((count(lit(1)) * sign).as("d_cnt"))
-      val deltas = tokenCounts(post.rows(table, touched), 1L)
-        .unionByName(tokenCounts(pre.rows(table, touched), -1L))
+      val deltas = tokenCounts(post.rows("documents", touched), 1L)
+        .unionByName(tokenCounts(pre.rows("documents", touched), -1L))
       val IncrementalAgg.Folded(_, live, dead) =
         IncrementalAgg.applyDeltas(state, deltas, "cnt", ctx)
       (live.select(col("key").as("id"), col("key").as("token"),
@@ -71,10 +70,8 @@ object StreamingTopTokens {
         .select(col("key").as("token"), col("cnt"))
   }
 
-  /** Token-count view over `table`'s changelog; default tokenization is
+  /** Token-count view over the `documents` changelog, tokenized by
     * q62's whitespace split. */
-  def tokenCounts(spark: SparkSession, stateDir: String,
-      table: String = "documents",
-      tokens: Column = split(trim(col("text")), "\\s+")): TokenCounts =
-    new TokenCounts(spark, stateDir, table, tokens)
+  def tokenCounts(spark: SparkSession, stateDir: String): TokenCounts =
+    new TokenCounts(spark, stateDir)
 }

@@ -22,20 +22,20 @@ import graft.operators.Provenance
   * emptied-group retraction, replay idempotence) is unchanged. */
 object StreamingUrlDedup {
 
-  def urlDedupView(
-      spark: SparkSession, stateDir: String,
-      name: String = "url_dedup", table: String = "documents"): ViewDef = {
+  private val Name = "url_dedup"
+
+  def urlDedupView(spark: SparkSession, stateDir: String): ViewDef = {
     val postings =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-post")
+      new ParquetKeyedTable(spark, s"$stateDir/$Name-post")
     def rawUrl(id: org.apache.spark.sql.Column) =
       Provenance.syntheticUrl(id.cast("long"))
 
-    ViewDef(name, (pre, post, batch, ctx) => {
-      val touched = ctx.cache(batch(table).select("key").distinct())
+    ViewDef(Name, (pre, post, batch, ctx) => {
+      val touched = ctx.cache(batch("documents").select("key").distinct())
       // the fingerprint reads the doc's key (its id), not its text —
       // textCol = "key" feeds the ladder's fp function the id column
       val st = StreamingExactDedup.maintainFpState(
-        postings, pre, post, touched, ctx, table, textCol = "key",
+        postings, pre, post, touched, ctx, textCol = "key",
         fpFn = k => Provenance.normalizeUrl(rawUrl(k)))
       val upserts = st.postMembers
         .withColumn("url", rawUrl(col("member")))

@@ -64,34 +64,34 @@ object StreamingVocabCoverage {
     IncrementalAgg.applyDeltas(cntTable, deltas, "cnt", ctx).merged
   }
 
+  private val Name = "vocab_coverage"
+  private val MemberShards = 16
+
   def coverageView(
-      spark: SparkSession, stateDir: String,
-      name: String = "vocab_coverage", table: String = "documents",
-      textCol: String = "text", topK: Int = 20,
-      memberShards: Int = 16): ViewDef = {
+      spark: SparkSession, stateDir: String, topK: Int = 20): ViewDef = {
     val cntTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-cnt")
+      new ParquetKeyedTable(spark, s"$stateDir/$Name-cnt")
     val holdTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-members")
+      new ParquetKeyedTable(spark, s"$stateDir/$Name-members")
     val headTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-head")
+      new ParquetKeyedTable(spark, s"$stateDir/$Name-head")
 
     def shardKey(tok: Column, doc: Column): Column =
-      Keys.pair(tok, pmod(xxhash64(doc), lit(memberShards)))
+      Keys.pair(tok, pmod(xxhash64(doc), lit(MemberShards)))
 
-    ViewDef(name, (pre, post, batch, ctx) => {
+    ViewDef(Name, (pre, post, batch, ctx) => {
       import spark.implicits._
       val preMV = holdTable.versionBefore(ctx.batchId)
       val preHV = headTable.versionBefore(ctx.batchId)
 
-      val touched = ctx.cache(batch(table).select("key").distinct())
+      val touched = ctx.cache(batch("documents").select("key").distinct())
 
       def toks(rows: DataFrame): DataFrame = rows
         .select(col("key").as("doc"),
-          explode(split(trim(col(textCol)), "\\s+")).as("tok"))
+          explode(split(trim(col("text")), "\\s+")).as("tok"))
 
-      val preT = ctx.cache(toks(pre.rows(table, touched)))
-      val postT = ctx.cache(toks(post.rows(table, touched)))
+      val preT = ctx.cache(toks(pre.rows("documents", touched)))
+      val postT = ctx.cache(toks(post.rows("documents", touched)))
 
       // 1. occurrence counters ±
       maintainTokenCounters(cntTable, preT, postT, ctx)
@@ -140,7 +140,7 @@ object StreamingVocabCoverage {
       // postT)
       val transKeyDf = transToks.toDF("tok")
         .select(col("tok"),
-          explode(sequence(lit(0), lit(memberShards - 1))).as("sh"))
+          explode(sequence(lit(0), lit(MemberShards - 1))).as("sh"))
         .select(Keys.pair(col("tok"), col("sh")).as("key"))
       val resHolders = holdTable.rowsForKeysAt(preMV, memberSchema, transKeyDf)
         .select(explode(col("members")).as("key"))
@@ -152,8 +152,8 @@ object StreamingVocabCoverage {
 
       // 5. re-score from post state against the new head literal
       val headLit = typedlit(newHead)
-      val w = split(trim(col(textCol)), "\\s+")
-      val upserts = ctx.cache(post.rows(table, affectedDocs)
+      val w = split(trim(col("text")), "\\s+")
+      val upserts = ctx.cache(post.rows("documents", affectedDocs)
         .select(col("key").as("id"),
           size(w).cast("long").as("n_tok"),
           size(filter(w, x => array_contains(headLit, x))).cast("long")

@@ -53,31 +53,30 @@ object StreamingVocabOverlap {
     StructField("source_b", StringType),
     StructField("n_common", LongType)))
 
-  def vocabOverlapView(
-      spark: SparkSession, stateDir: String,
-      name: String = "vocab_overlap", table: String = "documents",
-      textCol: String = "text", sourceCol: String = "source"): ViewDef = {
-    val tokTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-tok")
-    val nvTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-nv")
-    val pairTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-pairs")
+  private val Name = "vocab_overlap"
 
-    ViewDef(name, (pre, post, batch, ctx) => {
+  def vocabOverlapView(spark: SparkSession, stateDir: String): ViewDef = {
+    val tokTable =
+      new ParquetKeyedTable(spark, s"$stateDir/$Name-tok")
+    val nvTable =
+      new ParquetKeyedTable(spark, s"$stateDir/$Name-nv")
+    val pairTable =
+      new ParquetKeyedTable(spark, s"$stateDir/$Name-pairs")
+
+    ViewDef(Name, (pre, post, batch, ctx) => {
       val tokPreV = tokTable.versionBefore(ctx.batchId)
 
-      val touched = ctx.cache(batch(table).select("key").distinct())
+      val touched = ctx.cache(batch("documents").select("key").distinct())
 
       // doc-distinct (source, token) contributions of one state image
       def docTokens(rows: DataFrame, sign: Int): DataFrame = rows
-        .select(col("key"), col(sourceCol).as("source"),
-          explode(array_distinct(split(trim(col(textCol)), "\\s+")))
+        .select(col("key"), col("source"),
+          explode(array_distinct(split(trim(col("text")), "\\s+")))
             .as("tok"))
         .select(col("source"), col("tok"), lit(sign.toLong).as("d"))
 
-      val deltas = ctx.cache(docTokens(pre.rows(table, touched), -1)
-        .unionByName(docTokens(post.rows(table, touched), 1))
+      val deltas = ctx.cache(docTokens(pre.rows("documents", touched), -1)
+        .unionByName(docTokens(post.rows("documents", touched), 1))
         .groupBy("tok", "source").agg(sum("d").as("d"))
         .filter(col("d") =!= 0))
 

@@ -9,8 +9,8 @@ import org.apache.spark.sql.types._
   * streaming form of batch q105 (Schleimer et al. SIGMOD 2003 pairs via
   * [[graft.functions.WinnowedFingerprints]]), keeping every batch-dedup
   * family member paired with a continuous counterpart. The sink holds, at
-  * every instant, exactly the pairs sharing ≥ `minShared` fingerprints
-  * whose CURRENT document frequency lies in [dfLo, dfHi] — identical to
+  * every instant, exactly the pairs sharing ≥ `MinShared` fingerprints
+  * whose CURRENT document frequency lies in [DfLo, DfHi] — identical to
   * what batch q105 computes over the materialized corpus.
   *
   * The subtlety the df cap adds over the containment view's fixed-prefix
@@ -49,30 +49,33 @@ object StreamingWinnow {
     StructField("key", StringType),
     StructField("members", ArrayType(StringType))))
 
+  private val Name = "winnow_pairs"
+  private val K = 8
+  private val W = 4
+  private val DfLo = 2
+  private val DfHi = 10
+  private val MinShared = 5
+
   /** Continuous winnowing-pairs view over a CDC `documents`-shaped
     * source. Sink documents: (id = "a|b", doc_a, doc_b, n_shared).
-    * Defaults match batch q105: k = 8, w = 4, df ∈ [2, 10], ≥ 5 shared. */
-  def winnowView(
-      spark: SparkSession, stateDir: String,
-      name: String = "winnow_pairs", table: String = "documents",
-      textCol: String = "text", k: Int = 8, w: Int = 4,
-      dfLo: Int = 2, dfHi: Int = 10, minShared: Int = 5): ViewDef = {
+    * Constants match batch q105: k = 8, w = 4, df ∈ [2, 10], ≥ 5 shared. */
+  def winnowView(spark: SparkSession, stateDir: String): ViewDef = {
     val postings =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-post")
+      new ParquetKeyedTable(spark, s"$stateDir/$Name-post")
 
-    ViewDef(name, (pre, post, batch, ctx) => {
+    ViewDef(Name, (pre, post, batch, ctx) => {
       val preV = postings.versionBefore(ctx.batchId)
 
-      val touched = ctx.cache(batch(table).select("key").distinct())
+      val touched = ctx.cache(batch("documents").select("key").distinct())
 
       def fps(rows: DataFrame): DataFrame = rows
         .select(col("key").as("doc_id"),
-          explode(graft.functions.Winnow.fingerprints(col(textCol), k, w))
+          explode(graft.functions.Winnow.fingerprints(col("text"), K, W))
             .as("fl"))
         .select(col("doc_id"), col("fl").cast("string").as("f"))
 
-      val oldFps = ctx.cache(fps(pre.rows(table, touched)))
-      val newFps = ctx.cache(fps(post.rows(table, touched)))
+      val oldFps = ctx.cache(fps(pre.rows("documents", touched)))
+      val newFps = ctx.cache(fps(post.rows("documents", touched)))
 
       val affected = ctx.cache(oldFps.select("f").union(newFps.select("f"))
         .distinct().withColumnRenamed("f", "key"))
@@ -98,7 +101,7 @@ object StreamingWinnow {
         val rfps = ctx.cache(fps(docRows))
         val keys = rfps.select(col("f").as("key")).distinct()
         val capped = postingsAt(keys)
-          .filter(size(col("members")).between(dfLo, dfHi))
+          .filter(size(col("members")).between(DfLo, DfHi))
           .select(col("key").as("f"), explode(col("members")).as("member"))
         rfps.join(capped, "f")
           .filter(col("member") =!= col("doc_id"))
@@ -107,12 +110,12 @@ object StreamingWinnow {
           .distinct()
           .groupBy("doc_a", "doc_b")
           .agg(count(lit(1)).as("n_shared"))
-          .filter(col("n_shared") >= minShared)
+          .filter(col("n_shared") >= MinShared)
       }
 
-      val postScore = ctx.cache(score(post.rows(table, rescore),
+      val postScore = ctx.cache(score(post.rows("documents", rescore),
         ks => postings.rowsForKeys(postSchema, ks)))
-      val preScore = score(pre.rows(table, rescore),
+      val preScore = score(pre.rows("documents", rescore),
         ks => postings.rowsForKeysAt(preV, postSchema, ks))
 
       val upserts = postScore.select(

@@ -18,7 +18,7 @@ import graft.operators.TextAnalysis
   * language's report is simply recomputed from its merged vocabulary —
   * the affected-key recomputation posture, with "key" = language. The
   * vocabulary state is sharded `lang|shard` rows ([[StreamingDomainCap]]
-  * ledger pattern): a language's vocabulary spreads over `shards`
+  * ledger pattern): a language's vocabulary spreads over `Shards`
   * bounded-width rows, and a batch reads exactly the touched languages'
   * shards — never another language's, never the corpus. Counter rows
   * are running sums: reads pin the pre-batch version and merges carry
@@ -37,35 +37,34 @@ object StreamingZipf {
       StructField("tok", StringType),
       StructField("cnt", LongType)))))))
 
-  def zipfView(
-      spark: SparkSession, stateDir: String,
-      name: String = "zipf_fit", table: String = "documents",
-      textCol: String = "text", langCol: String = "lang",
-      shards: Int = 64): ViewDef = {
+  private val Name = "zipf_fit"
+  private val Shards = 64
+
+  def zipfView(spark: SparkSession, stateDir: String): ViewDef = {
     val vocabTable =
-      new ParquetKeyedTable(spark, s"$stateDir/$name-vocab")
+      new ParquetKeyedTable(spark, s"$stateDir/$Name-vocab")
 
     def shardKey(lang: Column, tok: Column): Column =
-      Keys.pair(lang, pmod(xxhash64(tok), lit(shards)))
+      Keys.pair(lang, pmod(xxhash64(tok), lit(Shards)))
 
-    ViewDef(name, (pre, post, batch, ctx) => {
+    ViewDef(Name, (pre, post, batch, ctx) => {
       val preV = vocabTable.versionBefore(ctx.batchId)
-      val touched = ctx.cache(batch(table).select("key").distinct())
+      val touched = ctx.cache(batch("documents").select("key").distinct())
 
       def occurrences(rows: DataFrame, sign: Int): DataFrame = rows
-        .select(col(langCol).as("lang"),
-          explode(split(trim(col(textCol)), "\\s+")).as("tok"))
+        .select(col("lang"),
+          explode(split(trim(col("text")), "\\s+")).as("tok"))
         .select(col("lang"), col("tok"), lit(sign.toLong).as("d"))
 
-      val deltas = ctx.cache(occurrences(pre.rows(table, touched), -1)
-        .unionByName(occurrences(post.rows(table, touched), 1))
+      val deltas = ctx.cache(occurrences(pre.rows("documents", touched), -1)
+        .unionByName(occurrences(post.rows("documents", touched), 1))
         .groupBy("lang", "tok").agg(sum("d").as("d"))
         .filter(col("d") =!= 0))
 
       // every touched language re-fits, whichever shards its deltas hit
       val touchedLangs = ctx.cache(deltas.select("lang").distinct())
       val shardKeys = touchedLangs
-        .select(col("lang"), explode(sequence(lit(0), lit(shards - 1)))
+        .select(col("lang"), explode(sequence(lit(0), lit(Shards - 1)))
           .as("sh"))
         .select(Keys.pair(col("lang"), col("sh")).as("key"))
 

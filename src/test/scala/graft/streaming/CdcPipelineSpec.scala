@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.functions.{col, date_format}
 import org.apache.spark.sql.types._
 
 import graft.{SparkSuite, TableSpec}
@@ -436,8 +437,19 @@ class CdcPipelineSpec extends SparkSuite {
     // and the replay must leave BOTH views exactly once-applied.
     val sink = new InMemoryUpsertSink
     val stateDir = tmpDir("cdc-crash")
-    val viewA = IncrementalAgg.orderStats(spark, stateDir)
-    val viewB = IncrementalAgg.userOrderStats(spark, stateDir)
+    val live = col("status") =!= "closed"
+    val day = date_format(col("ctime"), "yyyy-MM-dd")
+    val viewA = IncrementalAgg.view(spark, stateDir, "order_stats_view",
+      "orders", IncrementalAgg.GroupSpec(Seq("g_day" -> day), live,
+        col("amount")),
+      toDoc = m => m.select(col("key").as("id"), col("amt").as("amount"),
+        col("cnt")))
+    val viewB = IncrementalAgg.view(spark, stateDir,
+      "user_order_stats_view", "orders", IncrementalAgg.GroupSpec(
+        Seq("g_user" -> col("user_id").cast("string"), "g_day" -> day),
+        live, col("amount")),
+      toDoc = m => m.select(col("key").as("id"),
+        col("amt").as("order.amount.day"), col("cnt").as("order.count.day")))
     @volatile var crash = false
     // the pipeline runs sink indexes concurrently and the views of one
     // index in declared order: the tripwire shares view B's index, so a

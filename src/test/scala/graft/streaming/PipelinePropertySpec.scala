@@ -171,11 +171,10 @@ class PipelinePropertySpec extends SparkSuite {
           TableSpec("users", usersSchema, primaryKey = Seq("id")),
           TableSpec("order_items", itemsSchema, primaryKey = Seq("id"))),
         stateDir, sink,
-        Seq(IncrementalAgg.userOrderStats(spark, stateDir),
-          IncrementalAgg.orderStats(spark, stateDir),
-          IncrementalAgg.productStats(spark, stateDir),
+        ReferenceSql.views(spark, "user_order_stats_view",
+          "order_stats_view", "product_stats_view") :+
           // own index: determinism, as above
-          IncrementalAgg.userTotals(spark, stateDir).copy(index = null)))
+          ReferenceSql.view(spark, "user_totals", index = "user_totals"))
 
       val records = evs.zipWithIndex.map { case (e, i) => envelope(e, i.toLong) }
       val batches = records.grouped(math.max(records.size / 3, 1)).toSeq
