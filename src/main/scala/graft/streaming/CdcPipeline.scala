@@ -31,13 +31,18 @@ final class StateAccess(
 /** Batch-scoped context a view's maintenance runs under.
   *
   *  - `batchId`: the foreachBatch id, when the batch came from a stream —
-  *    views with their own state stores thread it into those stores'
-  *    merges so a REDELIVERED batch (crash between per-store commits)
-  *    replays idempotently ([[ParquetKeyedTable.merge]]), and pin every
-  *    pre-batch read of those stores at
-  *    `store.versionBefore(ctx.batchId)` — the replay pin
-  *    ([[ParquetKeyedTable.versionBefore]]), so a redelivered batch
-  *    reads the same pre-state and recomputes the same deltas.
+  *    [[IncrementalAgg]]'s shapes thread it into every view-owned
+  *    store's merge so a REDELIVERED batch (crash between per-store
+  *    commits) replays idempotently ([[ParquetKeyedTable.merge]]).
+  *  - `pin`: the per-batch replay pin — a store's pre-batch version,
+  *    `store.versionBefore(batchId)` ([[ParquetKeyedTable.versionBefore]])
+  *    recorded the first time the store is pinned in this batch. Every
+  *    shape pins before it merges, so a pinned read made after the
+  *    store's own merge still sees the pre-batch rows, with or without a
+  *    batchId, and a redelivered batch reads the same pre-state and
+  *    recomputes the same deltas.
+  *  - `touched`: a source table's distinct touched keys in this batch,
+  *    cached once on first use and shared by every view that asks.
   *  - `changedTables`: the source tables this batch carries changes for,
   *    from the pipeline's one stats pass — a view skips a batch that
   *    touches none of its tables without probing the changelogs.
@@ -55,19 +60,29 @@ final class StateAccess(
   *    exactly until the sink has consumed the batch.
   *  - `onCommit`: registers an action to run once EVERY sink write of the
   *    batch has returned, before the deferred cleanups; skipped when the
-  *    batch fails. Views may call both from concurrent threads. */
+  *    batch fails. Views run concurrently, so every member may be
+  *    called from several threads. */
 final class BatchCtx(
     val batchId: Option[Long],
     val changedTables: Set[String],
-    val replay: Boolean) {
+    val replay: Boolean,
+    changelogs: Map[String, DataFrame]) {
   private val commits = scala.collection.mutable.Buffer.empty[() => Unit]
   private val cleanups = scala.collection.mutable.Buffer.empty[() => Unit]
+  private val touchedKeys = scala.collection.mutable.Map.empty[String, DataFrame]
+  private val pins = scala.collection.mutable.Map.empty[ParquetKeyedTable, Option[Int]]
   def defer(f: => Unit): Unit = synchronized { cleanups += (() => f) }
   def cache(df: DataFrame): DataFrame = {
     df.persist(StorageLevel.MEMORY_AND_DISK)
     defer(df.unpersist())
     df
   }
+  def touched(table: String): DataFrame = synchronized {
+    touchedKeys.getOrElseUpdate(table,
+      cache(changelogs(table).select("key").distinct()))
+  }
+  private[streaming] def pin(store: ParquetKeyedTable): Option[Int] =
+    synchronized(pins.getOrElseUpdate(store, store.versionBefore(batchId)))
   def onCommit(f: => Unit): Unit = synchronized { commits += (() => f) }
   private[streaming] def commit(): Unit = synchronized(commits.toSeq).foreach(_())
   private[streaming] def close(): Unit = synchronized(cleanups.toSeq).foreach(_())
@@ -101,8 +116,8 @@ object ViewDef {
     * deterministic in post-state and the sink upsert is keyed. */
   def perRow(name: String, table: String)(
       report: DataFrame => DataFrame): ViewDef =
-    ViewDef(name, (_, post, batch, _) => {
-      val affected = batch(table).select("key").distinct()
+    ViewDef(name, (_, post, _, ctx) => {
+      val affected = ctx.touched(table)
       val upserts = report(post.rows(table, affected))
       val deletes = affected.select(col("key").as("id"))
         .join(upserts.select("id"), Seq("id"), "left_anti")
@@ -258,7 +273,7 @@ final class CdcPipeline(
 
       // 4. maintain each view over affected keys: indexes concurrently,
       //    the views of one index in declared order
-      val ctx = new BatchCtx(batchId, touched.keySet, replay)
+      val ctx = new BatchCtx(batchId, touched.keySet, replay, changelogs)
       try {
         val indexes = views.map(_.sinkIndex).distinct
         Concurrently(spark, indexes.map { index => () =>

@@ -34,15 +34,38 @@ import org.apache.spark.sql.types._
   * state and the sink — the retraction contract (flink-ddl.sql:208: a
   * cancelled order's group disappears).
   *
-  * The module owns the two state shapes every view-owned store uses:
-  *   - a ± counter store (key, attrs…, measures…), folded by
-  *     [[applyDeltas]]: a row lives while its count measure is > 0;
-  *   - a group → members store (key, array of entries), maintained by
-  *     [[swapMembers]]: the batch's touched docs leave their old
-  *     entries and enter with their fresh ones.
-  * Both read the pre-batch rows at `versionBefore(ctx.batchId)` and
-  * merge with `ctx.batchId`, so a replayed batch reads the same rows,
-  * returns the same frames and skips the already-committed merge.
+  * The module is the one home of every view-owned store's replay
+  * discipline: each shape pins the store's pre-batch version through
+  * [[BatchCtx.pin]] before its one commit ([[commit]], the store merge
+  * carrying `ctx.batchId`), so a replayed batch reads the same rows,
+  * returns the same frames and skips the already-committed merge, and a
+  * pinned read ([[preRows]], [[preSnapshot]]) sees the pre-batch rows
+  * before or after the store's own merge. The shapes and their users:
+  *   - [[applyDeltas]], a ± counter store (key, attrs…, measures…): a row
+  *     lives while its count measure is > 0. [[view]]'s group aggregates
+  *     (Agreement, Calibration, ClusterMonitor, Curation, DomainOccupancy,
+  *     Dq, Drift, KAnonymity, Sharding), the counters of AucMonitor,
+  *     Boilerplate, Cms, Datasheet, Decontamination, Dsir, HistQuantiles,
+  *     Lm, Mix, SnapshotDiff, TokenBudget, TopTokens, VocabCoverage and
+  *     VocabOverlap, and the single stats rows (Bm25 `corpus`, Datasheet
+  *     `all`, Lm `corpus`);
+  *   - [[swapMembers]], a group → members store (key, array of entries):
+  *     the batch's touched docs leave their old entries and enter with
+  *     their fresh ones. The postings and LSH buckets of Ann, Bm25,
+  *     Boilerplate, ChunkDedup, Containment, Decontamination, Dedup (and
+  *     its pair-state users), ExactDedup (and its fingerprint users:
+  *     canonical, URL, Datasheet, PipelineCorpus), IvfPq, Novelty, Phash,
+  *     SemDeDup, SubstrRemoval, SubstringDedup and Winnow; the AsOf and
+  *     Scd2 indexes; and the DomainCap, PipelineCorpus and VocabCoverage
+  *     ledgers, whose extra column rides inside the entry struct;
+  *   - [[foldMembers]], a group → (member, count) store: ± counts folded
+  *     per (group, member), a member living while its count is > 0.
+  *     Zipf's vocabulary shards and VocabOverlap's token entries;
+  *   - [[replaceRows]], a keyed store whose rows of the batch's keys are
+  *     replaced wholesale. The per-doc indexes (Dedup sigs, Phash hashes,
+  *     ChunkDedup docs, Bm25 dl, Dsir feats, EmbeddingDecon holdout), the
+  *     Curation/FuzzyDecon/MultimodalCuration pair tables, the cluster
+  *     label tables, VocabCoverage's head row and Cardinality's HLL rows.
   */
 object IncrementalAgg {
 
@@ -88,7 +111,7 @@ object IncrementalAgg {
     *
     * Replay safety: running sums are the one store a double-apply would
     * CORRUPT (±deltas are not value-idempotent), so the old rows pin
-    * `versionBefore(batchId)` — identical on first delivery and on replay
+    * the batch's pre-version — identical on first delivery and on replay
     * after a partial crash — and the merge carries the batchId so an
     * already-committed store skips. The returned frames derive from
     * (pre-version rows + deltas), so they too are replay-identical. */
@@ -104,8 +127,7 @@ object IncrementalAgg {
     val schema = StructType(StructField("key", StringType) +:
       (attrs ++ dNames).map(n => StructField(n.stripPrefix("d_"),
         summed.schema(n).dataType)))
-    val old = store.rowsForKeysAt(store.versionBefore(ctx.batchId), schema,
-        summed.select("key"))
+    val old = preRows(store, schema, summed.select("key"), ctx)
       .select(col("key") +:
         schema.fieldNames.tail.map(n => col(n).as(s"o_$n")): _*)
     val merged = ctx.cache(summed.join(old, Seq("key"), "left")
@@ -118,51 +140,127 @@ object IncrementalAgg {
           }): _*))
     val live = merged.filter(col(countCol) > 0)
     val dead = merged.filter(col(countCol) <= 0).select("key")
-    store.merge(live.select(schema.fieldNames.map(col): _*), dead,
-      ctx.batchId)
+    commit(store, live.select(schema.fieldNames.map(col): _*), dead, ctx)
     Folded(merged, live, dead)
   }
 
-  /** [[swapMembers]]' result: the affected groups' exploded entries
-    * (key, owner, fields…) before (`pre`) and after (`post`) the batch,
-    * both batch-cached, and `emptied` = (key) the affected groups left
-    * with no entry. */
+  /** The pinned pre-batch rows of `keys` in `store` — read at the
+    * version [[BatchCtx.pin]] recorded for this batch, so the read sees
+    * the pre-batch rows whether it runs before or after the store's own
+    * merge, and a replayed batch reads the same rows. */
+  private[streaming] def preRows(store: ParquetKeyedTable,
+      schema: StructType, keys: DataFrame, ctx: BatchCtx): DataFrame =
+    store.rowsForKeysAt(ctx.pin(store), schema, keys)
+
+  /** [[preRows]] of the whole store, for the stores a batch reads entire
+    * (the cluster-label and pair tables). */
+  private[streaming] def preSnapshot(store: ParquetKeyedTable,
+      schema: StructType, ctx: BatchCtx): DataFrame =
+    store.snapshotAt(ctx.pin(store), schema)
+
+  /** A view-owned store's one commit of the batch: the pre-batch version
+    * is pinned first, then the merge carries the batchId, so a store that
+    * already committed this batch skips. Every shape commits here. */
+  private def commit(store: ParquetKeyedTable, upserts: DataFrame,
+      deletes: DataFrame, ctx: BatchCtx): Unit = {
+    ctx.pin(store)
+    store.merge(upserts, deletes, ctx.batchId)
+  }
+
+  /** Keyed replace: the rows of `keys` become `fresh` (key, fields… —
+    * `schema`'s columns), a key with no fresh row is deleted. The
+    * pre-batch rows of `keys` are [[preRows]] of the same keys, valid
+    * before or after this commit. */
+  private[streaming] def replaceRows(store: ParquetKeyedTable,
+      schema: StructType, keys: DataFrame, fresh: DataFrame,
+      ctx: BatchCtx): Unit =
+    commit(store, fresh.select(schema.fieldNames.map(col): _*),
+      keys.select("key").join(fresh.select("key"), Seq("key"), "left_anti"),
+      ctx)
+
+  /** The result of [[swapMembers]] and [[foldMembers]]: `affected` =
+    * (key) the groups read and rewritten, their exploded entries (key,
+    * fields…) before (`pre`) and after (`post`) the batch, all
+    * batch-cached, and `emptied` = (key) the affected groups left with
+    * no entry. */
   private[streaming] final case class Swapped(
-      pre: DataFrame, post: DataFrame, emptied: DataFrame)
+      affected: DataFrame, pre: DataFrame, post: DataFrame,
+      emptied: DataFrame)
+
+  /** The affected groups (old ∪ fresh keys, batch-cached) and their
+    * pinned pre-batch rows exploded to (key, fields…): an array of
+    * structs explodes to its fields, an array of plain values to the
+    * one column `owner`. */
+  private def explodedPre(store: ParquetKeyedTable, schema: StructType,
+      old: DataFrame, fresh: DataFrame, owner: String,
+      ctx: BatchCtx): (DataFrame, DataFrame, Seq[String]) = {
+    val arr = schema.fieldNames(1)
+    val affected = ctx.cache(old.select("key")
+      .union(fresh.select("key")).distinct())
+    val exploded = preRows(store, schema, affected, ctx)
+      .select(col("key"), explode(col(arr)).as("e"))
+    val (names, fields) = schema(arr).dataType match {
+      case ArrayType(e: StructType, _) =>
+        (e.fieldNames.toSeq, e.fieldNames.toSeq.map(n => col(s"e.$n").as(n)))
+      case _ => (Seq(owner), Seq(col("e").as(owner)))
+    }
+    (affected, ctx.cache(exploded.select(col("key") +: fields: _*)), names)
+  }
+
+  /** Regroup the affected groups' post-batch entries into `schema`'s
+    * array column and commit; the groups with no entry are deleted. */
+  private def regroup(store: ParquetKeyedTable, schema: StructType,
+      affected: DataFrame, pre: DataFrame, post: DataFrame,
+      names: Seq[String], ctx: BatchCtx): Swapped = {
+    val entry = schema(schema.fieldNames(1)).dataType match {
+      case ArrayType(_: StructType, _) => struct(names.map(col): _*)
+      case _ => col(names.head)
+    }
+    val rows = post.groupBy("key")
+      .agg(collect_list(entry).as(schema.fieldNames(1)))
+    val emptied = affected.join(rows.select("key"), Seq("key"), "left_anti")
+    commit(store, rows, emptied, ctx)
+    Swapped(affected, pre, post, emptied)
+  }
 
   /** Membership swap of a group → members store (key, array): each
     * array element is its owner doc's key, or a struct whose first field
-    * is that key. The `affected` groups' pre-batch rows are exploded,
-    * the `touched` docs' entries dropped and the `fresh` ones — (key,
-    * owner) or (key, struct fields…) — added; the affected groups are
-    * then regrouped, the emptied ones deleted. Same replay pin and
-    * batchId merge as [[applyDeltas]]. */
+    * is that key. The affected groups — the `old` groups the batch's docs
+    * sat in ∪ the `fresh` entries' groups — are read pre-batch and
+    * exploded, the `touched` docs' entries dropped and the `fresh` ones —
+    * (key, owner) or (key, struct fields…) — added; the affected groups
+    * are then regrouped, the emptied ones deleted. */
   private[streaming] def swapMembers(
-      store: ParquetKeyedTable, schema: StructType, affected: DataFrame,
+      store: ParquetKeyedTable, schema: StructType, old: DataFrame,
       touched: DataFrame, fresh: DataFrame, ctx: BatchCtx): Swapped = {
-    val arr = schema.fieldNames(1)
-    // entry columns, the stored element built from them, and the
-    // exploded element's field `n`
-    val (names, entry, field) = schema(arr).dataType match {
-      case ArrayType(e: StructType, _) => (e.fieldNames.toSeq,
-        struct(e.fieldNames.map(col): _*), (n: String) => col(s"e.$n"))
-      case _ =>
-        val owner = fresh.columns.filter(_ != "key").head
-        (Seq(owner), col(owner), (_: String) => col("e"))
-    }
+    val owner = fresh.columns.filter(_ != "key").head
+    val (affected, pre, names) =
+      explodedPre(store, schema, old, fresh, owner, ctx)
     val cols = ("key" +: names).map(col)
-    val pre = ctx.cache(store
-      .rowsForKeysAt(store.versionBefore(ctx.batchId), schema, affected)
-      .select(col("key"), explode(col(arr)).as("e"))
-      .select(col("key") +: names.map(n => field(n).as(n)): _*))
     val post = ctx.cache(pre
       .join(touched.select(col("key").as(names.head)), Seq(names.head),
         "left_anti")
       .select(cols: _*).unionByName(fresh.select(cols: _*)))
-    val rows = post.groupBy("key").agg(collect_list(entry).as(arr))
-    val emptied = affected.join(rows.select("key"), Seq("key"), "left_anti")
-    store.merge(rows, emptied, ctx.batchId)
-    Swapped(pre, post, emptied)
+    regroup(store, schema, affected, pre, post, names, ctx)
+  }
+
+  /** Nested ± fold of a group → (member, count) store (key, array of
+    * structs whose last field is the count): `deltas` (key, member
+    * fields…, d) are added to the affected groups' — `keys` ∪ the
+    * deltas' groups — pre-batch counts per (group, member), an entry
+    * lives while its count is > 0, and the groups are regrouped, the
+    * emptied ones deleted. */
+  private[streaming] def foldMembers(
+      store: ParquetKeyedTable, schema: StructType, keys: DataFrame,
+      deltas: DataFrame, ctx: BatchCtx): Swapped = {
+    val (affected, pre, names) =
+      explodedPre(store, schema, keys, deltas, "", ctx)
+    val (members, cnt) = (names.init, names.last)
+    val post = ctx.cache(pre.join(deltas, "key" +: members, "full_outer")
+      .select(("key" +: members).map(col) :+
+        (coalesce(col(cnt), lit(0L)) + coalesce(col("d"), lit(0L))).as(cnt): _*)
+      .filter(col(cnt) > 0))
+    regroup(store, schema, affected, pre, post, names, ctx)
   }
 
   /** Single-input incremental GROUP BY view: deltas from the pre→post
@@ -176,7 +274,7 @@ object IncrementalAgg {
     val aggTable =
       new ParquetKeyedTable(spark, s"$stateDir/$name-agg")
     ViewDef(name, (pre, post, batch, ctx) => {
-      val touched = batch(table).select("key").distinct()
+      val touched = ctx.touched(table)
       val deltas = contrib(post.rows(table, touched), spec, 1)
         .unionByName(contrib(pre.rows(table, touched), spec, -1))
       val folded = applyDeltas(aggTable, deltas, "cnt", ctx)

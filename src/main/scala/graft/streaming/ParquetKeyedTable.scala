@@ -160,16 +160,14 @@ final class ParquetKeyedTable(
 
   private def schemaFile(v: Int): Path = dir.resolve(s"v$v").resolve("_schema.json")
 
-  /** The schema version `v` recorded at commit; a version committed
-    * before versions recorded one falls back to merging its footers. */
-  private def schemaAt(v: Int): StructType =
-    if (Files.exists(schemaFile(v)))
-      DataType.fromJson(new String(Files.readAllBytes(schemaFile(v)), UTF_8))
-        .asInstanceOf[StructType]
-    else if (hasData(dir.resolve(s"v$v")))
-      spark.read.option("mergeSchema", "true")
-        .parquet(dir.resolve(s"v$v").toString).drop("bucket").schema
-    else new StructType()
+  /** The schema version `v` recorded at commit — every commit path
+    * records one before its pointer flip. */
+  private def schemaAt(v: Int): StructType = {
+    val file = schemaFile(v)
+    require(Files.exists(file), s"committed version $v has no schema file $file")
+    DataType.fromJson(new String(Files.readAllBytes(file), UTF_8))
+      .asInstanceOf[StructType]
+  }
 
   /** `prev` widened by the columns of `next` it lacks — the column order
     * `unionByName(allowMissingColumns = true)` gives a merged frame. */

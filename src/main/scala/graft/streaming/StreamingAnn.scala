@@ -65,7 +65,7 @@ object StreamingAnn {
   def indexView(spark: SparkSession, stateDir: String): ViewDef = {
     val (bucketTable, planes) = index(spark, stateDir)
     ViewDef(Name, (pre, post, batch, ctx) => {
-      val touched = ctx.cache(batch("embeddings").select("key").distinct())
+      val touched = ctx.touched("embeddings")
 
       // buckets the batch vectors leave (pre-state image) and enter
       // (post-state image; a deleted key has no post row → leaves only)
@@ -76,10 +76,8 @@ object StreamingAnn {
         .select(col("key").as("vec_key"),
           explode(bandKeys(col("embedding"), planes)).as("bkey")))
 
-      val affected = oldKeys.select("bkey").union(newKeys.select("bkey"))
-        .distinct().withColumnRenamed("bkey", "key")
       val sw = IncrementalAgg.swapMembers(bucketTable, bucketSchema,
-        affected, touched,
+        oldKeys.select(col("bkey").as("key")), touched,
         newKeys.select(col("bkey").as("key"), col("vec_key")), ctx)
 
       val upserts = sw.post.groupBy(col("key").as("id"))

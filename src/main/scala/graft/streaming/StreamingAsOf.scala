@@ -54,7 +54,7 @@ object StreamingAsOf {
       new ParquetKeyedTable(spark, s"$stateDir/$Name-by-key")
 
     ViewDef(Name, (pre, post, batch, ctx) => {
-      val touched = ctx.cache(batch("events").select("key").distinct())
+      val touched = ctx.touched("events")
       val preRows = ctx.cache(pre.rows("events", touched)
         .select(col("key"), col("user_id"), col("ts"), col("event_type")))
       val postRows = ctx.cache(post.rows("events", touched)

@@ -63,7 +63,7 @@ object StreamingAucMonitor {
 
     ViewDef(Name, (pre, post, batch, ctx) => {
       import spark.implicits._
-      val touched = ctx.cache(batch("documents").select("key").distinct())
+      val touched = ctx.touched("documents")
 
       def cells(rows: DataFrame): DataFrame = rows.select(
         scoreExpr(col("text"), weights).as("score"),

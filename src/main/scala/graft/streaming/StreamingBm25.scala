@@ -81,7 +81,7 @@ object StreamingBm25 {
     val (postTable, dlTable, statsTable) = stores(spark, stateDir)
 
     ViewDef(Name, (pre, post, batch, ctx) => {
-      val touched = ctx.cache(batch("documents").select("key").distinct())
+      val touched = ctx.touched("documents")
       // a batch that touches no documents must not commit anything —
       // without this, the unconditional stats upsert below would write a
       // new (identical) version per batch on a multi-source pipeline
@@ -101,15 +101,12 @@ object StreamingBm25 {
       dlTable: ParquetKeyedTable, statsTable: ParquetKeyedTable,
       vocab: Seq[String], pre: StateAccess, post: StateAccess,
       touched: DataFrame, ctx: BatchCtx): (DataFrame, DataFrame) = {
-      val preDlV = dlTable.versionBefore(ctx.batchId)
-      val preStatsV = statsTable.versionBefore(ctx.batchId)
-
       // 1. tokenize only B's live post images
       val docs = ctx.cache(post.rows("documents", touched)
         .select(col("key").as("doc"),
           split(trim(col("text")), "\\s+").as("toks")))
-      val newDl = ctx.cache(
-        docs.select(col("doc"), size(col("toks")).cast("long").as("dl")))
+      val newDl = ctx.cache(docs.select(col("doc").as("key"),
+        size(col("toks")).cast("long").as("dl")))
       val vocabDf = broadcast(
         spark.createDataFrame(vocab.map(Tuple1(_))).toDF("term"))
       val newTf = ctx.cache(docs
@@ -122,44 +119,31 @@ object StreamingBm25 {
       // (a doc's shard never changes), ≤ |vocab| × |B| keys
       val shards = touched.select(shardOf(col("key")).as("shard"))
         .distinct()
-      val affected = shards.crossJoin(vocabDf)
-        .select(concat_ws("|", col("term"), col("shard")).as("key"))
-      val sw = IncrementalAgg.swapMembers(postTable, postSchema, affected,
+      val sw = IncrementalAgg.swapMembers(postTable, postSchema,
+        shards.crossJoin(vocabDf)
+          .select(concat_ws("|", col("term"), col("shard")).as("key")),
         touched, newTf.select(
           concat_ws("|", col("term"), shardOf(col("doc"))).as("key"),
           col("doc"), col("tf")), ctx)
 
-      // 3. doc lengths (± source of the corpus-stat deltas) + stats
-      val preDl = dlTable.rowsForKeysAt(preDlV, dlSchema, touched)
-      val gone = touched.join(
-        newDl.select(col("doc").as("key")), Seq("key"), "left_anti")
-      dlTable.merge(newDl.select(col("doc").as("key"), col("dl")), gone,
-        ctx.batchId)
-
-      // bounded driver reads: one aggregate row per side + the 1-row stats
-      val preAgg = preDl.agg(count(lit(1)), coalesce(sum("dl"), lit(0L)))
-        .head()
-      val postAgg = newDl.agg(count(lit(1)), coalesce(sum("dl"), lit(0L)))
-        .head()
-      val (pn, pt) = (preAgg.getLong(0), preAgg.getLong(1))
-      val (nn, nt) = (postAgg.getLong(0), postAgg.getLong(1))
-      val statsKeys = spark.createDataFrame(Seq(Tuple1("corpus")))
-        .toDF("key")
-      val preStats = statsTable
-        .rowsForKeysAt(preStatsV, statsSchema, statsKeys)
-        .collect().headOption
-      val (n0, t0) = preStats
-        .map(r => (r.getLong(1), r.getLong(2))).getOrElse((0L, 0L))
-      val newStats = spark.createDataFrame(
-        Seq(("corpus", n0 - pn + nn, t0 - pt + nt)))
-        .toDF("key", "n_docs", "total_tok")
-      statsTable.merge(newStats, statsKeys.limit(0), ctx.batchId)
+      // 3. doc lengths (± source of the corpus-stat deltas) + stats, a
+      // one-row ± fold that always carries the corpus row
+      val preDl = IncrementalAgg.preRows(dlTable, dlSchema, touched, ctx)
+      IncrementalAgg.replaceRows(dlTable, dlSchema, touched, newDl, ctx)
+      def statDeltas(dl: DataFrame, sign: Long): DataFrame =
+        dl.select(lit("corpus").as("key"), lit(sign).as("d_n_docs"),
+          (col("dl") * sign).as("d_total_tok"))
+      val stats = IncrementalAgg.applyDeltas(statsTable,
+        statDeltas(newDl, 1L).unionByName(statDeltas(preDl, -1L))
+          .unionByName(spark.createDataFrame(Seq(("corpus", 0L, 0L)))
+            .toDF("key", "d_n_docs", "d_total_tok")),
+        "n_docs", ctx).merged
 
       // sink mirror: affected posting rows + the stats doc
       val upserts = sw.post.groupBy(col("key").as("id"))
         .agg(array_join(array_sort(collect_list(
           concat_ws(":", col("doc"), col("tf")))), ",").as("postings_csv"))
-        .unionByName(newStats.select(lit("corpus|stats").as("id"),
+        .unionByName(stats.select(lit("corpus|stats").as("id"),
           concat_ws(":", col("n_docs"), col("total_tok")).as("postings_csv")))
       (upserts, sw.emptied.select(col("key").as("id")))
   }

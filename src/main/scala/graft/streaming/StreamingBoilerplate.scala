@@ -74,9 +74,7 @@ object StreamingBoilerplate {
       new ParquetKeyedTable(spark, s"$stateDir/$Name-ndocs")
 
     ViewDef(Name, (pre, post, batch, ctx) => {
-      val prePV = postings.versionBefore(ctx.batchId)
-
-      val touched = ctx.cache(batch("documents").select("key").distinct())
+      val touched = ctx.touched("documents")
 
       // distinct (source|token, doc) membership of the touched docs,
       // before and after
@@ -106,22 +104,20 @@ object StreamingBoilerplate {
 
       // postings read-modify-write for the batch-touched (source, token)
       // keys only — bucket-pruned, the gram-view pattern
-      val affectedSt = preM.select("st").union(postM.select("st"))
-        .distinct().withColumnRenamed("st", "key")
-      IncrementalAgg.swapMembers(postings, postSchema, affectedSt, touched,
+      IncrementalAgg.swapMembers(postings, postSchema,
+        preM.select(col("st").as("key")), touched,
         postM.select(col("st").as("key"), col("doc")), ctx)
 
       // membership flips: evaluate the WHOLE vocabulary state of every
       // affected source against old and new (df, ndocs). Old df from the
       // pre posting version; new df from the post version (merge above
       // — or the already-committed state on replay).
-      def dfOf(version: Option[Int]): DataFrame = postings
-        .snapshotAt(version, postSchema)
+      def dfOf(snapshot: DataFrame): DataFrame = snapshot
         .select(col("key").as("st"), size(col("members")).cast("long").as("df"),
           srcOfKey(col("key")).as("src"))
         .join(broadcast(affectedSources), Seq("src"), "left_semi")
-      val oldDf = dfOf(prePV)
-      val newDf = dfOf(postings.version)
+      val oldDf = dfOf(IncrementalAgg.preSnapshot(postings, postSchema, ctx))
+      val newDf = dfOf(postings.snapshot(postSchema))
       val flips = oldDf.withColumnRenamed("df", "old_df")
         .join(newDf.withColumnRenamed("df", "new_df"),
           Seq("st", "src"), "full_outer")

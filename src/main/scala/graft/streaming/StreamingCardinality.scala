@@ -45,22 +45,20 @@ object StreamingCardinality {
     val state = new ParquetKeyedTable(
       spark, s"$stateDir/vocab_sketch-state", "key", 8)
     ViewDef("vocab_sketch", (pre, post, batch, ctx) => {
-      val touched = batch("documents").select("key").distinct()
+      val touched = ctx.touched("documents")
       val partials = post.rows("documents", touched)
         .select(Group.as("key"), explode(Tokens).as("tok"))
         .groupBy("key")
         .agg(hll_sketch_agg(col("tok")).as("d_sketch"))
-      val preV = state.versionBefore(ctx.batchId)
-      val old = state.rowsForKeysAt(preV, stateSchema,
-        partials.select("key"))
+      val old = IncrementalAgg.preRows(state, stateSchema,
+        partials.select("key"), ctx)
         .withColumnRenamed("sketch", "o_sketch")
-      val merged = partials.join(old, Seq("key"), "left")
+      val merged = ctx.cache(partials.join(old, Seq("key"), "left")
         .select(col("key"),
           when(col("o_sketch").isNull, col("d_sketch"))
             .otherwise(hll_union(col("o_sketch"), col("d_sketch")))
-            .as("sketch"))
-      state.merge(merged, merged.filter(lit(false)).select("key"),
-        ctx.batchId)
+            .as("sketch")))
+      IncrementalAgg.replaceRows(state, stateSchema, merged, merged, ctx)
       val upserts = merged.select(col("key").as("id"),
         col("key").as("lang"),
         hll_sketch_estimate(col("sketch")).as("distinct_tokens"))

@@ -69,9 +69,7 @@ object StreamingChunkDedup {
       new ParquetKeyedTable(spark, s"$stateDir/$name-chunks")
 
     ViewDef(name, (pre, post, batch, ctx) => {
-      val preDocV = docTable.versionBefore(ctx.batchId)
-
-      val touched = ctx.cache(batch("documents").select("key").distinct())
+      val touched = ctx.touched("documents")
 
       // 1. chunk ONLY the batch docs, through the batch query's path
       val newLists = ctx.cache(post.rows("documents", touched)
@@ -81,19 +79,15 @@ object StreamingChunkDedup {
         .groupBy("d", "h").agg(count(lit(1)).cast("int").as("c"))
 
       // 2. the docs' OLD fingerprints, from the doc-side index
-      val oldHashes = docTable.rowsForKeysAt(preDocV, docSchema, touched)
-        .select(explode(col("hashes")).as("h")).distinct()
+      val oldHashes = IncrementalAgg.preRows(docTable, docSchema, touched, ctx)
+        .select(explode(col("hashes")).as("key"))
 
       // doc-index update: live docs' new lists (empty list rows kept —
       // a <32-token doc legitimately owns no chunks); vanished docs drop
-      docTable.merge(newLists, touched.join(newLists.select("key"),
-        Seq("key"), "left_anti"), ctx.batchId)
+      IncrementalAgg.replaceRows(docTable, docSchema, touched, newLists, ctx)
 
       // 3. rebuild the affected fingerprints' carrier sets
-      val affected = ctx.cache(oldHashes
-        .union(newContribs.select(col("h"))).distinct()
-        .withColumnRenamed("h", "key"))
-      val sw = IncrementalAgg.swapMembers(chunkTable, chunkSchema, affected,
+      val sw = IncrementalAgg.swapMembers(chunkTable, chunkSchema, oldHashes,
         touched, newContribs.withColumnRenamed("h", "key"), ctx)
 
       // 4. shared fingerprints upsert; fallen/vanished ones delete
@@ -102,7 +96,7 @@ object StreamingChunkDedup {
           sum("c").cast("long").as("n_occ"),
           min(col("d").cast("long")).as("first_doc"))
         .filter(col("n_docs") > 1))
-      val deletes = affected.select(col("key").as("id"))
+      val deletes = sw.affected.select(col("key").as("id"))
         .join(upserts.select("id"), Seq("id"), "left_anti")
       (upserts, deletes)
     })

@@ -45,7 +45,7 @@ object StreamingCms {
     val state = new ParquetKeyedTable(
       spark, s"$stateDir/cms-state", "key", 8)
     ViewDef("cms_sketch", (pre, post, batch, ctx) => {
-      val touched = batch("documents").select("key").distinct()
+      val touched = ctx.touched("documents")
       val delta = cellCounts(post.rows("documents", touched), "text", 1)
         .unionAll(cellCounts(pre.rows("documents", touched), "text", -1))
         .groupBy("cell").agg(sum("d").as("d_cnt"))

@@ -82,9 +82,7 @@ object StreamingContainment {
       new ParquetKeyedTable(spark, s"$stateDir/$Name-prefix")
 
     ViewDef(Name, (pre, post, batch, ctx) => {
-      val prefPreV = prefPost.versionBefore(ctx.batchId)
-
-      val touched = ctx.cache(batch("documents").select("key").distinct())
+      val touched = ctx.touched("documents")
 
       def feats(rows: DataFrame): DataFrame = rows
         .select(col("key").as("doc_id"),
@@ -98,24 +96,23 @@ object StreamingContainment {
 
       // postings of every affected key (pruned lookups); full postings:
       // batch docs leave their old keys, enter their new ones
-      val affectedFull = ctx.cache(oldFeats.select("f").union(newFeats.select("f"))
-        .distinct().withColumnRenamed("f", "key"))
-      val affectedPref = ctx.cache(oldPrefix.select("f").union(newPrefix.select("f"))
-        .distinct().withColumnRenamed("f", "key"))
-      val full = IncrementalAgg.swapMembers(fullPost, postSchema, affectedFull,
-        touched, newFeats.select(col("f").as("key"), col("doc_id").as("member")),
-        ctx)
+      val full = IncrementalAgg.swapMembers(fullPost, postSchema,
+        oldFeats.select(col("f").as("key")), touched,
+        newFeats.select(col("f").as("key"), col("doc_id").as("member")), ctx)
       val preFull = full.pre.withColumnRenamed("key", "f")
       val postFull = full.post.withColumnRenamed("key", "f")
-      // prefix postings are READ over affectedFull, not affectedPref:
-      // the as-B directions join a batch doc's WHOLE feature set against
-      // resident prefixes, and a resident partner's prefix key need not
-      // appear in the batch doc's own prefix — reading only prefix keys
-      // missed those partners (discovery) and left their stale pairs
-      // unretracted. Membership, by contrast, only changes on the batch
-      // docs' own prefix keys, so the MERGE below stays affectedPref-
-      // scoped (prePrefNarrow).
-      val prePref = ctx.cache(prefPost.rowsForKeysAt(prefPreV, postSchema, affectedFull)
+      // prefix postings: membership only changes on the batch docs' own
+      // prefix keys, so the swap stays scoped to them; but they are READ
+      // over the full affected keys — the as-B directions join a batch
+      // doc's WHOLE feature set against resident prefixes, and a resident
+      // partner's prefix key need not appear in the batch doc's own
+      // prefix (reading only prefix keys missed those partners in
+      // discovery and left their stale pairs unretracted)
+      IncrementalAgg.swapMembers(prefPost, postSchema,
+        oldPrefix.select(col("f").as("key")), touched,
+        newPrefix.select(col("f").as("key"), col("doc_id").as("member")), ctx)
+      val prePref = ctx.cache(IncrementalAgg
+        .preRows(prefPost, postSchema, full.affected, ctx)
         .select(col("key").as("f"), explode(col("members")).as("member")))
 
       // retract superset: pairs any previous batch could have emitted
@@ -128,22 +125,13 @@ object StreamingContainment {
         .select(col("member").as("doc_a"), col("doc_id").as("doc_b"))
       val retractCandidates = oldAsA.union(oldAsB).distinct()
 
-      // post-state prefix members over the WIDE read set, computed ONCE:
-      // discovery joins against all of it (resident prefix keys outside
-      // affectedPref included — see above), while the prefix-table MERGE
-      // takes only its affectedPref slice (the only keys whose
-      // membership can change)
+      // post-state prefix members over the WIDE read set: discovery joins
+      // against all of it (resident prefix keys outside the batch docs'
+      // own prefixes included — see above)
       val postPref = ctx.cache(prePref.join(
           touched.withColumnRenamed("key", "member"),
           Seq("member"), "left_anti")
         .unionByName(newPrefix.select(col("f"), col("doc_id").as("member"))))
-      val prefRows = postPref.join(
-          affectedPref.withColumnRenamed("key", "f"), Seq("f"), "left_semi")
-        .groupBy("f").agg(collect_list("member").as("members"))
-        .select(col("f").as("key"), col("members"))
-      val prefEmptied = affectedPref
-        .join(prefRows.select("key"), Seq("key"), "left_anti")
-      prefPost.merge(prefRows, prefEmptied, ctx.batchId)
 
       // discover, both directions, against POST postings (residents and
       // same-batch partners both present)

@@ -87,13 +87,11 @@ object StreamingCuration {
     // 1. pair maintenance (shared machinery with the near-dup view)
     val delta = StreamingDedup.maintainPairState(
       sigTable, bucketTable, post, touched, ctx)
-    val pairUpserts = delta.verified.select(
-      Keys.pair(col("doc_a"), col("doc_b")).as("key"),
-      col("doc_a"), col("doc_b"))
-    val pairDeletes = delta.retractCandidates
-      .select(Keys.pair(col("doc_a"), col("doc_b")).as("key"))
-      .join(pairUpserts.select("key"), Seq("key"), "left_anti")
-    pairTable.merge(pairUpserts, pairDeletes, ctx.batchId)
+    IncrementalAgg.replaceRows(pairTable, pairSchema,
+      delta.retractCandidates
+        .select(Keys.pair(col("doc_a"), col("doc_b")).as("key")),
+      delta.verified.select(Keys.pair(col("doc_a"), col("doc_b")).as("key"),
+        col("doc_a"), col("doc_b")), ctx)
 
     // 2. cluster labels over the post-batch pair graph (on replay the
     // merge above skipped, so `version` is already the post state)
@@ -102,24 +100,26 @@ object StreamingCuration {
       .select(col("doc_a"), col("doc_b"))
     val newLabels = ctx.cache(Dedup.clusterPairsStar(postPairs)
       .select(col("doc_id").as("key"), col("cluster_id")))
+    val labelDiff = relabel(labelTable, newLabels, ctx)
+    ClusterState(newLabels, labelDiff)
+  }
 
-    val preLabelV = labelTable.versionBefore(ctx.batchId)
-    val oldLabels = labelTable.snapshotAt(preLabelV, labelSchema)
-    labelTable.merge(newLabels,
-      oldLabels.select("key").join(newLabels.select("key"),
-        Seq("key"), "left_anti"),
-      ctx.batchId)
-
-    // survivor status can only change where the label row changed
-    // (appeared, disappeared, or moved cluster) — or where the text
-    // itself changed (the batch docs)
-    val labelDiff = oldLabels.withColumnRenamed("cluster_id", "old_cid")
+  /** Replace a cluster-label table (key, cluster_id) with `newLabels` and
+    * return the docs whose survivor status may have changed: (key) rows
+    * that appeared, disappeared or moved cluster vs the pinned pre-batch
+    * labels. Shared by every label table ([[maintainClusterState]] and
+    * [[StreamingMultimodalCuration]]'s media labels). */
+  private[streaming] def relabel(labelTable: ParquetKeyedTable,
+      newLabels: DataFrame, ctx: BatchCtx): DataFrame = {
+    val oldLabels = IncrementalAgg.preSnapshot(labelTable, labelSchema, ctx)
+    IncrementalAgg.replaceRows(labelTable, labelSchema, oldLabels,
+      newLabels, ctx)
+    oldLabels.withColumnRenamed("cluster_id", "old_cid")
       .join(newLabels.withColumnRenamed("cluster_id", "new_cid"),
         Seq("key"), "full_outer")
       .filter(col("old_cid").isNull || col("new_cid").isNull ||
         col("old_cid") =!= col("new_cid"))
       .select("key")
-    ClusterState(newLabels, labelDiff)
   }
 
   /** This batch's affected-doc frontier and near-dup loser set under
@@ -185,7 +185,7 @@ object StreamingCuration {
       new ParquetKeyedTable(spark, s"$stateDir/$Name-labels")
 
     ViewDef(Name, (pre, post, batch, ctx) => {
-      val touched = ctx.cache(batch("documents").select("key").distinct())
+      val touched = ctx.touched("documents")
       val cs = maintainClusterState(sigTable, bucketTable, pairTable,
         labelTable, post, touched, ctx)
       val newLabels = cs.newLabels

@@ -37,14 +37,6 @@ import graft.operators.TextAnalysis
   * sink row == batch q120 recompute after every micro-batch. */
 object StreamingDatasheet {
 
-  private def statsSchema = StructType(Seq(
-    StructField("key", StringType),
-    StructField("n_docs", LongType),
-    StructField("n_tokens", LongType),
-    StructField("q_mu", DoubleType),     // integer-valued micro-units
-    StructField("n_vocab", LongType),
-    StructField("n_texts", LongType)))
-
   private def langSchema = StructType(Seq(
     StructField("key", StringType),
     StructField("cnt", LongType)))
@@ -71,7 +63,7 @@ object StreamingDatasheet {
 
     ViewDef(Name, (pre, post, batch, ctx) => {
       import spark.implicits._
-      val touched = ctx.cache(batch("documents").select("key").distinct())
+      val touched = ctx.touched("documents")
       val preRows = ctx.cache(pre.rows("documents", touched))
       val postRows = ctx.cache(post.rows("documents", touched))
 
@@ -124,22 +116,17 @@ object StreamingDatasheet {
         sigTable, bucketTable, pairTable, labelTable, post, touched, ctx)
       val nNearDocs = cs.newLabels.count()
 
-      // running-counter transition
-      val preSV = statsTable.versionBefore(ctx.batchId)
-      val old = statsTable
-        .rowsForKeysAt(preSV, statsSchema, Seq("all").toDF("key"))
-        .collect().headOption
-      val nDocs = old.map(_.getLong(1)).getOrElse(0L) + deltas.getLong(0)
-      val nTokens = old.map(_.getLong(2)).getOrElse(0L) + deltas.getLong(1)
-      val qMu = old.map(_.getDouble(3)).getOrElse(0.0) + deltas.getDouble(2)
-      val nVocab = old.map(_.getLong(4)).getOrElse(0L) + vocabDelta
-      val nTexts = old.map(_.getLong(5)).getOrElse(0L) + textsDelta
-      statsTable.merge(
-        Seq(("all", nDocs, nTokens, qMu, nVocab, nTexts))
-          .toDF("key", "n_docs", "n_tokens", "q_mu", "n_vocab", "n_texts"),
-        if (nDocs > 0) Seq.empty[String].toDF("key")
-        else Seq("all").toDF("key"),
-        ctx.batchId)
+      // running-counter transition: a one-row ± fold, the row retracting
+      // with the corpus
+      val sheet = IncrementalAgg.applyDeltas(statsTable,
+        Seq(("all", deltas.getLong(0), deltas.getLong(1), deltas.getDouble(2),
+          vocabDelta, textsDelta)).toDF("key", "d_n_docs", "d_n_tokens",
+          "d_q_mu", "d_n_vocab", "d_n_texts"), "n_docs", ctx).merged.head()
+      val nDocs = sheet.getAs[Long]("n_docs")
+      val nTokens = sheet.getAs[Long]("n_tokens")
+      val qMu = sheet.getAs[Double]("q_mu")
+      val nVocab = sheet.getAs[Long]("n_vocab")
+      val nTexts = sheet.getAs[Long]("n_texts")
 
       if (nDocs <= 0) {
         // empty corpus: the datasheet row retracts (rates are undefined)

@@ -74,8 +74,6 @@ object StreamingDecontamination {
       hTable: ParquetKeyedTable, tTable: ParquetKeyedTable,
       pre: StateAccess, post: StateAccess,
       touched: DataFrame, ctx: BatchCtx): GramState = {
-    val preTV = tTable.versionBefore(ctx.batchId)
-
     // per-doc DISTINCT grams (wordShingles dedups) with the split tag
     def grams(docs: DataFrame): DataFrame = docs
       .select(col("key").as("doc"), isTrain(col("text")).as("train"),
@@ -104,18 +102,16 @@ object StreamingDecontamination {
         .select(col("key").as("g"))
 
       // 3. train inverted-index maintenance (affected gram rows only)
-      val affectedT = preG.filter(col("train")).select("g")
-        .union(postG.filter(col("train")).select("g"))
-        .distinct().withColumnRenamed("g", "key")
-      IncrementalAgg.swapMembers(tTable, memberSchema, affectedT, touched,
+      IncrementalAgg.swapMembers(tTable, memberSchema,
+        preG.filter(col("train")).select(col("g").as("key")), touched,
         postG.filter(col("train")).select(col("g").as("key"), col("doc")), ctx)
 
     // the re-score set beyond B itself: every train holder of a
     // transitioned gram — resident holders from the PRE index (their
     // post rows are unchanged: they are not in B), batch holders from
     // postG
-    val transHolders = tTable
-      .rowsForKeysAt(preTV, memberSchema, transitions.select(col("g").as("key")))
+    val transHolders = IncrementalAgg
+      .preRows(tTable, memberSchema, transitions.select(col("g").as("key")), ctx)
       .select(explode(col("members")).as("key"))
       .union(postG.filter(col("train"))
         .join(transitions, Seq("g"), "left_semi").select(col("doc").as("key")))
@@ -146,7 +142,7 @@ object StreamingDecontamination {
       new ParquetKeyedTable(spark, s"$stateDir/$Name-tgrams")
 
     ViewDef(Name, (pre, post, batch, ctx) => {
-      val touched = ctx.cache(batch("documents").select("key").distinct())
+      val touched = ctx.touched("documents")
       val gs = maintainGramState(hTable, tTable, pre, post, touched, ctx)
       val affectedDocs = ctx.cache(touched
         .union(gs.transHolders).distinct())

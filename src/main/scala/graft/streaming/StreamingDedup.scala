@@ -80,7 +80,7 @@ object StreamingDedup {
       new ParquetKeyedTable(spark, s"$stateDir/$Name-buckets")
 
     ViewDef(Name, (pre, post, batch, ctx) => {
-      val touched = ctx.cache(batch("documents").select("key").distinct())
+      val touched = ctx.touched("documents")
       val delta = maintainPairState(sigTable, bucketTable, post, touched, ctx)
       val upserts = delta.verified.select(
         Keys.pair(col("doc_a"), col("doc_b")).as("id"),
@@ -100,8 +100,6 @@ object StreamingDedup {
   private[streaming] def maintainPairState(
       sigTable: ParquetKeyedTable, bucketTable: ParquetKeyedTable,
       post: StateAccess, touched: DataFrame, ctx: BatchCtx): PairDelta = {
-      val preSigV = sigTable.versionBefore(ctx.batchId)
-
       // live post images of the batch docs; a touched key absent here was
       // deleted this batch
       val docs = post.rows("documents", touched)
@@ -113,7 +111,7 @@ object StreamingDedup {
           explode(Dedup.shingles(col("text"), ShingleN)).as("f")), "f"))
 
       // band membership, old (pre-state sigs of touched docs) and new
-      val oldSigs = sigTable.rowsForKeysAt(preSigV, sigSchema, touched)
+      val oldSigs = IncrementalAgg.preRows(sigTable, sigSchema, touched, ctx)
       val oldMemb = oldSigs.select(col("key").as("doc_id"),
         explode(Dedup.bandKeys(col("sig"), BandRows, NBands)).as("bkey"))
       val newMemb = ctx.cache(newSigs.select(col("doc_id"),
@@ -121,10 +119,8 @@ object StreamingDedup {
 
       // membership of every affected bucket (pruned lookup): batch docs
       // leave their old buckets, enter new ones (idempotent-by-batchId)
-      val affected = oldMemb.select("bkey").union(newMemb.select("bkey"))
-        .distinct().withColumnRenamed("bkey", "key")
       val sw = IncrementalAgg.swapMembers(bucketTable, bucketSchema,
-        affected, touched,
+        oldMemb.select(col("bkey").as("key")), touched,
         newMemb.select(col("bkey").as("key"), col("doc_id")), ctx)
       val preMembers = sw.pre.withColumnRenamed("key", "bkey")
       val postMembers = sw.post.withColumnRenamed("key", "bkey")
@@ -144,10 +140,8 @@ object StreamingDedup {
       // 3. signatures: upsert batch docs that produced one; drop the rest
       //    (deleted docs, and a live doc whose new text has no shingles —
       //    its old signature must not linger)
-      val sigless = touched.join(
-        newSigs.select(col("doc_id").as("key")), Seq("key"), "left_anti")
-      sigTable.merge(newSigs.select(col("doc_id").as("key"), col("sig")),
-        sigless, ctx.batchId)
+      IncrementalAgg.replaceRows(sigTable, sigSchema, touched,
+        newSigs.withColumnRenamed("doc_id", "key"), ctx)
 
       // 4. discover: batch docs × post-state bucket members (includes
       // same-batch partners), then the q21 estimate → exact-verify ladder
@@ -163,8 +157,8 @@ object StreamingDedup {
       // post state for untouched docs, and touched docs resolve to newSigs
       val partnerIds = candidates.select(col("doc_a").as("key"))
         .union(candidates.select(col("doc_b").as("key"))).distinct()
-      val residentSigs = sigTable
-        .rowsForKeysAt(preSigV, sigSchema, partnerIds)
+      val residentSigs = IncrementalAgg
+        .preRows(sigTable, sigSchema, partnerIds, ctx)
         .join(touched, Seq("key"), "left_anti")
         .select(col("key").as("doc_id"), col("sig"))
       val sigAll = newSigs.unionByName(residentSigs)

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -32,15 +32,59 @@ import org.apache.spark.sql.types._
   */
 object StreamingDomainCap {
 
+  /** The source-cap ledger: (key = source|shard, entries of the shard's
+    * docs as (doc_id, source, quality)) — an [[IncrementalAgg.swapMembers]]
+    * store, shared with [[StreamingPipelineCorpus]]. */
   private def ledgerSchema = StructType(Seq(
     StructField("key", StringType),
-    StructField("source", StringType),
     StructField("entries", ArrayType(StructType(Seq(
       StructField("doc_id", StringType),
+      StructField("source", StringType),
       StructField("quality", DoubleType)))))))
 
   private val Name = "domain_cap_view"
   private val LedgerShards = 16
+
+  /** One batch of a source-cap ledger and its rank rows: the `touched`
+    * docs leave the ledger shards of the `sources` whose ranking can
+    * change and `fresh` (doc_id, source, quality) enter; then the exact
+    * top `capN` per source (quality DESC, doc_id ASC — the batch
+    * TopKAggregator's order) is ranked over the post-batch ledger.
+    * Returns the post-batch rank rows (source, doc_id, quality, rk),
+    * batch-cached, and the ids (source|rk) of ranks that existed pre
+    * but not post (the source shrank below the cap, or vanished). The
+    * rank window sorts only the touched sources' entries — the
+    * batch-pruned read set, never the corpus. */
+  private[streaming] def ledgerRanks(ledger: ParquetKeyedTable,
+      sources: DataFrame, touched: DataFrame, fresh: DataFrame, capN: Int,
+      ctx: BatchCtx): (DataFrame, DataFrame) = {
+    val sw = IncrementalAgg.swapMembers(ledger, ledgerSchema,
+      sources.select(col("source"),
+          explode(sequence(lit(0), lit(LedgerShards - 1))).as("sh"))
+        .select(Keys.pair(col("source"), col("sh")).as("key")),
+      touched,
+      fresh.select(Keys.pair(col("source"),
+          pmod(xxhash64(col("doc_id")), lit(LedgerShards))).as("key"),
+        col("doc_id"), col("source"), col("quality")), ctx)
+    def topK(entries: DataFrame): DataFrame = entries
+      .withColumn("rk", row_number().over(
+        org.apache.spark.sql.expressions.Window.partitionBy("source")
+          .orderBy(col("quality").desc, col("doc_id"))))
+      .filter(col("rk") <= capN)
+    val postTop = ctx.cache(topK(sw.post))
+    val preCnt = topK(sw.pre).groupBy("source")
+      .agg(count(lit(1)).as("npre"))
+    val postCnt = postTop.groupBy("source")
+      .agg(count(lit(1)).as("npost"))
+    val gone = preCnt.join(postCnt, Seq("source"), "left_outer")
+      .select(col("source"), col("npre"),
+        coalesce(col("npost"), lit(0L)).as("npost"))
+      .filter(col("npre") > col("npost"))
+      .select(col("source"),
+        explode(sequence(col("npost") + 1, col("npre"))).as("rk"))
+      .select(Keys.pair(col("source"), col("rk")).as("id"))
+    (postTop, gone)
+  }
 
   /** Continuous per-source cap view over a CDC `documents`-shaped
     * source. Defaults match batch q109: top `capN` = 10 by quality score. */
@@ -49,78 +93,26 @@ object StreamingDomainCap {
     val ledger =
       new ParquetKeyedTable(spark, s"$stateDir/$Name-ledger")
 
-    def shardKey(src: Column, doc: Column): Column =
-      Keys.pair(src, pmod(xxhash64(doc), lit(LedgerShards)))
-
     ViewDef(Name, (pre, post, batch, ctx) => {
-      val preV = ledger.versionBefore(ctx.batchId)
-
-      val touched = ctx.cache(batch("documents").select("key").distinct())
+      val touched = ctx.touched("documents")
 
       def docsOf(rows: DataFrame): DataFrame = rows.select(
         col("key").as("doc_id"), col("source"),
         graft.operators.TextAnalysis.qualityScore(col("text"))
           .as("quality"))
 
-      val oldDocs = ctx.cache(docsOf(pre.rows("documents", touched)))
+      val oldDocs = docsOf(pre.rows("documents", touched))
       val newDocs = ctx.cache(docsOf(post.rows("documents", touched)))
 
-      // every source whose ranking can change, with all its shard keys
-      val touchedSources = ctx.cache(oldDocs.select("source")
-        .union(newDocs.select("source")).distinct())
-      val shardKeys = touchedSources
-        .select(col("source"),
-          explode(sequence(lit(0), lit(LedgerShards - 1))).as("sh"))
-        .select(Keys.pair(col("source"), col("sh")).as("key"))
-
-      val preEntries = ctx.cache(ledger.rowsForKeysAt(preV, ledgerSchema, shardKeys)
-        .select(col("source"), explode(col("entries")).as("e"))
-        .select(col("source"), col("e.doc_id").as("doc_id"),
-          col("e.quality").as("quality")))
-
-      // ledger transition: batch docs' entries replaced wholesale
-      val postEntries = ctx.cache(preEntries.join(
-          touched.withColumnRenamed("key", "doc_id"), Seq("doc_id"),
-          "left_anti")
-        .unionByName(newDocs.select("doc_id", "source", "quality")))
-      val rows = postEntries
-        .groupBy(shardKey(col("source"), col("doc_id")).as("key"),
-          col("source"))
-        .agg(collect_list(struct(col("doc_id"), col("quality")))
-          .as("entries"))
-        .select("key", "source", "entries")
-      val emptied = shardKeys.join(rows.select("key"), Seq("key"), "left_anti")
-      ledger.merge(rows, emptied, ctx.batchId)
-
-      /** Exact q109 rank rows for the touched sources from one ledger
-        * image. The window sorts only these sources' entries — the
-        * batch-pruned read set, not the corpus (batch q109 itself uses
-        * the bounded TopKAggregator; here the sort input is already
-        * ledger-pruned and carries string doc ids). */
-      def topK(entries: DataFrame): DataFrame = entries
-        .withColumn("rk", row_number().over(
-          org.apache.spark.sql.expressions.Window.partitionBy("source")
-            .orderBy(col("quality").desc, col("doc_id"))))
-        .filter(col("rk") <= capN)
-
-      val postTop = ctx.cache(topK(postEntries))
+      // every source whose ranking can change: an UPDATE can move a doc
+      // between sources, so both sides re-rank
+      val (postTop, deletes) = ledgerRanks(ledger,
+        oldDocs.select("source").union(newDocs.select("source")).distinct(),
+        touched, newDocs, capN, ctx)
       val upserts = postTop.select(
         Keys.pair(col("source"), col("rk")).as("id"),
         col("source"), col("doc_id"), col("quality"),
         col("rk").cast("long").as("rk"))
-
-      // ranks that existed pre but not post (source shrank/vanished)
-      val preCnt = topK(preEntries).groupBy("source")
-        .agg(count(lit(1)).as("npre"))
-      val postCnt = postTop.groupBy("source")
-        .agg(count(lit(1)).as("npost"))
-      val deletes = preCnt.join(postCnt, Seq("source"), "left_outer")
-        .select(col("source"), col("npre"),
-          coalesce(col("npost"), lit(0L)).as("npost"))
-        .filter(col("npre") > col("npost"))
-        .select(col("source"),
-          explode(sequence(col("npost") + 1, col("npre"))).as("rk"))
-        .select(Keys.pair(col("source"), col("rk")).as("id"))
       (upserts, deletes)
     })
   }

@@ -58,7 +58,7 @@ object StreamingDsir {
       .agg(count(lit(1)).as("c"))
 
     val view: ViewDef = ViewDef("dsir", (pre, post, batch, ctx) => {
-      val touched = ctx.cache(batch("documents").select("key").distinct())
+      val touched = ctx.touched("documents")
       val preF = ctx.cache(featsOf(pre.rows("documents", touched)))
       val postF = ctx.cache(featsOf(post.rows("documents", touched)))
 
@@ -80,8 +80,8 @@ object StreamingDsir {
       // replace touched docs' feature rows
       val newRows = ctx.cache(postF.groupBy("key")
         .agg(collect_list(struct(col("b"), col("c"))).as("feats")))
+      IncrementalAgg.replaceRows(docFeats, featSchema, touched, newRows, ctx)
       val gone = touched.join(newRows.select("key"), Seq("key"), "left_anti")
-      docFeats.merge(newRows, gone, ctx.batchId)
 
       // the sink carries per-doc feature inventory; weights are priced
       // at read (score) because λ is corpus-global

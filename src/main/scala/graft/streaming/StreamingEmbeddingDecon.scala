@@ -45,7 +45,7 @@ object StreamingEmbeddingDecon {
 
     ViewDef(Name, (pre, post, batch, ctx) => {
       val isHold = pmod(col("key").cast("long"), lit(29)) === 0
-      val touched = ctx.cache(batch("embeddings").select("key").distinct())
+      val touched = ctx.touched("embeddings")
       // the mod-29 split needs numeric keys; a key whose cast is null
       // would be neither benchmark nor corpus (null-false on BOTH
       // branches) and silently vanish from the sink — fail loudly
@@ -62,9 +62,8 @@ object StreamingEmbeddingDecon {
       val holdLive = post.rows("embeddings", holdTouched)
         .select(col("key"),
           col("embedding").cast(ArrayType(DoubleType)).as("embedding"))
-      val holdGone = holdTouched
-        .join(holdLive.select("key"), Seq("key"), "left_anti")
-      holdState.merge(holdLive, holdGone, ctx.batchId)
+      IncrementalAgg.replaceRows(holdState, holdSchema, holdTouched, holdLive,
+        ctx)
 
       val holdNow = holdState.snapshot(holdSchema) // benchmark-sized
       val corpusRows =

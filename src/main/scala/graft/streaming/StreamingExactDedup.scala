@@ -58,10 +58,9 @@ object StreamingExactDedup {
     val oldFps = ctx.cache(fps(pre.rows("documents", touched)))
     val newFps = ctx.cache(fps(post.rows("documents", touched)))
 
-    val affected = ctx.cache(oldFps.select("fp").union(newFps.select("fp"))
-      .distinct().withColumnRenamed("fp", "key"))
-    val sw = IncrementalAgg.swapMembers(postings, postSchema, affected,
-      touched, newFps.select(col("fp").as("key"), col("doc_id").as("member")),
+    val sw = IncrementalAgg.swapMembers(postings, postSchema,
+      oldFps.select(col("fp").as("key")), touched,
+      newFps.select(col("fp").as("key"), col("doc_id").as("member")),
       ctx)
     val preMembers = sw.pre.withColumnRenamed("key", "fp")
     val postMembers = sw.post.withColumnRenamed("key", "fp")
@@ -90,7 +89,7 @@ object StreamingExactDedup {
       new ParquetKeyedTable(spark, s"$stateDir/$ExactName-post")
 
     ViewDef(ExactName, (pre, post, batch, ctx) => {
-      val touched = ctx.cache(batch("documents").select("key").distinct())
+      val touched = ctx.touched("documents")
       val st = maintainFpState(postings, pre, post, touched, ctx, "text")
       val upserts = st.postMembers.groupBy("fp")
         .agg(min("member").as("keep_id"),
@@ -120,7 +119,7 @@ object StreamingExactDedup {
       new ParquetKeyedTable(spark, s"$stateDir/$CanonicalName-post")
 
     ViewDef(CanonicalName, (pre, post, batch, ctx) => {
-      val touched = ctx.cache(batch("documents").select("key").distinct())
+      val touched = ctx.touched("documents")
       val st = maintainFpState(postings, pre, post, touched, ctx, "text",
         fpFn = t => md5(graft.operators.Dedup.canonicalText(t)))
       // texts of the affected groups' CURRENT members — bucket-pruned,

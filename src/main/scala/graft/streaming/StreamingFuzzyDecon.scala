@@ -52,24 +52,16 @@ object StreamingFuzzyDecon {
       new ParquetKeyedTable(spark, s"$stateDir/$Name-pairs")
 
     ViewDef(Name, (pre, post, batch, ctx) => {
-      // pin the pre-batch pair version BEFORE the merge below: in the
-      // direct-call (batchId=None) mode `version` after the merge IS the
-      // post state, and the retraction logic would lose every
-      // retracted-pair partner
-      val prePairV = pairTable.versionBefore(ctx.batchId)
+      val touched = ctx.touched("documents")
 
-      val touched = ctx.cache(batch("documents").select("key").distinct())
-
-      // 1. pair maintenance (shared ladder) + pair-table merge
+      // 1. pair maintenance (shared ladder) + pair-table replace
       val delta = StreamingDedup.maintainPairState(
         sigTable, bucketTable, post, touched, ctx)
-      val pairUpserts = delta.verified.select(
-        Keys.pair(col("doc_a"), col("doc_b")).as("key"),
-        col("doc_a"), col("doc_b"), col("jaccard").as("j"))
-      val pairDeletes = delta.retractCandidates
-        .select(Keys.pair(col("doc_a"), col("doc_b")).as("key"))
-        .join(pairUpserts.select("key"), Seq("key"), "left_anti")
-      pairTable.merge(pairUpserts, pairDeletes, ctx.batchId)
+      IncrementalAgg.replaceRows(pairTable, pairSchema,
+        delta.retractCandidates
+          .select(Keys.pair(col("doc_a"), col("doc_b")).as("key")),
+        delta.verified.select(Keys.pair(col("doc_a"), col("doc_b")).as("key"),
+          col("doc_a"), col("doc_b"), col("jaccard").as("j")), ctx)
 
       // post-state pairs (duplicate-density-sized; on replay the merge
       // skipped and `version` is already the post state)
@@ -93,7 +85,7 @@ object StreamingFuzzyDecon {
       def partnersOfTouched(expanded: DataFrame): DataFrame = expanded
         .join(touched.withColumnRenamed("key", "d"), Seq("d"), "left_semi")
         .select(col("p").as("key"))
-      val prePairs = pairTable.snapshotAt(prePairV, pairSchema)
+      val prePairs = IncrementalAgg.preSnapshot(pairTable, pairSchema, ctx)
         .select("doc_a", "doc_b", "j")
       val both = ctx.cache(expand(postPairs))
       val affected = ctx.cache(touched

@@ -40,7 +40,7 @@ object StreamingHistQuantiles {
     val state = new ParquetKeyedTable(
       spark, s"$stateDir/histq-state", "key", 8)
     ViewDef("hist_quantiles", (pre, post, batch, ctx) => {
-      val touched = batch("documents").select("key").distinct()
+      val touched = ctx.touched("documents")
       val len = length(col("text"))
       val delta = bucketCounts(post.rows("documents", touched), len, 1)
         .unionAll(bucketCounts(pre.rows("documents", touched), len, -1))

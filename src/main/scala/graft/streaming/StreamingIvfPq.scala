@@ -64,7 +64,7 @@ object StreamingIvfPq {
       spark: SparkSession, stateDir: String, model: Pq.Model): ViewDef = {
     val cellTable = cells(spark, stateDir)
     ViewDef(Name, (pre, post, batch, ctx) => {
-      val touched = ctx.cache(batch("embeddings").select("key").distinct())
+      val touched = ctx.touched("embeddings")
 
       // cells the batch vectors leave (pre image) and enter (post image;
       // a deleted key has no post row — it only leaves)
@@ -81,10 +81,9 @@ object StreamingIvfPq {
           col("vec_id") === col("vec_key"))
         .select(col("vec_key"), col("cell"), col("codes")))
 
-      val affected = oldCells.select("cell").union(newEnc.select("cell"))
-        .distinct().withColumnRenamed("cell", "key")
-      val sw = IncrementalAgg.swapMembers(cellTable, cellSchema, affected,
-        touched, newEnc.withColumnRenamed("cell", "key"), ctx)
+      val sw = IncrementalAgg.swapMembers(cellTable, cellSchema,
+        oldCells.select(col("cell").as("key")), touched,
+        newEnc.withColumnRenamed("cell", "key"), ctx)
 
       val upserts = sw.post.groupBy(col("key").as("id"))
         .agg(count(lit(1)).as("n_vectors"),

@@ -64,7 +64,7 @@ object StreamingLm {
     val (c2Table, c1Table, vTable, statsTable) = tables(spark, stateDir)
 
     ViewDef(Name, (pre, post, batch, ctx) => {
-      val touched = ctx.cache(batch("documents").select("key").distinct())
+      val touched = ctx.touched("documents")
 
       // signed bigram contributions of one state image's hi docs
       def bigrams(rows: DataFrame, sign: Int): DataFrame = rows
@@ -99,17 +99,10 @@ object StreamingLm {
         .select(when(col("cnt") > 0 && col("o_cnt") <= 0, 1L)
           .when(col("cnt") <= 0 && col("o_cnt") > 0, -1L)
           .otherwise(0L).as("f"))
-        .agg(coalesce(sum("f"), lit(0L)).as("dv"))
-      val statsOld = statsTable.rowsForKeysAt(
-        statsTable.versionBefore(ctx.batchId), statsSchema,
-        spark.createDataFrame(Seq(Tuple1("corpus"))).toDF("key"))
-      val statsNew = ctx.cache(flips.crossJoin(
-          statsOld.select(col("v_count").as("ov"))
-            .unionByName(spark.createDataFrame(Seq(Tuple1(0L))).toDF("ov"))
-            .agg(max("ov").as("ov")))
-        .select(lit("corpus").as("key"), (col("ov") + col("dv")).as("v_count")))
-      statsTable.merge(statsNew,
-        statsNew.filter(lit(false)).select("key"), ctx.batchId)
+        .agg(coalesce(sum("f"), lit(0L)).as("d_v_count"))
+      val statsNew = IncrementalAgg.applyDeltas(statsTable,
+        flips.select(lit("corpus").as("key"), col("d_v_count")), "v_count",
+        ctx).merged
 
       val upserts = c2.live
         .select(col("key").as("id"), col("w1"), col("w2"), col("cnt"))

@@ -39,7 +39,7 @@ object StreamingMix {
     val state = new ParquetKeyedTable(
       spark, s"$stateDir/mix-state", "key", 8)
     ViewDef("temperature_mix", (pre, post, batch, ctx) => {
-      val touched = batch("documents").select("key").distinct()
+      val touched = ctx.touched("documents")
       val delta = tokenCounts(post.rows("documents", touched), "text", 1)
         .unionAll(tokenCounts(pre.rows("documents", touched), "text", -1))
         .groupBy("source").agg(sum("d").as("d_n_tokens"))

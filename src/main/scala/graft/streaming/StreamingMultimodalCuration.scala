@@ -45,10 +45,6 @@ object StreamingMultimodalCuration {
     StructField("doc_a", StringType),
     StructField("doc_b", StringType)))
 
-  private def labelSchema = StructType(Seq(
-    StructField("key", StringType),
-    StructField("cluster_id", StringType)))
-
   private val Name = "multimodal_corpus"
   private val MinQuality = 0.5
   private val MediaHamming = 5
@@ -76,7 +72,7 @@ object StreamingMultimodalCuration {
       new ParquetKeyedTable(spark, s"$stateDir/$Name-mlabels")
 
     ViewDef(Name, (pre, post, batch, ctx) => {
-      val touched = ctx.cache(batch("documents").select("key").distinct())
+      val touched = ctx.touched("documents")
       // 1. text clusters (shared machinery with the curated view)
       val cs = StreamingCuration.maintainClusterState(sigTable,
         bucketTable, pairTable, labelTable, post, touched, ctx)
@@ -84,31 +80,18 @@ object StreamingMultimodalCuration {
       // 2. media clusters on the phash rails
       val md = StreamingPhash.maintainHashState(mHashTable, mBucketTable,
         post, touched, ctx, MediaHamming, MediaBands)
-      val mPairUpserts = md.verified.select(
-        Keys.pair(col("doc_a"), col("doc_b")).as("key"),
-        col("doc_a"), col("doc_b"))
-      val mPairDeletes = md.retractCandidates
-        .select(Keys.pair(col("doc_a"), col("doc_b")).as("key"))
-        .join(mPairUpserts.select("key"), Seq("key"), "left_anti")
-      mPairTable.merge(mPairUpserts, mPairDeletes, ctx.batchId)
+      IncrementalAgg.replaceRows(mPairTable, pairSchema,
+        md.retractCandidates
+          .select(Keys.pair(col("doc_a"), col("doc_b")).as("key")),
+        md.verified.select(Keys.pair(col("doc_a"), col("doc_b")).as("key"),
+          col("doc_a"), col("doc_b")), ctx)
 
       val mPostPairs = mPairTable
         .snapshotAt(mPairTable.version, pairSchema)
         .select(col("doc_a"), col("doc_b"))
       val mNewLabels = ctx.cache(Dedup.clusterPairsStar(mPostPairs)
         .select(col("doc_id").as("key"), col("cluster_id")))
-      val preMLabelV = mLabelTable.versionBefore(ctx.batchId)
-      val mOldLabels = mLabelTable.snapshotAt(preMLabelV, labelSchema)
-      mLabelTable.merge(mNewLabels,
-        mOldLabels.select("key").join(mNewLabels.select("key"),
-          Seq("key"), "left_anti"),
-        ctx.batchId)
-      val mLabelDiff = mOldLabels.withColumnRenamed("cluster_id", "old_cid")
-        .join(mNewLabels.withColumnRenamed("cluster_id", "new_cid"),
-          Seq("key"), "full_outer")
-        .filter(col("old_cid").isNull || col("new_cid").isNull ||
-          col("old_cid") =!= col("new_cid"))
-        .select("key")
+      val mLabelDiff = StreamingCuration.relabel(mLabelTable, mNewLabels, ctx)
 
       // 3. frontier = batch ∪ both label diffs, widened per policy
       val affected0 = touched

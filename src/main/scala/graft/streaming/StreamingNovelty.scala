@@ -57,7 +57,7 @@ object StreamingNovelty {
       new ParquetKeyedTable(spark, s"$stateDir/$Name-postings")
 
     ViewDef(Name, (pre, post, batch, ctx) => {
-      val touched = ctx.cache(batch("documents").select("key").distinct())
+      val touched = ctx.touched("documents")
 
       // per-doc DISTINCT grams (wordShingles dedups within a doc)
       def grams(docs: DataFrame): DataFrame = docs
@@ -70,10 +70,9 @@ object StreamingNovelty {
       val postG = ctx.cache(grams(post.rows("documents", touched)))
 
       // 2. posting-list maintenance on the affected grams only
-      val affected = preG.select("g").union(postG.select("g"))
-        .distinct().withColumnRenamed("g", "key")
-      val sw = IncrementalAgg.swapMembers(postings, postingSchema, affected,
-        touched, postG.select(col("g").as("key"), col("doc")), ctx)
+      val sw = IncrementalAgg.swapMembers(postings, postingSchema,
+        preG.select(col("g").as("key")), touched,
+        postG.select(col("g").as("key"), col("doc")), ctx)
 
       // 3. min movements hand novelty credit between docs the batch
       // never touched — their holders join the re-score set

@@ -69,12 +69,8 @@ object StreamingPageRank {
       new ParquetKeyedTable(spark, s"$stateDir/$Name-labels")
 
     ViewDef(Name, (pre, post, batch, ctx) => {
-      // pre-batch labels BEFORE maintainClusterState merges the new ones
-      // (versionBefore also makes this replay-stable)
-      val preLabelV = labelTable.versionBefore(ctx.batchId)
-      val oldLabels = labelTable.snapshotAt(preLabelV, labelSchema)
-
-      val touched = ctx.cache(batch("documents").select("key").distinct())
+      val oldLabels = IncrementalAgg.preSnapshot(labelTable, labelSchema, ctx)
+      val touched = ctx.touched("documents")
       val cs = StreamingCuration.maintainClusterState(
         sigTable, bucketTable, pairTable, labelTable, post, touched, ctx)
 

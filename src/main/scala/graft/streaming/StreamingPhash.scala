@@ -78,7 +78,6 @@ object StreamingPhash {
         "maxHamming < bands)")
     val bandBits = 32 / nBands
     val mask = (1L << bandBits) - 1
-    val preHashV = hashTable.versionBefore(ctx.batchId)
 
     def bandKeys(h: org.apache.spark.sql.Column) =
       array((0 until nBands).map { b =>
@@ -95,17 +94,16 @@ object StreamingPhash {
       .select(col("media_id").cast("string").as("doc_id"), col("phash")))
 
     // band membership, old (pre-state hashes of touched docs) and new
-    val oldMemb = hashTable.rowsForKeysAt(preHashV, hashSchema, touched)
+    val oldMemb = IncrementalAgg.preRows(hashTable, hashSchema, touched, ctx)
       .select(col("key").as("doc_id"),
         explode(bandKeys(col("phash"))).as("bkey"))
     val newMemb = ctx.cache(newHashes
       .select(col("doc_id"), explode(bandKeys(col("phash"))).as("bkey")))
 
     // membership of every affected bucket (idempotent-by-batchId)
-    val affected = oldMemb.select("bkey").union(newMemb.select("bkey"))
-      .distinct().withColumnRenamed("bkey", "key")
-    val sw = IncrementalAgg.swapMembers(bucketTable, bucketSchema, affected,
-      touched, newMemb.select(col("bkey").as("key"), col("doc_id")), ctx)
+    val sw = IncrementalAgg.swapMembers(bucketTable, bucketSchema,
+      oldMemb.select(col("bkey").as("key")), touched,
+      newMemb.select(col("bkey").as("key"), col("doc_id")), ctx)
     val preMembers = sw.pre.withColumnRenamed("key", "bkey")
     val postMembers = sw.post.withColumnRenamed("key", "bkey")
 
@@ -121,11 +119,8 @@ object StreamingPhash {
       .distinct()
 
     // 3. hash state (idempotent-by-batchId)
-    val hashless = touched.join(
-      newHashes.select(col("doc_id").as("key")), Seq("key"), "left_anti")
-    hashTable.merge(
-      newHashes.select(col("doc_id").as("key"), col("phash")),
-      hashless, ctx.batchId)
+    IncrementalAgg.replaceRows(hashTable, hashSchema, touched,
+      newHashes.withColumnRenamed("doc_id", "key"), ctx)
 
     // 4. discover: batch docs × post-state bucket members, verified on
     // the stored hashes (batch docs resolve to newHashes, residents to
@@ -140,8 +135,8 @@ object StreamingPhash {
       .distinct()
     val partnerIds = candidates.select(col("doc_a").as("key"))
       .union(candidates.select(col("doc_b").as("key"))).distinct()
-    val residentHashes = hashTable
-      .rowsForKeysAt(preHashV, hashSchema, partnerIds)
+    val residentHashes = IncrementalAgg
+      .preRows(hashTable, hashSchema, partnerIds, ctx)
       .join(touched, Seq("key"), "left_anti")
       .select(col("key").as("doc_id"), col("phash"))
     val hashAll = newHashes.unionByName(residentHashes)
@@ -171,7 +166,7 @@ object StreamingPhash {
       new ParquetKeyedTable(spark, s"$stateDir/$Name-buckets")
 
     ViewDef(Name, (pre, post, batch, ctx) => {
-      val touched = ctx.cache(batch("documents").select("key").distinct())
+      val touched = ctx.touched("documents")
       val delta = maintainHashState(hashTable, bucketTable, post, touched,
         ctx, MaxHamming, NBands)
       val upserts = delta.verified.select(

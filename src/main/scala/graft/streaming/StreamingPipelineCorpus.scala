@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 import graft.operators.{Curation, TextAnalysis}
 
@@ -47,15 +46,7 @@ import graft.operators.{Curation, TextAnalysis}
   */
 object StreamingPipelineCorpus {
 
-  private def ledgerSchema = StructType(Seq(
-    StructField("key", StringType),
-    StructField("source", StringType),
-    StructField("entries", ArrayType(StructType(Seq(
-      StructField("doc_id", StringType),
-      StructField("quality", DoubleType)))))))
-
   private val Name = "pipeline_corpus"
-  private val LedgerShards = 16
 
   /** Continuous composed-pipeline view over a CDC `documents`-shaped
     * source with a source column. Sink documents: id = source|rk,
@@ -88,11 +79,8 @@ object StreamingPipelineCorpus {
     val ledger =
       new ParquetKeyedTable(spark, s"$stateDir/$Name-ledger")
 
-    def shardKey(src: Column, doc: Column): Column =
-      Keys.pair(src, pmod(xxhash64(doc), lit(LedgerShards)))
-
     ViewDef(Name, (pre, post, batch, ctx) => {
-      val touched = ctx.cache(batch("documents").select("key").distinct())
+      val touched = ctx.touched("documents")
 
       // shared-state maintenance — each stage's standalone machinery
       val cs = StreamingCuration.maintainClusterState(
@@ -126,52 +114,28 @@ object StreamingPipelineCorpus {
       val exactLosers = fs.losersAmong(affected)
       val contaminated = gs.sharedCounts(affected)
         .select(col("id").as("key"))
-      val eligible = ctx.cache(live.filter(bucket < 90)
+      val verdicts = ctx.cache(live.filter(bucket < 90)
         .join(gateKeep, Seq("key"), "left_semi")
         .join(exactLosers, Seq("key"), "left_anti")
         .join(nearLosers, Seq("key"), "left_anti")
         .join(contaminated, Seq("key"), "left_anti")
         .select(col("key").as("doc_id"), col("source"),
           TextAnalysis.qualityScore(col("text")).as("quality")))
+      // re-rooted on the cached rows (RDD lineage kept for recovery): the
+      // ledger swap prints its fresh entries into each of its plans
+      // several times over, and with the stage verdicts' lineage behind
+      // them those plan strings outgrew a 12 GB heap
+      val eligible = spark.createDataFrame(verdicts.rdd, verdicts.schema)
 
-      // per-source eligible-doc ledger (the StreamingDomainCap shape):
-      // affected docs' entries replaced wholesale by their new
-      // eligibility; only the touched sources' shards are read
-      val preV = ledger.versionBefore(ctx.batchId)
-      val touchedSources = ctx.cache(pre.rows("documents", affected)
-        .select(col("source"))
-        .union(live.select("source")).distinct())
-      val shardKeys = touchedSources
-        .select(col("source"),
-          explode(sequence(lit(0), lit(LedgerShards - 1))).as("sh"))
-        .select(Keys.pair(col("source"), col("sh")).as("key"))
-      val preEntries = ctx.cache(ledger.rowsForKeysAt(preV, ledgerSchema, shardKeys)
-        .select(col("source"), explode(col("entries")).as("e"))
-        .select(col("source"), col("e.doc_id").as("doc_id"),
-          col("e.quality").as("quality")))
-      val postEntries = ctx.cache(preEntries.join(
-          affected.withColumnRenamed("key", "doc_id"), Seq("doc_id"),
-          "left_anti")
-        .unionByName(eligible.select("doc_id", "source", "quality")))
-      val rows = postEntries
-        .groupBy(shardKey(col("source"), col("doc_id")).as("key"),
-          col("source"))
-        .agg(collect_list(struct(col("doc_id"), col("quality")))
-          .as("entries"))
-        .select("key", "source", "entries")
-      val emptiedShards = shardKeys
-        .join(rows.select("key"), Seq("key"), "left_anti")
-      ledger.merge(rows, emptiedShards, ctx.batchId)
+      // per-source eligible-doc ledger and its rank rows (the
+      // StreamingDomainCap shape): affected docs' entries replaced
+      // wholesale by their new eligibility; only the touched sources'
+      // shards are read
+      val (postTop, deletes) = StreamingDomainCap.ledgerRanks(ledger,
+        pre.rows("documents", affected).select(col("source"))
+          .union(live.select("source")).distinct(),
+        affected, eligible, capN, ctx)
 
-      // exact q115 rank rows for the touched sources (quality DESC,
-      // doc_id ASC — the batch TopKAggregator's order)
-      def topK(entries: DataFrame): DataFrame = entries
-        .withColumn("rk", row_number().over(
-          org.apache.spark.sql.expressions.Window.partitionBy("source")
-            .orderBy(col("quality").desc, col("doc_id"))))
-        .filter(col("rk") <= capN)
-
-      val postTop = ctx.cache(topK(postEntries))
       // PII signature of each winner's post-state text — a pruned read
       // bounded by capN × touched sources
       val sigs = post
@@ -182,19 +146,6 @@ object StreamingPipelineCorpus {
         .select(Keys.pair(col("source"), col("rk")).as("id"),
           col("source"), col("doc_id"), col("quality"),
           col("rk").cast("long").as("rk"), col("clean_sig"))
-
-      // ranks that existed pre but not post (source shrank or vanished)
-      val preCnt = topK(preEntries).groupBy("source")
-        .agg(count(lit(1)).as("npre"))
-      val postCnt = postTop.groupBy("source")
-        .agg(count(lit(1)).as("npost"))
-      val deletes = preCnt.join(postCnt, Seq("source"), "left_outer")
-        .select(col("source"), col("npre"),
-          coalesce(col("npost"), lit(0L)).as("npost"))
-        .filter(col("npre") > col("npost"))
-        .select(col("source"),
-          explode(sequence(col("npost") + 1, col("npre"))).as("rk"))
-        .select(Keys.pair(col("source"), col("rk")).as("id"))
       (upserts, deletes)
     })
   }

@@ -21,7 +21,7 @@ object StreamingProjection {
   /** Sink documents: (id = "key:pos", vec_key, pos, coord). */
   def jlView(): ViewDef =
     ViewDef("jl_projection", (pre, post, batch, ctx) => {
-      val affected = batch("embeddings").select("key").distinct()
+      val affected = ctx.touched("embeddings")
       val upserts = post.rows("embeddings", affected)
         .select(col("key"),
           col("embedding").cast("array<double>").as("v"),

@@ -62,7 +62,7 @@ object StreamingScd2 {
       new ParquetKeyedTable(spark, s"$stateDir/$Name-by-user")
 
     ViewDef(Name, (pre, post, batch, ctx) => {
-      val touched = ctx.cache(batch("events").select("key").distinct())
+      val touched = ctx.touched("events")
       val preRows = ctx.cache(pre.rows("events", touched)
         .select(col("key"), col("user_id"), col("ts"), col("event_type"),
           col("value")))

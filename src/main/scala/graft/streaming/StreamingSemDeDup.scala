@@ -55,7 +55,7 @@ object StreamingSemDeDup {
       new ParquetKeyedTable(spark, s"$stateDir/$Name-post")
 
     ViewDef(Name, (pre, post, batch, ctx) => {
-      val touched = ctx.cache(batch("embeddings").select("key").distinct())
+      val touched = ctx.touched("embeddings")
 
       def assigned(rows: DataFrame): DataFrame = model
         .assign(rows.select(col("key").as("vec_id"),
@@ -65,12 +65,9 @@ object StreamingSemDeDup {
       val oldAssign = ctx.cache(assigned(pre.rows("embeddings", touched)))
       val newAssign = ctx.cache(assigned(post.rows("embeddings", touched)))
 
-      val affected = ctx.cache(oldAssign.select("cluster")
-        .union(newAssign.select("cluster")).distinct()
-        .withColumnRenamed("cluster", "key"))
-
-      val sw = IncrementalAgg.swapMembers(postings, postSchema, affected,
-        touched, newAssign.select(col("cluster").as("key"), col("vec_id")),
+      val sw = IncrementalAgg.swapMembers(postings, postSchema,
+        oldAssign.select(col("cluster").as("key")), touched,
+        newAssign.select(col("cluster").as("key"), col("vec_id")),
         ctx)
 
       /** Batch q101 removal rows for the touched clusters from one state

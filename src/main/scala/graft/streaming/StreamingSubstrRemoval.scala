@@ -57,7 +57,7 @@ object StreamingSubstrRemoval {
       new ParquetKeyedTable(spark, s"$stateDir/$Name-post")
 
     ViewDef(Name, (pre, post, batch, ctx) => {
-      val touched = ctx.cache(batch("documents").select("key").distinct())
+      val touched = ctx.touched("documents")
 
       def wins(rows: DataFrame): DataFrame = rows
         .select(col("key").as("doc_id"),
@@ -70,12 +70,11 @@ object StreamingSubstrRemoval {
       val oldOcc = ctx.cache(occ(pre.rows("documents", touched)))
       val newOcc = ctx.cache(occ(post.rows("documents", touched)))
 
-      val affected = ctx.cache(oldOcc.select("g").union(newOcc.select("g"))
-        .distinct().withColumnRenamed("g", "key"))
       // postings update: batch docs leave their old (member, count)
       // entries, enter with their new per-doc occurrence counts
-      val sw = IncrementalAgg.swapMembers(postings, postSchema, affected,
-        touched, newOcc.select(col("g").as("key"), col("doc_id").as("m"),
+      val sw = IncrementalAgg.swapMembers(postings, postSchema,
+        oldOcc.select(col("g").as("key")), touched,
+        newOcc.select(col("g").as("key"), col("doc_id").as("m"),
           col("c")), ctx)
 
       // dup status (Σ occurrence counts ≥ 2) flips only on affected

@@ -48,7 +48,7 @@ object StreamingSubstringDedup {
       new ParquetKeyedTable(spark, s"$stateDir/$Name-buckets")
 
     ViewDef(Name, (pre, post, batch, ctx) => {
-      val touched = ctx.cache(batch("documents").select("key").distinct())
+      val touched = ctx.touched("documents")
 
       def windows(docs: org.apache.spark.sql.DataFrame) = docs
         .select(col("key").as("doc_id"),
@@ -61,11 +61,10 @@ object StreamingSubstringDedup {
       val oldWin = windows(pre.rows("documents", touched))
       val newWin = ctx.cache(windows(post.rows("documents", touched)))
 
-      val affected = oldWin.select("h").union(newWin.select("h"))
-        .distinct().withColumnRenamed("h", "key")
       // membership update (idempotent-by-batchId)
-      val sw = IncrementalAgg.swapMembers(bucketTable, bucketSchema, affected,
-        touched, newWin.select(col("h").as("key"), col("doc_id")), ctx)
+      val sw = IncrementalAgg.swapMembers(bucketTable, bucketSchema,
+        oldWin.select(col("h").as("key")), touched,
+        newWin.select(col("h").as("key"), col("doc_id")), ctx)
       val preMembers = sw.pre.withColumnRenamed("key", "h")
       val postMembers = sw.post.withColumnRenamed("key", "h")
 

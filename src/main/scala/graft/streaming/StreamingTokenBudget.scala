@@ -47,7 +47,7 @@ object StreamingTokenBudget {
       amount = Provenance.tokenCount(col("text")).cast("double"))
 
     ViewDef(Name, (pre, post, batch, ctx) => {
-      val touched = batch("documents").select("key").distinct()
+      val touched = ctx.touched("documents")
       val deltas = IncrementalAgg
         .contrib(post.rows("documents", touched), spec, 1)
         .unionByName(IncrementalAgg.contrib(pre.rows("documents", touched),

@@ -48,7 +48,7 @@ object StreamingTopTokens {
       new ParquetKeyedTable(spark, s"$stateDir/token_counts-state")
 
     val view: ViewDef = ViewDef("token_counts", (pre, post, batch, ctx) => {
-      val touched = batch("documents").select("key").distinct()
+      val touched = ctx.touched("documents")
       def tokenCounts(rows: DataFrame, sign: Long): DataFrame =
         rows.select(explode(split(trim(col("text")), "\\s+")).as("key"))
           .groupBy("key").agg((count(lit(1)) * sign).as("d_cnt"))

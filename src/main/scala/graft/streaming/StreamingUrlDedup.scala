@@ -31,7 +31,7 @@ object StreamingUrlDedup {
       Provenance.syntheticUrl(id.cast("long"))
 
     ViewDef(Name, (pre, post, batch, ctx) => {
-      val touched = ctx.cache(batch("documents").select("key").distinct())
+      val touched = ctx.touched("documents")
       // the fingerprint reads the doc's key (its id), not its text —
       // textCol = "key" feeds the ladder's fp function the id column
       val st = StreamingExactDedup.maintainFpState(

@@ -40,8 +40,9 @@ object StreamingVocabCoverage {
 
   private def memberSchema = StructType(Seq(
     StructField("key", StringType),
-    StructField("tok", StringType),
-    StructField("members", ArrayType(StringType))))
+    StructField("members", ArrayType(StructType(Seq(
+      StructField("doc", StringType),
+      StructField("tok", StringType)))))))
 
   private def headSchema = StructType(Seq(
     StructField("key", StringType),
@@ -81,10 +82,7 @@ object StreamingVocabCoverage {
 
     ViewDef(Name, (pre, post, batch, ctx) => {
       import spark.implicits._
-      val preMV = holdTable.versionBefore(ctx.batchId)
-      val preHV = headTable.versionBefore(ctx.batchId)
-
-      val touched = ctx.cache(batch("documents").select("key").distinct())
+      val touched = ctx.touched("documents")
 
       def toks(rows: DataFrame): DataFrame = rows
         .select(col("key").as("doc"),
@@ -98,24 +96,12 @@ object StreamingVocabCoverage {
 
       // 2. sharded inverted-index maintenance: distinct (tok, doc) of
       // the touched docs move from their old shard rows to the new
-      val affectedShardKeys = preT.select("doc", "tok")
-        .union(postT.select("doc", "tok")).distinct()
-        .select(shardKey(col("tok"), col("doc")).as("key"))
+      def shardRows(t: DataFrame): DataFrame = t.select("doc", "tok")
         .distinct()
-      val mPre = holdTable.rowsForKeysAt(preMV, memberSchema, affectedShardKeys)
-        .select(col("key"), col("tok"), explode(col("members")).as("doc"))
-      val mKept = mPre.join(touched.withColumnRenamed("key", "doc")
-          .select("doc"), Seq("doc"), "left_anti")
-        .select("key", "tok", "doc")
-      val mNew = postT.select("doc", "tok").distinct()
-        .select(shardKey(col("tok"), col("doc")).as("key"), col("tok"),
-          col("doc"))
-      val mRows = mKept.unionByName(mNew)
-        .groupBy("key", "tok")
-        .agg(collect_list("doc").as("members"))
-      val mEmptied = affectedShardKeys
-        .join(mRows.select("key"), Seq("key"), "left_anti")
-      holdTable.merge(mRows, mEmptied, ctx.batchId)
+        .select(shardKey(col("tok"), col("doc")).as("key"), col("doc"),
+          col("tok"))
+      IncrementalAgg.swapMembers(holdTable, memberSchema, shardRows(preT),
+        touched, shardRows(postT), ctx)
 
       // 3. new head set over the post-merge counter state: a rank over
       // the vocabulary AGGREGATE (bounded rows), collected bounded
@@ -124,14 +110,12 @@ object StreamingVocabCoverage {
         .orderBy(col("cnt").desc, col("key"))
         .limit(topK)
         .select(col("key")).collect().map(_.getString(0)).toSeq
-      val oldHead = headTable
-        .rowsForKeysAt(preHV, headSchema, Seq("head").toDF("key"))
+      val headKey = Seq("head").toDF("key")
+      val oldHead = IncrementalAgg.preRows(headTable, headSchema, headKey, ctx)
         .collect().headOption
         .map(_.getSeq[String](1)).getOrElse(Seq.empty)
-      headTable.merge(
-        Seq(("head", newHead)).toDF("key", "toks"),
-        Seq.empty[String].toDF("key"),
-        ctx.batchId)
+      IncrementalAgg.replaceRows(headTable, headSchema, headKey,
+        Seq(("head", newHead)).toDF("key", "toks"), ctx)
       val transToks = ((newHead.toSet -- oldHead.toSet) ++
         (oldHead.toSet -- newHead.toSet)).toSeq
 
@@ -142,8 +126,9 @@ object StreamingVocabCoverage {
         .select(col("tok"),
           explode(sequence(lit(0), lit(MemberShards - 1))).as("sh"))
         .select(Keys.pair(col("tok"), col("sh")).as("key"))
-      val resHolders = holdTable.rowsForKeysAt(preMV, memberSchema, transKeyDf)
-        .select(explode(col("members")).as("key"))
+      val resHolders = IncrementalAgg
+        .preRows(holdTable, memberSchema, transKeyDf, ctx)
+        .select(explode(col("members.doc")).as("key"))
       val batchHolders = postT
         .filter(col("tok").isin(transToks: _*))
         .select(col("doc").as("key"))

@@ -64,9 +64,7 @@ object StreamingVocabOverlap {
       new ParquetKeyedTable(spark, s"$stateDir/$Name-pairs")
 
     ViewDef(Name, (pre, post, batch, ctx) => {
-      val tokPreV = tokTable.versionBefore(ctx.batchId)
-
-      val touched = ctx.cache(batch("documents").select("key").distinct())
+      val touched = ctx.touched("documents")
 
       // doc-distinct (source, token) contributions of one state image
       def docTokens(rows: DataFrame, sign: Int): DataFrame = rows
@@ -80,26 +78,14 @@ object StreamingVocabOverlap {
         .groupBy("tok", "source").agg(sum("d").as("d"))
         .filter(col("d") =!= 0))
 
-      val affectedToks = ctx.cache(deltas.select(col("tok").as("key")).distinct())
-      val preTok = ctx.cache(tokTable.rowsForKeysAt(tokPreV, tokSchema, affectedToks)
-        .select(col("key").as("tok"), explode(col("entries")).as("e"))
-        .select(col("tok"), col("e.source").as("source"),
-          col("e.cnt").as("cnt")))
-
-      // merged refcounts; a negative count would mean a corrupt envelope
-      // (state diff is exact, so clamp-and-continue like IncrementalAgg)
-      val postTok = ctx.cache(preTok.join(deltas, Seq("tok", "source"), "full_outer")
-        .select(col("tok"), col("source"),
-          (coalesce(col("cnt"), lit(0L)) + coalesce(col("d"), lit(0L)))
-            .as("cnt"))
-        .filter(col("cnt") > 0))
-      val tokRows = postTok
-        .groupBy("tok")
-        .agg(collect_list(struct(col("source"), col("cnt"))).as("entries"))
-        .select(col("tok").as("key"), col("entries"))
-      val tokEmptied = affectedToks
-        .join(tokRows.select("key"), Seq("key"), "left_anti")
-      tokTable.merge(tokRows, tokEmptied, ctx.batchId)
+      // merged refcounts per (token, source); a non-positive count would
+      // mean a corrupt envelope (state diff is exact, so the entry drops,
+      // clamp-and-continue like IncrementalAgg)
+      val byTok = deltas.withColumnRenamed("tok", "key")
+      val tok = IncrementalAgg.foldMembers(tokTable, tokSchema, byTok, byTok,
+        ctx)
+      val preTok = tok.pre.withColumnRenamed("key", "tok")
+      val postTok = tok.post.withColumnRenamed("key", "tok")
 
       // membership flips (0↔1 refcount transitions)
       val preSet = preTok.select("tok", "source")

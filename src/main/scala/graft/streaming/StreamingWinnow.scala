@@ -64,9 +64,7 @@ object StreamingWinnow {
       new ParquetKeyedTable(spark, s"$stateDir/$Name-post")
 
     ViewDef(Name, (pre, post, batch, ctx) => {
-      val preV = postings.versionBefore(ctx.batchId)
-
-      val touched = ctx.cache(batch("documents").select("key").distinct())
+      val touched = ctx.touched("documents")
 
       def fps(rows: DataFrame): DataFrame = rows
         .select(col("key").as("doc_id"),
@@ -77,11 +75,10 @@ object StreamingWinnow {
       val oldFps = ctx.cache(fps(pre.rows("documents", touched)))
       val newFps = ctx.cache(fps(post.rows("documents", touched)))
 
-      val affected = ctx.cache(oldFps.select("f").union(newFps.select("f"))
-        .distinct().withColumnRenamed("f", "key"))
       // postings update: batch docs leave old keys, enter new ones
-      val sw = IncrementalAgg.swapMembers(postings, postSchema, affected,
-        touched, newFps.select(col("f").as("key"), col("doc_id").as("member")),
+      val sw = IncrementalAgg.swapMembers(postings, postSchema,
+        oldFps.select(col("f").as("key")), touched,
+        newFps.select(col("f").as("key"), col("doc_id").as("member")),
         ctx)
 
       // complete re-score set: batch docs + every pre/post member of an
@@ -116,7 +113,7 @@ object StreamingWinnow {
       val postScore = ctx.cache(score(post.rows("documents", rescore),
         ks => postings.rowsForKeys(postSchema, ks)))
       val preScore = score(pre.rows("documents", rescore),
-        ks => postings.rowsForKeysAt(preV, postSchema, ks))
+        ks => IncrementalAgg.preRows(postings, postSchema, ks, ctx))
 
       val upserts = postScore.select(
         Keys.pair(col("doc_a"), col("doc_b")).as("id"),

@@ -32,9 +32,9 @@ object StreamingZipf {
 
   private def vocabSchema = StructType(Seq(
     StructField("key", StringType),
-    StructField("lang", StringType),
     StructField("entries", ArrayType(StructType(Seq(
       StructField("tok", StringType),
+      StructField("lang", StringType),
       StructField("cnt", LongType)))))))
 
   private val Name = "zipf_fit"
@@ -48,8 +48,7 @@ object StreamingZipf {
       Keys.pair(lang, pmod(xxhash64(tok), lit(Shards)))
 
     ViewDef(Name, (pre, post, batch, ctx) => {
-      val preV = vocabTable.versionBefore(ctx.batchId)
-      val touched = ctx.cache(batch("documents").select("key").distinct())
+      val touched = ctx.touched("documents")
 
       def occurrences(rows: DataFrame, sign: Int): DataFrame = rows
         .select(col("lang"),
@@ -68,22 +67,10 @@ object StreamingZipf {
           .as("sh"))
         .select(Keys.pair(col("lang"), col("sh")).as("key"))
 
-      val preVocab = vocabTable.rowsForKeysAt(preV, vocabSchema, shardKeys)
-        .select(col("lang"), explode(col("entries")).as("e"))
-        .select(col("lang"), col("e.tok").as("tok"), col("e.cnt").as("cnt"))
-      val postVocab = ctx.cache(preVocab.join(deltas, Seq("lang", "tok"), "full_outer")
-        .select(col("lang"), col("tok"),
-          (coalesce(col("cnt"), lit(0L)) + coalesce(col("d"), lit(0L)))
-            .as("c"))
-        .filter(col("c") > 0))
-
-      val rows = postVocab
-        .groupBy(shardKey(col("lang"), col("tok")).as("key"), col("lang"))
-        .agg(collect_list(struct(col("tok"), col("c").as("cnt")))
-          .as("entries"))
-        .select("key", "lang", "entries")
-      val emptied = shardKeys.join(rows.select("key"), Seq("key"), "left_anti")
-      vocabTable.merge(rows, emptied, ctx.batchId)
+      val postVocab = IncrementalAgg.foldMembers(vocabTable, vocabSchema,
+          shardKeys, deltas.select(shardKey(col("lang"), col("tok")).as("key"),
+            col("tok"), col("lang"), col("d")), ctx)
+        .post.select(col("lang"), col("tok"), col("cnt").as("c"))
 
       // re-fit the touched languages from their merged vocabulary —
       // batch q108's own computation, on the bounded per-lang table

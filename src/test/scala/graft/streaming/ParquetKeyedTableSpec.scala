@@ -135,7 +135,7 @@ class ParquetKeyedTableSpec extends SparkSuite {
 
   test("BatchCtx.cache persists until close(), also when the batch failed before commit()") {
     for (failed <- Seq(false, true)) {
-      val ctx = new BatchCtx(Some(0L), Set.empty, replay = false)
+      val ctx = new BatchCtx(Some(0L), Set.empty, replay = false, Map.empty)
       val df = ctx.cache(Seq(("a", 1)).toDF("key", "v"))
       assert(df.storageLevel == StorageLevel.MEMORY_AND_DISK)
       if (!failed) ctx.commit()

@@ -1,35 +1,16 @@
 package graft.streaming
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
-import graft.{SparkSuite, TableSpec}
+import graft.SparkSuite
 
 /** Streaming BM25 == batch q60 recompute, at every step of a replayed
   * document changelog: after each micro-batch, [[StreamingBm25.search]]
   * over the maintained index must score exactly what the PRODUCTION batch
   * query (SparkEntry's q60_bm25) computes over the current document state
   * — tf, df, doc-length, and corpus-stat drift all included. */
-class StreamingBm25Spec extends SparkSuite {
+class StreamingBm25Spec extends SparkSuite with DocCdcFixture {
   import spark.implicits._
-
-  private val docSchema = StructType(Seq(
-    StructField("doc_id", StringType), StructField("text", StringType)))
-  private val sources =
-    Seq(TableSpec("documents", docSchema, primaryKey = Seq("doc_id")))
-
-  private var seqNo = 0L
-  private def rec(env: String): (String, String, Long) = {
-    seqNo += 1; ("documents", env, seqNo)
-  }
-  private def img(id: String, text: String) =
-    s"""{"doc_id":"$id","text":"$text"}"""
-  private def create(id: String, text: String): (String, String, Long) =
-    rec(s"""{"before":null,"after":${img(id, text)},"op":"c","ts_ms":$seqNo}""")
-  private def update(id: String, oldT: String, newT: String): (String, String, Long) =
-    rec(s"""{"before":${img(id, oldT)},"after":${img(id, newT)},"op":"u","ts_ms":$seqNo}""")
-  private def delete(id: String, text: String): (String, String, Long) =
-    rec(s"""{"before":${img(id, text)},"after":null,"op":"d","ts_ms":$seqNo}""")
 
   /** The real batch q60 over the pipeline's materialized document state
     * (written to a documents.parquet scratch dir so the production query
@@ -56,7 +37,7 @@ class StreamingBm25Spec extends SparkSuite {
   test("search equals the production batch q60 after every batch") {
     val sink = new InMemoryUpsertSink
     val stateDir = tmpDir("sbm25")
-    val pipeline = new CdcPipeline(spark, sources, stateDir, sink,
+    val pipeline = new CdcPipeline(spark, docSources, stateDir, sink,
       Seq(StreamingBm25.indexView(spark, stateDir)))
 
     def step(batchId: Long, recs: (String, String, Long)*): Unit = {
@@ -98,7 +79,7 @@ class StreamingBm25Spec extends SparkSuite {
   test("a batch touching no documents commits nothing (no stats version churn)") {
     val sink = new InMemoryUpsertSink
     val stateDir = tmpDir("sbm25-empty")
-    val pipeline = new CdcPipeline(spark, sources, stateDir, sink,
+    val pipeline = new CdcPipeline(spark, docSources, stateDir, sink,
       Seq(StreamingBm25.indexView(spark, stateDir)))
     pipeline.processBatch(Seq(create("e1", "data vector"))
       .toDF("table", "value", "seq"), Some(0L))
@@ -116,7 +97,7 @@ class StreamingBm25Spec extends SparkSuite {
     val sink = new InMemoryUpsertSink
     val stateDir = tmpDir("sbm25-backfill")
     val vocab0 = Seq("data", "vector", "window")
-    val pipeline0 = new CdcPipeline(spark, sources, stateDir, sink,
+    val pipeline0 = new CdcPipeline(spark, docSources, stateDir, sink,
       Seq(StreamingBm25.indexView(spark, stateDir, vocab0)))
     pipeline0.processBatch(Seq(
       create("b1", "data filler filler one"),
@@ -161,7 +142,7 @@ class StreamingBm25Spec extends SparkSuite {
     assertSameScores(searchExt(), batchExtended(pipeline0), "post-backfill")
 
     // re-registered view with the extended vocab keeps 'filler' current
-    val pipeline1 = new CdcPipeline(spark, sources, stateDir, sink,
+    val pipeline1 = new CdcPipeline(spark, docSources, stateDir, sink,
       Seq(StreamingBm25.indexView(spark, stateDir, vocab1)))
     pipeline1.processBatch(Seq(
       update("b3", "plain words", "filler data plain"),
@@ -173,7 +154,7 @@ class StreamingBm25Spec extends SparkSuite {
   test("replayed batch is idempotent across all three state stores") {
     val sink = new InMemoryUpsertSink
     val stateDir = tmpDir("sbm25-replay")
-    val pipeline = new CdcPipeline(spark, sources, stateDir, sink,
+    val pipeline = new CdcPipeline(spark, docSources, stateDir, sink,
       Seq(StreamingBm25.indexView(spark, stateDir)))
 
     pipeline.processBatch(Seq(

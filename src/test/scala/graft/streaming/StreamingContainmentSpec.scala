@@ -2,9 +2,8 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
-import graft.{SparkSuite, TableSpec}
+import graft.SparkSuite
 import graft.operators.Dedup
 
 /** Incremental containment pairs == batch q83 recompute, at every step of
@@ -14,26 +13,8 @@ import graft.operators.Dedup
   * state — the streaming form uses a different (fixed, df-free) prefix
   * order, so this equality is exactly the recall-proof claim that the
   * prefix order doesn't affect the verified pair set. */
-class StreamingContainmentSpec extends SparkSuite {
+class StreamingContainmentSpec extends SparkSuite with DocCdcFixture {
   import spark.implicits._
-
-  private val docSchema = StructType(Seq(
-    StructField("doc_id", StringType), StructField("text", StringType)))
-  private val sources =
-    Seq(TableSpec("documents", docSchema, primaryKey = Seq("doc_id")))
-
-  private var seqNo = 0L
-  private def rec(env: String): (String, String, Long) = {
-    seqNo += 1; ("documents", env, seqNo)
-  }
-  private def img(id: String, text: String) =
-    s"""{"doc_id":"$id","text":"$text"}"""
-  private def create(id: String, text: String): (String, String, Long) =
-    rec(s"""{"before":null,"after":${img(id, text)},"op":"c","ts_ms":$seqNo}""")
-  private def update(id: String, oldT: String, newT: String): (String, String, Long) =
-    rec(s"""{"before":${img(id, oldT)},"after":${img(id, newT)},"op":"u","ts_ms":$seqNo}""")
-  private def delete(id: String, text: String): (String, String, Long) =
-    rec(s"""{"before":${img(id, text)},"after":null,"op":"d","ts_ms":$seqNo}""")
 
   // 25-word base; texts CONTAINED in it (its word-3-shingle set ⊇ theirs)
   private val vs = (0 until 25).map(i => s"v$i")
@@ -60,7 +41,7 @@ class StreamingContainmentSpec extends SparkSuite {
   test("incremental pair set equals batch q83 recompute after every batch") {
     val sink = new InMemoryUpsertSink
     val stateDir = tmpDir("scontain")
-    val pipeline = new CdcPipeline(spark, sources, stateDir, sink,
+    val pipeline = new CdcPipeline(spark, docSources, stateDir, sink,
       Seq(StreamingContainment.containmentView(spark, stateDir)))
 
     def step(batchId: Long, recs: (String, String, Long)*): Unit = {
@@ -136,7 +117,7 @@ class StreamingContainmentSpec extends SparkSuite {
 
     val sink = new InMemoryUpsertSink
     val stateDir = tmpDir("scontain-wide")
-    val pipeline = new CdcPipeline(spark, sources, stateDir, sink,
+    val pipeline = new CdcPipeline(spark, docSources, stateDir, sink,
       Seq(StreamingContainment.containmentView(spark, stateDir)))
     def step(batchId: Long, recs: (String, String, Long)*): Unit = {
       pipeline.processBatch(recs.toDF("table", "value", "seq"),
@@ -159,7 +140,7 @@ class StreamingContainmentSpec extends SparkSuite {
   test("replayed batch is idempotent (state merges skip, sink converges)") {
     val sink = new InMemoryUpsertSink
     val stateDir = tmpDir("scontain-replay")
-    val pipeline = new CdcPipeline(spark, sources, stateDir, sink,
+    val pipeline = new CdcPipeline(spark, docSources, stateDir, sink,
       Seq(StreamingContainment.containmentView(spark, stateDir)))
 
     pipeline.processBatch(Seq(create("r1", textBase))

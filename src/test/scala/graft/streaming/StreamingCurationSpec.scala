@@ -2,9 +2,8 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
-import graft.{SparkSuite, TableSpec}
+import graft.SparkSuite
 import graft.operators.{Dedup, TextAnalysis}
 
 /** Incremental curation == batch q39 recompute at every step of a
@@ -13,26 +12,8 @@ import graft.operators.{Dedup, TextAnalysis}
   * only, content-hash split) of the CURRENT document state — including
   * losers retracted cross-batch, survivors re-admitted when an update
   * breaks their cluster, and docs dropping out when quality degrades. */
-class StreamingCurationSpec extends SparkSuite {
+class StreamingCurationSpec extends SparkSuite with DocCdcFixture {
   import spark.implicits._
-
-  private val docSchema = StructType(Seq(
-    StructField("doc_id", StringType), StructField("text", StringType)))
-  private val sources =
-    Seq(TableSpec("documents", docSchema, primaryKey = Seq("doc_id")))
-
-  private var seqNo = 0L
-  private def rec(env: String): (String, String, Long) = {
-    seqNo += 1; ("documents", env, seqNo)
-  }
-  private def img(id: String, text: String) =
-    s"""{"doc_id":"$id","text":"$text"}"""
-  private def create(id: String, text: String): (String, String, Long) =
-    rec(s"""{"before":null,"after":${img(id, text)},"op":"c","ts_ms":$seqNo}""")
-  private def update(id: String, oldT: String, newT: String): (String, String, Long) =
-    rec(s"""{"before":${img(id, oldT)},"after":${img(id, newT)},"op":"u","ts_ms":$seqNo}""")
-  private def delete(id: String, text: String): (String, String, Long) =
-    rec(s"""{"before":${img(id, text)},"after":null,"op":"d","ts_ms":$seqNo}""")
 
   // 40-word texts WITH 3 stopwords → quality 0.575 (≥ 0.5 bar); the
   // noStops variant scores 0.2 and must be filtered out
@@ -82,7 +63,7 @@ class StreamingCurationSpec extends SparkSuite {
   test("incremental curated corpus equals batch q39 after every batch") {
     val sink = new InMemoryUpsertSink
     val stateDir = tmpDir("scuration")
-    val pipeline = new CdcPipeline(spark, sources, stateDir, sink,
+    val pipeline = new CdcPipeline(spark, docSources, stateDir, sink,
       Seq(StreamingCuration.curatedView(spark, stateDir)))
 
     def step(batchId: Long, recs: (String, String, Long)*): Unit = {
@@ -155,7 +136,7 @@ class StreamingCurationSpec extends SparkSuite {
       "off on delete") {
     val sink = new InMemoryUpsertSink
     val stateDir = tmpDir("scuration-q153")
-    val pipeline = new CdcPipeline(spark, sources, stateDir, sink,
+    val pipeline = new CdcPipeline(spark, docSources, stateDir, sink,
       Seq(StreamingCuration.curatedView(spark, stateDir,
         policy = StreamingCuration.SurvivorPolicy.BestQuality)))
 
@@ -198,7 +179,7 @@ class StreamingCurationSpec extends SparkSuite {
   test("language-mix view retracts deletes and tracks reclassifying updates") {
     val sink = new InMemoryUpsertSink
     val stateDir = tmpDir("scuration-lang")
-    val pipeline = new CdcPipeline(spark, sources, stateDir, sink,
+    val pipeline = new CdcPipeline(spark, docSources, stateDir, sink,
       Seq(StreamingCuration.langStats(spark, stateDir)))
 
     def langs(): Map[String, (Long, Long)] =
@@ -233,7 +214,7 @@ class StreamingCurationSpec extends SparkSuite {
   test("replayed batch is idempotent across all four state stores") {
     val sink = new InMemoryUpsertSink
     val stateDir = tmpDir("scuration-replay")
-    val pipeline = new CdcPipeline(spark, sources, stateDir, sink,
+    val pipeline = new CdcPipeline(spark, docSources, stateDir, sink,
       Seq(StreamingCuration.curatedView(spark, stateDir)))
 
     pipeline.processBatch(Seq(create("r1", textA), create("r2", textB))

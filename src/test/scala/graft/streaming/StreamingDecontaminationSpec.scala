@@ -1,9 +1,8 @@
 package graft.streaming
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
-import graft.{SparkSuite, TableSpec}
+import graft.SparkSuite
 
 /** Streaming decontamination == batch q26 recompute, at every step of a
   * replayed document changelog: after each micro-batch the sink must
@@ -12,26 +11,8 @@ import graft.{SparkSuite, TableSpec}
   * holdout doc arrives, disappearing when the last holdout holder of
   * the shared gram leaves, and split moves via content updates all
   * included. */
-class StreamingDecontaminationSpec extends SparkSuite {
+class StreamingDecontaminationSpec extends SparkSuite with DocCdcFixture {
   import spark.implicits._
-
-  private val docSchema = StructType(Seq(
-    StructField("doc_id", StringType), StructField("text", StringType)))
-  private val sources =
-    Seq(TableSpec("documents", docSchema, primaryKey = Seq("doc_id")))
-
-  private var seqNo = 0L
-  private def rec(env: String): (String, String, Long) = {
-    seqNo += 1; ("documents", env, seqNo)
-  }
-  private def img(id: String, text: String) =
-    s"""{"doc_id":"$id","text":"$text"}"""
-  private def create(id: String, text: String): (String, String, Long) =
-    rec(s"""{"before":null,"after":${img(id, text)},"op":"c","ts_ms":$seqNo}""")
-  private def update(id: String, oldT: String, newT: String): (String, String, Long) =
-    rec(s"""{"before":${img(id, oldT)},"after":${img(id, newT)},"op":"u","ts_ms":$seqNo}""")
-  private def delete(id: String, text: String): (String, String, Long) =
-    rec(s"""{"before":${img(id, text)},"after":null,"op":"d","ts_ms":$seqNo}""")
 
   /** The q34 content-hash split of a text, computed test-side. */
   private def isTrainText(t: String): Boolean = {
@@ -72,7 +53,7 @@ class StreamingDecontaminationSpec extends SparkSuite {
   test("incremental contamination equals batch q26 after every batch") {
     val sink = new InMemoryUpsertSink
     val stateDir = tmpDir("sdeco")
-    val pipeline = new CdcPipeline(spark, sources, stateDir, sink,
+    val pipeline = new CdcPipeline(spark, docSources, stateDir, sink,
       Seq(StreamingDecontamination.decontaminationView(spark, stateDir)))
 
     def step(batchId: Long, recs: (String, String, Long)*): Unit = {
@@ -112,7 +93,7 @@ class StreamingDecontaminationSpec extends SparkSuite {
   test("replayed batch is idempotent across both gram stores") {
     val sink = new InMemoryUpsertSink
     val stateDir = tmpDir("sdeco-replay")
-    val pipeline = new CdcPipeline(spark, sources, stateDir, sink,
+    val pipeline = new CdcPipeline(spark, docSources, stateDir, sink,
       Seq(StreamingDecontamination.decontaminationView(spark, stateDir)))
 
     pipeline.processBatch(Seq(create("t1", train1))

@@ -2,9 +2,8 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
-import graft.{SparkSuite, TableSpec}
+import graft.SparkSuite
 import graft.operators.Dedup
 
 /** Incremental dedup == batch recompute, at every step of a replayed
@@ -13,26 +12,8 @@ import graft.operators.Dedup
   * a from-scratch batch q21 run (band → estimate → exact verify at
   * jaccard ≥ 0.8) over the CURRENT document state — including pairs
   * formed across batches, broken by updates, and removed by deletes. */
-class StreamingDedupSpec extends SparkSuite {
+class StreamingDedupSpec extends SparkSuite with DocCdcFixture {
   import spark.implicits._
-
-  private val docSchema = StructType(Seq(
-    StructField("doc_id", StringType), StructField("text", StringType)))
-  private val sources =
-    Seq(TableSpec("documents", docSchema, primaryKey = Seq("doc_id")))
-
-  private var seqNo = 0L
-  private def rec(env: String): (String, String, Long) = {
-    seqNo += 1; ("documents", env, seqNo)
-  }
-  private def img(id: String, text: String) =
-    s"""{"doc_id":"$id","text":"$text"}"""
-  private def create(id: String, text: String): (String, String, Long) =
-    rec(s"""{"before":null,"after":${img(id, text)},"op":"c","ts_ms":$seqNo}""")
-  private def update(id: String, oldT: String, newT: String): (String, String, Long) =
-    rec(s"""{"before":${img(id, oldT)},"after":${img(id, newT)},"op":"u","ts_ms":$seqNo}""")
-  private def delete(id: String, text: String): (String, String, Long) =
-    rec(s"""{"before":${img(id, text)},"after":null,"op":"d","ts_ms":$seqNo}""")
 
   // 40-word texts: one changed word => 3 of 41 unioned shingles differ
   // (jaccard ≈ 0.85-0.95, above the 0.8 gate); disjoint vocabularies are
@@ -67,7 +48,7 @@ class StreamingDedupSpec extends SparkSuite {
   test("incremental pair set equals batch recompute after every batch") {
     val sink = new InMemoryUpsertSink
     val stateDir = tmpDir("sdedup")
-    val pipeline = new CdcPipeline(spark, sources, stateDir, sink,
+    val pipeline = new CdcPipeline(spark, docSources, stateDir, sink,
       Seq(StreamingDedup.nearDupView(spark, stateDir)))
 
     def step(batchId: Long, recs: (String, String, Long)*): Unit = {
@@ -106,7 +87,7 @@ class StreamingDedupSpec extends SparkSuite {
   test("replayed batch is idempotent (state merges skip, sink converges)") {
     val sink = new InMemoryUpsertSink
     val stateDir = tmpDir("sdedup-replay")
-    val pipeline = new CdcPipeline(spark, sources, stateDir, sink,
+    val pipeline = new CdcPipeline(spark, docSources, stateDir, sink,
       Seq(StreamingDedup.nearDupView(spark, stateDir)))
 
     pipeline.processBatch(Seq(create("r1", textA), create("r2", textC))

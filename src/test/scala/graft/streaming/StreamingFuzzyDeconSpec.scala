@@ -1,8 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.types._
-
-import graft.{SparkSuite, TableSpec}
+import graft.SparkSuite
 
 /** Streaming fuzzy decontamination == an independent in-memory q100
   * recompute at every step of a replayed changelog. The view-specific
@@ -10,26 +8,8 @@ import graft.{SparkSuite, TableSpec}
   * content-hash split while leaving its shingle set — hence every pair
   * and signature — untouched, so the partner's sink row must change
   * with no pair delta anywhere. */
-class StreamingFuzzyDeconSpec extends SparkSuite {
+class StreamingFuzzyDeconSpec extends SparkSuite with DocCdcFixture {
   import spark.implicits._
-
-  private val docSchema = StructType(Seq(
-    StructField("doc_id", StringType), StructField("text", StringType)))
-  private val sources =
-    Seq(TableSpec("documents", docSchema, primaryKey = Seq("doc_id")))
-
-  private var seqNo = 0L
-  private def rec(env: String): (String, String, Long) = {
-    seqNo += 1; ("documents", env, seqNo)
-  }
-  private def img(id: String, text: String) =
-    s"""{"doc_id":"$id","text":"$text"}"""
-  private def create(id: String, text: String) =
-    rec(s"""{"before":null,"after":${img(id, text)},"op":"c","ts_ms":$seqNo}""")
-  private def update(id: String, oldT: String, newT: String) =
-    rec(s"""{"before":${img(id, oldT)},"after":${img(id, newT)},"op":"u","ts_ms":$seqNo}""")
-  private def delete(id: String, text: String) =
-    rec(s"""{"before":${img(id, text)},"after":null,"op":"d","ts_ms":$seqNo}""")
 
   /** The q34/q100 split rule, driver-side. */
   private def bucket(text: String): Long = {
@@ -92,7 +72,7 @@ class StreamingFuzzyDeconSpec extends SparkSuite {
 
     val sink = new InMemoryUpsertSink
     val stateDir = tmpDir("sfuzzy")
-    val pipeline = new CdcPipeline(spark, sources, stateDir, sink,
+    val pipeline = new CdcPipeline(spark, docSources, stateDir, sink,
       Seq(StreamingFuzzyDecon.fuzzyDeconView(spark, stateDir)))
     def step(batchId: Long, recs: (String, String, Long)*): Unit =
       pipeline.processBatch(recs.toDF("table", "value", "seq"), Some(batchId))

@@ -2,9 +2,8 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
-import graft.{SparkSuite, TableSpec}
+import graft.SparkSuite
 import graft.operators.TextAnalysis
 
 /** Streaming held-out LM: [[StreamingLm.score]] over the maintained
@@ -13,26 +12,8 @@ import graft.operators.TextAnalysis
   * changelog — including a doc crossing the quality gate via update
   * (every resident score shifts through the model, priced at read) and
   * idempotent replay of the running counters. */
-class StreamingLmSpec extends SparkSuite {
+class StreamingLmSpec extends SparkSuite with DocCdcFixture {
   import spark.implicits._
-
-  private val docSchema = StructType(Seq(
-    StructField("doc_id", StringType), StructField("text", StringType)))
-  private val sources =
-    Seq(TableSpec("documents", docSchema, primaryKey = Seq("doc_id")))
-
-  private var seqNo = 0L
-  private def rec(env: String): (String, String, Long) = {
-    seqNo += 1; ("documents", env, seqNo)
-  }
-  private def img(id: String, text: String) =
-    s"""{"doc_id":"$id","text":"$text"}"""
-  private def create(id: String, text: String): (String, String, Long) =
-    rec(s"""{"before":null,"after":${img(id, text)},"op":"c","ts_ms":$seqNo}""")
-  private def update(id: String, oldT: String, newT: String): (String, String, Long) =
-    rec(s"""{"before":${img(id, oldT)},"after":${img(id, newT)},"op":"u","ts_ms":$seqNo}""")
-  private def delete(id: String, text: String): (String, String, Long) =
-    rec(s"""{"before":${img(id, text)},"after":null,"op":"d","ts_ms":$seqNo}""")
 
   // hi quality: dense stopwords; lo quality: none (gate is ≥ 0.5)
   private def hiText(tail: String) =
@@ -55,7 +36,7 @@ class StreamingLmSpec extends SparkSuite {
       "including a quality-gate flip that shifts resident scores") {
     val sink = new InMemoryUpsertSink
     val stateDir = tmpDir("slm")
-    val pipeline = new CdcPipeline(spark, sources, stateDir, sink,
+    val pipeline = new CdcPipeline(spark, docSources, stateDir, sink,
       Seq(StreamingLm.lmView(spark, stateDir)))
 
     def step(batchId: Long, recs: (String, String, Long)*): Unit = {
@@ -90,7 +71,7 @@ class StreamingLmSpec extends SparkSuite {
   test("replayed batch is idempotent despite running counters") {
     val sink = new InMemoryUpsertSink
     val stateDir = tmpDir("slm-replay")
-    val pipeline = new CdcPipeline(spark, sources, stateDir, sink,
+    val pipeline = new CdcPipeline(spark, docSources, stateDir, sink,
       Seq(StreamingLm.lmView(spark, stateDir)))
 
     pipeline.processBatch(Seq(create("r1", hiText("alpha beta")))

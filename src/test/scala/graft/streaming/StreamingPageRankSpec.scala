@@ -2,9 +2,8 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
-import graft.{SparkSuite, TableSpec}
+import graft.SparkSuite
 import graft.operators.Dedup
 
 /** Incremental PageRank == an independent unit-rank recompute of the
@@ -13,26 +12,8 @@ import graft.operators.Dedup
   * nodes whose last edge retracts, and untouched components keeping
   * their rows. Also pins unit_rank / n against the q81-normalized
   * (1/n-seeded) recompute, the linearity the view's scaladoc claims. */
-class StreamingPageRankSpec extends SparkSuite {
+class StreamingPageRankSpec extends SparkSuite with DocCdcFixture {
   import spark.implicits._
-
-  private val docSchema = StructType(Seq(
-    StructField("doc_id", StringType), StructField("text", StringType)))
-  private val sources =
-    Seq(TableSpec("documents", docSchema, primaryKey = Seq("doc_id")))
-
-  private var seqNo = 0L
-  private def rec(env: String): (String, String, Long) = {
-    seqNo += 1; ("documents", env, seqNo)
-  }
-  private def img(id: String, text: String) =
-    s"""{"doc_id":"$id","text":"$text"}"""
-  private def create(id: String, text: String): (String, String, Long) =
-    rec(s"""{"before":null,"after":${img(id, text)},"op":"c","ts_ms":$seqNo}""")
-  private def update(id: String, oldT: String, newT: String): (String, String, Long) =
-    rec(s"""{"before":${img(id, oldT)},"after":${img(id, newT)},"op":"u","ts_ms":$seqNo}""")
-  private def delete(id: String, text: String): (String, String, Long) =
-    rec(s"""{"before":${img(id, text)},"after":null,"op":"d","ts_ms":$seqNo}""")
 
   private def words(prefix: String): IndexedSeq[String] =
     (0 until 40).map(i => s"$prefix$i")
@@ -83,7 +64,7 @@ class StreamingPageRankSpec extends SparkSuite {
       "unit/n matches the q81 normalization") {
     val sink = new InMemoryUpsertSink
     val stateDir = tmpDir("spagerank")
-    val pipeline = new CdcPipeline(spark, sources, stateDir, sink,
+    val pipeline = new CdcPipeline(spark, docSources, stateDir, sink,
       Seq(StreamingPageRank.pageRankView(spark, stateDir)))
 
     def step(batchId: Long, recs: (String, String, Long)*): Unit = {
@@ -144,7 +125,7 @@ class StreamingPageRankSpec extends SparkSuite {
   test("replayed batch is idempotent") {
     val sink = new InMemoryUpsertSink
     val stateDir = tmpDir("spagerank-replay")
-    val pipeline = new CdcPipeline(spark, sources, stateDir, sink,
+    val pipeline = new CdcPipeline(spark, docSources, stateDir, sink,
       Seq(StreamingPageRank.pageRankView(spark, stateDir)))
 
     pipeline.processBatch(Seq(create("p1", textA), create("p2", textA2))

@@ -2,9 +2,8 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
-import graft.{SparkSuite, TableSpec}
+import graft.SparkSuite
 import graft.operators.Multimodal
 
 /** Incremental phash near-dup == batch q125 recompute at every step of
@@ -13,26 +12,8 @@ import graft.operators.Multimodal
   * section, not the header), updates move docs between hash buckets
   * and retract stale pairs, assets shrinking below the 32-byte block
   * floor drop out of the index, and replay is idempotent. */
-class StreamingPhashSpec extends SparkSuite {
+class StreamingPhashSpec extends SparkSuite with DocCdcFixture {
   import spark.implicits._
-
-  private val docSchema = StructType(Seq(
-    StructField("doc_id", StringType), StructField("text", StringType)))
-  private val sources =
-    Seq(TableSpec("documents", docSchema, primaryKey = Seq("doc_id")))
-
-  private var seqNo = 0L
-  private def rec(env: String): (String, String, Long) = {
-    seqNo += 1; ("documents", env, seqNo)
-  }
-  private def img(id: String, text: String) =
-    s"""{"doc_id":"$id","text":"$text"}"""
-  private def create(id: String, text: String) =
-    rec(s"""{"before":null,"after":${img(id, text)},"op":"c","ts_ms":$seqNo}""")
-  private def update(id: String, o: String, n: String) =
-    rec(s"""{"before":${img(id, o)},"after":${img(id, n)},"op":"u","ts_ms":$seqNo}""")
-  private def delete(id: String, text: String) =
-    rec(s"""{"before":${img(id, text)},"after":null,"op":"d","ts_ms":$seqNo}""")
 
   /** Batch q125's banded-Hamming pairs over the materialized state —
     * all-pairs here (tiny), through the SAME hash path. */
@@ -65,7 +46,7 @@ class StreamingPhashSpec extends SparkSuite {
       "leave the index") {
     val sink = new InMemoryUpsertSink
     val stateDir = tmpDir("sphash")
-    val pipeline = new CdcPipeline(spark, sources, stateDir, sink,
+    val pipeline = new CdcPipeline(spark, docSources, stateDir, sink,
       Seq(StreamingPhash.phashNearDupView(spark, stateDir)))
 
     def step(batchId: Long, recs: (String, String, Long)*): Unit = {

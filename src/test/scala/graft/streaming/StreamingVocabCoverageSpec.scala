@@ -2,37 +2,18 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
-import graft.{SparkSuite, TableSpec}
+import graft.SparkSuite
 
 /** Streaming head-vocabulary coverage == batch q119 recompute at every
   * step of a replayed document changelog — with the head set itself
   * drifting: a token pumped into the top-K must re-score RESIDENT docs
   * holding it (and docs holding the evicted token), and the pump's
   * deletion must revert both. */
-class StreamingVocabCoverageSpec extends SparkSuite {
+class StreamingVocabCoverageSpec extends SparkSuite with DocCdcFixture {
   import spark.implicits._
 
   private val topK = 3
-
-  private val docSchema = StructType(Seq(
-    StructField("doc_id", StringType), StructField("text", StringType)))
-  private val sources =
-    Seq(TableSpec("documents", docSchema, primaryKey = Seq("doc_id")))
-
-  private var seqNo = 0L
-  private def rec(env: String): (String, String, Long) = {
-    seqNo += 1; ("documents", env, seqNo)
-  }
-  private def img(id: String, text: String) =
-    s"""{"doc_id":"$id","text":"$text"}"""
-  private def create(id: String, text: String) =
-    rec(s"""{"before":null,"after":${img(id, text)},"op":"c","ts_ms":$seqNo}""")
-  private def update(id: String, o: String, n: String) =
-    rec(s"""{"before":${img(id, o)},"after":${img(id, n)},"op":"u","ts_ms":$seqNo}""")
-  private def delete(id: String, text: String) =
-    rec(s"""{"before":${img(id, text)},"after":null,"op":"d","ts_ms":$seqNo}""")
 
   private def r6(x: Double): Double =
     BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
@@ -64,7 +45,7 @@ class StreamingVocabCoverageSpec extends SparkSuite {
       "re-score untouched resident docs") {
     val sink = new InMemoryUpsertSink
     val stateDir = tmpDir("svocabcov")
-    val pipeline = new CdcPipeline(spark, sources, stateDir, sink,
+    val pipeline = new CdcPipeline(spark, docSources, stateDir, sink,
       Seq(StreamingVocabCoverage.coverageView(spark, stateDir,
         topK = topK)))
 
@@ -103,7 +84,7 @@ class StreamingVocabCoverageSpec extends SparkSuite {
   test("replayed batch is idempotent across counters, index and head") {
     val sink = new InMemoryUpsertSink
     val stateDir = tmpDir("svocabcov-replay")
-    val pipeline = new CdcPipeline(spark, sources, stateDir, sink,
+    val pipeline = new CdcPipeline(spark, docSources, stateDir, sink,
       Seq(StreamingVocabCoverage.coverageView(spark, stateDir,
         topK = topK)))
 

@@ -2,35 +2,16 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
-import graft.{SparkSuite, TableSpec}
+import graft.SparkSuite
 
 /** Incremental winnowing pairs == batch q105 recompute at every step of a
   * replayed document changelog — including the df-cap flip on UNTOUCHED
   * residents, the one hazard q105's corpus-statistic cap adds over the
   * containment view's fixed-prefix order (a fingerprint crossing
   * 2 ≤ df ≤ 10 changes pair credits for docs the batch never touched). */
-class StreamingWinnowSpec extends SparkSuite {
+class StreamingWinnowSpec extends SparkSuite with DocCdcFixture {
   import spark.implicits._
-
-  private val docSchema = StructType(Seq(
-    StructField("doc_id", StringType), StructField("text", StringType)))
-  private val sources =
-    Seq(TableSpec("documents", docSchema, primaryKey = Seq("doc_id")))
-
-  private var seqNo = 0L
-  private def rec(env: String): (String, String, Long) = {
-    seqNo += 1; ("documents", env, seqNo)
-  }
-  private def img(id: String, text: String) =
-    s"""{"doc_id":"$id","text":"$text"}"""
-  private def create(id: String, text: String): (String, String, Long) =
-    rec(s"""{"before":null,"after":${img(id, text)},"op":"c","ts_ms":$seqNo}""")
-  private def update(id: String, oldT: String, newT: String): (String, String, Long) =
-    rec(s"""{"before":${img(id, oldT)},"after":${img(id, newT)},"op":"u","ts_ms":$seqNo}""")
-  private def delete(id: String, text: String): (String, String, Long) =
-    rec(s"""{"before":${img(id, text)},"after":null,"op":"d","ts_ms":$seqNo}""")
 
   // a ~160-char shared block: its interior fingerprint windows are
   // identical across every doc carrying it, so two carriers share far
@@ -72,7 +53,7 @@ class StreamingWinnowSpec extends SparkSuite {
       "batch, including df-cap flips on untouched residents") {
     val sink = new InMemoryUpsertSink
     val stateDir = tmpDir("swinnow")
-    val pipeline = new CdcPipeline(spark, sources, stateDir, sink,
+    val pipeline = new CdcPipeline(spark, docSources, stateDir, sink,
       Seq(StreamingWinnow.winnowView(spark, stateDir)))
 
     def step(batchId: Long, recs: (String, String, Long)*): Unit = {
@@ -116,7 +97,7 @@ class StreamingWinnowSpec extends SparkSuite {
   test("replayed batch is idempotent (state merges skip, sink converges)") {
     val sink = new InMemoryUpsertSink
     val stateDir = tmpDir("swinnow-replay")
-    val pipeline = new CdcPipeline(spark, sources, stateDir, sink,
+    val pipeline = new CdcPipeline(spark, docSources, stateDir, sink,
       Seq(StreamingWinnow.winnowView(spark, stateDir)))
 
     pipeline.processBatch(Seq(create("r1", doc(tail("r1"))))
